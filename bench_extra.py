@@ -4,7 +4,8 @@ we know WHERE the wall-clock goes before changing anything. bench.py is
 frozen; this file is the measurement sandbox.
 
 Usage: python bench_extra.py [probe ...]
-Probes: pipeline, ann, text. Default: all.
+Probes: ann, text. Default: all. (Pipeline layers are timed by
+``perfbench/run.py --trace 1``.)
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from osm_sidewalkreator_spark import params as P
 from osm_sidewalkreator_spark.session import get_spark
 from osm_sidewalkreator_spark.synth import ensure_synth
 
@@ -38,75 +38,6 @@ def timed(spark, out, name, fn, repeat=2):
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
-
-
-def probe_pipeline(spark, sf_dir, out):
-    from osm_sidewalkreator_spark.plans import pipeline as PL
-    from osm_sidewalkreator_spark.operators.tiling import cover_cells
-
-    streets = PL.assign_widths(
-        PL.clip_to_aoi(PL.load_streets(spark, sf_dir), spark, sf_dir))
-    segs = PL.street_segments_tm(streets)
-    aoi = spark.read.parquet(str(ensure_synth(sf_dir) / "aoi.parquet"))
-    segs = PL.clip_segments_to_rect(segs, aoi)
-    tiled = segs.withColumn(
-        "tile", F.explode(cover_cells(
-            F.least("ax", "bx"), F.least("ay", "by"),
-            F.greatest("ax", "bx"), F.greatest("ay", "by"),
-            P.TILE_SIZE_M, pad=P.TILE_HALO_M)))
-    timed(spark, out, "scan_clip_explode_tile", lambda: noop(tiled))
-    timed(spark, out, "census_collect",
-          lambda: tiled.groupBy("tile").agg(
-              F.count(F.lit(1)).alias("n")).collect())
-    ctx = PL.load_context_tiled(spark, sf_dir, P.TILE_SIZE_M,
-                                P.TILE_HALO_M)
-    timed(spark, out, "ctx_noop", lambda: noop(ctx))
-
-    # full pipeline exactly as bench times it
-    def full():
-        feats = PL.generate_features(spark, sf_dir)
-        feats.groupBy("kind").agg(F.count("*").alias("n")).collect()
-    timed(spark, out, "pipeline_full", full, repeat=3)
-
-    # pipeline with hash placement (no LPT census)
-    os.environ["SPARK_GRAFT_LPT"] = "0"
-
-    def full_nolpt():
-        feats = PL.generate_features(spark, sf_dir)
-        feats.groupBy("kind").agg(F.count("*").alias("n")).collect()
-    timed(spark, out, "pipeline_full_nolpt", full_nolpt, repeat=2)
-    del os.environ["SPARK_GRAFT_LPT"]
-
-    # cogroup plumbing cost: same shuffle + Arrow + pandas groupby,
-    # kernel replaced by a trivial passthrough (measures everything but
-    # the geometry math)
-    import pandas as pd
-    from osm_sidewalkreator_spark.plans.pipeline import (
-        FEATURE_SCHEMA, _lpt_bucket_map)
-
-    def trivial(key, pdf, cpdf):
-        for _t, _g in pdf.groupby("tile"):
-            pass
-        if cpdf is not None and len(cpdf):
-            dict(tuple(cpdf.groupby("tile")))
-        return pd.DataFrame(columns=[f.name for f in FEATURE_SCHEMA])
-
-    n_part = max(spark.sparkContext.defaultParallelism * 4, 32)
-    t_cached = tiled.persist()
-    mapping = _lpt_bucket_map(spark, t_cached, n_part)
-    schema = "tile long, _bucket int"
-    t2 = t_cached.join(
-        F.broadcast(spark.createDataFrame(mapping, schema)), "tile")
-    c2 = ctx.join(
-        F.broadcast(spark.createDataFrame(mapping, schema)), "tile")
-
-    def plumbing():
-        o = (t2.repartition(n_part, "_bucket").groupBy("_bucket")
-             .cogroup(c2.repartition(n_part, "_bucket").groupBy("_bucket"))
-             .applyInPandas(trivial, FEATURE_SCHEMA))
-        o.count()
-    timed(spark, out, "cogroup_plumbing_trivial_kernel", plumbing, repeat=2)
-    t_cached.unpersist()
 
 
 def probe_ann(spark, sf_dir, out):
@@ -151,12 +82,10 @@ def probe_text(spark, sf_dir, out):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    which = sys.argv[1:] or ["pipeline", "ann", "text"]
+    which = sys.argv[1:] or ["ann", "text"]
     spark = get_spark(app="bench_extra")
     ensure_synth(sf_dir)
     out: dict[str, float] = {}
-    if "pipeline" in which:
-        probe_pipeline(spark, sf_dir, out)
     if "ann" in which:
         probe_ann(spark, sf_dir, out)
     if "text" in which:

@@ -20,12 +20,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from osm_sidewalkreator_spark import params as P
 from osm_sidewalkreator_spark.operators import joins as J
-from osm_sidewalkreator_spark.operators.tiling import cover_cells
 from osm_sidewalkreator_spark.pages import ensure_pages_geo
 from osm_sidewalkreator_spark.plans import pipeline as PL
 from osm_sidewalkreator_spark.session import get_spark
@@ -63,22 +61,12 @@ def main(argv=None):
     t0 = time.time()
 
     # --- resumable tiled geometry pipeline ---
-    streets = PL.assign_widths(
-        PL.clip_to_aoi(PL.load_streets(spark, args.sf_dir),
-                       spark, args.sf_dir))
-    segs = PL.street_segments_tm(streets)
-    aoi = spark.read.parquet(str(ensure_synth(args.sf_dir) / "aoi.parquet"))
-    segs = PL.clip_segments_to_rect(segs, aoi)
-    tiled = segs.withColumn("tile", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"),
-        args.tile_size, pad=args.halo)))
-    k3 = PL.make_tile_kernel(args.tile_size, **pipe_opts)
-    ctx = PL.load_context_tiled(spark, args.sf_dir, args.tile_size,
-                                args.halo)
+    tiled, ctx = PL.tiled_inputs(spark, args.sf_dir, args.tile_size,
+                                 args.halo)
     feats = run_tiled_job(
-        spark, tiled, k3, PL.FEATURE_SCHEMA, str(out / "job_state"),
-        ctx_tiled=ctx)
+        spark, tiled, PL.make_tile_kernel(args.tile_size, args.halo,
+                                          **pipe_opts),
+        PL.FEATURE_SCHEMA, str(out / "job_state"), ctx_tiled=ctx)
     feats.cache()
 
     # --- page join ---

@@ -25,11 +25,6 @@ from ..geometry import core, wkb
 from ..geometry.projection import tm_forward, tm_inverse
 
 
-def _each_coords(blob: bytes) -> list[np.ndarray]:
-    _, parts = wkb.decode(blob)
-    return parts
-
-
 @pandas_udf(T.DoubleType())
 def st_length(col: pd.Series) -> pd.Series:
     out = np.empty(len(col))
@@ -163,25 +158,6 @@ _SEG_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("ax", T.DoubleType()), T.StructField("ay", T.DoubleType()),
     T.StructField("bx", T.DoubleType()), T.StructField("by", T.DoubleType()),
 ]))
-
-
-@pandas_udf(_SEG_SCHEMA)
-def st_explode_boundary_segments(col: pd.Series) -> pd.Series:
-    """(Multi)Polygon WKB -> array of boundary 2-point segments (G7
-    boundary extraction + segment explode, for distance kernels)."""
-    out = []
-    for blob in col:
-        segs = []
-        for rings in wkb.decode_polygons(blob):
-            for r in rings:
-                closed = np.vstack([r, r[:1]]) if not np.array_equal(
-                    r[0], r[-1]) else r
-                s = core.explode_polyline_to_segments(closed)
-                segs.extend({"ax": float(a), "ay": float(b),
-                             "bx": float(c), "by": float(d)}
-                            for a, b, c, d in s)
-        out.append(segs)
-    return pd.Series(out)
 
 
 @pandas_udf(_SEG_SCHEMA)

@@ -170,8 +170,8 @@ class ConvexSet:
             #        C=(ey*vx - ex*vy)*iel.
             # Precomputing (A, B, C) keeps the query chunk loop at 3
             # gathers + 4 elementwise passes — the fewest DRAM-bound
-            # passes of the forms measured (wide-leg bandwidth is the
-            # scaling limiter, BENCH/STREAM_CONTROL.json). mdir is
+            # passes of the forms measured (wide-leg bandwidth was the
+            # measured scaling limiter on a 32-core host). mdir is
             # recovered as (B, -A) at the argmin slot. Only A/B/C (+
             # the degenerate-edge mask) are retained; the intermediate
             # edge vectors are locals so per-set precompute memory is
@@ -241,8 +241,8 @@ class ConvexSet:
         # signed dist to edge lines, computed in cache-resident CHUNKS:
         # the (pairs x nverts) temporaries would otherwise stream
         # hundreds of MB through DRAM per query, and the measured
-        # scaling limiter on wide runs is shared memory bandwidth
-        # (BENCH/STREAM_CONTROL.json) — blocking keeps each temporary
+        # scaling limiter on wide runs is shared memory bandwidth —
+        # blocking keeps each temporary
         # in L2/L3 across its ~6 elementwise passes. Per-row argmin is
         # independent, so chunked results are bit-identical.
         nv = self.polys.shape[1]

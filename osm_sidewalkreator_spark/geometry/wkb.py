@@ -70,14 +70,6 @@ def multipolygon_wkb(polys: list[tuple[np.ndarray, list[np.ndarray]]]) -> bytes:
     return b"".join(out)
 
 
-def multipoint_wkb(coords: np.ndarray) -> bytes:
-    c = np.asarray(coords, dtype=np.float64)
-    out = [_HDR.pack(1, MULTIPOINT), _U32.pack(len(c))]
-    for x, y in c:
-        out.append(point_wkb(x, y))
-    return b"".join(out)
-
-
 # ---------- decode ----------
 
 def geom_type(wkb: bytes) -> int:

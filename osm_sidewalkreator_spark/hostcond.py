@@ -29,8 +29,8 @@ A reader of BENCH_r*.json can now separate "the code got slower"
 from "the host got slower", and WHICH host resource, without
 out-of-band docs.
 
-``wait_for_quiet`` optionally polls for a low-steal window first
-(the ``scripts/pipe4_hunt.py`` gate), bounded by a deadline so an
+``wait_for_quiet`` optionally polls for a low-steal window first,
+bounded by a deadline so an
 unattended bench never hangs.
 """
 
@@ -180,8 +180,8 @@ class HostMonitor:
             "post": {"stream_wide": post_wide},
             "n_wide": self.n_wide,
             "ts_utc": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
-            # one-glance adjudication: quiet iff steal stayed under the
-            # pipe4_hunt gate before and during AND the memory system
+            # one-glance adjudication: quiet iff steal stayed under 2%
+            # before and during AND the memory system
             # was out of the fault-throttled regime at both brackets
             "quiet": bool(pre["steal_pct"] < 2.0 and during < 2.0
                           and fault_ok),

@@ -61,11 +61,6 @@ def geocode_pages(pages: DataFrame, sf_dir: str) -> DataFrame:
             .withColumn("block_truth", block))
 
 
-def with_text_fingerprint(pages: DataFrame) -> DataFrame:
-    """xxhash64 of the text column (P19 byte-identity invariant)."""
-    return pages.withColumn("text_fingerprint", F.xxhash64("text"))
-
-
 def ensure_pages_geo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the geocoded pages projection once per scale; the
     DuckDB oracles for downstream joins read the same parquet."""

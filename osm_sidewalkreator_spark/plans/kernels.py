@@ -409,43 +409,6 @@ def sidewalk_rings(noded_segs: np.ndarray, widths: np.ndarray,
 
 # ---------- crossings + kerbs ----------
 
-def _seg_interpolate(a: np.ndarray, b: np.ndarray, d: float) -> np.ndarray:
-    ln = float(np.hypot(*(b - a)))
-    if ln == 0:
-        return a.copy()
-    t = min(max(d / ln, 0.0), 1.0)
-    return a + t * (b - a)
-
-
-def _ray_hits(pA: np.ndarray, pE: np.ndarray, side_segs: np.ndarray
-              ) -> tuple[np.ndarray | None, np.ndarray | None]:
-    """Intersect segment pA->pE with sidewalk segments; return the hit
-    nearest pA among A-side hits and nearest pE among E-side hits
-    (full_sidewalkreator_bbox_algorithm.py:855-878)."""
-    if len(side_segs) == 0:
-        return None, None
-    a1 = pA
-    d1 = pE - pA
-    a2 = side_segs[:, :2]
-    d2 = side_segs[:, 2:] - a2
-    denom = d1[0] * d2[:, 1] - d1[1] * d2[:, 0]
-    ok = np.abs(denom) > 1e-12
-    e = a2 - a1
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = (e[:, 0] * d2[:, 1] - e[:, 1] * d2[:, 0]) / denom
-        u = (e[:, 0] * d1[1] - e[:, 1] * d1[0]) / denom
-    hit = ok & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1)
-    if not hit.any():
-        return None, None
-    pts = a1 + t[hit][:, None] * d1
-    dA = np.hypot(pts[:, 0] - pA[0], pts[:, 1] - pA[1])
-    dE = np.hypot(pts[:, 0] - pE[0], pts[:, 1] - pE[1])
-    a_side = dA < dE
-    best_a = pts[a_side][np.argmin(dA[a_side])] if a_side.any() else None
-    best_e = pts[~a_side][np.argmin(dE[~a_side])] if (~a_side).any() else None
-    return best_a, best_e
-
-
 def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
                         sidewalk_segs: np.ndarray,
                         way_ids: np.ndarray | None = None,

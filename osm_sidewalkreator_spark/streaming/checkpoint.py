@@ -13,10 +13,10 @@ North-rule requirement: the job "checkpoints per-partition with lineage
 - The driver never materializes feature rows: it only compacts marker
   files into ``manifest.jsonl`` (idempotent, runs at start and end so a
   crashed run's markers are recovered) and reads the committed paths.
-- Resume = anti-join the per-tile input fingerprints against the
-  manifest: only missing or changed tiles recompute. Fingerprints are
-  an order-independent ``bit_xor(xxhash64(...))`` aggregate — one
-  shuffle of 8-byte values, no ``collect_list`` of row payloads.
+- Resume = anti-join the tile census (``plans.pipeline.tile_census``:
+  an order-independent ``bit_xor(xxhash64(...))`` fingerprint per tile)
+  against the manifest: only missing or changed tiles recompute, placed
+  by the same executor as ``generate_features``.
 - Tiles whose kernel emits zero rows still commit a marker (counts={}),
   so they are not recomputed forever.
 
@@ -35,7 +35,8 @@ from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..plans import pipeline as PL
 
 
 class TileManifest:
@@ -101,37 +102,25 @@ _SUMMARY_SCHEMA = "tile long, n_rows long, seconds double"
 
 def run_tiled_job(spark: SparkSession, segs_tiled: DataFrame,
                   kernel, schema, job_dir: str,
-                  ctx_tiled: DataFrame | None = None,
-                  n_part: int | None = None) -> DataFrame:
-    """Resumable tiled execution with executor-side tile commit.
+                  ctx_tiled: DataFrame | None = None) -> DataFrame:
+    """Resumable tiled execution with executor-side tile commit, on the
+    pipeline's tiled executor (``plans.pipeline.run_tiles``).
 
     ``segs_tiled`` must carry a ``tile`` column (plus osm_id/ax/ay/bx/by
     for the lineage fingerprint). ``kernel(key, pdf, ctx_pdf)`` is the
     cogrouped tile kernel (``ctx_pdf`` empty when ``ctx_tiled`` is None).
-    Returns the union of all committed tile outputs.
+    Returns the committed outputs of the tiles in the current input.
     """
     man = TileManifest(job_dir)
     man.compact_markers()  # recover a crashed run's commits
-
-    fp_df = segs_tiled.groupBy("tile").agg(
-        F.expr("bit_xor(xxhash64(osm_id, ax, ay, bx, by))").alias("fp"))
-    # The census is consumed twice (pending anti-join + the current
-    # tile work-list below); persist so the upstream scan runs once.
-    fp_df = fp_df.persist()
-    # Current work-list: a tile whose last segment DISAPPEARED from the
-    # input must not resurrect its stale committed output — the
-    # fingerprint anti-join only catches changed tiles, not deleted
-    # ones. Driver-side set is fine: the manifest itself is a
-    # driver-side JSONL of the same cardinality (tile census, bounded).
-    cur_tiles = {r["tile"] for r in fp_df.select("tile").collect()}
+    census = PL.tile_census(spark, segs_tiled)
     done = man.committed()
+    pending = census
     if done:
         man_df = spark.createDataFrame(
             [(r["tile"], r["input_fingerprint"]) for r in done.values()],
             "tile long, fp long")
-        pend_df = fp_df.join(man_df, ["tile", "fp"], "left_anti")
-    else:
-        pend_df = fp_df
+        pending = census.join(man_df, ["tile", "fp"], "left_anti")
 
     tiles_dir = Path(job_dir) / "tiles"
     markers_dir = Path(job_dir) / "markers"
@@ -141,12 +130,9 @@ def run_tiled_job(spark: SparkSession, segs_tiled: DataFrame,
 
     def committing_kernel(key, pdf: pd.DataFrame, ctx: pd.DataFrame
                           ) -> pd.DataFrame:
-        tile = int(key[0])
+        tile, fp = int(key[0]), int(key[1])
         t0 = time.time()
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=["tile", "n_rows", "seconds"])
-        fp = int(pdf["fp"].iloc[0])
-        out = kernel(key, pdf.drop(columns=["fp"]), ctx)
+        out = kernel((tile,), pdf.drop(columns=["fp", "_bucket"]), ctx)
         path = tiles_dir / f"tile_{tile}.parquet"
         counts: dict[str, int] = {}
         if len(out):
@@ -164,29 +150,17 @@ def run_tiled_job(spark: SparkSession, segs_tiled: DataFrame,
         return pd.DataFrame([(tile, len(out), dt)],
                             columns=["tile", "n_rows", "seconds"])
 
-    sub = segs_tiled.join(F.broadcast(pend_df), "tile")
-    if n_part is None:
-        n_part = int(os.environ.get("SPARK_GRAFT_NPART", "0")) \
-            or max(spark.sparkContext.defaultParallelism * 4, 32)
-    sub = sub.repartition(n_part, "tile")
-    if ctx_tiled is not None:
-        summary = (sub.groupBy("tile")
-                   .cogroup(ctx_tiled.repartition(n_part, "tile")
-                            .groupBy("tile"))
-                   .applyInPandas(committing_kernel, _SUMMARY_SCHEMA))
-    else:
-        empty_ctx = pd.DataFrame(columns=["ckind", "ax", "ay", "bx", "by"])
-        summary = sub.groupBy("tile").applyInPandas(
-            lambda key, pdf: committing_kernel(key, pdf, empty_ctx),
-            _SUMMARY_SCHEMA)
-    summary.count()  # force execution; rows live executor-side only
-    fp_df.unpersist()
+    # force execution; rows live executor-side only
+    PL.run_tiles(spark, segs_tiled, ctx_tiled, pending, committing_kernel,
+                 _SUMMARY_SCHEMA).count()
     man.compact_markers()
 
-    done = man.committed()
-    paths = [r["path"] for t, r in done.items()
-             if t in cur_tiles
-             and r.get("path") and Path(r["path"]).exists()]
+    paths = [r["path"] for r in man.committed().values()
+             if r.get("path") and Path(r["path"]).exists()]
     if not paths:
         return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths).select(*out_cols)
+    # a tile whose segments all left the input keeps its manifest row,
+    # but not its place in the result
+    return (spark.read.schema(schema).parquet(*paths)
+            .join(census.select("tile"), "tile", "left_semi")
+            .select(*out_cols))

@@ -67,10 +67,6 @@ def _popcount64(a: np.ndarray) -> np.ndarray:
     return _POP8[a.view(np.uint8)].reshape(len(a), 8).sum(axis=1)
 
 
-def _hamming(a: int, b: int) -> int:
-    return ((a ^ b) & 0xFFFFFFFFFFFFFFFF).bit_count()
-
-
 def _neardup_fn(key, pdfs, state: GroupState):
     if state.hasTimedOut:
         state.remove()

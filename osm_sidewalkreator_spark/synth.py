@@ -48,20 +48,12 @@ def scale_name(sf_dir: str) -> str:
     return name if name in SCALES else "sf0.001"
 
 
-def synth_dir(sf_dir: str) -> Path:
-    return SYNTH_ROOT / scale_name(sf_dir)
-
-
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """Deterministic 64-bit mix (public-domain splitmix64 constants)."""
     z = (np.asarray(x, dtype=np.uint64) + np.uint64(0x9E3779B97F4A7C15))
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D49BBB133111EB)
     return z ^ (z >> np.uint64(31))
-
-
-def _u01(x: np.ndarray) -> np.ndarray:
-    return splitmix64(x).astype(np.float64) / float(2**64)
 
 
 # ---------------- city ----------------

@@ -143,22 +143,23 @@ def test_media_fake_batch_shape(spark):
     assert (pdf["width_px"] * pdf["height_px"] <= pdf["n_bytes"]).all()
 
 
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
 def test_checkpoint_resume(spark, tmp_path):
     """North-rule: kill/restart resumes from the tile manifest."""
-    from osm_sidewalkreator_spark.operators.tiling import cover_cells
     from osm_sidewalkreator_spark.streaming.checkpoint import (
         TileManifest, run_tiled_job)
-    streets = PL.assign_widths(
-        PL.clip_to_aoi(PL.load_streets(spark, SF), spark, SF))
-    segs = PL.street_segments_tm(streets)
-    tiled = segs.withColumn("tile", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"),
-        P.TILE_SIZE_M, pad=P.TILE_HALO_M)))
+    tiled, ctx = PL.tiled_inputs(spark, SF)
     job_dir = tmp_path / "job1"
     k3 = PL.make_tile_kernel(P.TILE_SIZE_M)
 
-    out1 = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA, str(job_dir))
+    def run_job():
+        return run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA,
+                             str(job_dir), ctx_tiled=ctx)
+
+    out1 = run_job()
     n1 = out1.count()
     man = TileManifest(str(job_dir))
     committed = man.committed()
@@ -172,7 +173,7 @@ def test_checkpoint_resume(spark, tmp_path):
     import os
     mtimes = {p: os.path.getmtime(p) for p in
               (job_dir / "tiles").glob("*.parquet")}
-    out2 = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA, str(job_dir))
+    out2 = run_job()
     assert out2.count() == n1
     assert {p: os.path.getmtime(p) for p in
             (job_dir / "tiles").glob("*.parquet")} == mtimes
@@ -186,7 +187,7 @@ def test_checkpoint_resume(spark, tmp_path):
         for r in rows:
             f.write(_json.dumps(r) + "\n")
     os.remove(victim_path)
-    out3 = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA, str(job_dir))
+    out3 = run_job()
     assert out3.count() == n1
     assert os.path.exists(victim_path)
     untouched = {p: m for p, m in mtimes.items() if str(p) != victim_path}
@@ -219,29 +220,62 @@ def test_checkpoint_deleted_tile_not_resurrected(spark, tmp_path):
     assert tiles2 == tiles1 - {victim}
 
 
-def test_tiled_job_matches_generate_features(spark, tmp_path):
+def test_tiled_job_matches_generate_features(spark, features, tmp_path):
     """The production launch path (run_tiled_job with real context) must
     produce exactly the feature set of the verified query path
-    (PL.generate_features) on the same input (VERDICT r1 wrong #2)."""
+    (PL.generate_features) on the same input."""
+    from osm_sidewalkreator_spark.streaming.checkpoint import run_tiled_job
+    tiled, ctx = PL.tiled_inputs(spark, SF)
+    got = run_tiled_job(spark, tiled, PL.make_tile_kernel(P.TILE_SIZE_M),
+                        PL.FEATURE_SCHEMA, str(tmp_path / "job2"),
+                        ctx_tiled=ctx)
+    cols = ["tile", "kind", "fid", "cx", "cy"]
+    assert _rows(got, cols) == _rows(features, cols)
+
+
+def test_generate_features_sees_input_rewritten_in_place(spark, tmp_path):
+    """The cross-call memo is keyed by the input files: once
+    streets.parquet is rewritten in place, the next call must read the
+    new streets, not the previous call's persisted plan."""
+    import pyarrow.parquet as pq
     from osm_sidewalkreator_spark.operators.tiling import cover_cells
     from osm_sidewalkreator_spark.streaming.checkpoint import run_tiled_job
-    streets = PL.assign_widths(
-        PL.clip_to_aoi(PL.load_streets(spark, SF), spark, SF))
-    segs = PL.street_segments_tm(streets)
+    from osm_sidewalkreator_spark.synth import ensure_synth
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    streets = pq.read_table(ensure_synth(SF) / "streets.parquet")
+    pq.write_table(streets, sf / "streets.parquet")
+    cols = ["tile", "kind", "fid", "geometry"]
+    first = _rows(PL.generate_features(spark, str(sf)), cols)
+    pq.write_table(streets.slice(0, streets.num_rows * 3 // 4),
+                   sf / "streets.parquet")
+    second = _rows(PL.generate_features(spark, str(sf)), cols)
+    # the same input through the public stages, outside the memo
+    segs = PL.clip_segments_to_rect(
+        PL.street_segments_tm(PL.assign_widths(PL.clip_to_aoi(
+            PL.load_streets(spark, str(sf)), spark, str(sf)))),
+        spark.read.parquet(str(ensure_synth(SF) / "aoi.parquet")))
     tiled = segs.withColumn("tile", F.explode(cover_cells(
         F.least("ax", "bx"), F.least("ay", "by"),
         F.greatest("ax", "bx"), F.greatest("ay", "by"),
         P.TILE_SIZE_M, pad=P.TILE_HALO_M)))
-    ctx = PL.load_context_tiled(spark, SF, P.TILE_SIZE_M, P.TILE_HALO_M)
-    k3 = PL.make_tile_kernel(P.TILE_SIZE_M)
-    got = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA,
-                        str(tmp_path / "job2"), ctx_tiled=ctx)
-    want = PL.generate_features(spark, SF)
-    gp = got.select("tile", "kind", "fid", "cx", "cy").toPandas() \
-        .sort_values(["tile", "kind", "fid"]).reset_index(drop=True)
-    wp = want.select("tile", "kind", "fid", "cx", "cy").toPandas() \
-        .sort_values(["tile", "kind", "fid"]).reset_index(drop=True)
-    assert gp.equals(wp)
+    job = run_tiled_job(
+        spark, tiled, PL.make_tile_kernel(P.TILE_SIZE_M), PL.FEATURE_SCHEMA,
+        str(tmp_path / "job"),
+        ctx_tiled=PL.load_context_tiled(spark, str(sf), P.TILE_SIZE_M,
+                                        P.TILE_HALO_M))
+    assert second != first
+    assert second == _rows(job, cols)
+
+
+def test_tile_placement_does_not_change_features(spark, features,
+                                                 monkeypatch):
+    """Hash placement (forced by a zero LPT census cap) emits exactly the
+    features of LPT placement."""
+    monkeypatch.setattr(PL, "_LPT_MAX_TILES", 0)
+    cols = ["tile", "kind", "fid", "geometry"]
+    assert _rows(PL.generate_features(spark, SF), cols) == \
+        _rows(features, cols)
 
 
 def test_lsh_multitable_recall(spark):
