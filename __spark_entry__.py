@@ -1092,14 +1092,7 @@ def q_extract_by_location(spark, sf_dir):
         .select("osm_id", F.col("x1").alias("ax"), F.col("y1").alias("ay"),
                 F.col("x2").alias("bx"), F.col("y2").alias("by"))
     blocks = _synth(spark, sf_dir, "blocks")
-    s = st.withColumn("cell", F.explode(
-        PR.cover_cells(F.least("ax", "bx"), F.least("ay", "by"),
-                       F.greatest("ax", "bx"), F.greatest("ay", "by"),
-                       P.CELL_SIZE_M)))
-    r = blocks.withColumn("cell", F.explode(
-        PR.cover_cells(F.col("xmin"), F.col("ymin"),
-                       F.col("xmax"), F.col("ymax"), P.CELL_SIZE_M)))
-    flags = PR._with_flags(s.join(r, "cell"))
+    flags = PR.flag_pairs(st, blocks, P.CELL_SIZE_M)
     return (flags.filter(F.col("intersects"))
             .select("osm_id", "block_id", "within", "crosses", "touches")
             .distinct())

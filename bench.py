@@ -1,5 +1,6 @@
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
-on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+on local[<host CPUs>] (``session.host_defaults``; $SPARK_GRAFT_CPUS
+overrides). Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
  "sf": ...} plus derived throughputs (pages/sec, sidewalk segments/sec —
 the BASELINE.json metric).
@@ -14,9 +15,7 @@ reports warm-page READ bandwidth and fresh-page FAULT rate separately,
 because the sandbox host exhibits three distinct degradation regimes
 (steal, wide-bandwidth pinning, fault throttling to ~9 MB/s/proc) and
 only the stamp can say which one a slow wall-clock landed in (see
-``osm_sidewalkreator_spark/hostcond.py``). Set
-SPARK_GRAFT_WAIT_QUIET=<minutes> to poll for a steal<2%% window before
-starting (bounded; records the outcome either way).
+``osm_sidewalkreator_spark/hostcond.py``).
 """
 
 from __future__ import annotations
@@ -37,7 +36,7 @@ from osm_sidewalkreator_spark.operators import simsearch as SS
 from osm_sidewalkreator_spark.operators import textops as TX
 from osm_sidewalkreator_spark.pages import ensure_pages_geo, geocode_pages, load_pages
 from osm_sidewalkreator_spark.plans import pipeline as PL
-from osm_sidewalkreator_spark.session import get_spark
+from osm_sidewalkreator_spark.session import get_spark, host_defaults
 from osm_sidewalkreator_spark.synth import ensure_synth
 
 
@@ -45,15 +44,7 @@ def main():
     from osm_sidewalkreator_spark import hostcond
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    n_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    quiet_wait = None
-    # default: a short bounded poll for a steal-free, fault-unthrottled
-    # window — an unattended (driver) bench run self-protects against
-    # landing in a known-bad host regime, and the wait outcome is
-    # stamped either way. Set SPARK_GRAFT_WAIT_QUIET=0 to disable.
-    wait_min = float(os.environ.get("SPARK_GRAFT_WAIT_QUIET", "10"))
-    if wait_min > 0:
-        quiet_wait = hostcond.wait_for_quiet(wait_min)
+    n_cpus = host_defaults()[0]
     spark = get_spark(app="bench")
     # ---- untimed setup: synthetic fixtures + cached artifacts ----
     synth = ensure_synth(sf_dir)
@@ -198,8 +189,6 @@ def main():
         into=extra)
 
     host = mon.stop()
-    if quiet_wait is not None:
-        host["quiet_wait"] = quiet_wait
 
     total = round(sum(timings.values()), 3)
     pages_rate = round(counters["pages_joined"]
@@ -217,7 +206,7 @@ def main():
         "pages_per_sec": pages_rate,
         "sidewalk_segments_per_sec": seg_rate,
         "counters": counters,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": n_cpus,
         "host": host,
     }
     print(json.dumps(result))

@@ -27,11 +27,7 @@ the round-5 session hit exactly that).
 
 A reader of BENCH_r*.json can now separate "the code got slower"
 from "the host got slower", and WHICH host resource, without
-out-of-band docs.
-
-``wait_for_quiet`` optionally polls for a low-steal window first,
-bounded by a deadline so an
-unattended bench never hangs.
+out-of-band docs. The stamp is a record of the run, not a gate on it.
 """
 
 from __future__ import annotations
@@ -109,35 +105,6 @@ def stream_probe(n_procs: int, mb: int = 256, dur: float = 5.0,
         "fault_gib_s": round(fault_mb / 1024.0 / alloc_s, 3),
         "alloc_limited": any(r["faulted_mb"] < mb for r in rs),
     }
-
-
-def wait_for_quiet(max_minutes: float, steal_max: float = 2.0,
-                   load_max: float = 1.5,
-                   interval: float = 30.0,
-                   fault_min_gib_s: float = 0.5) -> dict:
-    """Poll until a quiet window (steal and load below bounds AND the
-    memory system out of the fault-throttle regime) or the deadline;
-    returns what happened so the caller can stamp it."""
-    t0 = time.time()
-    polls = 0
-    fp = None
-    while True:
-        s = steal_probe(interval)
-        ld = load1()
-        polls += 1
-        if s < steal_max and ld < load_max:
-            fp = stream_probe(1, mb=64, dur=1.0, alloc_deadline=5.0)
-            if (not fp["alloc_limited"]
-                    and fp["fault_gib_s"] >= fault_min_gib_s):
-                return {"achieved": True,
-                        "waited_sec": round(time.time() - t0),
-                        "polls": polls, "final_steal_pct": round(s, 2),
-                        "final_load1": ld, "final_fault_probe": fp}
-        if (time.time() - t0) / 60.0 >= max_minutes:
-            return {"achieved": False,
-                    "waited_sec": round(time.time() - t0),
-                    "polls": polls, "final_steal_pct": round(s, 2),
-                    "final_load1": ld, "final_fault_probe": fp}
 
 
 class HostMonitor:

@@ -12,12 +12,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geometry import core, wkb
-from .tiling import cell_id, cover_cells, neighbor_cells
+from .tiling import (box_cells, cell_id, cover_cells, neighbor_cells,
+                     seg_box_overlap, seg_box_pairs, seg_cells)
 
 
 def knn_join_points_segments(points: DataFrame, segments: DataFrame,
@@ -49,9 +50,7 @@ def knn_join_points_segments(points: DataFrame, segments: DataFrame,
     # attributes (the bench's segment table has fid) and an equi-join
     # would shuffle them into every candidate pair (guide §2.3)
     s = segments.select("seg_id", "ax", "ay", "bx", "by").withColumn(
-        "cell", F.explode(cover_cells(
-            F.least("ax", "bx"), F.least("ay", "by"),
-            F.greatest("ax", "bx"), F.greatest("ay", "by"), g)))
+        "cell", seg_cells(g))
     # SHUFFLE_HASH (§3.1): the planner broadcasts the exploded segment
     # side when its estimate fits (452k rows at sf0.1) and the
     # single-threaded broadcast build then dominates the join (measured
@@ -99,13 +98,31 @@ def pip_join_points_rects(points: DataFrame, rects: DataFrame,
     rects: (block_id, xmin, ymin, xmax, ymax). Pure column predicates.
     """
     p = points.withColumn("cell", cell_id(F.col("x"), F.col("y"), cell_size))
-    r = rects.withColumn("cell", F.explode(cover_cells(
-        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        cell_size)))
+    r = rects.withColumn("cell", box_cells(cell_size))
     return (p.join(r, "cell")
              .filter((F.col("x") >= F.col("xmin")) & (F.col("x") < F.col("xmax"))
                      & (F.col("y") >= F.col("ymin")) & (F.col("y") < F.col("ymax")))
              .drop("cell"))
+
+
+def _incident_pairs(rects: DataFrame, segments: DataFrame,
+                    cell_size: float) -> DataFrame:
+    """J8 exact segment-vs-rect incidence over the cell candidates: bbox
+    overlap plus the separating-axis test — the rect's four corners not
+    all strictly on one side of the segment line. Pure column algebra
+    (JVM codegen); a pair repeats once per shared cell."""
+    dx = F.col("bx") - F.col("ax")
+    dy = F.col("by") - F.col("ay")
+    sides = [dx * (F.col(cy) - F.col("ay")) - dy * (F.col(cx) - F.col("ax"))
+             for cx, cy in (("xmin", "ymin"), ("xmax", "ymin"),
+                            ("xmax", "ymax"), ("xmin", "ymax"))]
+    above = sides[0] > 0
+    below = sides[0] < 0
+    for v in sides[1:]:
+        above = above & (v > 0)
+        below = below & (v < 0)
+    return (seg_box_pairs(segments, rects, cell_size)
+            .filter(seg_box_overlap() & ~above & ~below))
 
 
 def incidence_length_join(rects: DataFrame, segments: DataFrame,
@@ -116,35 +133,8 @@ def incidence_length_join(rects: DataFrame, segments: DataFrame,
 
     rects: (block_id, xmin, ymin, xmax, ymax); segments: (way_id,
     way_len, ax, ay, bx, by) — ways intersecting a rect contribute their
-    FULL ``way_len`` once. Exact segment-vs-rect predicate is the
-    separating-axis test in pure column algebra (JVM codegen): bbox
-    overlap on x/y plus the rect's corners not strictly on one side of
-    the segment line. Cell equi-join candidates keep it shuffle-bounded.
-    """
-    r = rects.withColumn("cell", F.explode(cover_cells(
-        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        cell_size)))
-    s = segments.withColumn("cell", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"), cell_size)))
-    j = r.join(s, "cell")
-    bbox_ok = ((F.greatest("ax", "bx") >= F.col("xmin"))
-               & (F.least("ax", "bx") <= F.col("xmax"))
-               & (F.greatest("ay", "by") >= F.col("ymin"))
-               & (F.least("ay", "by") <= F.col("ymax")))
-    dx = F.col("bx") - F.col("ax")
-    dy = F.col("by") - F.col("ay")
-
-    def side(cx, cy):
-        return dx * (cy - F.col("ay")) - dy * (cx - F.col("ax"))
-
-    s1 = side(F.col("xmin"), F.col("ymin"))
-    s2 = side(F.col("xmax"), F.col("ymin"))
-    s3 = side(F.col("xmax"), F.col("ymax"))
-    s4 = side(F.col("xmin"), F.col("ymax"))
-    not_separated = ~((s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)) \
-        & ~((s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0))
-    return (j.filter(bbox_ok & not_separated)
+    FULL ``way_len`` once (``_incident_pairs`` is the predicate)."""
+    return (_incident_pairs(rects, segments, cell_size)
             .groupBy("block_id", "way_id")
             .agg(F.first("way_len").alias("way_len"))
             .groupBy("block_id")
@@ -158,38 +148,28 @@ def incidence_ids_join(rects: DataFrame, segments: DataFrame,
     feature ids as a space-joined string field, used for sidewalk ids
     per protoblock at osm_sidewalkreator.py:988).
 
-    Same candidate join and exact separating-axis predicate as
-    ``incidence_length_join``; emits per rect the sorted distinct
-    incident way ids as ``"id1 id2 ..."`` plus their count."""
-    r = rects.withColumn("cell", F.explode(cover_cells(
-        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        cell_size)))
-    s = segments.withColumn("cell", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"), cell_size)))
-    j = r.join(s, "cell")
-    bbox_ok = ((F.greatest("ax", "bx") >= F.col("xmin"))
-               & (F.least("ax", "bx") <= F.col("xmax"))
-               & (F.greatest("ay", "by") >= F.col("ymin"))
-               & (F.least("ay", "by") <= F.col("ymax")))
-    dx = F.col("bx") - F.col("ax")
-    dy = F.col("by") - F.col("ay")
-
-    def side(cx, cy):
-        return dx * (cy - F.col("ay")) - dy * (cx - F.col("ax"))
-
-    s1 = side(F.col("xmin"), F.col("ymin"))
-    s2 = side(F.col("xmax"), F.col("ymin"))
-    s3 = side(F.col("xmax"), F.col("ymax"))
-    s4 = side(F.col("xmin"), F.col("ymax"))
-    not_separated = ~((s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)) \
-        & ~((s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0))
-    return (j.filter(bbox_ok & not_separated)
+    Same predicate as ``incidence_length_join``; emits per rect the
+    sorted distinct incident way ids as ``"id1 id2 ..."`` plus their
+    count."""
+    return (_incident_pairs(rects, segments, cell_size)
             .groupBy("block_id")
             .agg(F.array_sort(F.collect_set("way_id")).alias("_ids"))
             .select("block_id",
                     F.array_join("_ids", " ").alias("inc_ids"),
                     F.size("_ids").alias("n_inc")))
+
+
+# The engine's one explicit skew salt (AQE's skew join is the other
+# mechanism): a Zipf-hot polygon's PIP candidates split across
+# PIP_N_SALT refine groups instead of one straggler. PIP is per-point,
+# so the split changes nothing semantically; each group re-decodes the
+# polygon once, so bytes per group stay bounded.
+PIP_N_SALT = 8
+
+
+def pip_salt(point_id: str) -> Column:
+    """Refine-group salt of a candidate point, from its id."""
+    return F.pmod(F.xxhash64(F.col(point_id)), F.lit(PIP_N_SALT))
 
 
 def pip_join_points_polygons(points: DataFrame, polys: DataFrame,
@@ -245,13 +225,7 @@ def pip_join_points_polygons(points: DataFrame, polys: DataFrame,
             cols[c] = pdf[c][inside]
         return pd.DataFrame(cols)
 
-    # salted refine groups: a Zipf-hot polygon's candidates split across
-    # n_salt tasks instead of one straggler (PIP is per-point, so the
-    # split changes nothing semantically; each group re-decodes the
-    # polygon once — bytes per group stay bounded)
-    n_salt = 8
-    cand = cand.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(point_id)), F.lit(n_salt)))
+    cand = cand.withColumn("_salt", pip_salt(point_id))
     return cand.groupBy(poly_id, "_salt").applyInPandas(refine, schema)
 
 

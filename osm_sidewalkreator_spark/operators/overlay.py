@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .predicates import _clip_interval
-from .tiling import cover_cells
+from .tiling import box_cells, seg_box_overlap, seg_box_pairs
 
 _IV = "array<struct<t0:double,t1:double>>"
 
@@ -36,14 +36,8 @@ def _candidates(segs: DataFrame, rects: DataFrame, cell_size: float,
                 seg_id: str, rect_id: str) -> DataFrame:
     """Distinct (segment, rect) candidate pairs sharing a grid cell,
     with the clip interval columns attached."""
-    s = segs.withColumn("cell", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"), cell_size)))
-    r = rects.withColumn("cell", F.explode(cover_cells(
-        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        cell_size)))
-    j = (s.join(r, "cell").drop("cell")
-          .dropDuplicates([seg_id, rect_id]))
+    j = seg_box_pairs(segs, rects, cell_size) \
+        .dropDuplicates([seg_id, rect_id])
     t0, t1, outside = _clip_interval()
     return (j.withColumn("_t0", t0).withColumn("_t1", t1)
              .filter(~outside & (t0 < t1)))
@@ -165,21 +159,11 @@ def polygon_clip_intervals(segs: DataFrame, polys: DataFrame,
 
     from ..geometry import core, wkb
 
-    s = segs.select(seg_id, "ax", "ay", "bx", "by").withColumn(
-        "cell", F.explode(cover_cells(
-            F.least("ax", "bx"), F.least("ay", "by"),
-            F.greatest("ax", "bx"), F.greatest("ay", "by"), cell_size)))
-    p = polys.select(poly_id, "xmin", "ymin", "xmax", "ymax",
-                     "geometry").withColumn(
-        "cell", F.explode(cover_cells(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            cell_size)))
-    j = (s.join(p, "cell").drop("cell")
+    s = segs.select(seg_id, "ax", "ay", "bx", "by")
+    p = polys.select(poly_id, "xmin", "ymin", "xmax", "ymax", "geometry")
+    j = (seg_box_pairs(s, p, cell_size)
          .dropDuplicates([seg_id, poly_id])
-         .filter((F.greatest("ax", "bx") >= F.col("xmin"))
-                 & (F.least("ax", "bx") <= F.col("xmax"))
-                 & (F.greatest("ay", "by") >= F.col("ymin"))
-                 & (F.least("ay", "by") <= F.col("ymax"))))
+         .filter(seg_box_overlap()))
 
     sid_t = segs.schema[seg_id].dataType.simpleString()
     pid_t = polys.schema[poly_id].dataType.simpleString()
@@ -423,14 +407,12 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
                       *_piece_coords(F.col("_t0"), F.col("_t1"))))
         pieces = pa.unionByName(pb)
         # candidate pair geometries (cell join on bboxes)
-        ac = ap.withColumn("cell", F.explode(cover_cells(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            cell_size))).select("cell", F.col(a_id).alias("_aid"),
-                                F.col("geometry").alias("a_wkb"))
-        bc = bp.withColumn("cell", F.explode(cover_cells(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            cell_size))).select("cell", F.col(b_id).alias("_bid_own"),
-                                F.col("geometry").alias("b_wkb"))
+        ac = ap.select(box_cells(cell_size).alias("cell"),
+                       F.col(a_id).alias("_aid"),
+                       F.col("geometry").alias("a_wkb"))
+        bc = bp.select(box_cells(cell_size).alias("cell"),
+                       F.col(b_id).alias("_bid_own"),
+                       F.col("geometry").alias("b_wkb"))
         geoms = (ac.join(bc, "cell").drop("cell")
                  .dropDuplicates(["_aid", "_bid_own", "a_wkb", "b_wkb"]))
 
@@ -508,13 +490,11 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
         ivo, "_pk").select("_aid", "px_a", "py_a", "px_b", "py_b")
     pieces = pa_out.unionByName(pb_out)
     # per-A geometry context: A wkb + every candidate B wkb
-    ac = ap.withColumn("cell", F.explode(cover_cells(
-        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        cell_size))).select("cell", F.col(a_id).alias("_aid"),
-                            F.col("geometry").alias("a_wkb"))
-    bc = bp.withColumn("cell", F.explode(cover_cells(
-        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-        cell_size))).select("cell", F.col("geometry").alias("b_wkb"))
+    ac = ap.select(box_cells(cell_size).alias("cell"),
+                   F.col(a_id).alias("_aid"),
+                   F.col("geometry").alias("a_wkb"))
+    bc = bp.select(box_cells(cell_size).alias("cell"),
+                   F.col("geometry").alias("b_wkb"))
     geoms = (ac.join(bc, "cell").drop("cell")
              .dropDuplicates(["_aid", "a_wkb", "b_wkb"]))
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .tiling import cover_cells
+from .tiling import seg_box_pairs
 
 PREDICATES = ("intersects", "contains", "disjoint", "equals", "touches",
               "overlaps", "within", "crosses")
@@ -81,6 +81,14 @@ def _with_flags(j: DataFrame) -> DataFrame:
             .drop("_t0", "_t1", "_out"))
 
 
+def flag_pairs(segs: DataFrame, rects: DataFrame,
+               cell_size: float) -> DataFrame:
+    """Cell-candidate (segment, rect) pairs with every J1 flag attached.
+    A pair repeats once per shared cell, and pairs that share no cell
+    are absent (so ``disjoint`` is never true here)."""
+    return _with_flags(seg_box_pairs(segs, rects, cell_size))
+
+
 def extract_by_location(segs: DataFrame, rects: DataFrame,
                         predicates: list[str],
                         cell_size: float = 128.0,
@@ -96,13 +104,7 @@ def extract_by_location(segs: DataFrame, rects: DataFrame,
     pos = [p for p in predicates if p != "disjoint"]
     out = None
     if pos:
-        s = segs.withColumn("cell", F.explode(cover_cells(
-            F.least("ax", "bx"), F.least("ay", "by"),
-            F.greatest("ax", "bx"), F.greatest("ay", "by"), cell_size)))
-        r = rects.withColumn("cell", F.explode(cover_cells(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            cell_size)))
-        flags = _with_flags(s.join(r, "cell"))
+        flags = flag_pairs(segs, rects, cell_size)
         cond = None
         for p in pos:
             cond = F.col(p) if cond is None else (cond | F.col(p))

@@ -13,8 +13,8 @@ cover (JVM ``sequence``/``transform``/``explode`` — no Python), the
 exact in-cell length is a closed-form Liang-Barsky parameter-interval
 clip in whole-stage-codegen'd column expressions, zero-length
 candidates are filtered, and one ``groupBy(cell)`` aggregates the
-burn. One shuffle, on the cell key; skewed hot cells are handled by
-the same AQE/salting machinery as every other cell join.
+burn. One shuffle, on the cell key; AQE splits skewed hot cells as
+in every other cell join.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .tiling import cover_cells
+from .tiling import seg_cells
 
 
 def _axis_interval(p0: Column, d: Column, lo: Column, hi: Column
@@ -51,9 +51,7 @@ def rasterize_segments(segs: DataFrame, cell_size: float,
     column — e.g. a width for area-burn semantics).
     """
     cs = float(cell_size)
-    s = segs.withColumn("_cell", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"), cs)))
+    s = segs.withColumn("_cell", seg_cells(cs))
     cx = F.shiftright(F.col("_cell"), 32).cast("long")  # arithmetic:
     # sign of a negative cell_x survives the unpack
     # sign-extend the low 32 bits (negative cell_y survives the pack)

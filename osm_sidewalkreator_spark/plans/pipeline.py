@@ -34,7 +34,7 @@ from .. import params as P
 from ..geometry import core, wkb
 from ..synth import CITY_LAT0, CITY_LON0, ensure_synth
 from ..functions.geo import st_explode_segments, make_transform_udf
-from ..operators.tiling import cover_cells
+from ..operators.tiling import seg_cells
 from . import kernels
 
 WIDTHS_ITEMS = sorted(P.DEFAULT_WIDTHS.items())
@@ -476,10 +476,7 @@ def _explode_tiles(segs: DataFrame, tile_size: float, halo: float
                    ) -> DataFrame:
     """One row per tile whose halo-padded square the segment bbox
     touches."""
-    return segs.withColumn("tile", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"),
-        tile_size, pad=halo)))
+    return segs.withColumn("tile", seg_cells(tile_size, pad=halo))
 
 
 # ---------------- the one tiled executor ----------------

@@ -7,6 +7,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_defaults() -> tuple[int, str]:
+    """(cpus, driver memory) for a local session on this host: the CPUs
+    this process may run on, and half of MemAvailable (at least 1 GB).
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` override them."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f
+                      if ln.startswith("MemAvailable:"))
+        mem = f"{max(1, kb // 2**21)}g"
+    return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
+
+
 def get_spark(app: str = "osm_sidewalkreator_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -26,10 +40,9 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
         "GLIBC_TUNABLES",
         "glibc.malloc.mmap_threshold=134217728"
         ":glibc.malloc.trim_threshold=134217728")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = host_defaults()
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE", cpus))
+    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder
         .master(master)
@@ -40,8 +53,7 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # propagate the malloc tunables to executor-side Python workers
         # on real clusters (local mode inherits the driver env)

@@ -1,16 +1,16 @@
 """Dump .explain('formatted') for the bench-timed query plans into
-plans/r06/<name>_<tag>.txt (tag = before/after). Usage:
-    python scripts/dump_plans.py before [name ...]
+plans/<round>/<name>_<tag>.txt under this checkout. Usage:
+    python scripts/dump_plans.py <round> <tag> [name ...]
+e.g. ``dump_plans.py r07 before``.
 """
 
 import os
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-# SPARK_GRAFT_PLANS_REPO lets the "before" dump run against a worktree
-# checked out at the round-start commit while writing into the main
-# tree's plans/r06/.
-sys.path.insert(0, os.environ.get("SPARK_GRAFT_PLANS_REPO", "/root/repo"))
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -62,7 +62,8 @@ def plans(spark, sf_dir):
         "lm_bigram_nll": lambda: LM.bigram_nll(docs),
         "pack_sequences": lambda: PK.pack_sequences(
             TX.chunk_documents(SA.shard_corpus(docs, 8),
-                               extra_cols=("shard",)), 512),
+                               extra_cols=("shard",)), 512)
+        .select("shard", "seq_id").distinct(),
         # the two queries below are built inline in frozen bench.py;
         # their construction is replicated here verbatim so their
         # plans are on record too
@@ -99,15 +100,18 @@ def _dem_kerb_slope(spark, sf_dir, P):
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir = REPO / "plans" / sys.argv[1]
+    tag = sys.argv[2]
+    only = set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app="dump_plans")
-    os.makedirs("/root/repo/plans/r06", exist_ok=True)
+    out_dir.mkdir(parents=True, exist_ok=True)
     for name, fn in plans(spark, sf_dir).items():
         if only and name not in only:
             continue
-        path = f"/root/repo/plans/r06/{name}_{tag}.txt"
+        path = out_dir / f"{name}_{tag}.txt"
         with open(path, "w") as f, redirect_stdout(f):
             fn().explain("formatted")
         print("wrote", path)

@@ -15,7 +15,7 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -35,16 +35,12 @@ def load_tiles(n_tiles: int):
             return tiles[:n_tiles]
     from pyspark.sql import functions as F
 
-    from osm_sidewalkreator_spark.operators.tiling import cover_cells
     from osm_sidewalkreator_spark.session import get_spark
     spark = get_spark(shuffle_partitions=32)
     streets = PL.assign_widths(
         PL.clip_to_aoi(PL.load_streets(spark, SF), spark, SF))
     segs = PL.street_segments_tm(streets)
-    tiled = segs.withColumn("tile", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"),
-        P.TILE_SIZE_M, pad=P.TILE_HALO_M)))
+    tiled = PL._explode_tiles(segs, P.TILE_SIZE_M, P.TILE_HALO_M)
     census = (tiled.groupBy("tile").count()
               .orderBy(F.desc("count")).limit(n_tiles).collect())
     heavy = [r["tile"] for r in census]

@@ -8,10 +8,11 @@ import hashlib
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as E  # noqa: E402
 from osm_sidewalkreator_spark.session import get_spark  # noqa: E402
 

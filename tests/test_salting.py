@@ -1,11 +1,16 @@
-"""Salted-join equivalence + skew-spread tests."""
+"""Skew tests: the Zipf geocode is skewed, and the PIP refine's salt
+spreads the hottest polygon's candidates."""
+
+import contextlib
+import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from osm_sidewalkreator_spark import params as P
 from osm_sidewalkreator_spark.operators import joins as J
-from osm_sidewalkreator_spark.operators import salting as S
-from osm_sidewalkreator_spark.operators.tiling import cell_id
+from osm_sidewalkreator_spark.operators.tiling import box_cells, cell_id
 from osm_sidewalkreator_spark.pages import geocode_pages, load_pages
 from osm_sidewalkreator_spark.session import get_spark
 from osm_sidewalkreator_spark.synth import ensure_synth
@@ -18,27 +23,10 @@ def spark():
     return get_spark(app="tests", shuffle_partitions=8)
 
 
-def test_salted_join_same_result(spark):
-    pages = geocode_pages(load_pages(spark, SF), SF) \
-        .select("url", "x", "y") \
-        .withColumn("cell", cell_id(F.col("x"), F.col("y"), 128.0))
+def _pages_and_blocks(spark):
+    pages = geocode_pages(load_pages(spark, SF), SF).select("url", "x", "y")
     blocks = spark.read.parquet(str(ensure_synth(SF) / "blocks.parquet"))
-    from osm_sidewalkreator_spark.operators.tiling import cover_cells
-    dim = blocks.select(
-        "block_id", "xmin", "ymin", "xmax", "ymax",
-        F.explode(cover_cells(F.col("xmin"), F.col("ymin"),
-                              F.col("xmax"), F.col("ymax"), 128.0))
-         .alias("cell"))
-    plain = (pages.join(dim, "cell")
-             .filter((F.col("x") >= F.col("xmin")) & (F.col("x") < F.col("xmax"))
-                     & (F.col("y") >= F.col("ymin")) & (F.col("y") < F.col("ymax")))
-             .select("url", "block_id"))
-    salted = (S.salted_cell_join(pages, dim, factor=8, fact_id="url")
-              .filter((F.col("x") >= F.col("xmin")) & (F.col("x") < F.col("xmax"))
-                      & (F.col("y") >= F.col("ymin")) & (F.col("y") < F.col("ymax")))
-              .select("url", "block_id"))
-    assert plain.count() == salted.count()
-    assert plain.exceptAll(salted).count() == 0
+    return pages, blocks
 
 
 def test_zipf_geocode_is_skewed(spark):
@@ -51,12 +39,29 @@ def test_zipf_geocode_is_skewed(spark):
     assert hottest > 5 * max(median, 1)
 
 
-def test_salt_spreads_hot_cell(spark):
-    pages = geocode_pages(load_pages(spark, SF), SF) \
-        .withColumn("cell", cell_id(F.col("x"), F.col("y"), 128.0))
-    hot = S.top_hot_cells(pages, "cell", k=1)[0]
-    salted = S.salt_fact(pages.filter(F.col("cell") == hot), "url", 8)
-    per_salt = salted.groupBy("salt").count().collect()
-    assert len(per_salt) == 8
+def test_pip_refine_is_grouped_by_polygon_and_salt(spark):
+    pages, blocks = _pages_and_blocks(spark)
+    polys = blocks.select(F.col("block_id").alias("poly_id"), "geometry")
+    out = J.pip_join_points_polygons(pages, polys, cell_size=P.CELL_SIZE_M)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain(mode="extended")
+    optimized = buf.getvalue().split("== Optimized Logical Plan ==")[1]
+    assert re.search(r"FlatMapGroupsInPandas \[poly_id#\d+L?, _salt#\d+L?\]",
+                     optimized), optimized
+
+
+def test_pip_salt_spreads_hottest_polygon(spark):
+    pages, blocks = _pages_and_blocks(spark)
+    # the refine's candidates: a page's cell against each block's cover
+    cand = (pages.withColumn("cell", cell_id(F.col("x"), F.col("y"),
+                                             P.CELL_SIZE_M))
+            .join(blocks.select("block_id", box_cells(P.CELL_SIZE_M)
+                                .alias("cell")), "cell"))
+    hot = (cand.groupBy("block_id").count()
+           .orderBy(F.col("count").desc()).first()["block_id"])
+    per_salt = (cand.filter(F.col("block_id") == hot)
+                .groupBy(J.pip_salt("url")).count().collect())
+    assert len(per_salt) == J.PIP_N_SALT == 8
     total = sum(r["count"] for r in per_salt)
-    assert max(r["count"] for r in per_salt) < 0.35 * total
+    assert max(r["count"] for r in per_salt) <= 0.35 * total
