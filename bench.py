@@ -138,7 +138,8 @@ def main():
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     timed("cosine_topk", lambda: SS.cosine_topk_bruteforce(emb).count())
     timed("cosine_lsh", lambda: SS.cosine_topk_lsh(emb).count())
-    counters["lsh_recall_at_5"] = round(SS.lsh_recall_at_k(emb, k=5), 4)
+    counters["lsh_recall_at_5"] = round(
+        SS.recall_at_k(SS.cosine_topk_lsh(emb), emb, k=5), 4)
 
     # 7. relational glue (TPC-H Q1-style)
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -167,7 +168,7 @@ def main():
         "curate_corpus",
         lambda: curate_corpus(docs, min_quality=0.5).count(), into=extra)
     counters["int8_recall_at_5"] = round(
-        SS.quantized_recall_at_k(emb, k=5), 4)
+        SS.recall_at_k(SS.cosine_topk_quantized(emb), emb, k=5), 4)
 
     # round-5 additions (same rule: extras only, headline untouched)
     from osm_sidewalkreator_spark.operators import lm as LM

@@ -125,33 +125,6 @@ def point_segment_distance(px: np.ndarray, py: np.ndarray,
     return np.hypot(px - cx, py - cy)
 
 
-def min_dist_points_to_segs(px: np.ndarray, py: np.ndarray,
-                            segs: np.ndarray, chunk: int = 256) -> np.ndarray:
-    """Min distance from each point to ANY segment: (n_points,).
-
-    Chunked (points x segments) broadcast; used for coverage predicates in
-    the morphology pipeline and for building-distance width shrink
-    (osm_sidewalkreator.py:1843-1893).
-    """
-    n = len(px)
-    out = np.full(n, np.inf)
-    if len(segs) == 0 or n == 0:
-        return out
-    ax, ay, bx, by = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    dx, dy = bx - ax, by - ay
-    ll = dx * dx + dy * dy
-    ll_safe = np.where(ll == 0, 1.0, ll)
-    for s in range(0, n, chunk):
-        e = min(s + chunk, n)
-        pxx = px[s:e, None]
-        pyy = py[s:e, None]
-        t = ((pxx - ax) * dx + (pyy - ay) * dy) / ll_safe
-        t = np.where(ll == 0, 0.0, np.clip(t, 0.0, 1.0))
-        cx, cy = ax + t * dx, ay + t * dy
-        out[s:e] = np.hypot(pxx - cx, pyy - cy).min(axis=1)
-    return out
-
-
 def explode_polyline_to_segments(coords: np.ndarray) -> np.ndarray:
     """(n,2) polyline -> (n-1,4) segment array, zero-length dropped."""
     a = coords[:-1]

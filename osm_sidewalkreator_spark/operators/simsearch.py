@@ -68,6 +68,44 @@ def _pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(res, dtype="float64")
 
 
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v): the embedding column read as array<double>."""
+    return emb.select("vec_id",
+                      F.col("embedding").cast("array<double>").alias("v"))
+
+
+def _queries(df: DataFrame, query_mod: int) -> DataFrame:
+    """The deterministic query subset (vec_id % query_mod == 0) of any
+    per-vector frame, with vec_id renamed query_id."""
+    return (df.filter(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0)
+            .withColumnRenamed("vec_id", "query_id"))
+
+
+def _rank_topk(j: DataFrame, k: int) -> DataFrame:
+    """Top-k tail over (query_id, vec_id, cosine) pairs: rank by
+    (cosine desc, vec_id asc) per query. The 9-decimal cosine lets an
+    independent evaluator (the DuckDB oracle) rank identically."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id").asc())
+    return (j.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                    "cosine", "rank"))
+
+
+def _refine(cand: DataFrame, e: DataFrame) -> DataFrame:
+    """Exact 9-decimal cosine of (query_id, vec_id) candidate pairs over
+    the (vec_id, v) vectors ``e``: per-vector norms once, then the
+    Arrow-batched ``_pair_dot`` (bit-identical to the per-pair
+    ``_dot``/``_norm`` fold)."""
+    en = e.select("vec_id", "v", _norm(F.col("v")).alias("nv"))
+    qv = en.select(F.col("vec_id").alias("query_id"),
+                   F.col("v").alias("qv"), F.col("nv").alias("qn"))
+    sim = _pair_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nv"))
+    return (cand.join(qv, "query_id").join(en, "vec_id")
+            .withColumn("cosine", F.round(sim, 9)))
+
+
 def _blockwise_pair_dots(idx: DataFrame, q: DataFrame) -> DataFrame:
     """All (query, index) pair dots + both norms via a cogrouped
     block kernel — the "move heavy bytes once" shape (guide §8) for
@@ -137,6 +175,18 @@ def _blockwise_pair_dots(idx: DataFrame, q: DataFrame) -> DataFrame:
                            "qn double, nv double"))
 
 
+def _exact_topk(e: DataFrame, k: int, query_mod: int) -> DataFrame:
+    """Exact top-k of the query subset over every (vec_id, v) vector:
+    all pair dots from the block kernel, then the shared rank tail."""
+    # the cogroup's two sides need distinct names: `v` on both is an
+    # ambiguous self-join
+    q = _queries(e, query_mod).withColumnRenamed("v", "qv")
+    j = _blockwise_pair_dots(e, q).filter(
+        F.col("vec_id") != F.col("query_id"))
+    sim = F.col("dot") / (F.col("qn") * F.col("nv"))
+    return _rank_topk(j.withColumn("cosine", F.round(sim, 9)), k)
+
+
 def cosine_topk_bruteforce(emb: DataFrame, k: int = 5,
                            query_mod: int = 50) -> DataFrame:
     """Exact top-k cosine neighbors for every query vector.
@@ -149,49 +199,23 @@ def cosine_topk_bruteforce(emb: DataFrame, k: int = 5,
     Ties broken by candidate id; similarity rounded to 9 decimals so an
     independent evaluator (the DuckDB oracle) ranks identically.
     """
-    e = emb.select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("v"))
-    q = e.filter(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0) \
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    j = _blockwise_pair_dots(e, q).filter(
-        F.col("vec_id") != F.col("query_id"))
-    sim = F.col("dot") / (F.col("qn") * F.col("nv"))
-    j = j.withColumn("cosine", F.round(sim, 9))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc())
-    return (j.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "cosine", "rank"))
-
-
-def _hyperplane_sign(v, plane_seed: int, dim: int):
-    """Deterministic random hyperplane: weight_i = centered xxhash64 of
-    (plane_seed, i); sign of <v, w>."""
-    idx = F.sequence(F.lit(0), F.lit(dim - 1))
-    w = F.transform(idx, lambda i: (
-        F.pmod(F.xxhash64(F.lit(plane_seed), i), F.lit(2001)).cast("double")
-        - F.lit(1000.0)))
-    return (F.aggregate(F.zip_with(v, w, lambda x, y: x * y),
-                        F.lit(0.0), lambda a, b: a + b) > 0).cast("int")
+    return _exact_topk(_vectors(emb), k, query_mod)
 
 
 _WEIGHTS_CACHE: dict = {}
 
 
 def _plane_weight_matrix(spark, n_seeds: int, dim: int) -> list:
-    """All hyperplane weight rows [seed 0..n_seeds) evaluated ONCE with
-    the exact `_hyperplane_sign` hash formula (bucket parity with the
-    per-row expression), returned as plain floats for a single 2-D array
-    literal. Keeping 60 aggregate-expression trees in the plan made
-    Catalyst re-analyze seconds' worth of nodes at every downstream
-    join; one Literal node costs nothing."""
+    """All deterministic random-hyperplane weight rows [seed
+    0..n_seeds): weight_i of plane s = pmod(xxhash64(s, i), 2001) - 1000,
+    evaluated ONCE and returned as plain floats. Keeping 60
+    aggregate-expression trees in the plan made Catalyst re-analyze
+    seconds' worth of nodes at every downstream join."""
     key = (n_seeds, dim)
     if key not in _WEIGHTS_CACHE:
         # one nested-transform column (60 separate transform columns
         # took ~10 s of analysis/codegen for a single row); the seed
-        # element is an int like F.lit(seed), so xxhash64 values match
-        # `_hyperplane_sign` exactly
+        # is hashed as an int: another type would change every bucket
         m = F.transform(
             F.sequence(F.lit(0), F.lit(n_seeds - 1)),
             lambda s: F.transform(
@@ -239,6 +263,25 @@ def _bucket_udf(W: list, n_tables: int, n_planes: int):
     return _buckets
 
 
+def _lsh_buckets(e: DataFrame, n_tables: int, n_planes: int, dim: int,
+                 max_bucket: int) -> DataFrame:
+    """(vec_id, tbl, bucket): the ``n_tables`` hyperplane bucket ids of
+    every (vec_id, v) vector, one row per table, with buckets larger
+    than ``max_bucket`` dropped per table."""
+    W = _plane_weight_matrix(e.sparkSession, n_tables * n_planes, dim)
+    # all n_tables bucket ids in ONE Arrow-batched NumPy pass
+    # (bit-identical fold order — see _bucket_udf)
+    banded = e.select("vec_id", F.posexplode(_bucket_udf(
+        W, n_tables, n_planes)(F.col("v"))).alias("tbl", "bucket"))
+    # hot-bucket cap as a window over the SAME (tbl, bucket)
+    # partitioning the candidate join needs: the filter preserves the
+    # exchange, so cap + join cost one shuffle and both join sides
+    # reuse it
+    wb = Window.partitionBy("tbl", "bucket")
+    return (banded.withColumn("_bn", F.count("*").over(wb))
+            .filter(F.col("_bn") <= max_bucket).drop("_bn"))
+
+
 def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
                     n_planes: int = 6, n_tables: int = 10,
                     dim: int = 64, max_bucket: int = 4096,
@@ -265,7 +308,7 @@ def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
     - the expensive array math runs once per DISTINCT candidate pair,
       after an id-only dedup, not once per (table, pair).
 
-    Measured recall@5 (``lsh_recall_at_k``; the bench reports it as
+    Measured recall@5 (``recall_at_k``; the bench reports it as
     counter ``lsh_recall_at_5``): the driver embeddings are NEAR-
     UNIFORM (true top-5 cosines only 0.27-0.45, barely above the
     ~0 of random pairs), the adversarial regime for any ANN index —
@@ -277,24 +320,9 @@ def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
     deployment, pinned in tests/test_spark_ops.py) recall is >= 0.9
     even without multi-probe, with a small candidate fraction.
     """
-    e = emb.select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("v"))
-    W = _plane_weight_matrix(emb.sparkSession, n_tables * n_planes, dim)
-    # all n_tables bucket ids in ONE Arrow-batched NumPy pass
-    # (bit-identical fold order — see _bucket_udf); the previous JVM
-    # expression interpreted 60x64 lambda steps per row and, being
-    # referenced by both join sides below, ran twice per vector
-    banded = e.select("vec_id", F.posexplode(_bucket_udf(
-        W, n_tables, n_planes)(F.col("v"))).alias("tbl", "bucket"))
-    # per-table hot-bucket cap as a window over the SAME (tbl, bucket)
-    # partitioning the candidate join needs: the filter preserves the
-    # exchange, so cap + join cost one shuffle and the two join sides
-    # reuse it (vs the round-1 agg + broadcast-anti extra stages)
-    wb = Window.partitionBy("tbl", "bucket")
-    banded = (banded.withColumn("_bn", F.count("*").over(wb))
-              .filter(F.col("_bn") <= max_bucket).drop("_bn"))
-    qb = (banded.filter(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0)
-          .select(F.col("vec_id").alias("query_id"), "tbl", "bucket"))
+    e = _vectors(emb)
+    banded = _lsh_buckets(e, n_tables, n_planes, dim, max_bucket)
+    qb = _queries(banded, query_mod)
     if probe_hamming >= 1:
         # query-side multi-probe: own bucket + every 1-bit flip. The
         # XOR explode runs on the query subset only; the big data side
@@ -308,30 +336,18 @@ def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
     cand = (qb.join(banded, ["tbl", "bucket"])
             .filter(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id").distinct())
-    # per-vector norms once, Arrow-batched pair dot (bit-identical to
-    # the per-pair HOF fold — see _pair_dot / cosine_topk_bruteforce)
-    en = e.select("vec_id", "v", _norm(F.col("v")).alias("nv"))
-    qv = en.select(F.col("vec_id").alias("query_id"),
-                   F.col("v").alias("qv"), F.col("nv").alias("qn"))
-    j = cand.join(qv, "query_id").join(en, "vec_id")
-    sim = _pair_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nv"))
-    j = j.withColumn("cosine", F.round(sim, 9))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc())
-    return (j.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "cosine", "rank"))
+    return _rank_topk(_refine(cand, e), k)
 
 
-def lsh_recall_at_k(emb: DataFrame, k: int = 5, query_mod: int = 50,
-                    **lsh_kwargs) -> float:
-    """Measured recall@k of the LSH path vs the brute-force truth."""
+def recall_at_k(approx: DataFrame, emb: DataFrame, k: int = 5,
+                query_mod: int = 50) -> float:
+    """Measured recall@k of an approximate top-k result (any operator's
+    (query_id, neighbor_id) output for the same k and query_mod) vs the
+    brute-force truth."""
     truth = cosine_topk_bruteforce(emb, k=k, query_mod=query_mod) \
         .select("query_id", "neighbor_id")
-    approx = cosine_topk_lsh(emb, k=k, query_mod=query_mod, **lsh_kwargs) \
-        .select("query_id", "neighbor_id")
-    hit = truth.join(approx, ["query_id", "neighbor_id"], "left_semi")
+    hit = truth.join(approx.select("query_id", "neighbor_id"),
+                     ["query_id", "neighbor_id"], "left_semi")
     n_truth = truth.count()
     return (hit.count() / n_truth) if n_truth else 1.0
 
@@ -358,40 +374,20 @@ def embedding_neardup_dedup(emb: DataFrame, threshold: float = 0.35,
     Cosine is rounded to 9 decimals before the threshold compare so an
     independent evaluator ranks borderline pairs identically.
     """
-    e = emb.select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(emb)
     if use_lsh:
-        W = _plane_weight_matrix(emb.sparkSession, n_tables * n_planes,
-                                 dim)
-        # Arrow-batched bucket ids, bit-identical to the JVM fold
-        # (see _bucket_udf)
-        banded = e.select("vec_id", F.posexplode(_bucket_udf(
-            W, n_tables, n_planes)(F.col("v"))).alias("tbl", "bucket"))
-        wb = Window.partitionBy("tbl", "bucket")
-        banded = (banded.withColumn("_bn", F.count("*").over(wb))
-                  .filter(F.col("_bn") <= max_bucket).drop("_bn"))
-        a = banded.select(F.col("vec_id").alias("ia"), "tbl", "bucket")
-        b = banded.select(F.col("vec_id").alias("ib"), "tbl", "bucket")
-        cand = (a.join(b, ["tbl", "bucket"])
-                .filter(F.col("ia") < F.col("ib"))
-                .select("ia", "ib").distinct())
+        banded = _lsh_buckets(e, n_tables, n_planes, dim, max_bucket)
+        cand = (banded.withColumnRenamed("vec_id", "query_id")
+                .join(banded, ["tbl", "bucket"])
+                .filter(F.col("query_id") < F.col("vec_id"))
+                .select("query_id", "vec_id").distinct())
     else:
-        a = e.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-        b = e.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-        cand = a.crossJoin(b).filter(F.col("ia") < F.col("ib")) \
-            .select("ia", "ib")
-    en = e.select("vec_id", "v", _norm(F.col("v")).alias("nv"))
-    pairs = (cand
-             .join(en.select(F.col("vec_id").alias("ia"),
-                             F.col("v").alias("va"),
-                             F.col("nv").alias("na")), "ia")
-             .join(en.select(F.col("vec_id").alias("ib"),
-                             F.col("v").alias("vb"),
-                             F.col("nv").alias("nb")), "ib"))
-    sim = _pair_dot(F.col("va"), F.col("vb")) \
-        / (F.col("na") * F.col("nb"))
-    dups = (pairs.filter(F.round(sim, 9) >= threshold)
-            .select(F.col("ib").alias("vec_id")).distinct())
+        cand = (e.select(F.col("vec_id").alias("query_id"))
+                .crossJoin(e.select("vec_id"))
+                .filter(F.col("query_id") < F.col("vec_id")))
+    # the larger id of each near-duplicate pair is dropped
+    dups = (_refine(cand, e).filter(F.col("cosine") >= threshold)
+            .select("vec_id").distinct())
     return emb.join(dups, "vec_id", "left_anti")
 
 
@@ -413,8 +409,7 @@ def cosine_topk_ivf(emb: DataFrame, k: int = 5, query_mod: int = 50,
     join shuffles on the centroid id — per-query work is bounded by
     the n_probe largest cells instead of N.
     """
-    e = emb.select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("v"))
+    e = _vectors(emb)
     if centroids is not None:
         cent = e.sparkSession.createDataFrame(
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
@@ -433,37 +428,35 @@ def cosine_topk_ivf(emb: DataFrame, k: int = 5, query_mod: int = 50,
     ranked = scored.withColumn("_r", F.row_number().over(wa))
     assign = (ranked.filter(F.col("_r") == 1)
               .select("vec_id", "cid"))
-    probes = (ranked.filter(F.col("_r") <= n_probe)
-              .filter(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0)
-              .select(F.col("vec_id").alias("query_id"), "cid"))
+    probes = _queries(ranked.filter(F.col("_r") <= n_probe), query_mod) \
+        .select("query_id", "cid")
     cand = (probes.join(assign, "cid")
             .filter(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id").distinct())
-    qv = e.select(F.col("vec_id").alias("query_id"),
-                  F.col("v").alias("qv"))
-    j = cand.join(qv, "query_id").join(e, "vec_id")
-    sim = _dot(F.col("qv"), F.col("v")) \
-        / (_norm(F.col("qv")) * _norm(F.col("v")))
-    j = j.withColumn("cosine", F.round(sim, 9))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc())
-    return (j.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "cosine", "rank"))
+    return _rank_topk(_refine(cand, e), k)
 
 
-def ivf_recall_at_k(emb: DataFrame, k: int = 5, query_mod: int = 50,
-                    **ivf_kwargs) -> float:
-    """Measured recall@k of the IVF path vs the brute-force truth."""
-    truth = cosine_topk_bruteforce(emb, k=k, query_mod=query_mod) \
-        .select("query_id", "neighbor_id")
-    approx = cosine_topk_ivf(emb, k=k, query_mod=query_mod,
-                             **ivf_kwargs).select(
-        "query_id", "neighbor_id")
-    hit = truth.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    n_truth = truth.count()
-    return (hit.count() / n_truth) if n_truth else 1.0
+def _unit(emb: DataFrame) -> DataFrame:
+    """(vec_id, vn): every embedding scaled to unit length (zero
+    vectors stay zero)."""
+    nrm = _norm(F.col("v"))
+    vn = F.when(nrm > F.lit(0.0),
+                F.transform(F.col("v"), lambda x: x / nrm)) \
+         .otherwise(F.col("v"))
+    return _vectors(emb).select("vec_id", vn.alias("vn"))
+
+
+def _cell_sims(centroids: list):
+    """Dot of ``vn`` with each centroid; the centroids ride into the
+    scan as one array literal (no join, no shuffle)."""
+    cmat = F.array(*[F.lit([float(x) for x in c]) for c in centroids])
+    return F.transform(cmat, lambda cv: _dot(F.col("vn"), cv))
+
+
+def _argmax(sims):
+    """0-based index of the first maximum of ``sims``: ties resolve to
+    the lowest cell id, matching NumPy ``argmax``."""
+    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 
 
 def kmeans_fit_spherical(emb: DataFrame, n_centroids: int = 32,
@@ -500,14 +493,7 @@ def kmeans_fit_spherical(emb: DataFrame, n_centroids: int = 32,
 
     if n_centroids < 1:
         raise ValueError(f"n_centroids must be >= 1: {n_centroids}")
-    nrm = _norm(F.col("v"))
-    vn = F.when(nrm > F.lit(0.0),
-                F.transform(F.col("v"), lambda x: x / nrm)) \
-         .otherwise(F.col("v"))
-    e = (emb.select("vec_id",
-                    F.col("embedding").cast("array<double>").alias("v"))
-         .select("vec_id", vn.alias("vn")))
-    e = e.persist()
+    e = _unit(emb).persist()
     try:
         init = (e.withColumn("_h", F.xxhash64("vec_id"))
                 .orderBy("_h").limit(n_centroids).select("vn").collect())
@@ -517,11 +503,7 @@ def kmeans_fit_spherical(emb: DataFrame, n_centroids: int = 32,
         dim = len(cents[0])
         sums = [F.sum(F.col("vn")[i]).alias(f"s{i}") for i in range(dim)]
         for _ in range(iters):
-            cmat = F.array(*[F.lit(c) for c in cents])
-            sims = F.transform(cmat, lambda cv: _dot(F.col("vn"), cv))
-            best = (F.array_position(sims, F.array_max(sims)) - 1) \
-                .cast("int")
-            rows = (e.withColumn("cid", best)
+            rows = (e.withColumn("cid", _argmax(_cell_sims(cents)))
                     .groupBy("cid").agg(*sums).collect())
             nxt = [list(c) for c in cents]  # empty cell keeps its centroid
             for r in rows:
@@ -539,17 +521,8 @@ def assign_cells(emb: DataFrame, centroids: list) -> DataFrame:
     """(vec_id, cid) under max-cosine assignment to ``centroids`` —
     the same shuffle-free literal-array expression the k-means
     iterations use, exposed for building/inspecting IVF lists."""
-    nrm = _norm(F.col("v"))
-    vn = F.when(nrm > F.lit(0.0),
-                F.transform(F.col("v"), lambda x: x / nrm)) \
-         .otherwise(F.col("v"))
-    e = (emb.select("vec_id",
-                    F.col("embedding").cast("array<double>").alias("v"))
-         .select("vec_id", vn.alias("vn")))
-    cmat = F.array(*[F.lit([float(x) for x in c]) for c in centroids])
-    sims = F.transform(cmat, lambda cv: _dot(F.col("vn"), cv))
-    best = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-    return e.select("vec_id", best.alias("cid"))
+    return _unit(emb).select(
+        "vec_id", _argmax(_cell_sims(centroids)).alias("cid"))
 
 
 def quantize_embeddings(emb: DataFrame, bits: int = 8) -> DataFrame:
@@ -569,8 +542,7 @@ def quantize_embeddings(emb: DataFrame, bits: int = 8) -> DataFrame:
     (see ``cosine_topk_quantized``).
     """
     qmax = (1 << (bits - 1)) - 1
-    v = F.col("embedding").cast("array<double>")
-    d = emb.select("vec_id", v.alias("v"))
+    d = _vectors(emb)
     amax = F.aggregate(F.col("v"), F.lit(0.0),
                        lambda a, x: F.greatest(a, F.abs(x)))
     d = d.withColumn("scale", F.when(amax > F.lit(0.0),
@@ -598,37 +570,11 @@ def cosine_topk_quantized(emb: DataFrame, k: int = 5, query_mod: int = 50,
     approximate.
     """
     q8 = quantize_embeddings(emb, bits=bits)
-    # the cogrouped block kernel computes integer pair dots and the
-    # per-vector self-dot norms in one boundary crossing per vector.
-    # Integer dots are exactly representable in float64 (|dot| <=
-    # qmax^2 * dim << 2^53), so every reassociation is EXACT here —
-    # sqrt/divide/round then match bit for bit.
-    e = q8.select("vec_id", F.col("qvec").alias("v"))
-    q = e.filter(F.pmod(F.col("vec_id"), F.lit(query_mod)) == 0) \
-         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    j = _blockwise_pair_dots(e, q).filter(
-        F.col("vec_id") != F.col("query_id"))
-    sim = F.col("dot") / (F.col("qn") * F.col("nv"))
-    j = j.withColumn("cosine", F.round(sim, 9))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc())
-    return (j.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    "cosine", "rank"))
-
-
-def quantized_recall_at_k(emb: DataFrame, k: int = 5,
-                          query_mod: int = 50, bits: int = 8) -> float:
-    """Measured recall@k of quantized ranking vs the float truth."""
-    truth = cosine_topk_bruteforce(emb, k=k, query_mod=query_mod) \
-        .select("query_id", "neighbor_id")
-    approx = cosine_topk_quantized(emb, k=k, query_mod=query_mod,
-                                   bits=bits).select(
-        "query_id", "neighbor_id")
-    hit = truth.join(approx, ["query_id", "neighbor_id"], "left_semi")
-    n_truth = truth.count()
-    return (hit.count() / n_truth) if n_truth else 1.0
+    # integer dots and self-dots in the block kernel are exactly
+    # representable in float64, so every reassociation is EXACT here —
+    # sqrt/divide/round then match bit for bit
+    return _exact_topk(q8.select("vec_id", F.col("qvec").alias("v")),
+                       k, query_mod)
 
 
 def semdedup(emb: DataFrame, threshold: float = 0.95,
@@ -671,11 +617,6 @@ def semdedup(emb: DataFrame, threshold: float = 0.95,
         return emb
     from pyspark import StorageLevel
 
-    nrm = _norm(F.col("v"))
-    vn = F.when(nrm > F.lit(0.0),
-                F.transform(F.col("v"), lambda x: x / nrm)) \
-         .otherwise(F.col("v"))
-    cmat = F.array(*[F.lit([float(x) for x in c]) for c in centroids])
     # the k x dim literal matmul is an EXPENSIVE expression tree
     # (k*dim lambda evaluations per row, duplicated for the argmax);
     # compute `_sims` once behind a projection and PERSIST the
@@ -683,16 +624,8 @@ def semdedup(emb: DataFrame, threshold: float = 0.95,
     # counts, both self-join sides, the representative join) and
     # would otherwise re-run the matmul on each reference (measured
     # 4x wall on the profile corpus)
-    e = (emb.select("vec_id",
-                    F.col("embedding").cast("array<double>").alias("v"))
-         .select("vec_id", vn.alias("vn"))
-         .withColumn("_sims",
-                     F.transform(cmat, lambda cv: _dot(F.col("vn"),
-                                                       cv)))
-         .select("vec_id", "vn",
-                 (F.array_position(F.col("_sims"),
-                                   F.array_max(F.col("_sims"))) - 1)
-                 .cast("int").alias("cid"),
+    e = (_unit(emb).withColumn("_sims", _cell_sims(centroids))
+         .select("vec_id", "vn", _argmax(F.col("_sims")).alias("cid"),
                  F.round(F.array_max(F.col("_sims")), 9)
                  .alias("cent_sim"))
          .persist(StorageLevel.MEMORY_AND_DISK))

@@ -156,24 +156,13 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
 
 
 def simhash64(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash per document from token xxhash64s.
+    """64-bit SimHash per document with text, from token xxhash64s.
 
     Each token votes its hash bits; the fingerprint sets bit i iff the
-    weighted sum of bit i over tokens is positive. Pure column algebra
-    (bit tests via shiftright/bitwiseAND inside an aggregate).
+    weighted sum of bit i over tokens is positive (``simhash_expr``).
     """
-    toks = (docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-            .withColumn("h", F.xxhash64("tok")))
-    aggs = [F.sum(F.when(
-        F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-    ).otherwise(-1)).alias(f"b{i}") for i in range(64)]
-    votes = toks.groupBy("doc_id").agg(*aggs)
-    fp = None
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") > 0,
-                     F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        fp = bit if fp is None else fp.bitwiseOR(bit)
-    return votes.select("doc_id", fp.alias("simhash"))
+    return (docs.filter(F.col("text").isNotNull())
+            .select("doc_id", simhash_expr().alias("simhash")))
 
 
 def simhash64_portable(docs: DataFrame) -> DataFrame:
@@ -458,12 +447,11 @@ def simhash_expr():
     """The 64-bit SimHash as a plain Column over ``text`` — one
     ``aggregate`` fold over the token array accumulating all 64 bit
     votes in an array accumulator (no explode, no shuffle), then the
-    sign-threshold bit pack.  Bit-identical to ``simhash64`` (same
-    +-1 vote per token occurrence per bit; duplicate tokens vote each
-    occurrence both ways) but usable on a STREAM, where the
-    explode+groupBy formulation would be a streaming aggregation and
-    could not precede another stateful operator
-    (streaming/neardup.py)."""
+    sign-threshold bit pack: +-1 vote per token occurrence per bit
+    (duplicate tokens vote once per occurrence).  Being a plain
+    column, it also runs on a STREAM, where an explode+groupBy
+    formulation would be a streaming aggregation and could not
+    precede another stateful operator (streaming/neardup.py)."""
     toks = F.split(F.col("text"), " ")
     votes = F.aggregate(
         toks,

@@ -311,8 +311,8 @@ def min_segseg_dists(asegs: np.ndarray, bsegs: np.ndarray,
         # endpoint-to-segment distances both ways (T, M)
         d1 = _pts_to_segs(A[:, 0], A[:, 1], bsegs)
         d2 = _pts_to_segs(A[:, 2], A[:, 3], bsegs)
-        d3 = _pts_to_segs_rev(bsegs[:, 0], bsegs[:, 1], A)
-        d4 = _pts_to_segs_rev(bsegs[:, 2], bsegs[:, 3], A)
+        d3 = _pts_to_segs(bsegs[:, 0], bsegs[:, 1], A)
+        d4 = _pts_to_segs(bsegs[:, 2], bsegs[:, 3], A)
         d = np.minimum(np.minimum(d1, d2),
                        np.minimum(d3.T, d4.T))
         # zero out crossing pairs
@@ -334,10 +334,6 @@ def _pts_to_segs(px, py, segs):
     cx = ax + t * dx
     cy = ay + t * dy
     return np.hypot(px[:, None] - cx, py[:, None] - cy)
-
-
-def _pts_to_segs_rev(px, py, segs):
-    return _pts_to_segs(px, py, segs)
 
 
 def _segs_intersect_matrix(A: np.ndarray, B: np.ndarray) -> np.ndarray:

@@ -1,10 +1,14 @@
 """Dump .explain('formatted') for the bench-timed query plans into
-plans/<round>/<name>_<tag>.txt under this checkout. Usage:
+plans/<round>/<name>_<tag>.txt under this checkout, and beside each the
+optimized logical plan with expression ids and lambda-variable suffixes
+stripped (<name>_<tag>.opt.txt), so "plan unchanged" is a plain diff of
+two such files. Usage:
     python scripts/dump_plans.py <round> <tag> [name ...]
 e.g. ``dump_plans.py r07 before``.
 """
 
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -99,6 +103,14 @@ def _dem_kerb_slope(spark, sf_dir, P):
             .filter(F.col("_n") == 4))
 
 
+def normalized_plan(df) -> str:
+    """The optimized logical plan of ``df`` without expression ids
+    (``#123``) or the numeric suffixes of lambda variables (``x_3``)."""
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    text = re.sub(r"#\d+", "#", text)
+    return re.sub(r"(lambda [A-Za-z]\w*?)_\d+#", r"\1#", text)
+
+
 def main():
     if len(sys.argv) < 3:
         sys.exit(__doc__)
@@ -107,13 +119,17 @@ def main():
     only = set(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app="dump_plans")
+    # plan strings list every field, so the .opt.txt diffs see them all
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
     out_dir.mkdir(parents=True, exist_ok=True)
     for name, fn in plans(spark, sf_dir).items():
         if only and name not in only:
             continue
+        df = fn()
         path = out_dir / f"{name}_{tag}.txt"
         with open(path, "w") as f, redirect_stdout(f):
-            fn().explain("formatted")
+            df.explain("formatted")
+        (out_dir / f"{name}_{tag}.opt.txt").write_text(normalized_plan(df))
         print("wrote", path)
 
 

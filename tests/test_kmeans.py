@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_sidewalkreator_spark.operators.simsearch import (
-    assign_cells, cosine_topk_ivf, ivf_recall_at_k, kmeans_fit_spherical)
+    assign_cells, cosine_topk_ivf, kmeans_fit_spherical, recall_at_k)
 from osm_sidewalkreator_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -88,10 +88,10 @@ def test_ivf_with_trained_centroids(spark):
                           centroids=cents)
     assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
     assert out.count() > 0
-    r_trained = ivf_recall_at_k(emb, k=5, query_mod=50, n_probe=2,
-                                centroids=cents)
-    r_sampled = ivf_recall_at_k(emb, k=5, query_mod=50, n_probe=2,
-                                n_centroids=8)
+    r_trained = recall_at_k(out, emb, k=5, query_mod=50)
+    r_sampled = recall_at_k(
+        cosine_topk_ivf(emb, k=5, query_mod=50, n_probe=2, n_centroids=8),
+        emb, k=5, query_mod=50)
     assert r_trained >= r_sampled - 0.1
     assert r_trained >= 0.4
     init = kmeans_fit_spherical(emb, n_centroids=8, iters=0)

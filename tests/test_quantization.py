@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 
 from osm_sidewalkreator_spark.operators.simsearch import (
-    cosine_topk_quantized, quantize_embeddings, quantized_recall_at_k)
+    cosine_topk_quantized, quantize_embeddings, recall_at_k)
 from osm_sidewalkreator_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -76,5 +76,6 @@ def test_quantized_topk_matches_duckdb_exactly(spark):
 
 def test_quantized_recall_vs_float_truth(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    r = quantized_recall_at_k(emb, k=5, query_mod=50)
+    r = recall_at_k(cosine_topk_quantized(emb, k=5, query_mod=50), emb,
+                    k=5, query_mod=50)
     assert r >= 0.9, f"int8 recall@5 collapsed: {r}"

@@ -101,10 +101,11 @@ def test_knn_join_agrees_with_bruteforce(spark):
         spark.createDataFrame(pts), spark.createDataFrame(segs),
         k=1, max_dist=50.0, cell_size=64.0).toPandas()
     # NumPy brute force
-    from osm_sidewalkreator_spark.geometry.core import min_dist_points_to_segs
+    from osm_sidewalkreator_spark.geometry.core import point_segment_distance
     sarr = segs[["ax", "ay", "bx", "by"]].to_numpy()
-    best = min_dist_points_to_segs(pts["x"].to_numpy(), pts["y"].to_numpy(),
-                                   sarr)
+    best = point_segment_distance(pts["x"].to_numpy()[:, None],
+                                  pts["y"].to_numpy()[:, None],
+                                  sarr).min(axis=1)
     expected = {u for u, d in zip(pts["url"], best) if d <= 50.0}
     assert set(got["url"]) == expected
     gd = dict(zip(got["url"], got["dist"]))
@@ -296,7 +297,8 @@ def test_lsh_multitable_recall(spark):
     emb = spark.createDataFrame(
         [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<double>")
-    r = SS.lsh_recall_at_k(emb, k=5, n_planes=4, n_tables=12)
+    r = SS.recall_at_k(
+        SS.cosine_topk_lsh(emb, k=5, n_planes=4, n_tables=12), emb, k=5)
     assert r >= 0.9, f"recall {r}"
 
 
@@ -403,8 +405,30 @@ def test_ivf_recall_clustered(spark):
     emb = spark.createDataFrame(
         [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<double>")
-    r = SS.ivf_recall_at_k(emb, k=5, n_centroids=64, n_probe=8)
+    r = SS.recall_at_k(
+        SS.cosine_topk_ivf(emb, k=5, n_centroids=64, n_probe=8), emb, k=5)
     assert r >= 0.9, f"recall {r}"
+
+
+def test_pair_dot_is_bit_identical_to_jvm_fold(spark):
+    """The Arrow-batched ``_pair_dot`` equals the JVM ``_dot`` fold bit
+    for bit, and ``_refine``'s cosine equals the all-JVM
+    round(_dot / (_norm * _norm), 9): the ANN refines depend on it."""
+    from osm_sidewalkreator_spark.operators import simsearch as SS
+    e = SS._vectors(spark.read.parquet(f"{SF}/embeddings.parquet"))
+    q = SS._queries(e, 50).withColumnRenamed("v", "qv")
+    pairs = q.crossJoin(e)
+    qv, v = F.col("qv"), F.col("v")
+    rows = pairs.select(SS._pair_dot(qv, v).alias("udf"),
+                        SS._dot(qv, v).alias("jvm")).collect()
+    assert len(rows) == 10 * e.count()
+    assert all(r.udf == r.jvm for r in rows)
+    jvm = F.round(SS._dot(qv, v) / (SS._norm(qv) * SS._norm(v)), 9)
+    want = {(r.query_id, r.vec_id): r.c for r in
+            pairs.select("query_id", "vec_id", jvm.alias("c")).collect()}
+    got = {(r.query_id, r.vec_id): r.cosine for r in
+           SS._refine(pairs.select("query_id", "vec_id"), e).collect()}
+    assert got == want
 
 
 def test_multimodal_resize_and_frame_sample(spark):
@@ -492,6 +516,28 @@ def test_simhash_portable_hamming_property(spark):
             votes[i] += 1 if (h >> i) & 1 else -1
     expect = sum(1 << i for i in range(64) if votes[i] > 0)
     assert out[0] == expect
+
+
+def test_simhash64_matches_python_votes(spark):
+    """The xxhash64 SimHash equals a Python vote oracle on every
+    document with text: per-token hashes come from Spark's xxhash64
+    over split(text, " "), the +-1 bit votes and the sign-threshold
+    pack are done here."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    got = {r.doc_id: r.simhash for r in TX.simhash64(docs).collect()}
+    votes: dict = {}
+    for r in (docs.select("doc_id", F.explode(F.split("text", " "))
+                          .alias("tok"))
+              .select("doc_id", F.xxhash64("tok").alias("h")).collect()):
+        v = votes.setdefault(r.doc_id, [0] * 64)
+        for i in range(64):
+            v[i] += 1 if (r.h >> i) & 1 else -1
+    want = {}
+    for doc_id, v in votes.items():
+        fp = sum(1 << i for i in range(64) if v[i] > 0)
+        want[doc_id] = fp - (1 << 64) if fp >> 63 else fp  # signed long
+    assert len(want) == docs.filter(F.col("text").isNotNull()).count()
+    assert got == want
 
 
 def test_polygon_overlay_string_ids_and_multirow(spark):
