@@ -35,7 +35,7 @@ from osm_sidewalkreator_spark.plans import pipeline as PL
 from osm_sidewalkreator_spark.synth import CITY_LAT0, CITY_LON0, ensure_synth
 
 # oracle base paths (the driver verifies at sf=0.01)
-SP = "/root/repo/data/synth/sf0.01"
+SP = str(SY.SYNTH_ROOT / "sf0.01")
 
 
 def _synth(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

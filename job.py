@@ -7,7 +7,8 @@ Runs the resumable tiled pipeline (checkpoint manifest; re-launching
 after a kill recomputes only uncommitted tiles), joins the geocoded
 pages to protoblocks, and writes parquet + merged GeoJSON outputs.
 
-Build engine.zip with:  (cd /root/repo && zip -qr engine.zip osm_sidewalkreator_spark)
+Build engine.zip from the checkout root with:
+    zip -qr engine.zip osm_sidewalkreator_spark
 """
 
 from __future__ import annotations

@@ -21,8 +21,6 @@ import dataclasses
 import heapq
 import os
 import threading
-from urllib.parse import urlparse
-from urllib.request import url2pathname
 
 import numpy as np
 import pandas as pd
@@ -35,13 +33,13 @@ from ..geometry import core, wkb
 from ..synth import CITY_LAT0, CITY_LON0, ensure_synth
 from ..functions.geo import st_explode_segments, make_transform_udf
 from ..operators.tiling import seg_cells
+from ..sources.catalog import load_table, parquet_path, table_prefix
 from . import kernels
 
 WIDTHS_ITEMS = sorted(P.DEFAULT_WIDTHS.items())
 
 
 def load_streets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.catalog import load_table
     return load_table(spark, sf_dir, "streets")
 
 
@@ -232,6 +230,16 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
+# The dtypes pandas infers for a tile's emitted rows, made explicit so
+# every tile frame has the same ones: a tile without kerbs (or
+# protoblocks, crossings) would otherwise carry all-None object columns.
+# ``ref_id`` mixes None and ints, which pandas holds as float64: the
+# Arrow cast back to long keeps only the float's 53 bits of the fid.
+_EMIT_DTYPES = {"tile": "int64", "fid": "int64", "length": "float64",
+                "area": "float64", "ref_id": "float64", "cx": "float64",
+                "cy": "float64", "ortho_len_dif": "float64",
+                "above_tol": "object", "near_center": "float64"}
+
 _M64 = (1 << 64) - 1
 
 
@@ -375,7 +383,8 @@ def make_tile_kernel(tile_size: float, halo: float = P.TILE_HALO_M,
                                    float(k2["xy"][1])),
                      None, None, cfid,
                      float(k2["xy"][0]), float(k2["xy"][1]))
-        return pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA])
+        return pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA]) \
+            .astype(_EMIT_DTYPES)
 
     return kernel
 
@@ -509,22 +518,26 @@ _MEMO_LOCK = threading.Lock()
 def _input_key(spark: SparkSession, sf_dir: str, tile_size: float,
                halo: float) -> tuple | None:
     """(sf_dir, tile_size, halo) plus (path, size, mtime_ns) of every
-    file the tiled inputs read, or None when one is not a local file.
+    file under the parquet paths the tiled inputs read, or None when the
+    streets come from a catalog table or a path lists no local file.
 
-    The files come from the bare table reads: ``inputFiles()`` of a plan
-    that Spark matches to a persisted equal plan lists nothing."""
+    The paths are those ``load_table`` and ``ensure_synth`` resolve, and
+    the files are listed on the driver: building the key runs no Spark
+    job (a ``spark.read.parquet`` is a schema-inference job per path)."""
+    if table_prefix(spark) is not None:
+        return None
     synth = ensure_synth(sf_dir)
-    reads = [load_streets(spark, sf_dir)] + [
-        spark.read.parquet(str(synth / f"{t}.parquet"))
-        for t in ("aoi", "buildings", "addresses")]
+    roots = [parquet_path(sf_dir, "streets")] + [
+        str(synth / f"{t}.parquet") for t in ("aoi", "buildings", "addresses")]
     stats = []
-    for r in reads:
-        uris = sorted(r.inputFiles())
-        if not uris or not all(u.startswith("file:") for u in uris):
+    for root in roots:
+        files = [root] if os.path.isfile(root) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+        if not files:
             return None
-        for u in uris:
-            st = os.stat(url2pathname(urlparse(u).path))
-            stats.append((u, st.st_size, st.st_mtime_ns))
+        for f in files:
+            st = os.stat(f)
+            stats.append((f, st.st_size, st.st_mtime_ns))
     return (sf_dir, tile_size, halo, tuple(stats))
 
 
@@ -570,6 +583,25 @@ def _release(entry: _Inputs) -> None:
     entry.ctx.unpersist()
 
 
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str
+                ) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a LocalRelation.
+
+    Built as an Arrow table, the frame runs no Spark job when it is
+    collected, joined or broadcast. ``createDataFrame`` of a Python list
+    is an RDD instead, and every evaluation of it is a job of
+    ``defaultParallelism`` Python tasks (see ``run_tiles``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow),
+        schema)
+
+
 def tile_census(spark: SparkSession, tiled: DataFrame) -> DataFrame:
     """(tile, n, fp) per tile: the segment count ``n`` drives placement,
     the order-independent input fingerprint ``fp`` drives resume.
@@ -586,7 +618,7 @@ def tile_census(spark: SparkSession, tiled: DataFrame) -> DataFrame:
         F.expr("bit_xor(xxhash64(osm_id, ax, ay, bx, by))").alias("fp"))
     rows = census.limit(_LPT_MAX_TILES + 1).collect()
     if len(rows) <= _LPT_MAX_TILES:
-        census = spark.createDataFrame(rows, _CENSUS_SCHEMA)
+        census = local_frame(spark, rows, _CENSUS_SCHEMA)
     if entry is not None:
         entry.census = census
     return census
@@ -610,7 +642,10 @@ def _bucket_kernel(tile_fn):
         by_tile = dict(tuple(ctx.groupby("tile"))) if len(ctx) else {}
         outs = [tile_fn((t, fp), g, by_tile.get(t, ctx.iloc[:0]))
                 for (t, fp), g in pdf.groupby(["tile", "fp"])]
-        return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
+        # empty tile frames stay out: pandas 2.2 warns that concat will
+        # stop ignoring them when it picks the result dtypes
+        full = [o for o in outs if len(o)] or outs[:1]
+        return pd.concat(full, ignore_index=True) if full else pd.DataFrame()
     return kernel
 
 
@@ -624,22 +659,33 @@ def run_tiles(spark: SparkSession, tiled: DataFrame, ctx: DataFrame | None,
     ``_LPT_MAX_TILES``. ``repartitionById`` puts bucket b in partition b
     on both sides, so the cogroup adds no exchange, and its explicit
     count keeps AQE from coalescing the byte-light but compute-heavy
-    tile groups onto a few tasks. Two buckets per core: LPT balances
-    the load, so more would only add per-task Python overhead."""
-    n_part = max(spark.sparkContext.defaultParallelism * 2, 32)
+    tile groups onto a few tasks.
+
+    Python stages are sized by cores: every Python task pays a fixed
+    start cost (PySpark 4.1 calls ``importlib.invalidate_caches()`` per
+    task, which under Python 3.11 re-reads ``pyspark.zip``'s directory
+    once per zipimporter, ~0.1 s of CPU, and the JVM sets up a runner
+    per task). So there is one bucket per core, and never more buckets
+    than tiles: LPT balances the load, and more buckets would only add
+    tasks. For the same reason the census, placement and empty-context
+    frames are ``local_frame``s, which run no job."""
     rows = census.limit(_LPT_MAX_TILES + 1).collect()
+    lpt = len(rows) <= _LPT_MAX_TILES
+    n_part = spark.sparkContext.defaultParallelism
+    if lpt:
+        n_part = max(1, min(len(rows), n_part))
 
     def placement():
         # a fresh frame per side: one frame joined into both cogroup
         # sides trips the ambiguous-self-join check
-        if len(rows) <= _LPT_MAX_TILES:
-            return F.broadcast(spark.createDataFrame(_lpt(rows, n_part),
-                                                     _PLACE_SCHEMA))
+        if lpt:
+            return F.broadcast(local_frame(spark, _lpt(rows, n_part),
+                                           _PLACE_SCHEMA))
         return census.select("tile", "fp", F.pmod(
             F.xxhash64("tile"), F.lit(n_part)).cast("int").alias("_bucket"))
 
     if ctx is None:
-        ctx = spark.createDataFrame([], _CTX_SCHEMA)
+        ctx = local_frame(spark, [], _CTX_SCHEMA)
     segs = tiled.join(placement(), "tile").repartitionById(n_part, "_bucket")
     ctx = ctx.join(placement().drop("fp"), "tile") \
         .repartitionById(n_part, "_bucket")

@@ -62,11 +62,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     prefix = table_prefix(spark)
     if prefix is not None:
         return spark.read.table(f"{prefix}{name}")
+    return spark.read.parquet(parquet_path(sf_dir, name))
+
+
+def parquet_path(sf_dir: str, name: str) -> str:
+    """The parquet path ``load_table`` reads for ``name`` when no catalog
+    prefix is set."""
     # driver-provided tables (documents, embeddings, lineitem, ...)
     # live at the sf_dir root; engine-synthesized ones under synth/
     direct = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.exists(direct):
-        return spark.read.parquet(direct)
+        return direct
     from ..synth import ensure_synth
-    synth = ensure_synth(sf_dir)
-    return spark.read.parquet(str(synth / f"{name}.parquet"))
+    return str(ensure_synth(sf_dir) / f"{name}.parquet")

@@ -117,7 +117,8 @@ def run_tiled_job(spark: SparkSession, segs_tiled: DataFrame,
     done = man.committed()
     pending = census
     if done:
-        man_df = spark.createDataFrame(
+        man_df = PL.local_frame(
+            spark,
             [(r["tile"], r["input_fingerprint"]) for r in done.values()],
             "tile long, fp long")
         pending = census.join(man_df, ["tile", "fp"], "left_anti")
@@ -158,7 +159,7 @@ def run_tiled_job(spark: SparkSession, segs_tiled: DataFrame,
     paths = [r["path"] for r in man.committed().values()
              if r.get("path") and Path(r["path"]).exists()]
     if not paths:
-        return spark.createDataFrame([], schema)
+        return PL.local_frame(spark, [], schema)
     # a tile whose segments all left the input keeps its manifest row,
     # but not its place in the result
     return (spark.read.schema(schema).parquet(*paths)

@@ -3,9 +3,9 @@
 No external data, no RNG state dependence: every value is a closed-form
 function of indices (splitmix64 where pseudo-randomness is needed), so
 the same scale always produces byte-identical parquet. Tables land under
-``/root/repo/data/synth/<scale>/`` keyed by the driver's sf directory
-name; the DuckDB oracle SQL in ``__spark_entry__.py`` reads the same
-files via ``read_parquet``.
+``data/synth/<scale>/`` of this checkout (or ``$SPARK_GRAFT_SYNTH_ROOT``)
+keyed by the driver's sf directory name; the DuckDB oracle SQL in
+``__spark_entry__.py`` reads the same files via ``read_parquet``.
 
 City layout mirrors the reference's test city spirit
 (``assets/test_data/bbox.json`` — Curitiba) per FIXTURES.md §2: a k×k
@@ -39,8 +39,9 @@ SCALES = {
     "sf0.4": {"k": 240, "pages": 10_000},
 }
 
-SYNTH_ROOT = Path(os.environ.get("SPARK_GRAFT_SYNTH_ROOT",
-                                 "/root/repo/data/synth"))
+SYNTH_ROOT = Path(os.environ.get(
+    "SPARK_GRAFT_SYNTH_ROOT",
+    Path(__file__).resolve().parent.parent / "data" / "synth"))
 
 
 def scale_name(sf_dir: str) -> str:

@@ -9,6 +9,7 @@ import pytest
 import __spark_entry__ as E
 from osm_sidewalkreator_spark.session import get_spark
 from osm_sidewalkreator_spark.sources import golden as G
+from osm_sidewalkreator_spark.synth import SYNTH_ROOT
 
 SF = "/root/testdata/sf0.001"
 
@@ -111,7 +112,8 @@ def _duck_df(sql):
         con.close()
 
 
-_STREETS_0001 = "read_parquet('/root/repo/data/synth/sf0.001/streets.parquet')"
+_S0001 = SYNTH_ROOT / "sf0.001"
+_STREETS_0001 = f"read_parquet('{_S0001}/streets.parquet')"
 
 
 def test_dedup_canonical_full_oracle_parity(spark):
@@ -142,8 +144,8 @@ def test_pages_per_block_full_oracle_parity(spark):
     got = {(r.block_id, r.n_pages)
            for r in E.q_pages_per_block(spark, SF).collect()}
     want = _duck_df(E._pages_per_block_sql(
-        "read_parquet('/root/repo/data/synth/sf0.001/pages_geo.parquet/*.parquet')",
-        "read_parquet('/root/repo/data/synth/sf0.001/blocks.parquet')"))
+        f"read_parquet('{_S0001}/pages_geo.parquet/*.parquet')",
+        f"read_parquet('{_S0001}/blocks.parquet')"))
     assert got == {(r.block_id, r.n_pages)
                    for r in want.itertuples(index=False)}
     assert len(got) > 0
@@ -172,6 +174,6 @@ def test_clip_aoi_full_oracle_parity(spark):
     got = {r.osm_id for r in E.q_clip_aoi(spark, SF).collect()}
     want = _duck_df(E._clip_aoi_sql(
         _STREETS_0001,
-        "read_parquet('/root/repo/data/synth/sf0.001/aoi.parquet')"))
+        f"read_parquet('{_S0001}/aoi.parquet')"))
     assert got == set(want.osm_id.tolist())
     assert len(got) > 0

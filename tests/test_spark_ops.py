@@ -4,7 +4,11 @@ Mirrors the reference's algorithm-level tests with mocked I/O
 (SURVEY.md §5 item 3): fixed synthetic city in, invariant counts out.
 """
 
+import os
+import warnings
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -277,6 +281,114 @@ def test_tile_placement_does_not_change_features(spark, features,
     cols = ["tile", "kind", "fid", "geometry"]
     assert _rows(PL.generate_features(spark, SF), cols) == \
         _rows(features, cols)
+
+
+def test_input_key_reads_no_table(spark):
+    """The memo key stats the files under the resolved parquet paths: it
+    never reads a table through Spark (each read is a schema-inference
+    job), and a catalog prefix turns the memo off."""
+    from osm_sidewalkreator_spark.sources.catalog import PREFIX_CONF
+
+    class NoReadSession:
+        conf = spark.conf
+
+        @property
+        def read(self):
+            raise AssertionError("the memo key must not read a table")
+
+    args = (SF, P.TILE_SIZE_M, P.TILE_HALO_M)
+    key = PL._input_key(NoReadSession(), *args)
+    assert key is not None and key == PL._input_key(spark, *args)
+    tables = {os.path.basename(p).split(".")[0]
+              for p, _, _ in key[3] if p.endswith(".parquet")}
+    assert {"streets", "aoi", "buildings", "addresses"} <= tables
+    spark.conf.set(PREFIX_CONF, "cat_seam_")
+    try:
+        assert PL._input_key(NoReadSession(), *args) is None
+    finally:
+        spark.conf.unset(PREFIX_CONF)
+
+
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _node_class(node):
+    return node.getClass().getSimpleName()
+
+
+def test_run_tiles_plan_is_local_and_sized_by_cores(spark):
+    """The memoized census and both placement frames are LocalRelations
+    (no job when evaluated); the cogroup has min(tiles, cores) buckets
+    and every bucket holds at least one tile."""
+    def bucket_probe(key, pdf, ctx):
+        return pd.DataFrame({"tile": [key[0]],
+                             "bucket": [int(pdf["_bucket"].iloc[0])]})
+
+    tiled, ctx = PL.tiled_inputs(spark, SF)
+    census = PL.tile_census(spark, tiled)
+    assert PL.tile_census(spark, tiled) is census
+    assert _node_class(
+        census._jdf.queryExecution().optimizedPlan()) == "LocalRelation"
+    cores = spark.sparkContext.defaultParallelism
+    for cen in (census, census.limit(2)):
+        tiles = {r.tile for r in cen.collect()}
+        n_part = min(len(tiles), cores)
+        out = PL.run_tiles(spark, tiled, ctx, cen, bucket_probe,
+                           "tile long, bucket int")
+        nodes = list(_plan_nodes(out._jdf.queryExecution().optimizedPlan()))
+        local = sorted(
+            [o.apply(i).name() for i in range(o.size())]
+            for o in (n.output() for n in nodes
+                      if _node_class(n) == "LocalRelation"))
+        assert local == [["tile", "_bucket"], ["tile", "fp", "_bucket"]]
+        assert [n.numPartitions() for n in nodes
+                if _node_class(n) == "RepartitionByExpression"] == \
+            [n_part, n_part]
+        got = out.collect()
+        assert sorted(r.tile for r in got) == sorted(tiles)
+        assert {r.bucket for r in got} == set(range(n_part))
+
+
+def test_multi_tile_bucket_concat_is_warning_free(spark, features):
+    """One bucket holding every tile plus two stub tiles concatenates its
+    tile frames without a pandas FutureWarning, and emits the values of
+    the cogroup and of the stubs run alone. The stubs are copies moved
+    four tiles east: one street, which emits nothing, and the streets
+    near (-262, 150), which emit one crossing with no neighbour, so
+    their ``near_center`` column is all None."""
+    tiled, ctx = PL.tiled_inputs(spark, SF)
+    census = PL.tile_census(spark, tiled)
+    pdf = tiled.join(census.select("tile", "fp"), "tile") \
+        .withColumn("_bucket", F.lit(0)).toPandas()
+    east = 4 * P.TILE_SIZE_M
+
+    def moved(segs, tile):
+        return segs.assign(tile=tile, fp=tile, ax=segs["ax"] + east,
+                           bx=segs["bx"] + east)
+
+    street = pdf[pdf["osm_id"] == pdf["osm_id"].iloc[0]] \
+        .drop_duplicates(["ax", "ay", "bx", "by"])
+    xs, ys = pdf[["ax", "bx"]], pdf[["ay", "by"]]
+    block = pdf[(pdf["tile"] == -1 << 32)
+                & (xs.max(axis=1) >= -382) & (xs.min(axis=1) <= -142)
+                & (ys.max(axis=1) >= 30) & (ys.min(axis=1) <= 270)]
+    stubs = [moved(street, 4 << 32), moved(block, 3 << 32)]
+    tile_kernel = PL.make_tile_kernel(P.TILE_SIZE_M)
+    alone = tile_kernel((3 << 32,), stubs[1], ctx.toPandas().iloc[:0])
+    assert len(alone) and alone["near_center"].isna().all()
+    kernel = PL._bucket_kernel(tile_kernel)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = kernel((0,), pd.concat([pdf] + stubs), ctx.toPandas())
+    cols = [f.name for f in PL.FEATURE_SCHEMA]
+
+    def rows(pdf):
+        return _rows(spark.createDataFrame(pdf, PL.FEATURE_SCHEMA), cols)
+    assert rows(out) == sorted(_rows(features, cols) + rows(alone))
 
 
 def test_lsh_multitable_recall(spark):
