@@ -162,11 +162,20 @@ _SEG_SCHEMA = T.ArrayType(T.StructType([
 
 @pandas_udf(_SEG_SCHEMA)
 def st_explode_segments(col: pd.Series) -> pd.Series:
-    """(Multi)LineString WKB -> array of 2-point segments (to explode)."""
+    """(Multi)LineString WKB -> array of 2-point segments (to explode).
+
+    A (Multi)Polygon gives every edge of every ring of every part, each
+    ring closed back to its first vertex (``core.points_in_ring``'s
+    wrap-around). Zero-length segments are dropped either way."""
     out = []
     for blob in col:
         segs = []
-        for p in wkb.decode_lines(blob):
+        if wkb.geom_type(blob) in (wkb.POLYGON, wkb.MULTIPOLYGON):
+            lines = [np.vstack([r, r[:1]])
+                     for rings in wkb.decode_polygons(blob) for r in rings]
+        else:
+            lines = wkb.decode_lines(blob)
+        for p in lines:
             s = core.explode_polyline_to_segments(p)
             segs.extend({"ax": float(a), "ay": float(b),
                          "bx": float(c), "by": float(d)}

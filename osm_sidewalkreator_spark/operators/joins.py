@@ -3,22 +3,20 @@
 Design for 100 TB: every join here is a Catalyst-planned equi-join on an
 int64 ``cell`` column — shuffle partitioning, broadcast decisions, and
 AQE skew splitting all come for free. The exact predicate refinement is
-either pure column math (point-segment distance, rectangle containment —
-JVM codegen) or a batched PIP test in ``applyInPandas`` grouped by
-polygon (decode each polygon once per group, vectorized ray casting).
+pure column math (point-segment distance, rectangle containment,
+segment-box incidence, the point-in-polygon crossing count over a
+polygon's edge array — JVM); Python only decodes polygon WKB, once per
+polygon.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..geometry import core, wkb
-from .tiling import (box_cells, cell_id, cover_cells, neighbor_cells,
-                     seg_box_overlap, seg_box_pairs, seg_cells)
+from ..functions.geo import st_canonical_wkb, st_explode_segments
+from .tiling import (box_cells, cell_id, neighbor_cells, seg_box_overlap,
+                     seg_box_pairs, seg_cells)
 
 
 def knn_join_points_segments(points: DataFrame, segments: DataFrame,
@@ -159,74 +157,53 @@ def incidence_ids_join(rects: DataFrame, segments: DataFrame,
                     F.size("_ids").alias("n_inc")))
 
 
-# The engine's one explicit skew salt (AQE's skew join is the other
-# mechanism): a Zipf-hot polygon's PIP candidates split across
-# PIP_N_SALT refine groups instead of one straggler. PIP is per-point,
-# so the split changes nothing semantically; each group re-decodes the
-# polygon once, so bytes per group stay bounded.
-PIP_N_SALT = 8
-
-
-def pip_salt(point_id: str) -> Column:
-    """Refine-group salt of a candidate point, from its id."""
-    return F.pmod(F.xxhash64(F.col(point_id)), F.lit(PIP_N_SALT))
-
-
 def pip_join_points_polygons(points: DataFrame, polys: DataFrame,
                              cell_size: float = 128.0,
                              point_id: str = "url",
-                             poly_id: str = "poly_id",
-                             keep_cols: tuple = ()) -> DataFrame:
-    """Generic point-in-polygon join (J9): cell candidates + grouped
-    vectorized ray-casting refinement.
+                             poly_id: str = "poly_id") -> DataFrame:
+    """Generic point-in-polygon join (J9): cell candidates + an even-odd
+    crossing count in the JVM.
 
     points: (point_id, x, y); polys: (poly_id, geometry WKB in the same
-    CRS). Each polygon is decoded once per group; the PIP test is a
-    vectorized even-odd crossing count (``core.points_in_polygon``).
+    CRS). Python only decodes each polygon once, to its edge array
+    (every ring of every part, ``st_explode_segments``); the bbox, its
+    cover cells, the candidate join and the refine are Spark columns.
+    The refine is ``core.points_in_polygon``'s test, expression for
+    expression: an edge crosses the point's rightward ray when its ends
+    lie on either side of ``y`` and ``x`` is left of the intersection.
+    ``AND`` evaluates its right side only when the left holds, so the
+    division never sees a horizontal edge (ANSI raises on x / 0). Hot
+    cells are left to AQE's skew join on the one cell equi-join.
     """
-    # bbox via a light pandas UDF (decode once here, once in refine)
-    @F.pandas_udf(T.StructType([
-        T.StructField("xmin", T.DoubleType()),
-        T.StructField("ymin", T.DoubleType()),
-        T.StructField("xmax", T.DoubleType()),
-        T.StructField("ymax", T.DoubleType())]))
-    def poly_bbox(col: pd.Series) -> pd.DataFrame:
-        a = np.empty((len(col), 4))
-        for i, blob in enumerate(col):
-            rings = wkb.decode_polygons(blob)
-            allc = np.vstack([r for rr in rings for r in rr])
-            a[i] = [allc[:, 0].min(), allc[:, 1].min(),
-                    allc[:, 0].max(), allc[:, 1].max()]
-        return pd.DataFrame(
-            {"xmin": a[:, 0], "ymin": a[:, 1], "xmax": a[:, 2], "ymax": a[:, 3]})
+    def over_edges(agg, c):
+        return agg(F.transform("edges", lambda e: e[c]))
 
-    pl = (polys.withColumn("_bb", poly_bbox("geometry"))
-               .select(poly_id, "geometry",
-                       F.explode(cover_cells(
-                           F.col("_bb.xmin"), F.col("_bb.ymin"),
-                           F.col("_bb.xmax"), F.col("_bb.ymax"),
-                           cell_size)).alias("cell")))
-    p = points.withColumn("cell", cell_id(F.col("x"), F.col("y"), cell_size))
-    cand = p.join(pl, "cell").drop("cell")
+    pl = (polys.select(poly_id, st_explode_segments("geometry").alias("edges"))
+               .select(poly_id, "edges",
+                       over_edges(F.array_min, "ax").alias("xmin"),
+                       over_edges(F.array_min, "ay").alias("ymin"),
+                       over_edges(F.array_max, "ax").alias("xmax"),
+                       over_edges(F.array_max, "ay").alias("ymax"))
+               .withColumn("cell", box_cells(cell_size)))
+    p = points.select(point_id, "x", "y").withColumn(
+        "cell", cell_id(F.col("x"), F.col("y"), cell_size))
+    x, y = F.col("x"), F.col("y")
 
-    out_fields = [T.StructField(point_id, T.StringType()),
-                  T.StructField(poly_id, T.LongType())]
-    for c in keep_cols:
-        out_fields.append(T.StructField(c, T.DoubleType()))
-    schema = T.StructType(out_fields)
+    def crossing(e):
+        return (((e["ay"] > y) != (e["by"] > y))
+                & (x < (e["bx"] - e["ax"]) * (y - e["ay"])
+                   / (e["by"] - e["ay"]) + e["ax"]))
 
-    def refine(pdf: pd.DataFrame) -> pd.DataFrame:
-        rings = wkb.decode_polygons(pdf["geometry"].iloc[0])[0]
-        inside = core.points_in_polygon(pdf["x"].to_numpy(),
-                                        pdf["y"].to_numpy(), rings)
-        cols = {point_id: pdf[point_id][inside],
-                poly_id: pdf[poly_id][inside]}
-        for c in keep_cols:
-            cols[c] = pdf[c][inside]
-        return pd.DataFrame(cols)
-
-    cand = cand.withColumn("_salt", pip_salt(point_id))
-    return cand.groupBy(poly_id, "_salt").applyInPandas(refine, schema)
+    odd = F.aggregate("edges", F.lit(0), lambda n, e: n + F.when(
+        crossing(e), 1).otherwise(0)) % 2 == 1
+    # No edge crosses a row outside [ymin, ymax), so this codegen'd cut
+    # drops candidates before the interpreted lambda without changing
+    # the result (an x cut would: xint carries the division's rounding).
+    # coalesce: a bare comparison would let Catalyst infer isnotnull
+    # (ymin) and push it below the UDF's project, decoding twice.
+    in_rows = F.coalesce((y >= F.col("ymin")) & (y < F.col("ymax")),
+                         F.lit(False))
+    return p.join(pl, "cell").filter(in_rows & odd).select(point_id, poly_id)
 
 
 def dedup_geometries(df: DataFrame, geom_col: str = "geometry",
@@ -241,7 +218,6 @@ def dedup_geometries(df: DataFrame, geom_col: str = "geometry",
     geometric equality rather than byte equality."""
     key = geom_col
     if canonical:
-        from ..functions.geo import st_canonical_wkb
         df = df.withColumn("_ckey", st_canonical_wkb(F.col(geom_col)))
         key = "_ckey"
     if order_col is None:

@@ -7,8 +7,8 @@ The cross-partition join pattern is: encode both sides to cells
 (points: 1 cell; segments and boxes: bbox cover, exploded), equi-join on
 ``cell``, then refine exactly. The cover rule lives here once
 (``seg_cells``/``box_cells``; ``seg_box_pairs`` is the segment x box
-candidate join). Hot cells are split by AQE's skew join; the PIP
-refine (``joins.pip_join_points_polygons``) also salts its groups.
+candidate join). Hot cells are split by AQE's skew join; every refine
+is JVM column math, so nothing is salted.
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ The 10^12-row Common-Crawl-style pages table (BASELINE.json input_hint:
 derived location. Real deployments would infer location from content;
 here geocoding is a deterministic pure-column function of ``url`` with a
 Zipf-like concentration on a few hot blocks (FIXTURES.md §1) so the
-salting / AQE-skew machinery is actually exercised.
+AQE skew-join machinery is actually exercised.
 
 Everything in this module is ``pyspark.sql.functions`` built-ins —
 whole-stage codegen, no Python in the 10^12-row path. The ``text``

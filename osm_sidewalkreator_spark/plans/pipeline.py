@@ -230,13 +230,14 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-# The dtypes pandas infers for a tile's emitted rows, made explicit so
-# every tile frame has the same ones: a tile without kerbs (or
-# protoblocks, crossings) would otherwise carry all-None object columns.
-# ``ref_id`` mixes None and ints, which pandas holds as float64: the
-# Arrow cast back to long keeps only the float's 53 bits of the fid.
+# A tile's emitted columns get these dtypes explicitly, so every tile
+# frame has the same ones: a tile without kerbs (or protoblocks,
+# crossings) would otherwise carry all-None object columns. ``ref_id``
+# mixes None and 64-bit fids: nullable ``Int64`` keeps every bit (float64,
+# what pandas infers, would round the fid to 53 bits), so the frame is
+# built from objects and cast once.
 _EMIT_DTYPES = {"tile": "int64", "fid": "int64", "length": "float64",
-                "area": "float64", "ref_id": "float64", "cx": "float64",
+                "area": "float64", "ref_id": "Int64", "cx": "float64",
                 "cy": "float64", "ortho_len_dif": "float64",
                 "above_tol": "object", "near_center": "float64"}
 
@@ -383,8 +384,8 @@ def make_tile_kernel(tile_size: float, halo: float = P.TILE_HALO_M,
                                    float(k2["xy"][1])),
                      None, None, cfid,
                      float(k2["xy"][0]), float(k2["xy"][1]))
-        return pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA]) \
-            .astype(_EMIT_DTYPES)
+        return pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA],
+                            dtype=object).astype(_EMIT_DTYPES)
 
     return kernel
 

@@ -48,6 +48,10 @@ def plans(spark, sf_dir):
         "pip_pages_blocks": lambda: J.pip_join_points_rects(
             pages_geo.select("url", "x", "y"), blocks,
             cell_size=P.CELL_SIZE_M),
+        "pip_poly": lambda: J.pip_join_points_polygons(
+            pages_geo.select("url", "x", "y"),
+            blocks.select(F.col("block_id").alias("poly_id"), "geometry"),
+            cell_size=P.CELL_SIZE_M),
         "knn_pages_sidewalks": lambda: J.knn_join_points_segments(
             knn_pages, segs, k=1, max_dist=P.KNN_MAX_DIST,
             cell_size=P.CELL_SIZE_M),

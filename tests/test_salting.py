@@ -1,5 +1,6 @@
-"""Skew tests: the Zipf geocode is skewed, and the PIP refine's salt
-spreads the hottest polygon's candidates."""
+"""Skew tests: the Zipf geocode is skewed, and the PIP join's hot cells
+are left to AQE's skew join (its refine is JVM column math, so there is
+no grouped Python refine to salt)."""
 
 import contextlib
 import io
@@ -10,7 +11,6 @@ from pyspark.sql import functions as F
 
 from osm_sidewalkreator_spark import params as P
 from osm_sidewalkreator_spark.operators import joins as J
-from osm_sidewalkreator_spark.operators.tiling import box_cells, cell_id
 from osm_sidewalkreator_spark.pages import geocode_pages, load_pages
 from osm_sidewalkreator_spark.session import get_spark
 from osm_sidewalkreator_spark.synth import ensure_synth
@@ -39,29 +39,66 @@ def test_zipf_geocode_is_skewed(spark):
     assert hottest > 5 * max(median, 1)
 
 
-def test_pip_refine_is_grouped_by_polygon_and_salt(spark):
+def test_pip_refine_runs_in_the_jvm(spark):
+    """No grouped pandas refine; the one Python eval node decodes the
+    polygon table, and nothing of the point side reaches Python."""
     pages, blocks = _pages_and_blocks(spark)
     polys = blocks.select(F.col("block_id").alias("poly_id"), "geometry")
     out = J.pip_join_points_polygons(pages, polys, cell_size=P.CELL_SIZE_M)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain(mode="extended")
-    optimized = buf.getvalue().split("== Optimized Logical Plan ==")[1]
-    assert re.search(r"FlatMapGroupsInPandas \[poly_id#\d+L?, _salt#\d+L?\]",
-                     optimized), optimized
+    plan = buf.getvalue().split("== Optimized Logical Plan ==")[1] \
+        .split("== Physical Plan ==")[0]
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    lines = plan.splitlines()
+    evals = [i for i, ln in enumerate(lines)
+             if re.search(r"(Arrow|Batch)EvalPython", ln)]
+    assert len(evals) == 1, plan
+    depth = len(lines[evals[0]]) - len(lines[evals[0]].lstrip(" :+-"))
+    below = []
+    for ln in lines[evals[0] + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        below.append(ln)
+    scans = [ln for ln in below if "Relation " in ln]
+    assert len(scans) == 1 and "geometry" in scans[0], below
+    assert not any(re.search(r"\burl#", ln) for ln in below), below
 
 
-def test_pip_salt_spreads_hottest_polygon(spark):
+def test_pip_cell_join_is_skew_split(spark):
+    """The hot cell is AQE's to split: with broadcast off and the skew
+    thresholds lowered, the executed point x cover-cell join is a skew
+    join, and its pairs are the ones the default plan finds."""
     pages, blocks = _pages_and_blocks(spark)
-    # the refine's candidates: a page's cell against each block's cover
-    cand = (pages.withColumn("cell", cell_id(F.col("x"), F.col("y"),
-                                             P.CELL_SIZE_M))
-            .join(blocks.select("block_id", box_cells(P.CELL_SIZE_M)
-                                .alias("cell")), "cell"))
-    hot = (cand.groupBy("block_id").count()
-           .orderBy(F.col("count").desc()).first()["block_id"])
-    per_salt = (cand.filter(F.col("block_id") == hot)
-                .groupBy(J.pip_salt("url")).count().collect())
-    assert len(per_salt) == J.PIP_N_SALT == 8
-    total = sum(r["count"] for r in per_salt)
-    assert max(r["count"] for r in per_salt) <= 0.35 * total
+    polys = blocks.select(F.col("block_id").alias("poly_id"), "geometry")
+    # AQE splits a skewed partition between map outputs: the one-file
+    # page table is spread over several map tasks first
+    pages = pages.repartition(8)
+
+    def run():
+        out = J.pip_join_points_polygons(pages, polys,
+                                         cell_size=P.CELL_SIZE_M)
+        rows = sorted(tuple(r) for r in out.collect())
+        return rows, out._jdf.queryExecution().executedPlan().toString()
+
+    want, _ = run()
+    conf = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
+                "1k",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        got, plan = run()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert re.search(r"(SortMergeJoin|ShuffledHashJoin)\(skew=true\)",
+                     plan), plan
+    assert got == want and len(want) > 0

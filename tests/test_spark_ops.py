@@ -66,6 +66,27 @@ def test_feature_invariants(features):
     assert features.select("fid").distinct().count() == n
 
 
+def test_kerb_ref_id_names_its_crossing(spark, features):
+    """Every kerb's ``ref_id`` is its crossing's 64-bit fid, exactly,
+    through the EPSG:4326 export; each crossing has two kerbs, and the
+    GeoJSON feature id of a crossing is its fid."""
+    from collections import Counter
+
+    from osm_sidewalkreator_spark.sources.geojson import \
+        features_to_geojson_rows
+    f = PL.features_4326(features)
+    crossings = {r.fid for r in
+                 f.filter(F.col("kind") == "crossing").select("fid").collect()}
+    refs = Counter(r.ref_id for r in f.filter(F.col("kind") == "kerb")
+                   .select("ref_id").collect())
+    assert crossings and max(crossings) > 2 ** 53
+    assert set(refs) == crossings and set(refs.values()) == {2}
+    ids = {r.fid: r.feature_json for r in features_to_geojson_rows(f)
+           .filter(F.col("kind") == "crossing").collect()}
+    assert all(js.startswith(f'{{"type":"Feature","id":{fid},')
+               for fid, js in ids.items())
+
+
 def test_crossings_have_5_vertices(spark, features):
     from osm_sidewalkreator_spark.functions.geo import st_num_points
     bad = (features.filter(F.col("kind") == "crossing")
