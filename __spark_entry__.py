@@ -19,7 +19,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from osm_sidewalkreator_spark import params as P
 from osm_sidewalkreator_spark import synth as SY
@@ -86,12 +85,6 @@ def q_street_lengths(spark, sf_dir):
                   .alias("total_len_mm")))
 
 
-def q_clip_aoi(spark, sf_dir):
-    """P1/J1: AOI bbox semi-join (cliplayer_v2 prefilter)."""
-    df = PL.clip_to_aoi(PL.load_streets(spark, sf_dir), spark, sf_dir)
-    return df.select("osm_id")
-
-
 def q_endpoint_degree(spark, sf_dir):
     """J6/A7: street-endpoint node degrees from decoded+projected WKB."""
     st = PL.load_streets(spark, sf_dir).filter(F.col("n_vertices") == 2)
@@ -114,14 +107,6 @@ def q_pip_pages_blocks(spark, sf_dir):
         F.col("block_id").alias("poly_id"), "geometry")
     out = J.pip_join_points_polygons(pages, blocks, cell_size=P.CELL_SIZE_M)
     return out.select("url", F.col("poly_id").alias("block_id"))
-
-
-def q_pages_per_block(spark, sf_dir):
-    """A5/skew: pages per block (Zipf-hot cells; AQE skew handling)."""
-    pages = _pages_geo(spark, sf_dir).select("url", "x", "y")
-    blocks = _synth(spark, sf_dir, "blocks")
-    j = J.pip_join_points_rects(pages, blocks, cell_size=P.CELL_SIZE_M)
-    return j.groupBy("block_id").agg(F.count("*").alias("n_pages"))
 
 
 def q_knn_pages_sidewalks(spark, sf_dir):
@@ -189,12 +174,6 @@ def q_text_invariant(spark, sf_dir):
     return pages.select("url", F.md5(F.col("text")).alias("text_md5"))
 
 
-def q_html_bytes(spark, sf_dir):
-    """Multimodal: binary payload accounting (JVM-side)."""
-    pages = load_pages(spark, sf_dir)
-    return MM.media_byte_stats(pages).select("url", "n_bytes")
-
-
 def q_media_features(spark, sf_dir):
     """Multimodal: mapInPandas feature extraction over binary payloads
     (decode stubbed with the deterministic fake). EXACT oracle: the
@@ -204,13 +183,6 @@ def q_media_features(spark, sf_dir):
     return MM.extract_media_features(pages).select(
         "url", "n_bytes", (F.round("feat_mean", 6) + 0.0).alias("feat_mean"),
         "width_px", "height_px")
-
-
-def q_geocode_pages(spark, sf_dir):
-    """Pages geocode (deterministic xxhash64 Zipf placement)."""
-    pages = geocode_pages(load_pages(spark, sf_dir), sf_dir)
-    return pages.select("url", (F.round("x", 6) + 0.0).alias("x"),
-                        (F.round("y", 6) + 0.0).alias("y"))
 
 
 def _docs(spark, sf_dir):
@@ -248,11 +220,6 @@ def q_minhash_pairs(spark, sf_dir):
     # J >= 0.5 pairs in this corpus are exact dups (J = 1.0), for which
     # MinHash-LSH recall is exact -> same oracle as the exact-Jaccard op
     return TX.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.5)
-
-
-def q_simhash(spark, sf_dir):
-    d = _docs(spark, sf_dir).filter(F.pmod(F.col("doc_id"), F.lit(50)) == 0)
-    return TX.simhash64(d)
 
 
 def q_simhash_md5(spark, sf_dir):
@@ -329,29 +296,6 @@ def q_cosine_topk(spark, sf_dir):
     return SS.cosine_topk_bruteforce(emb, k=5, query_mod=50)
 
 
-def q_cosine_lsh(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SS.cosine_topk_lsh(emb, k=5, query_mod=50)
-
-
-def q_cosine_ivf(spark, sf_dir):
-    """IVF ANN (centroid cells + n_probe search; rows-only — the
-    approximate result has no SQL equivalent; recall pinned >= 0.9 on
-    clustered fixtures in tests/test_spark_ops.py)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SS.cosine_topk_ivf(emb, k=5, query_mod=50)
-
-
-def q_events_minutely(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (ev.groupBy("event_type",
-                       F.unix_timestamp(F.date_trunc("minute", "ts"))
-                        .alias("minute_epoch"))
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.round(F.col("value") * 1000).cast("long"))
-                  .alias("value_milli")))
-
-
 def q_lineitem_pricing(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (li.filter(F.col("l_shipdate") <= "1998-09-02")
@@ -368,7 +312,7 @@ def q_lineitem_pricing(spark, sf_dir):
 
 def q_clip_aoi_geometry(spark, sf_dir):
     """P1 true clip: segment geometry CUT at the AOI boundary (not just
-    feature membership — upgrades q_clip_aoi per VERDICT r1 #9). The
+    feature membership). The
     synthetic AOI contains every street, so the rect is shrunk by an
     inset that actually cuts the grid; the oracle recomputes the same
     Liang-Barsky interval with bit-identical float math."""
@@ -870,21 +814,10 @@ def q_curate_chain(spark, sf_dir):
         "chunk_text")
 
 
-def q_embedding_dedup_lsh(spark, sf_dir):
-    """Scale path of the embedding dedup: candidate pairs from the
-    multi-table hyperplane buckets (hot-bucket capped) instead of the
-    all-pairs crossJoin. Rows-only by design (LSH recall is seeded-hash
-    dependent); the keep-superset property vs the exact path is pinned
-    in tests/test_spark_ops.py::test_embedding_neardup_lsh_subset."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SS.embedding_neardup_dedup(emb, threshold=0.35, use_lsh=True) \
-        .select("vec_id", "label")
-
-
 def q_junction_angles(spark, sf_dir):
-    """P14/P15 direction vectors + angle-between (core
-    angle_between_three_points semantics, generic_functions.py corner
-    math): for every unordered pair of 2-vertex streets meeting at a
+    """P14/P15 direction vectors + angle-between (the reference's
+    angle_between_three_points, generic_functions.py corner math): for
+    every unordered pair of 2-vertex streets meeting at a
     node, the angle in degrees between their away-from-node direction
     vectors. Pure column algebra (atan2 of |cross| over dot)."""
     st = (PL.load_streets(spark, sf_dir)
@@ -958,52 +891,6 @@ def q_major_width_diff(spark, sf_dir):
         F.round(F.col("px") * 1000).cast("long").alias("px_mm"),
         F.round(F.col("py") * 1000).cast("long").alias("py_mm"),
         F.round(major * 1000).cast("long").alias("major_w_mm"))
-
-
-def q_dedup_canonical(spark, sf_dir):
-    """A9 with geometric (orientation-insensitive) equality: every 5th
-    2-vertex street is re-injected REVERSED (raw WKB point-block swap:
-    header 9 bytes, then the two 16-byte points exchanged); canonical
-    dedup must collapse each reversed copy onto its original."""
-    st = (PL.load_streets(spark, sf_dir)
-          .filter(F.col("n_vertices") == 2)
-          .select("osm_id", "geometry"))
-    g = F.col("geometry")
-    num = F.substring("osm_id", 2, 18).cast("long")
-    rev = (st.filter(num % 5 == 0)
-           .select(F.concat(F.lit("rev_"), F.col("osm_id"))
-                   .alias("osm_id"),
-                   F.concat(g.substr(1, 9), g.substr(26, 16),
-                            g.substr(10, 16)).alias("geometry")))
-    both = st.unionByName(rev)
-    out = J.dedup_geometries(both, order_col="osm_id", canonical=True)
-    return out.select("osm_id")
-
-
-_L_SHAPE = (-380.137, -380.261, 600.0, 500.0, 190.0)  # ox oy w h t
-
-
-def q_overlay_concave(spark, sf_dir):
-    """J3 over an ARBITRARY (concave) polygon: streets minus an
-    L-shaped polygon (even-odd interval kernel), oracle = the same
-    subtraction with the L's two constituent rectangles (their union IS
-    the L). Off-lattice offset avoids boundary-collinear ambiguity."""
-    import numpy as np
-    from osm_sidewalkreator_spark.geometry import wkb as W
-    from osm_sidewalkreator_spark.operators import overlay as OV
-    ox, oy, w, h, t = _L_SHAPE
-    shell = np.array([[ox, oy], [ox + w, oy], [ox + w, oy + t],
-                      [ox + t, oy + t], [ox + t, oy + h],
-                      [ox, oy + h], [ox, oy]])
-    poly = spark.createDataFrame(
-        [(1, ox, oy, ox + w, oy + h, bytearray(W.polygon_wkb(shell)))],
-        "poly_id long, xmin double, ymin double, xmax double,"
-        " ymax double, geometry binary")
-    st = _streets_as_segs(spark, sf_dir)
-    out = OV.difference_overlay_polygons(st, poly)
-    return out.select("osm_id",
-                      _mm("px_a", "ax_mm"), _mm("py_a", "ay_mm"),
-                      _mm("px_b", "bx_mm"), _mm("py_b", "by_mm"))
 
 
 def q_incidence_ids(spark, sf_dir):
@@ -1269,30 +1156,6 @@ def q_golden_protoblock_faces(spark, sf_dir):
     return (pb.withColumn("g", F.lit(1)).groupBy("g")
             .applyInPandas(lambda _k, pdf: kernel(pdf), schema))
 
-def q_protoblocks(spark, sf_dir):
-    f = _features(spark, sf_dir).filter(F.col("kind") == "protoblock")
-    return f.select("fid", (F.round("area", 3) + 0.0).alias("area_m2"),
-                    (F.round("length", 3) + 0.0).alias("perimeter_m"))
-
-
-def q_sidewalk_rings(spark, sf_dir):
-    f = _features(spark, sf_dir).filter(F.col("kind") == "sidewalk")
-    return f.select("fid", (F.round("length", 3) + 0.0).alias("ring_len_m"))
-
-
-def q_crossings(spark, sf_dir):
-    f = _features(spark, sf_dir).filter(F.col("kind") == "crossing")
-    return f.select("fid", (F.round("length", 3) + 0.0).alias("length_m"),
-                    (F.col("ortho_len_dif") + 0.0).alias("ortho_len_dif"),
-                    "above_tol",
-                    (F.col("near_center") + 0.0).alias("nearest_centerpoint"))
-
-
-def q_kerbs(spark, sf_dir):
-    f = _features(spark, sf_dir).filter(F.col("kind") == "kerb")
-    return f.select("fid", F.col("ref_id").alias("crossing_fid"))
-
-
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTER resolution over the documents table: the exact
     minhash pair set (the one q_minhash_pairs gates) resolved into
@@ -1371,53 +1234,13 @@ def q_lm_nll(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on registration: the driver records at most ~50 entries per
-    # round (r2 recorded 50/52, r3 recorded 50/59 — always the dict
-    # head). The registry is therefore CURATED to exactly 50, ALL with
-    # exact DuckDB oracles (streaming leads — it has its own
-    # session-startup-like latency). Retired entries keep full pytest
-    # coverage (tests/test_retired_queries.py): q_simhash (algebra
-    # exactly gated by q_simhash_md5), q_events_minutely (same oracle
-    # as q_events_streaming), q_geocode_pages (transitively pinned by
-    # q_pip_pages_blocks + q_text_invariant), q_embedding_dedup_lsh
-    # (keep-superset of exact q_embedding_dedup asserted in tests),
-    # q_cosine_lsh / q_cosine_ivf (recall measured every bench run),
-    # q_protoblocks / q_sidewalk_rings / q_crossings / q_kerbs
-    # (rows-only pipeline stages, each pinned by an exact geometry
-    # oracle: q_polygonize_lattice / q_ring_bbox /
-    # q_crossing_geometry+q_crossing_enlarge / the kerb-anchor
-    # contract), q_golden_protoblock_faces (rows-only by design; the
-    # 29-face recovery + area parity stay asserted in
-    # tests/test_retired_queries.py and tests/test_golden_fixtures.py),
-    # q_html_bytes (round 5 — its invariant is subsumed by
-    # q_media_features + q_text_invariant; byte-path parity kept in
-    # tests/test_retired_queries.py), q_golden_crossing_length (round
-    # 5 — crossing lengths are pinned by the mm-exact
-    # q_crossing_geometry + q_crossing_enlarge oracles; the golden
-    # fixture comparison stays in tests). Their slots now carry
-    # q_voronoi_split (the last §2.7 op that was pytest-only) and
-    # q_curate_chain (the end-to-end curation composition).
-    # Round-5 swaps widening LLM-pipeline coverage: retired
-    # q_golden_kerb_anchor (full DuckDB parity kept in
-    # tests/test_retired_queries.py via _golden_kerb_anchor_sql; G18
-    # stays exact-gated by q_crossing_geometry + q_crossing_enlarge),
-    # q_dedup_canonical (full parity kept via _dedup_canonical_sql;
-    # A9 stays gated by q_dedup_geometries) and q_overlay_concave
-    # (full parity kept via _overlay_concave_sql; J2/J3 stay gated by
-    # q_overlay_intersection/_poly_poly/_difference) — their slots
-    # carry q_weighted_sample (deterministic corpus mixing),
-    # q_ivf_cells (ANN coarse-quantizer assignment) and q_bm25_rank
-    # (full-text relevance ranking). Also retired q_pages_per_block
-    # (its join IS q_pip_pages_blocks' join; the trailing GROUP BY
-    # count keeps full parity via _pages_per_block_sql in
-    # tests/test_retired_queries.py; J8/A5 stay exact-gated by
-    # q_incidence_ids + q_protoblock_sidewalk_filter) — its slot
-    # carries q_lm_nll (bigram-LM perplexity filtering). Also retired
-    # q_clip_aoi (its bbox membership predicate is one of
-    # q_extract_by_location's 8 pinned predicates and the true
-    # boundary cut stays gated via q_clip_aoi_geometry; full parity
-    # via _clip_aoi_sql in tests/test_retired_queries.py) — its slot
-    # carries q_temperature_mix (count-derived corpus re-weighting).
+    # The driver records at most ~50 entries per round (the dict head),
+    # so the registry is curated to exactly 50, each with an exact
+    # DuckDB oracle. Three more checks against the reference's published
+    # smoke outputs (sources/golden.py) stay outside it and run in
+    # tests/test_retired_queries.py when those fixtures are present:
+    # q_golden_protoblock_faces, q_golden_crossing_length and
+    # q_golden_kerb_anchor.
     return {
         "q_sessionize": q_sessionize,
         "q_stream_dedup": q_stream_dedup,
@@ -1706,9 +1529,6 @@ def oracle_sql() -> dict[str, str]:
     wc = _widths_case()
     stop_list = ", ".join(f"'{s}'" for s in TX.STOPWORDS)
 
-    lang_cases = []
-    for lg in sorted(TX.LANG_MARKERS):  # reversed order handled by priority
-        pass
     # argmax with ties -> lexicographically smallest lang, default 'en'
     score_exprs = {
         lg: ("len(list_filter(string_split(text,' '), t -> t IN ("
@@ -2688,10 +2508,6 @@ def oracle_sql() -> dict[str, str]:
                      AS chunk_text
             FROM c
         """,
-        # q_minhash_pairs / q_simhash / q_cosine_lsh /
-        # q_geocode_pages / q_protoblocks / q_sidewalk_rings / q_crossings /
-        # q_kerbs / q_golden_protoblock_faces: engine-specific (seeded-hash
-        # or geometry-kernel) paths — rows-only checks by design.
         "q_dedup_clusters": _CLUSTER_SQL,
     }
 
@@ -2708,110 +2524,6 @@ def _golden_counts_sql() -> str:
                   FROM read_json('{G.golden_path(layer)}'))
             GROUP BY 1, 2"""
         for layer in G.SMOKE_LAYERS)
-
-
-def _clip_aoi_sql(streets: str, aoi: str) -> str:
-    """Retired q_clip_aoi oracle — full DuckDB parity lives in
-    tests/test_retired_queries.py (the bbox membership predicate is
-    also one of q_extract_by_location's 8 gate-pinned predicates, and
-    the true Liang-Barsky cut stays gated via q_clip_aoi_geometry)."""
-    return f"""
-        SELECT s.osm_id FROM {streets} s, {aoi} a
-        WHERE greatest(s.x1, s.x2) >= a.xmin
-          AND least(s.x1, s.x2) <= a.xmax
-          AND greatest(s.y1, s.y2) >= a.ymin
-          AND least(s.y1, s.y2) <= a.ymax
-    """
-
-
-def _pages_per_block_sql(pages_geo: str, blocks: str) -> str:
-    """Retired q_pages_per_block oracle — full DuckDB parity lives in
-    tests/test_retired_queries.py (the underlying join is exactly
-    q_pip_pages_blocks' join, which stays in the gate)."""
-    return f"""
-        SELECT b.block_id, count(*) AS n_pages
-        FROM {pages_geo} p JOIN {blocks} b
-          ON p.x >= b.xmin AND p.x < b.xmax
-         AND p.y >= b.ymin AND p.y < b.ymax
-        GROUP BY b.block_id
-    """
-
-
-def _dedup_canonical_sql(streets: str) -> str:
-    """Retired q_dedup_canonical oracle — full DuckDB parity lives in
-    tests/test_retired_queries.py; ``streets`` is a read_parquet()
-    expression for the synth streets table."""
-    return f"""
-        WITH s AS (SELECT osm_id, x1, y1, x2, y2 FROM {streets}
-                   WHERE n_vertices = 2),
-             r AS (SELECT 'rev_' || osm_id AS osm_id,
-                          x2 AS x1, y2 AS y1, x1 AS x2, y1 AS y2
-                   FROM s
-                   WHERE CAST(substr(osm_id, 2) AS BIGINT) % 5 = 0),
-             u AS (SELECT * FROM s UNION ALL SELECT * FROM r),
-             k AS (SELECT osm_id,
-                     CASE WHEN x1 < x2 OR (x1 = x2 AND y1 <= y2)
-                          THEN [x1, y1, x2, y2]
-                          ELSE [x2, y2, x1, y1] END AS key
-                   FROM u)
-        SELECT min(osm_id) AS osm_id FROM k GROUP BY key
-    """
-
-
-def _overlay_concave_sql(streets: str) -> str:
-    """Retired q_overlay_concave oracle (L-shape = union of its two
-    rectangles) — full parity lives in tests/test_retired_queries.py."""
-    return f"""
-        WITH r AS (SELECT * FROM (VALUES
-               (-380.137, -380.261,
-                -380.137 + 600.0, -380.261 + 190.0),
-               (-380.137, -380.261,
-                -380.137 + 190.0, -380.261 + 500.0))
-               AS v(xmin, ymin, xmax, ymax)),
-             s AS (SELECT osm_id, x1 AS ax, y1 AS ay, x2 AS bx,
-                          y2 AS by
-                   FROM {streets} WHERE n_vertices = 2),
-             j AS (SELECT s.*, r.* FROM s CROSS JOIN r),
-             t AS (SELECT *, {_LB_T0} AS t0, {_LB_T1} AS t1,
-                          {_LB_OUT} AS outside
-                   FROM j),
-             c AS (SELECT osm_id, ax, ay, bx, by, t0, t1
-                   FROM t WHERE NOT outside AND t0 < t1),
-             g AS (SELECT *, CASE WHEN t0 > coalesce(
-                     max(t1) OVER (PARTITION BY osm_id
-                       ORDER BY t0, t1
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), -1.0)
-                     THEN 1 ELSE 0 END AS new_isl
-                   FROM c),
-             i AS (SELECT *, sum(new_isl) OVER (PARTITION BY osm_id
-                     ORDER BY t0, t1
-                     ROWS UNBOUNDED PRECEDING) AS isl
-                   FROM g),
-             m AS (SELECT osm_id, isl, any_value(ax) AS ax,
-                          any_value(ay) AS ay, any_value(bx) AS bx,
-                          any_value(by) AS by,
-                          min(t0) AS mt0, max(t1) AS mt1
-                   FROM i GROUP BY osm_id, isl),
-             gaps AS (
-               SELECT osm_id, ax, ay, bx, by,
-                      coalesce(lag(mt1) OVER (PARTITION BY osm_id
-                        ORDER BY mt0), 0.0) AS t0,
-                      mt0 AS t1
-               FROM m
-               UNION ALL
-               SELECT osm_id, any_value(ax), any_value(ay),
-                      any_value(bx), any_value(by),
-                      max(mt1) AS t0, 1.0 AS t1
-               FROM m GROUP BY osm_id
-               UNION ALL
-               SELECT osm_id, x1, y1, x2, y2, 0.0, 1.0
-               FROM {streets} st
-               WHERE n_vertices = 2 AND NOT EXISTS
-                 (SELECT 1 FROM c WHERE c.osm_id = st.osm_id))
-        SELECT osm_id, {_LB_PIECE_MM}
-        FROM gaps WHERE t0 < t1
-    """
 
 
 def _golden_kerb_anchor_sql() -> str:

@@ -9,12 +9,7 @@ Synthetic-input generation and artifact warm-up happen before timing so
 the numbers measure engine compute, not one-time fixture creation.
 
 The emitted JSON is SELF-VALIDATING: a "host" stamp records hypervisor
-steal%% before and during the timed section, 1-min load, and STREAM
-probes at 1 proc and at bench parallelism before/after — each probe
-reports warm-page READ bandwidth and fresh-page FAULT rate separately,
-because the sandbox host exhibits three distinct degradation regimes
-(steal, wide-bandwidth pinning, fault throttling to ~9 MB/s/proc) and
-only the stamp can say which one a slow wall-clock landed in (see
+steal% before and during the timed section and the 1-min load (see
 ``osm_sidewalkreator_spark/hostcond.py``).
 """
 
@@ -34,7 +29,7 @@ from osm_sidewalkreator_spark.artifacts import ensure_features
 from osm_sidewalkreator_spark.operators import joins as J
 from osm_sidewalkreator_spark.operators import simsearch as SS
 from osm_sidewalkreator_spark.operators import textops as TX
-from osm_sidewalkreator_spark.pages import ensure_pages_geo, geocode_pages, load_pages
+from osm_sidewalkreator_spark.pages import ensure_pages_geo
 from osm_sidewalkreator_spark.plans import pipeline as PL
 from osm_sidewalkreator_spark.session import get_spark, host_defaults
 from osm_sidewalkreator_spark.synth import ensure_synth
@@ -57,9 +52,9 @@ def main():
     # timed sf run ~40% slower than steady state)
     PL.generate_features(spark, sf_dir).count()
 
-    # host-condition bracket: pre-probes (steal/load/STREAM) run here,
-    # the cumulative steal delta covers exactly the timed section
-    mon = hostcond.HostMonitor(n_wide=n_cpus)
+    # host-condition bracket: the steal/load pre-probe runs here, the
+    # cumulative steal delta covers exactly the timed section
+    mon = hostcond.HostMonitor()
     mon.start()
 
     timings: dict[str, float] = {}

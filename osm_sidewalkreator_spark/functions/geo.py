@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -181,35 +180,6 @@ def st_explode_segments(col: pd.Series) -> pd.Series:
                          "bx": float(c), "by": float(d)}
                         for a, b, c, d in s)
         out.append(segs)
-    return pd.Series(out)
-
-
-@pandas_udf(T.BinaryType())
-def st_canonical_wkb(col: pd.Series) -> pd.Series:
-    """Orientation-canonical WKB (A9 support): a LineString and its
-    reverse encode to the SAME bytes (the lexicographically-smaller
-    vertex order wins), so byte-equality dedup matches the geometric
-    equality of ``native:deleteduplicategeometries``
-    (generic_functions.py:92-95). Non-linestrings pass through.
-    """
-    out = []
-    for blob in col:
-        if blob is None:
-            out.append(None)
-            continue
-        b = bytes(blob)
-        if wkb.geom_type(b) != 2:
-            out.append(b)
-            continue
-        t, parts = wkb.decode(b)
-        c = parts[0]
-        rev = c[::-1]
-        for a, d in zip(c.ravel(), rev.ravel()):
-            if a != d:
-                if d < a:
-                    c = rev
-                break
-        out.append(wkb.linestring_wkb(c))
     return pd.Series(out)
 
 

@@ -133,10 +133,3 @@ def explode_polyline_to_segments(coords: np.ndarray) -> np.ndarray:
     keep = (segs[:, 0] != segs[:, 2]) | (segs[:, 1] != segs[:, 3])
     return segs[keep]
 
-
-def angle_between_three_points(a, b, c) -> float:
-    """Angle ABC in radians (at vertex b), in [0, 2pi) measured like
-    QgsGeometryUtils.angleBetweenThreePoints (generic_functions.py:1215)."""
-    a1 = np.arctan2(a[1] - b[1], a[0] - b[0])
-    a2 = np.arctan2(c[1] - b[1], c[0] - b[0])
-    return float((a2 - a1) % (2 * np.pi))

@@ -108,27 +108,6 @@ def buffer_members(segs: np.ndarray, radii: np.ndarray, nseg: int = 5,
     return [rects, discs]
 
 
-# legacy convenience (kept for kernels that want a single convex hull of a
-# buffered segment, e.g. endpoint search regions)
-def stadium_vertices(segs: np.ndarray, radii: np.ndarray,
-                     nseg: int = 5) -> np.ndarray:
-    """(n,4) segments + (n,) radii -> (n,V,2) CCW stadium polygons."""
-    segs = np.asarray(segs, dtype=np.float64)
-    radii = np.broadcast_to(np.asarray(radii, dtype=np.float64), (len(segs),))
-    ax, ay, bx, by = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    phi = np.arctan2(by - ay, bx - ax)
-    k = np.arange(2 * nseg + 1)
-    dtheta = np.pi / (2 * nseg)
-    ang_b = phi[:, None] - np.pi / 2 + k[None, :] * dtheta
-    ang_a = phi[:, None] + np.pi / 2 + k[None, :] * dtheta
-    r = radii[:, None]
-    vb = np.stack([bx[:, None] + r * np.cos(ang_b),
-                   by[:, None] + r * np.sin(ang_b)], axis=-1)
-    va = np.stack([ax[:, None] + r * np.cos(ang_a),
-                   ay[:, None] + r * np.sin(ang_a)], axis=-1)
-    return np.concatenate([vb, va], axis=1)
-
-
 def polys_boundary_edges(polys: np.ndarray) -> np.ndarray:
     """(S,V,2) polygons -> (S*V,4) closed boundary edges."""
     nxt = np.roll(polys, -1, axis=1)

@@ -28,19 +28,6 @@ def point_wkb(x: float, y: float) -> bytes:
     return _HDR.pack(1, POINT) + _D2.pack(x, y)
 
 
-def points_wkb(xs: np.ndarray, ys: np.ndarray) -> list[bytes]:
-    """Vectorized point encoding for large page tables."""
-    n = len(xs)
-    buf = np.empty(n, dtype=[("e", "u1"), ("t", "<u4"), ("x", "<f8"), ("y", "<f8")])
-    buf["e"] = 1
-    buf["t"] = POINT
-    buf["x"] = np.asarray(xs, dtype=np.float64)
-    buf["y"] = np.asarray(ys, dtype=np.float64)
-    raw = buf.tobytes()
-    sz = buf.itemsize
-    return [raw[i * sz:(i + 1) * sz] for i in range(n)]
-
-
 def linestring_wkb(coords: np.ndarray) -> bytes:
     c = np.ascontiguousarray(coords, dtype="<f8")
     return _HDR.pack(1, LINESTRING) + _U32.pack(len(c)) + c.tobytes()
@@ -165,20 +152,3 @@ def decode_polygons(wkb: bytes) -> list[list[np.ndarray]]:
         return out
     raise ValueError(f"expected (multi)polygon, got {t}")
 
-
-def decode_point(wkb: bytes) -> tuple[float, float]:
-    t, parts = decode(wkb)
-    if t != POINT:
-        raise ValueError(f"expected point, got {t}")
-    return float(parts[0][0, 0]), float(parts[0][0, 1])
-
-
-def decode_points_vec(wkbs) -> np.ndarray:
-    """Vectorized decode of a homogeneous array of 2D point WKBs -> (n,2)."""
-    raw = b"".join(wkbs)
-    n = len(wkbs)
-    if n == 0:
-        return np.empty((0, 2))
-    rec = np.frombuffer(raw, dtype=[("e", "u1"), ("t", "<u4"), ("x", "<f8"), ("y", "<f8")])
-    assert len(rec) == n
-    return np.column_stack([rec["x"], rec["y"]])

@@ -69,12 +69,6 @@ def domain_expr(url_col="url"):
     return F.coalesce(out, F.lit(""))
 
 
-def with_domain(docs: DataFrame, url_col: str = "url",
-                out_col: str = "domain") -> DataFrame:
-    """Project the domain column (narrow — no shuffle)."""
-    return docs.withColumn(out_col, domain_expr(url_col))
-
-
 def cap_per_domain(docs: DataFrame, max_docs: int,
                    url_col: str = "url", key_col: str = "doc_id",
                    seed: str = "domcap-v1") -> DataFrame:

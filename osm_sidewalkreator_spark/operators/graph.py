@@ -35,8 +35,6 @@ scalar row, never a collect of the edge set.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,8 +48,7 @@ from pyspark.sql import types as T
 # The bound is the same order as a broadcast-join build side (200k
 # edges x 16 B ~ 3 MB); above it the distributed algorithm runs
 # unchanged, so the 100 TB path is untouched.
-_CC_DRIVER_MAX_EDGES = int(os.environ.get(
-    "SPARK_GRAFT_CC_DRIVER_MAX", "200000"))
+_CC_DRIVER_MAX_EDGES = 200_000
 
 
 def _canon_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:

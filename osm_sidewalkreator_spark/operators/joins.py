@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import st_canonical_wkb, st_explode_segments
+from ..functions.geo import st_explode_segments
 from .tiling import (box_cells, cell_id, neighbor_cells, seg_box_overlap,
                      seg_box_pairs, seg_cells)
 
@@ -205,25 +205,3 @@ def pip_join_points_polygons(points: DataFrame, polys: DataFrame,
                          F.lit(False))
     return p.join(pl, "cell").filter(in_rows & odd).select(point_id, poly_id)
 
-
-def dedup_geometries(df: DataFrame, geom_col: str = "geometry",
-                     order_col: str | None = None,
-                     canonical: bool = False) -> DataFrame:
-    """Duplicate-geometry removal (A9, ``generic_functions.py:92-95``):
-    keep one row per identical WKB (deterministic winner by order_col).
-
-    ``canonical=True`` normalizes LineString orientation first
-    (Arrow-batched UDF), so a way and its reverse count as the SAME
-    geometry — matching ``native:deleteduplicategeometries``'s
-    geometric equality rather than byte equality."""
-    key = geom_col
-    if canonical:
-        df = df.withColumn("_ckey", st_canonical_wkb(F.col(geom_col)))
-        key = "_ckey"
-    if order_col is None:
-        return df.dropDuplicates([key]).drop("_ckey") if canonical \
-            else df.dropDuplicates([key])
-    w = Window.partitionBy(key).orderBy(F.col(order_col).asc())
-    out = (df.withColumn("_rn", F.row_number().over(w))
-             .filter(F.col("_rn") == 1).drop("_rn"))
-    return out.drop("_ckey") if canonical else out

@@ -33,7 +33,7 @@ token_stats / quality_score / decontaminate operators use
 
 Reference parity note: the reference plugin has no LM; this extends
 the engine's curation tier (SURVEY.md "training-data ops") alongside
-quality_score (heuristic) and repetition_stats (Gopher-style).
+quality_score (heuristic) and the Gopher rules (gopher_flags_expr).
 """
 
 from __future__ import annotations

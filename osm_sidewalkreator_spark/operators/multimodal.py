@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a metadata struct;
-decode / feature-extraction / resize / frame-sampling run as Arrow-
-batched ``mapInPandas`` stages. The actual codec work is STUBBED (no
+decode and feature extraction run as an Arrow-batched
+``mapInPandas`` stage. The actual codec work is STUBBED (no
 image/audio libraries in this environment — the decode seam raises
 ``NotImplementedError`` unless the deterministic fake is requested);
 the Spark-side contract — schema, batch iteration, partitioning — is
@@ -71,80 +71,3 @@ def media_byte_stats(df: DataFrame, payload_col: str = "html") -> DataFrame:
     return df.select(
         "url", F.length(F.col(payload_col)).alias("n_bytes"),
         F.crc32(F.col(payload_col)).alias("payload_crc32"))
-
-
-RESIZED_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("width_px", T.IntegerType()),
-    T.StructField("height_px", T.IntegerType()),
-    T.StructField("pixels", T.BinaryType()),
-])
-
-
-def resize_media(df: DataFrame, target: int = 8,
-                 payload_col: str = "html",
-                 media_type: str = "image/fake",
-                 use_fake: bool = True) -> DataFrame:
-    """Resize stage: decode -> block-mean downsample to ``target`` x
-    ``target`` -> re-emit raw pixels as a binary column (the shape a
-    training-data pipeline feeds to an embedding model). Pure NumPy on
-    the fake-decode path; the codec seam is the same honest stub."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                img = decode_media(bytes(payload), media_type, use_fake)
-                side = img.shape[0]
-                k = max(1, -(-side // target))  # ceil: out side <= target
-                crop = img[: (side // k) * k, : (side // k) * k]
-                small = crop.reshape(crop.shape[0] // k, k,
-                                     crop.shape[1] // k, k) \
-                    .mean(axis=(1, 3)).astype(np.uint8)
-                rows.append((url, small.shape[1], small.shape[0],
-                             small.tobytes()))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              RESIZED_SCHEMA])
-
-    return df.select("url", payload_col).mapInPandas(run, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("feat_mean", T.DoubleType()),
-    T.StructField("feat_std", T.DoubleType()),
-])
-
-
-def sample_video_frames(df: DataFrame, every_n: int = 4,
-                        n_frames: int = 16,
-                        payload_col: str = "html",
-                        use_fake: bool = True) -> DataFrame:
-    """Frame-sampling stage (one input row -> many frame rows): the
-    fake 'video' splits the payload into ``n_frames`` equal chunks;
-    every ``every_n``-th frame is decoded and featurized. Exercises the
-    one-to-many ``mapInPandas`` contract real video sampling needs
-    (ffmpeg seam stubbed like ``decode_media``)."""
-    if not use_fake:
-        raise NotImplementedError(
-            "video codecs are not installed in this environment; "
-            "pass use_fake=True for the deterministic stub")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                b = bytes(payload)
-                step = max(1, len(b) // n_frames)
-                for fi in range(0, n_frames, every_n):
-                    chunk = b[fi * step: (fi + 1) * step]
-                    if not chunk:
-                        continue
-                    arr = np.frombuffer(chunk, dtype=np.uint8)
-                    rows.append((url, fi, float(arr.mean()),
-                                 float(arr.std())))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              FRAME_SCHEMA])
-
-    return df.select("url", payload_col).mapInPandas(run, FRAME_SCHEMA)

@@ -14,10 +14,10 @@ Two polygon tiers share the same downstream interval algebra:
 
 - axis-aligned rectangles (`intersection_overlay`/`difference_overlay`)
   stay 100% JVM (Liang-Barsky columns);
-- arbitrary (multi)polygons with holes, concave included
-  (`*_overlay_polygons`), get their inside-intervals from an
-  Arrow-batched even-odd clipping kernel, then reuse the same JVM
-  piece/subtraction plans. (The Voronoi split kernel in
+- arbitrary (multi)polygons with holes, concave included, get their
+  inside-intervals from an Arrow-batched even-odd clipping kernel
+  (`polygon_clip_intervals`); `polygon_overlay_polygons` then reuses
+  the same JVM piece/subtraction plans. (The Voronoi split kernel in
   ``plans/refine.py`` remains the tile-local convex path.)
 """
 
@@ -530,24 +530,3 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
                            f"{a_id} {aid_t}, {b_id} {bid_t}, "
                            "area double, perim double"))
 
-
-def intersection_overlay_polygons(segs: DataFrame, polys: DataFrame,
-                                  cell_size: float = 128.0,
-                                  seg_id: str = "osm_id",
-                                  poly_id: str = "poly_id") -> DataFrame:
-    """J2 for arbitrary polygons: one row per truly-overlapping
-    (segment, polygon) inside-piece, geometry cut to the piece."""
-    iv = polygon_clip_intervals(segs, polys, cell_size, seg_id, poly_id)
-    return iv.select(seg_id, poly_id,
-                     *_piece_coords(F.col("_t0"), F.col("_t1")))
-
-
-def difference_overlay_polygons(segs: DataFrame, polys: DataFrame,
-                                cell_size: float = 128.0,
-                                seg_id: str = "osm_id",
-                                poly_id: str = "poly_id") -> DataFrame:
-    """J3 for arbitrary polygons: each segment minus the union of all
-    overlapping polygons (shared JVM interval-merge fold)."""
-    iv = polygon_clip_intervals(segs, polys, cell_size, seg_id,
-                                poly_id).select(seg_id, "_t0", "_t1")
-    return _subtract_intervals(segs, iv, seg_id)

@@ -24,10 +24,6 @@ from pyspark.sql import functions as F
 
 from .tiling import seg_box_pairs
 
-PREDICATES = ("intersects", "contains", "disjoint", "equals", "touches",
-              "overlaps", "within", "crosses")
-
-
 def _clip_interval() -> tuple[Column, Column, Column]:
     """(t0, t1, degenerate_outside) of segment∩rect, columns over
     ax/ay/bx/by/xmin/ymin/xmax/ymax."""
@@ -45,17 +41,6 @@ def _clip_interval() -> tuple[Column, Column, Column]:
         t1 = F.when(p > 0, F.least(t1, r)).otherwise(t1)
         outside = outside | ((p == 0) & (q < 0))
     return t0, t1, outside
-
-
-def relation_flags(segs: DataFrame, rect: DataFrame) -> DataFrame:
-    """Per (segment, rect) row: boolean columns for every J1 predicate.
-
-    segs: (..., ax, ay, bx, by); rect: (xmin, ymin, xmax, ymax [, id]).
-    Rect side is broadcast (AOI-sized); for many-rect workloads use
-    ``extract_by_location`` below (cell equi-join).
-    """
-    j = segs.crossJoin(F.broadcast(rect))
-    return _with_flags(j)
 
 
 def _with_flags(j: DataFrame) -> DataFrame:
@@ -88,32 +73,3 @@ def flag_pairs(segs: DataFrame, rects: DataFrame,
     are absent (so ``disjoint`` is never true here)."""
     return _with_flags(seg_box_pairs(segs, rects, cell_size))
 
-
-def extract_by_location(segs: DataFrame, rects: DataFrame,
-                        predicates: list[str],
-                        cell_size: float = 128.0,
-                        feature_id: str = "osm_id") -> DataFrame:
-    """QGIS extractbylocation: input features matching ANY predicate vs
-    ANY compared feature. Cell equi-join keeps the candidate space
-    bounded at scale; ``disjoint`` is computed as the anti-set of
-    ``intersects`` (a disjoint pair never shares a cell, so the
-    candidate join cannot see it directly)."""
-    bad = set(predicates) - set(PREDICATES)
-    if bad:
-        raise ValueError(f"unknown predicates {bad}")
-    pos = [p for p in predicates if p != "disjoint"]
-    out = None
-    if pos:
-        flags = flag_pairs(segs, rects, cell_size)
-        cond = None
-        for p in pos:
-            cond = F.col(p) if cond is None else (cond | F.col(p))
-        hits = flags.filter(cond).select(feature_id).distinct()
-        out = segs.join(hits, feature_id, "left_semi")
-    if "disjoint" in predicates:
-        inter = extract_by_location(segs, rects, ["intersects"],
-                                    cell_size, feature_id)
-        dis = segs.join(inter.select(feature_id).distinct(),
-                        feature_id, "left_anti")
-        out = dis if out is None else out.unionByName(dis).distinct()
-    return out

@@ -391,51 +391,6 @@ def embedding_neardup_dedup(emb: DataFrame, threshold: float = 0.35,
     return emb.join(dups, "vec_id", "left_anti")
 
 
-def cosine_topk_ivf(emb: DataFrame, k: int = 5, query_mod: int = 50,
-                    n_centroids: int = 32, n_probe: int = 6,
-                    centroids: list | None = None) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: partition vectors by
-    nearest centroid, search a query only within its ``n_probe``
-    closest centroid cells.
-
-    Default centroids are a deterministic uniform sample of the corpus
-    itself (the ``n_centroids`` smallest xxhash64(vec_id) values — no
-    RNG state, reproducible across runs), keeping the operator
-    stateless; pass ``centroids`` (e.g. from
-    ``kmeans_fit_spherical``) to search against a trained coarse
-    quantizer instead. Scale shape: the centroid table is
-    driver-small and broadcast, vector assignment is one
-    broadcast-join argmin pass (JVM column algebra), and the candidate
-    join shuffles on the centroid id — per-query work is bounded by
-    the n_probe largest cells instead of N.
-    """
-    e = _vectors(emb)
-    if centroids is not None:
-        cent = e.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cid long, cv array<double>")
-    else:
-        cent = (e.withColumn("_h", F.xxhash64("vec_id"))
-                .orderBy("_h").limit(n_centroids)
-                .select(F.col("vec_id").alias("cid"),
-                        F.col("v").alias("cv")))
-    sim_c = _dot(F.col("v"), F.col("cv")) \
-        / (_norm(F.col("v")) * _norm(F.col("cv")))
-    scored = (e.crossJoin(F.broadcast(cent))
-              .withColumn("_s", F.round(sim_c, 9)))
-    wa = Window.partitionBy("vec_id").orderBy(
-        F.col("_s").desc(), F.col("cid").asc())
-    ranked = scored.withColumn("_r", F.row_number().over(wa))
-    assign = (ranked.filter(F.col("_r") == 1)
-              .select("vec_id", "cid"))
-    probes = _queries(ranked.filter(F.col("_r") <= n_probe), query_mod) \
-        .select("query_id", "cid")
-    cand = (probes.join(assign, "cid")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id").distinct())
-    return _rank_topk(_refine(cand, e), k)
-
-
 def _unit(emb: DataFrame) -> DataFrame:
     """(vec_id, vn): every embedding scaled to unit length (zero
     vectors stay zero)."""
@@ -459,68 +414,10 @@ def _argmax(sims):
     return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
 
 
-def kmeans_fit_spherical(emb: DataFrame, n_centroids: int = 32,
-                         iters: int = 4) -> list:
-    """Distributed spherical k-means (Lloyd) — an IVF coarse-quantizer
-    trainer. Returns ``n_centroids`` unit vectors (list of lists);
-    cell id = list index.
-
-    Init = the ``n_centroids`` vectors with the smallest
-    ``xxhash64(vec_id)``, unit-normalized — the same deterministic
-    sample rule ``cosine_topk_ivf`` uses standalone, so ``iters=0``
-    reproduces that operator's cells exactly. Each Lloyd iteration:
-
-    * assignment — ONE narrow projection: the k centroids ride into
-      the scan as an array literal; the best cell is
-      ``array_position(sims, array_max(sims)) - 1`` (first max, so
-      ties resolve to the lowest cell id — matching NumPy ``argmax``
-      in the test oracle). No join, no shuffle.
-    * update — one map-side-combined ``groupBy(cid)`` of
-      per-dimension sums + counts: the only shuffle, and what crosses
-      it is k rows x dim doubles PER PARTITION, independent of corpus
-      size.
-    * renormalize / empty-cell carry-over — driver-side on the k-row
-      model (the centroid table IS the model; collecting k*dim
-      doubles is the algorithm, not a scale leak).
-
-    Spherical (normalize inputs, mean, renormalize) rather than
-    Euclidean because the IVF search metric is cosine: assignment by
-    max dot of unit vectors IS nearest-by-cosine. Fixed-iteration
-    convergence (IVF trainers run 4-10 Lloyd rounds); the normalized
-    corpus is cached across iterations and released before returning.
-    """
-    import math
-
-    if n_centroids < 1:
-        raise ValueError(f"n_centroids must be >= 1: {n_centroids}")
-    e = _unit(emb).persist()
-    try:
-        init = (e.withColumn("_h", F.xxhash64("vec_id"))
-                .orderBy("_h").limit(n_centroids).select("vn").collect())
-        cents = [list(r.vn) for r in init]
-        if not cents:
-            return []
-        dim = len(cents[0])
-        sums = [F.sum(F.col("vn")[i]).alias(f"s{i}") for i in range(dim)]
-        for _ in range(iters):
-            rows = (e.withColumn("cid", _argmax(_cell_sims(cents)))
-                    .groupBy("cid").agg(*sums).collect())
-            nxt = [list(c) for c in cents]  # empty cell keeps its centroid
-            for r in rows:
-                vec = [r[f"s{i}"] for i in range(dim)]
-                ln = math.sqrt(sum(x * x for x in vec))
-                if ln > 0.0:
-                    nxt[r["cid"]] = [x / ln for x in vec]
-            cents = nxt
-        return cents
-    finally:
-        e.unpersist()
-
-
 def assign_cells(emb: DataFrame, centroids: list) -> DataFrame:
-    """(vec_id, cid) under max-cosine assignment to ``centroids`` —
-    the same shuffle-free literal-array expression the k-means
-    iterations use, exposed for building/inspecting IVF lists."""
+    """(vec_id, cid) under max-cosine assignment to ``centroids``:
+    the coarse-quantizer step of an IVF index, one shuffle-free
+    literal-array expression."""
     return _unit(emb).select(
         "vec_id", _argmax(_cell_sims(centroids)).alias("cid"))
 
@@ -576,88 +473,3 @@ def cosine_topk_quantized(emb: DataFrame, k: int = 5, query_mod: int = 50,
     return _exact_topk(q8.select("vec_id", F.col("qvec").alias("v")),
                        k, query_mod)
 
-
-def semdedup(emb: DataFrame, threshold: float = 0.95,
-             n_centroids: int = 32, iters: int = 4,
-             centroids: list | None = None,
-             max_cell: int = 4096) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    dedup via k-means blocking. Cluster the embeddings with the
-    spherical k-means trainer, mint candidate pairs ONLY within a
-    cluster, connect pairs with cosine >= threshold into groups, and
-    keep exactly one document per group — the member with the LOWEST
-    cosine to its cluster centroid (the paper's "keep the example
-    farthest from the centroid" rule; it preserves the cluster's
-    outer hull and drops its redundant core), ties by min vec_id.
-
-    Scale shape: pairwise cost falls from O(N^2) to
-    O(sum_c n_c^2) — with balanced cells a ~n_centroids-fold cut —
-    and each cell's pair minting is an equi-join on cid, so cells
-    process independently (embarrassingly parallel across the
-    cluster). Cells larger than ``max_cell`` are exempt from pair
-    minting (hot-cell guard, same contract as the LSH
-    ``max_bucket``: a skipped cell KEEPS its documents — blocking
-    can only miss duplicates, never drop uniques). At the 10^12-row
-    north star you raise n_centroids so n_c stays bounded; the
-    centroid model is k x dim doubles and rides into the scan as a
-    literal, so blocking itself is shuffle-free.
-
-    Cosines are rounded to 9 decimals before every compare (both the
-    threshold and the keep rule) so an independent engine ranks
-    borderline pairs and representatives identically.
-    """
-    from .graph import connected_components
-
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0,1]: {threshold}")
-    if centroids is None:
-        centroids = kmeans_fit_spherical(emb, n_centroids=n_centroids,
-                                         iters=iters)
-    if not centroids:
-        return emb
-    from pyspark import StorageLevel
-
-    # the k x dim literal matmul is an EXPENSIVE expression tree
-    # (k*dim lambda evaluations per row, duplicated for the argmax);
-    # compute `_sims` once behind a projection and PERSIST the
-    # assignment — the plan below references `e` four times (cell
-    # counts, both self-join sides, the representative join) and
-    # would otherwise re-run the matmul on each reference (measured
-    # 4x wall on the profile corpus)
-    e = (_unit(emb).withColumn("_sims", _cell_sims(centroids))
-         .select("vec_id", "vn", _argmax(F.col("_sims")).alias("cid"),
-                 F.round(F.array_max(F.col("_sims")), 9)
-                 .alias("cent_sim"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        # cell sizes via a collapsing groupBy (k rows after map-side
-        # combine) broadcast back — a count window over cid would
-        # shuffle the whole corpus into <= n_centroids partitions,
-        # reintroducing the megacell straggler the guard avoids
-        ok_cells = (e.groupBy("cid").agg(F.count(F.lit(1))
-                                         .alias("_cn"))
-                    .filter(F.col("_cn") <= max_cell).select("cid"))
-        small = e.join(F.broadcast(ok_cells), "cid", "left_semi")
-        a = small.select("cid", F.col("vec_id").alias("ia"),
-                         F.col("vn").alias("va"))
-        b = small.select("cid", F.col("vec_id").alias("ib"),
-                         F.col("vn").alias("vb"))
-        pair_sim = F.round(_dot(F.col("va"), F.col("vb")), 9)
-        pairs = (a.join(b, "cid").filter(F.col("ia") < F.col("ib"))
-                 .filter(pair_sim >= F.lit(float(threshold)))
-                 .select("ia", "ib"))
-        cc = connected_components(pairs, "ia", "ib")
-        members = cc.join(e.select("vec_id", "cent_sim"),
-                          cc.node == e.vec_id).select(
-            "component", F.col("node").alias("vec_id"), "cent_sim")
-        wk = Window.partitionBy("component").orderBy(
-            F.col("cent_sim").asc(), F.col("vec_id").asc())
-        # materialize the (duplicates-only) drop set before releasing
-        # the cached assignment — the returned plan must not depend
-        # on the unpersisted cache
-        dropped = (members.withColumn("_rn", F.row_number().over(wk))
-                   .filter(F.col("_rn") > 1).select("vec_id")
-                   .localCheckpoint(eager=True))
-    finally:
-        e.unpersist()
-    return emb.join(dropped, "vec_id", "left_anti")

@@ -3,8 +3,8 @@
 These are the web-scale pipeline ops the engine adds beyond the
 reference's geometry surface (task brief: dedup, quality, lang-id,
 token stats, fingerprinting). All hot paths are Spark built-ins
-(whole-stage codegen); the MinHash/SimHash scale paths use xxhash64
-column expressions — no Python UDFs anywhere.
+(whole-stage codegen); the MinHash scale path uses xxhash64 column
+expressions and SimHash the md5 halves of each token.
 
 Documents schema (driver testdata): doc_id, text, lang, source, n_chars.
 """
@@ -155,27 +155,15 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
             .select("id_a", "id_b", "jaccard"))
 
 
-def simhash64(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash per document with text, from token xxhash64s.
-
-    Each token votes its hash bits; the fingerprint sets bit i iff the
-    weighted sum of bit i over tokens is positive (``simhash_expr``).
-    """
-    return (docs.filter(F.col("text").isNotNull())
-            .select("doc_id", simhash_expr().alias("simhash")))
-
-
 def simhash64_portable(docs: DataFrame) -> DataFrame:
     """SimHash with a PORTABLE token hash: the two 32-bit halves of
     md5(token) (hex -> int), fingerprint emitted as (sim_hi, sim_lo)
     32-bit words so no sign-bit shifting is needed anywhere.
 
-    Same vote algebra as :func:`simhash64`, but every step is
-    reproducible in any engine with md5 — the DuckDB oracle recomputes
-    the fingerprints exactly, giving the SimHash family a hard
-    correctness gate (xxhash64 is JVM-only, so the fast default stays
-    rows-only). Use this variant for cross-engine fingerprint parity;
-    use simhash64 in the hot path.
+    Each token votes its hash bits; the fingerprint sets bit i iff the
+    sum of bit i's +-1 votes over tokens is positive. Every step is
+    reproducible in any engine with md5, so the DuckDB oracle
+    recomputes the fingerprints exactly (q_simhash_md5).
     """
     toks = (docs.select("doc_id",
                         F.explode(F.split("text", " ")).alias("tok"))
@@ -357,26 +345,6 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 128,
         F.array_join(piece, " ").alias("chunk_text"))
 
 
-def repetition_stats(docs: DataFrame) -> DataFrame:
-    """In-document repetition metrics (Gopher-style quality filters).
-
-    Per doc: token count, distinct-token ratio, duplicate 2-gram and
-    3-gram fractions (1 - distinct/total n-grams; 0.0 when the doc has
-    no n-gram of that order).  Everything is array algebra on one
-    ``split`` — a narrow plan with ZERO shuffles, so the filter runs at
-    scan speed and composes into ``curate_corpus``-style chains for
-    free.  Ratios are rounded to 9 decimals for evaluator parity.
-    """
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    return docs.select(
-        "doc_id", n.cast("long").alias("n_tokens"),
-        (F.round(F.size(F.array_distinct(toks)) / n, 9) + 0.0)
-            .alias("distinct_token_ratio"),
-        dup_ngram_expr(2).alias("dup_2gram_frac"),
-        dup_ngram_expr(3).alias("dup_3gram_frac"))
-
-
 def word_ngram_array(col, n: int):
     """All word ``n``-grams of ``col`` (space-tokenized) as an array
     Column — the shared builder behind ``dup_ngram_expr``,
@@ -443,38 +411,6 @@ def common_shingle_ratio(docs: DataFrame, max_df: int = 5) -> DataFrame:
             .alias("common_ratio"))
 
 
-def simhash_expr():
-    """The 64-bit SimHash as a plain Column over ``text`` — one
-    ``aggregate`` fold over the token array accumulating all 64 bit
-    votes in an array accumulator (no explode, no shuffle), then the
-    sign-threshold bit pack: +-1 vote per token occurrence per bit
-    (duplicate tokens vote once per occurrence).  Being a plain
-    column, it also runs on a STREAM, where an explode+groupBy
-    formulation would be a streaming aggregation and could not
-    precede another stateful operator (streaming/neardup.py)."""
-    toks = F.split(F.col("text"), " ")
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(*[
-                F.when(F.shiftright(F.xxhash64(t), i)
-                       .bitwiseAND(F.lit(1)) == 1,
-                       F.lit(1).cast("long"))
-                .otherwise(F.lit(-1).cast("long"))
-                for i in range(64)]),
-            lambda a, v: a + v))
-    powers = F.array(*[F.shiftleft(F.lit(1).cast("long"), i)
-                       for i in range(64)])
-    return F.aggregate(
-        F.zip_with(votes, powers,
-                   lambda v, p: F.when(v > 0, p)
-                   .otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, b: acc.bitwiseOR(b))
-
-
 # --- PII scrubbing -----------------------------------------------------
 
 # Patterns deliberately restricted to syntax with identical semantics
@@ -503,26 +439,6 @@ def pii_scrub_expr(col: str = "text"):
     for _, pat, repl in PII_PATTERNS:
         out = F.regexp_replace(out, pat, repl)
     return out
-
-
-def pii_scrub(docs: DataFrame, col: str = "text") -> DataFrame:
-    """Per-doc PII removal + accounting: replaces ``col`` with the
-    scrubbed text and adds ``n_pii_<kind>`` match counts (pre-scrub)
-    plus total ``n_pii``. All JVM-side regex — the hot path stays in
-    whole-stage codegen."""
-    counts = {
-        f"n_pii_{name}": F.size(F.regexp_extract_all(F.col(col),
-                                                     F.lit(pat), F.lit(0)))
-        .cast("long")
-        for name, pat, _ in PII_PATTERNS}
-    d = docs
-    for cname, expr in counts.items():
-        d = d.withColumn(cname, expr)
-    total = None
-    for cname in counts:
-        total = F.col(cname) if total is None else total + F.col(cname)
-    return (d.withColumn("n_pii", total.cast("long"))
-            .withColumn(col, pii_scrub_expr(col)))
 
 
 # --- benchmark decontamination ----------------------------------------
@@ -726,11 +642,6 @@ def normalize_text_expr(col="text"):
     return F.trim(one_ws)
 
 
-def normalize_text(docs: DataFrame, col: str = "text") -> DataFrame:
-    """``normalize_text_expr`` applied in place (text rewritten)."""
-    return docs.withColumn(col, normalize_text_expr(col))
-
-
 # Gopher quality rules (Rae et al. 2021, "Scaling Language Models:
 # ..., Gopher", Appendix A1.1.2 — the MassiveWeb document filters).
 # The paper's REQUIRED stopword list, distinct from the scoring
@@ -835,15 +746,6 @@ def gopher_filter(docs: DataFrame, col: str = "text",
     filter (`gopher_flags_expr` is row-pure), composable into the
     curation chain at zero shuffle cost."""
     return docs.filter(gopher_flags_expr(col, **thresholds)["pass"])
-
-
-def gopher_report(docs: DataFrame, col: str = "text",
-                  **thresholds) -> DataFrame:
-    """(doc_id, one boolean column per rule, pass) — the audit view:
-    which rule kills which document."""
-    s = gopher_flags_expr(col, **thresholds)
-    return docs.select("doc_id", s.alias("_g")).select(
-        "doc_id", "_g.*")
 
 
 def latest_crawl(pages: DataFrame, url_col: str = "url",

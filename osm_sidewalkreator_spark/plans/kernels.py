@@ -36,18 +36,6 @@ def split_streets(segs: np.ndarray, widths: np.ndarray
     return noded, np.asarray(widths, dtype=np.float64)[parent], parent
 
 
-def endpoint_degrees(segs: np.ndarray, snap: float = noding.SNAP
-                     ) -> tuple[np.ndarray, np.ndarray]:
-    """Vertex degree of each segment endpoint over the noded set (J6).
-
-    Returns (deg_start (n,), deg_end (n,)) — the number of segments
-    incident to each endpoint, including the segment itself.
-    """
-    verts, evi = faces.build_vertices(segs, snap)
-    deg = np.bincount(evi.ravel(), minlength=len(verts))
-    return deg[evi[:, 0]], deg[evi[:, 1]]
-
-
 def _endpoint_connected(cur: np.ndarray, tol: float
                         ) -> tuple[np.ndarray, np.ndarray]:
     """Per-endpoint connectivity over one segment set: (start_hit (n,),
@@ -80,31 +68,6 @@ def _endpoint_connected(cur: np.ndarray, tol: float
         d = core.point_segment_distance(px[pi], py[pi], cur[bi])
         hit[pi[d <= tol]] = True
     return hit[:n], hit[n:]
-
-
-def remove_dangles(segs: np.ndarray, attrs: np.ndarray | None = None,
-                   tol: float = 1e-6, max_iter: int = 100):
-    """Iteratively drop segments with an unconnected endpoint (G15,
-    ``remove_unconnected_lines_v2`` ``generic_functions.py:1647-1675``).
-
-    An endpoint is connected iff it lies within ``tol`` of any *other*
-    segment (the reference tests geometric ``intersects`` after an R-tree
-    prefilter), so T-junction contacts count even before self-splitting.
-    """
-    keep_idx = np.arange(len(segs))
-    cur = np.asarray(segs, dtype=np.float64)
-    for _ in range(max_iter):
-        if len(cur) == 0:
-            break
-        hs, he = _endpoint_connected(cur, tol)
-        keep = hs & he
-        if keep.all():
-            break
-        cur = cur[keep]
-        keep_idx = keep_idx[keep]
-    if attrs is None:
-        return cur, keep_idx
-    return cur, np.asarray(attrs)[keep_idx]
 
 
 def _within_buffered_blocks(segs: np.ndarray, blocks: list[np.ndarray],
@@ -176,75 +139,6 @@ def dangle_keep_mask(segs: np.ndarray, blocks: list[np.ndarray],
         exempt = _within_buffered_blocks(segs[~keep], blocks, buffer)
         keep[np.flatnonzero(~keep)[exempt]] = True
     return keep
-
-
-def buffer_boundary_intersections(point: np.ndarray, segs: np.ndarray,
-                                  buffersize: float = 1.0,
-                                  nseg: int = 5) -> np.ndarray:
-    """G16 ``points_intersecting_buffer_boundary``
-    (generic_functions.py:1150-1173): intersect the polygonal circle
-    boundary around ``point`` (QGIS buffer approximation: ``nseg``
-    vertices per quadrant) with every line segment; returns the
-    intersection points (k, 2)."""
-    point = np.asarray(point, dtype=np.float64)
-    th = np.linspace(0.0, 2 * np.pi, 4 * nseg, endpoint=False)
-    ring = point + buffersize * np.column_stack([np.cos(th), np.sin(th)])
-    e1 = np.column_stack([ring, np.roll(ring, -1, axis=0)])
-    segs = np.asarray(segs, dtype=np.float64)
-    if len(segs) == 0:
-        return np.empty((0, 2))
-    d1x = (e1[:, 2] - e1[:, 0])[:, None]
-    d1y = (e1[:, 3] - e1[:, 1])[:, None]
-    d2x = (segs[:, 2] - segs[:, 0])[None, :]
-    d2y = (segs[:, 3] - segs[:, 1])[None, :]
-    ex = segs[None, :, 0] - e1[:, 0:1]
-    ey = segs[None, :, 1] - e1[:, 1:2]
-    den = d1x * d2y - d1y * d2x
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = (ex * d2y - ey * d2x) / den
-        u = (ex * d1y - ey * d1x) / den
-    ok = (np.abs(den) > 1e-12) & (t >= 0) & (t < 1) & (u >= 0) & (u <= 1)
-    ei, _ = np.nonzero(ok)
-    ts = t[ok]
-    return np.column_stack([e1[ei, 0] + ts * (e1[ei, 2] - e1[ei, 0]),
-                            e1[ei, 1] + ts * (e1[ei, 3] - e1[ei, 1])])
-
-
-def incidence_radial_segments(line: np.ndarray, points: np.ndarray,
-                              buffer_d: float = 1.0,
-                              nseg: int = 5) -> np.ndarray:
-    """G17 ``segments_to_add_points_tolinelayer``
-    (generic_functions.py:1479-1529): for every candidate point inside
-    the line's ``buffer_d`` buffer, build a splitting spoke from the
-    buffer's area centroid through the point, extended ``buffer_d``
-    past it (guaranteeing the spoke crosses the line). Returns (k, 4)
-    spoke segments.
-
-    ``line``: (n, 2) polyline. ``points``: (m, 2) candidates.
-    """
-    line = np.asarray(line, dtype=np.float64)
-    points = np.asarray(points, dtype=np.float64)
-    if len(points) == 0 or len(line) < 2:
-        return np.empty((0, 4))
-    segs = core.explode_polyline_to_segments(line)
-    radii = np.full(len(segs), buffer_d)
-    _sets, ext, holes = morph.buffer_union(segs, radii, nseg)
-    ring = max(ext, key=lambda r: abs(core.ring_signed_area(r)))
-    cx, cy = core.ring_centroid(ring)
-    d = core.point_segment_distance(
-        np.repeat(points[:, 0], len(segs)),
-        np.repeat(points[:, 1], len(segs)),
-        np.tile(segs.T, len(points)).T).reshape(len(points), len(segs))
-    inside = d.min(axis=1) <= buffer_d
-    pts = points[inside]
-    if len(pts) == 0:
-        return np.empty((0, 4))
-    vx, vy = pts[:, 0] - cx, pts[:, 1] - cy
-    dist = np.hypot(vx, vy)
-    dist = np.where(dist == 0, 1e-12, dist)
-    scale = (dist + buffer_d) / dist
-    return np.column_stack([np.full(len(pts), cx), np.full(len(pts), cy),
-                            cx + vx * scale, cy + vy * scale])
 
 
 def filter_protoblocks_by_existing_sidewalks(

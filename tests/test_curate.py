@@ -111,7 +111,7 @@ def test_job_curate_smoke(spark, tmp_path):
 
 def test_optional_repetition_and_boilerplate_filters(spark, docs):
     from osm_sidewalkreator_spark.operators.textops import (
-        common_shingle_ratio, repetition_stats)
+        common_shingle_ratio, dup_ngram_expr)
     out = curate_corpus(docs, min_quality=0.0, max_dup_3gram=0.02,
                         max_boilerplate=0.1).cache()
     surv = {r["doc_id"] for r in
@@ -121,7 +121,8 @@ def test_optional_repetition_and_boilerplate_filters(spark, docs):
     # which with min_quality=0 and no lang filter is the full corpus
     # minus high-repetition docs)
     rep = {r["doc_id"]: r["dup_3gram_frac"]
-           for r in repetition_stats(docs).collect()}
+           for r in docs.select("doc_id", dup_ngram_expr(3).alias(
+               "dup_3gram_frac")).collect()}
     keep_rep = {d for d, v in rep.items() if v <= 0.02}
     bp_input = docs.join(
         spark.createDataFrame([(d,) for d in sorted(keep_rep)],

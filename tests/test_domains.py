@@ -63,7 +63,8 @@ UNIT_SQL = ("CAST('0x' || substr(md5('{seed}:' || "
 
 
 def test_domain_expr_matches_duckdb(spark, docs):
-    got = (DO.with_domain(docs).select("doc_id", "domain").toPandas()
+    got = (docs.select("doc_id", DO.domain_expr().alias("domain"))
+           .toPandas()
            .sort_values("doc_id").reset_index(drop=True))
     con = _duck(docs)
     want = con.execute(f"""
@@ -79,7 +80,7 @@ def test_domain_expr_matches_duckdb(spark, docs):
 
 
 def test_domain_expr_is_narrow(docs):
-    plan = (DO.with_domain(docs)
+    plan = (docs.withColumn("domain", DO.domain_expr())
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
 
@@ -103,7 +104,7 @@ def test_cap_per_domain_matches_duckdb(spark, docs):
     assert got.doc_id.tolist() == want.doc_id.tolist()
     # the cap binds on every REAL domain; the '' junk-url
     # pseudo-domain (50 docs here) is exempt by contract
-    n_dom = DO.with_domain(docs).select("domain").distinct().count()
+    n_dom = docs.select(DO.domain_expr()).distinct().count()
     assert len(got) == (n_dom - 1) * cap + 50
 
 
@@ -130,13 +131,13 @@ def test_cap_per_domain_sampled_matches_duckdb(spark, docs):
 
 def test_cap_per_domain_sampled_semantics(spark, docs):
     # under-cap domains are kept whole; over-cap domains land near cap
-    kept = DO.with_domain(
-        DO.cap_per_domain_sampled(docs, 60, seed="domcap-v1"))
+    kept = DO.cap_per_domain_sampled(docs, 60, seed="domcap-v1") \
+        .withColumn("domain", DO.domain_expr())
     per = {r.domain: r.n for r in
            kept.groupBy("domain").agg(F.count("*").alias("n"))
                .collect()}
     total = {r.domain: r.n for r in
-             DO.with_domain(docs).groupBy("domain")
+             docs.withColumn("domain", DO.domain_expr()).groupBy("domain")
                .agg(F.count("*").alias("n")).collect()}
     under = [d for d, n in total.items() if n <= 60]
     over = [d for d, n in total.items() if n > 60]
@@ -153,7 +154,8 @@ def test_filter_blocklist(spark, docs):
     out = DO.filter_blocklist(docs, ["WWW.Alpha.example",
                                      "beta.example"])
     doms = {r.domain for r in
-            DO.with_domain(out).select("domain").distinct().collect()}
+            out.select(DO.domain_expr().alias("domain")).distinct()
+            .collect()}
     assert "alpha.example" not in doms and "beta.example" not in doms
     assert "delta.example" in doms
     # dataframe form agrees, and the join side is broadcast
@@ -212,7 +214,7 @@ def test_curation_chain_domain_stages(spark, docs):
     stages = curation_stages(docs, block_domains=["alpha.example"],
                              max_per_domain=40, min_quality=0.0,
                              jaccard=0.9)
-    f = DO.with_domain(stages["filtered"])
+    f = stages["filtered"].withColumn("domain", DO.domain_expr())
     per = {r.domain: r.n for r in
            f.groupBy("domain").agg(F.count("*").alias("n")).collect()}
     assert "alpha.example" not in per
@@ -264,11 +266,10 @@ def test_null_and_junk_urls_are_cap_exempt_and_unblockable(spark,
     assert all(d not in survivors for d in range(0, 100, 10))  # alpha
     # caps exempt the '' pseudo-domain entirely (both variants)
     for fn in (DO.cap_per_domain, DO.cap_per_domain_sampled):
-        kept = DO.with_domain(fn(nulled, 5))
+        kept = fn(nulled, 5).withColumn("domain", DO.domain_expr())
         per = {r.domain: r.n for r in kept.groupBy("domain")
                .agg(F.count("*").alias("n")).collect()}
-        total_junk = DO.with_domain(nulled).filter("domain = ''") \
-            .count()
+        total_junk = nulled.filter(DO.domain_expr() == "").count()
         assert per[""] == total_junk
 
 

@@ -25,8 +25,9 @@ def grid_segments(k: int, s: float = 100.0) -> np.ndarray:
 # ---------- WKB ----------
 
 def test_wkb_roundtrip_point():
-    b = wkb.point_wkb(1.5, -2.5)
-    assert wkb.decode_point(b) == (1.5, -2.5)
+    t, parts = wkb.decode(wkb.point_wkb(1.5, -2.5))
+    assert t == wkb.POINT
+    np.testing.assert_array_equal(parts[0], [[1.5, -2.5]])
 
 
 def test_wkb_roundtrip_linestring():
@@ -42,14 +43,6 @@ def test_wkb_roundtrip_polygon_with_hole():
     rings = wkb.decode_polygons(wkb.polygon_wkb(shell, [hole]))
     assert len(rings) == 1 and len(rings[0]) == 2
     np.testing.assert_array_equal(rings[0][1], hole)
-
-
-def test_wkb_vectorized_points():
-    xs = np.array([1.0, 2.0, 3.0])
-    ys = np.array([-1.0, -2.0, -3.0])
-    blobs = wkb.points_wkb(xs, ys)
-    back = wkb.decode_points_vec(blobs)
-    np.testing.assert_array_equal(back, np.column_stack([xs, ys]))
 
 
 # ---------- noding + polygonize ----------
@@ -198,9 +191,13 @@ def test_pipeline_crossing_invariants(city_out):
 
 
 def test_remove_dangles():
+    # dead ends go pass after pass (the reference's
+    # remove_unconnected_lines_v2 loop) under the single-pass mask
     segs = np.vstack([grid_segments(3),
                       [[0, 0, -50, -50]], [[-50, -50, -80, -50]]])
-    cleaned, idx = kernels.remove_dangles(segs)
+    cleaned = segs
+    while not (keep := kernels.dangle_keep_mask(cleaned, [])).all():
+        cleaned = cleaned[keep]
     # the two stub segments disappear, the 3x3 grid remains intact
     noded, p = noding.node_segments(cleaned)
     noded, p = noding.dedup_undirected(noded, p)
@@ -209,32 +206,14 @@ def test_remove_dangles():
 
 
 def test_endpoint_degrees():
+    # shared endpoints snap to one vertex: its incidence count is the
+    # endpoint's degree
     segs = np.array([[0, 0, 1, 0], [1, 0, 2, 0], [1, 0, 1, 1]], float)
-    d0, d1 = kernels.endpoint_degrees(segs)
+    verts, evi = faces.build_vertices(segs)
+    deg = np.bincount(evi.ravel(), minlength=len(verts))
+    d0, d1 = deg[evi[:, 0]], deg[evi[:, 1]]
     assert d1[0] == 3 and d0[1] == 3 and d0[2] == 3
     assert d0[0] == 1 and d1[1] == 1 and d1[2] == 1
-
-
-def test_canonical_wkb_orientation():
-    """st_canonical_wkb: a line and its reverse encode identically;
-    distinct lines stay distinct; non-linestrings pass through."""
-    import pandas as pd
-    from osm_sidewalkreator_spark.functions.geo import st_canonical_wkb
-    from osm_sidewalkreator_spark.geometry import wkb as W
-    fn = st_canonical_wkb.func
-    a = np.array([[0.0, 0.0], [1.0, 2.0], [3.0, 1.0]])
-    line = W.linestring_wkb(a)
-    rline = W.linestring_wkb(a[::-1])
-    other = W.linestring_wkb(a + 1.0)
-    poly = W.polygon_wkb(np.array([[0, 0], [1, 0], [1, 1], [0, 0]],
-                                  dtype=float))
-    out = list(fn(pd.Series([line, rline, other, poly, None])))
-    assert out[0] == out[1]
-    assert out[2] != out[0]
-    assert out[3] == poly
-    assert out[4] is None
-    # canonical form is one of the two inputs
-    assert out[0] in (line, rline)
 
 
 def test_interpolate_along_multivertex():
@@ -343,42 +322,6 @@ def test_dangle_keep_mask_single_pass(city):
     keep = kernels.dangle_keep_mask(chain, blocks=[])
     assert not keep[-1]          # tip removed
     assert keep[-2]              # attached piece survives single pass
-
-
-def test_buffer_boundary_intersections_g16():
-    """G16: circle boundary around a point x line layer -> hit points
-    (points_intersecting_buffer_boundary semantics)."""
-    segs = np.array([[-5.0, 0.0, 5.0, 0.0],    # through center
-                     [-5.0, 10.0, 5.0, 10.0]])  # far away
-    pts = kernels.buffer_boundary_intersections(
-        np.array([0.0, 0.0]), segs, buffersize=2.0, nseg=32)
-    assert len(pts) == 2
-    # hits on the polygonal circle at radius ~2 on the x axis
-    assert np.allclose(np.abs(pts[:, 0]), 2.0, atol=0.01)
-    assert np.allclose(pts[:, 1], 0.0, atol=1e-9)
-
-
-def test_incidence_radial_segments_g17():
-    """G17: points within buffer_d of a line spawn centroid->point
-    spokes extended buffer_d past the point, crossing the line."""
-    line = np.array([[0.0, 0.0], [10.0, 0.0]])
-    points = np.array([[5.0, 0.5],     # inside buffer
-                       [5.0, 5.0]])    # outside
-    spokes = kernels.incidence_radial_segments(line, points,
-                                               buffer_d=1.0)
-    assert spokes.shape == (1, 4)
-    sx, sy, ex, ey = spokes[0]
-    # starts at buffer centroid (midpoint of the straight line's buffer)
-    assert abs(sx - 5.0) < 0.05 and abs(sy) < 0.05
-    # extends buffer_d past the point along the centroid->point ray
-    v = np.hypot(ex - sx, ey - sy)
-    d = np.hypot(5.0 - sx, 0.5 - sy)
-    assert abs(v - (d + 1.0)) < 1e-9
-    # the spoke intersects the segment (the straight line's buffer
-    # centroid sits ON the line, so t = 0 up to float noise)
-    t, u = _seg_intersect_params(np.array([sx, sy, ex, ey]),
-                                 np.array([0.0, 0.0, 10.0, 0.0]))
-    assert t is not None and 0 <= u <= 1 and -1e-9 <= t <= 1
 
 
 def test_pipeline_max_split_len_g12():

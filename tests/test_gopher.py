@@ -114,7 +114,8 @@ FLAGS = ["bad_word_count", "bad_mean_word_len", "bad_symbol_ratio",
 
 
 def test_gopher_flags_match_duckdb(spark, docs):
-    got = (TX.gopher_report(docs).toPandas()
+    got = (docs.select("doc_id", TX.gopher_flags_expr().alias("g"))
+           .select("doc_id", "g.*").toPandas()
            .sort_values("doc_id").reset_index(drop=True))
     con = duckdb.connect()
     con.register("d", docs.select("doc_id", "text").toPandas())
@@ -131,7 +132,9 @@ def test_gopher_flags_match_duckdb(spark, docs):
 
 def test_gopher_crafted_docs_each_trip_their_rule(spark, docs):
     rep = {r["doc_id"]: r.asDict() for r in
-           TX.gopher_report(docs.filter("doc_id >= 10000")).collect()}
+           docs.filter("doc_id >= 10000")
+           .select("doc_id", TX.gopher_flags_expr().alias("g"))
+           .select("doc_id", "g.*").collect()}
     assert rep[10_001]["pass"]
     assert rep[10_002]["bad_word_count"]
     assert rep[10_003]["bad_mean_word_len"]

@@ -51,7 +51,7 @@ def spark():
 
 
 def test_relation_flags_against_de9im_cases(spark):
-    from osm_sidewalkreator_spark.operators.predicates import relation_flags
+    from osm_sidewalkreator_spark.operators.predicates import flag_pairs
     rect = spark.createDataFrame([(0.0, 0.0, 10.0, 10.0)],
                                  "xmin double, ymin double, "
                                  "xmax double, ymax double")
@@ -70,7 +70,10 @@ def test_relation_flags_against_de9im_cases(spark):
         [(n, float(a), float(b), float(c), float(d))
          for n, (a, b, c, d), _want in cases],
         "name string, ax double, ay double, bx double, by double")
-    rows = {r["name"]: r for r in relation_flags(segs, rect).collect()}
+    # one 64 m cell holds the rect, so every case is a candidate pair
+    rows = {r["name"]: r
+            for r in flag_pairs(segs, rect, cell_size=64.0).collect()}
+    assert set(rows) == {name for name, _seg, _want in cases}
     for name, _seg, want in cases:
         got = {p for p in ("intersects", "contains", "disjoint", "equals",
                            "touches", "overlaps", "within", "crosses")
@@ -79,8 +82,10 @@ def test_relation_flags_against_de9im_cases(spark):
 
 
 def test_extract_by_location_semi_and_disjoint(spark):
-    from osm_sidewalkreator_spark.operators.predicates import (
-        extract_by_location)
+    # QGIS extractbylocation over the candidate pairs: a feature matches
+    # if any pair carries the predicate; disjoint is the anti-set of
+    # intersects (a disjoint pair never shares a cell)
+    from osm_sidewalkreator_spark.operators.predicates import flag_pairs
     rects = spark.createDataFrame(
         [(1, 0.0, 0.0, 10.0, 10.0), (2, 100.0, 0.0, 110.0, 10.0)],
         "rid int, xmin double, ymin double, xmax double, ymax double")
@@ -89,11 +94,12 @@ def test_extract_by_location_semi_and_disjoint(spark):
          ("b", 105.0, -5.0, 105.0, 5.0),  # crosses rect 2
          ("c", 50.0, 50.0, 60.0, 50.0)],  # disjoint from both
         "osm_id string, ax double, ay double, bx double, by double")
-    hit = extract_by_location(segs, rects, ["intersects"])
-    assert {r["osm_id"] for r in hit.collect()} == {"a", "b"}
-    dis = extract_by_location(segs, rects, ["disjoint"])
-    assert {r["osm_id"] for r in dis.collect()} == {"c"}
-    crossing = extract_by_location(segs, rects, ["crosses"])
-    assert {r["osm_id"] for r in crossing.collect()} == {"b"}
-    both = extract_by_location(segs, rects, ["within", "disjoint"])
-    assert {r["osm_id"] for r in both.collect()} == {"a", "c"}
+    flags = flag_pairs(segs, rects, cell_size=128.0).collect()
+
+    def ids(p):
+        return {r["osm_id"] for r in flags if r[p]}
+
+    assert ids("intersects") == {"a", "b"}
+    assert {"a", "b", "c"} - ids("intersects") == {"c"}
+    assert ids("crosses") == {"b"}
+    assert ids("within") == {"a"}

@@ -176,7 +176,7 @@ def test_normalize_text_matches_duckdb(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: r.text for r in
-           TX.normalize_text(d).collect()}
+           d.withColumn("text", TX.normalize_text_expr()).collect()}
     con = duckdb.connect()
     con.register("d", __import__("pandas").DataFrame(
         rows, columns=["doc_id", "text"]))

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 
 from osm_sidewalkreator_spark.operators.textops import (
-    common_shingle_ratio, repetition_stats)
+    common_shingle_ratio, dup_ngram_expr)
 from osm_sidewalkreator_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -19,21 +19,22 @@ def spark():
 
 def test_repetition_stats_matches_duckdb(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    got = (repetition_stats(docs).toPandas()
+    got = (docs.select("doc_id",
+                       dup_ngram_expr(2).alias("dup_2gram_frac"),
+                       dup_ngram_expr(3).alias("dup_3gram_frac"))
+           .toPandas()
            .sort_values("doc_id").reset_index(drop=True))
     con = duckdb.connect()
     want = con.execute(f"""
         WITH d AS (SELECT doc_id, string_split(text, ' ') AS t
                    FROM {DOCS}),
-             m AS (SELECT doc_id, len(t) AS n, t,
+             m AS (SELECT doc_id,
                      [t[i+1] || ' ' || t[i+2]
                       for i in range(greatest(len(t)-1, 0))] AS g2,
                      [t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
                       for i in range(greatest(len(t)-2, 0))] AS g3
                    FROM d)
-        SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-               round(len(list_distinct(t)) / n, 9) + 0.0
-                   AS distinct_token_ratio,
+        SELECT doc_id,
                CASE WHEN len(g2) > 0
                     THEN round(1.0 - len(list_distinct(g2)) / len(g2), 9)
                          + 0.0

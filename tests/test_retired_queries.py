@@ -1,15 +1,24 @@
-"""Queries retired from the driver registry (curated to the ~50-row
-gate window) keep their coverage here: each still runs and its
-cheap-to-state invariants hold. The exact-oracle signal they used to
-carry is held by a registered sibling (see the queries() docstring).
+"""Reference-fidelity checks outside the driver registry, plus the
+assertions of retired gate queries, run against the live operators
+they exercised.
 """
 
 import pytest
 
+from pyspark.sql import functions as F
+
 import __spark_entry__ as E
+from osm_sidewalkreator_spark import params as P
+from osm_sidewalkreator_spark.operators import joins as J
+from osm_sidewalkreator_spark.operators import multimodal as MM
+from osm_sidewalkreator_spark.operators import simsearch as SS
+from osm_sidewalkreator_spark.operators import textops as TX
+from osm_sidewalkreator_spark.pages import (
+    ensure_pages_geo, geocode_pages, load_pages)
+from osm_sidewalkreator_spark.plans import pipeline as PL
 from osm_sidewalkreator_spark.session import get_spark
 from osm_sidewalkreator_spark.sources import golden as G
-from osm_sidewalkreator_spark.synth import SYNTH_ROOT
+from osm_sidewalkreator_spark.synth import SYNTH_ROOT, ensure_synth
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,43 +31,69 @@ def spark():
     return get_spark(shuffle_partitions=8)
 
 
-def test_simhash_matches_md5_variant_shape(spark):
-    # algebra exactly gated by the registered q_simhash_md5
-    rows = E.q_simhash(spark, SF).limit(50).collect()
-    assert rows and all(r.simhash is not None for r in rows)
-
-
-def test_events_minutely_equals_streaming_rollup(spark):
-    # q_events_minutely shared q_events_streaming's oracle; assert the
-    # two engines' rollups are set-equal directly
-    a = {tuple(r) for r in E.q_events_minutely(spark, SF).collect()}
-    b = {tuple(r) for r in E.q_events_streaming(spark, SF).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_geocode_pages_covers_every_page(spark):
-    out = E.q_geocode_pages(spark, SF)
-    assert set(out.columns) == {"url", "x", "y"}
+    out = geocode_pages(load_pages(spark, SF), SF)
+    assert {"url", "x", "y"} <= set(out.columns)
     assert out.count() > 0
     assert out.filter("x IS NULL OR y IS NULL").count() == 0
 
 
+def test_simhash_matches_md5_variant_shape(spark):
+    # the md5 SimHash is the one SimHash path: every document with
+    # text gets both 32-bit fingerprint words
+    d = (spark.read.parquet(f"{SF}/documents.parquet")
+         .filter(F.pmod(F.col("doc_id"), F.lit(50)) == 0))
+    rows = TX.simhash64_portable(d).collect()
+    assert rows
+    assert len(rows) == d.filter(F.col("text").isNotNull()).count()
+    assert all(0 <= r.sim_hi < 1 << 32 and 0 <= r.sim_lo < 1 << 32
+               for r in rows)
+
+
+def test_events_minutely_equals_streaming_rollup(spark):
+    # the Structured Streaming rollup equals the batch GROUP BY of the
+    # same minutes, set for set
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    batch = (ev.groupBy("event_type",
+                        F.unix_timestamp(F.date_trunc("minute", "ts"))
+                        .alias("minute_epoch"))
+             .agg(F.count("*").alias("n"),
+                  F.sum(F.round(F.col("value") * 1000).cast("long"))
+                  .alias("value_milli")))
+    a = {tuple(r) for r in batch.collect()}
+    b = {tuple(r) for r in E.q_events_streaming(spark, SF).collect()}
+    assert a == b and len(a) > 0
+
+
 def test_cosine_lsh_and_ivf_topk_contract(spark):
-    for q in (E.q_cosine_lsh, E.q_cosine_ivf):
-        df = q(spark, SF)
-        rows = df.collect()
-        assert rows
-        assert all(1 <= r.rank <= 5 for r in rows)
-        assert all(-1.0001 <= r.cosine <= 1.0001 for r in rows)
+    # the IVF half went with cosine_topk_ivf; the LSH top-k remains
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    rows = SS.cosine_topk_lsh(emb, k=5, query_mod=50).collect()
+    assert rows
+    assert all(1 <= r.rank <= 5 for r in rows)
+    assert all(-1.0001 <= r.cosine <= 1.0001 for r in rows)
 
 
 def test_pipeline_stage_queries_still_run(spark):
-    # rows-only pipeline stages, each pinned by a registered exact
-    # geometry oracle (polygonize_lattice / ring_bbox /
-    # crossing_geometry+enlarge / golden_kerb_anchor)
-    for q in (E.q_protoblocks, E.q_sidewalk_rings, E.q_crossings,
-              E.q_kerbs):
-        assert q(spark, SF).count() > 0
+    # every pipeline stage emits features; each kind's geometry is
+    # pinned by a registered exact oracle (polygonize_lattice /
+    # ring_bbox / crossing_geometry+enlarge / golden_kerb_anchor)
+    kinds = {r.kind: r["count"] for r in
+             E._features(spark, SF).groupBy("kind").count().collect()}
+    for kind in ("protoblock", "sidewalk", "crossing", "kerb"):
+        assert kinds.get(kind, 0) > 0, kind
+
+
+def test_html_bytes_matches_octet_length(spark):
+    # the byte accounting is pure octet_length: assert it against the
+    # JVM length() of the binary column
+    pages = load_pages(spark, SF)
+    out = MM.media_byte_stats(pages).select("url", "n_bytes")
+    want = pages.select("url", F.length("html").alias("want"))
+    bad = (out.join(want, "url")
+           .filter(F.col("n_bytes") != F.col("want")).count())
+    assert bad == 0
+    assert out.count() == want.count() > 0
 
 
 @needs_golden
@@ -72,23 +107,6 @@ def test_golden_protoblock_faces_recovers_29_faces(spark):
     rows = E.q_golden_protoblock_faces(spark, SF).collect()
     assert len(rows) == 29
     assert all(r.area_m2 > 0 for r in rows)
-
-
-def test_html_bytes_matches_octet_length(spark):
-    # retired round 5 (slot given to q_voronoi_split): the byte
-    # accounting is pure octet_length; assert it directly against the
-    # JVM length() of the binary column so the exact-parity claim the
-    # gate used to carry stays pinned
-    from pyspark.sql import functions as F
-    from osm_sidewalkreator_spark.pages import load_pages
-
-    out = E.q_html_bytes(spark, SF)
-    pages = load_pages(spark, SF).select(
-        "url", F.length("html").alias("want"))
-    bad = (out.join(pages, "url")
-           .filter(F.col("n_bytes") != F.col("want")).count())
-    assert bad == 0
-    assert out.count() == pages.count() > 0
 
 
 @needs_golden
@@ -116,36 +134,24 @@ _S0001 = SYNTH_ROOT / "sf0.001"
 _STREETS_0001 = f"read_parquet('{_S0001}/streets.parquet')"
 
 
-def test_dedup_canonical_full_oracle_parity(spark):
-    # retired round 5 (slot given to q_weighted_sample): A9 stays
-    # exact-gated by q_dedup_geometries; the orientation-insensitive
-    # canonical variant keeps its FULL DuckDB parity here
-    got = sorted(r.osm_id for r in E.q_dedup_canonical(spark, SF).collect())
-    want = _duck_df(E._dedup_canonical_sql(_STREETS_0001))
-    assert got == sorted(want.osm_id.tolist())
-    assert len(got) > 0
-
-
-def test_overlay_concave_full_oracle_parity(spark):
-    # retired round 5 (slot given to q_ivf_cells): J2/J3 stay gated by
-    # q_overlay_intersection/_poly_poly/_difference; the concave
-    # even-odd kernel keeps its FULL DuckDB parity here (L-shape =
-    # union of its two rectangles)
-    got = {tuple(r) for r in E.q_overlay_concave(spark, SF).collect()}
-    want = _duck_df(E._overlay_concave_sql(_STREETS_0001))
-    assert got == {tuple(r) for r in want.itertuples(index=False)}
-    assert len(got) > 0
-
-
 def test_pages_per_block_full_oracle_parity(spark):
-    # retired round 5 (slot given to q_lm_nll): the join is exactly
-    # q_pip_pages_blocks' gate-registered join; the trailing GROUP BY
-    # count keeps its FULL DuckDB parity here
-    got = {(r.block_id, r.n_pages)
-           for r in E.q_pages_per_block(spark, SF).collect()}
-    want = _duck_df(E._pages_per_block_sql(
-        f"read_parquet('{_S0001}/pages_geo.parquet/*.parquet')",
-        f"read_parquet('{_S0001}/blocks.parquet')"))
+    # the page-in-rect join drops and duplicates no page: its per-block
+    # counts equal a DuckDB range join's
+    pages = spark.read.parquet(ensure_pages_geo(spark, SF)) \
+        .select("url", "x", "y")
+    blocks = spark.read.parquet(str(ensure_synth(SF) / "blocks.parquet"))
+    j = J.pip_join_points_rects(pages, blocks, cell_size=P.CELL_SIZE_M)
+    got = {(r.block_id, r.n_pages) for r in
+           j.groupBy("block_id").agg(F.count("*").alias("n_pages"))
+           .collect()}
+    want = _duck_df(f"""
+        SELECT b.block_id, count(*) AS n_pages
+        FROM read_parquet('{_S0001}/pages_geo.parquet/*.parquet') p
+        JOIN read_parquet('{_S0001}/blocks.parquet') b
+          ON p.x >= b.xmin AND p.x < b.xmax
+         AND p.y >= b.ymin AND p.y < b.ymax
+        GROUP BY b.block_id
+    """)
     assert got == {(r.block_id, r.n_pages)
                    for r in want.itertuples(index=False)}
     assert len(got) > 0
@@ -167,13 +173,19 @@ def test_golden_kerb_anchor_full_oracle_parity(spark):
 
 
 def test_clip_aoi_full_oracle_parity(spark):
-    # retired round 5 (slot given to q_temperature_mix): the bbox
-    # membership predicate is one of q_extract_by_location's 8 pinned
-    # predicates and the true boundary cut stays exact-gated via
-    # q_clip_aoi_geometry; the full membership oracle lives on here
-    got = {r.osm_id for r in E.q_clip_aoi(spark, SF).collect()}
-    want = _duck_df(E._clip_aoi_sql(
-        _STREETS_0001,
-        f"read_parquet('{_S0001}/aoi.parquet')"))
+    # the AOI prefilter of the pipeline keeps exactly the streets whose
+    # bbox meets the AOI rect (the true boundary cut is gated by
+    # q_clip_aoi_geometry)
+    got = {r.osm_id for r in
+           PL.clip_to_aoi(PL.load_streets(spark, SF), spark, SF)
+           .select("osm_id").collect()}
+    want = _duck_df(f"""
+        SELECT s.osm_id FROM {_STREETS_0001} s,
+                             read_parquet('{_S0001}/aoi.parquet') a
+        WHERE greatest(s.x1, s.x2) >= a.xmin
+          AND least(s.x1, s.x2) <= a.xmax
+          AND greatest(s.y1, s.y2) >= a.ymin
+          AND least(s.y1, s.y2) <= a.ymax
+    """)
     assert got == set(want.osm_id.tolist())
     assert len(got) > 0
