@@ -455,37 +455,26 @@ def q_overlay_poly_poly(spark, sf_dir):
     return inter_rows.unionByName(diff_rows)
 
 
-def q_crossing_geometry(spark, sf_dir):
-    """Exact oracle for the engine's CROSSING COORDINATES on the pure
-    lattice sub-network (J10/G18 non-enlargement path,
-    full_sidewalkreator_bbox_algorithm.py:833-924).
+def _lattice_streets(spark, sf_dir):
+    """The width-assigned, axis-aligned 2-vertex streets: the pure
+    lattice sub-network the closed-form oracles below reason about."""
+    st = PL.assign_widths(
+        PL.load_streets(spark, sf_dir).filter(F.col("n_vertices") == 2))
+    return st.filter((F.col("x1") == F.col("x2"))
+                     | (F.col("y1") == F.col("y2"))) \
+        .select("osm_id", "x1", "y1", "x2", "y2", "width_m")
 
-    Scenario: the axis-aligned 2-vertex grid streets only (diagonals,
-    stubs, loops excluded on both sides). There the whole construction
-    is closed-form: noding is the identity, every block ring is a
-    rectangle inset by w/2 + d_to_add/2 per side with radius-3 corner
-    arcs that the ray (at d_interp = mw/2 + curve + d_to_add from the
-    junction, mw >= the corner street's width) always clears, so
-    A/E land on the straight flank at +-(w_self/2 + 0.5), kerbs at 25%,
-    length = w_self + 1. The REAL tile kernel computes the crossings
-    (ray x ring-edge intersection against the real buffered rings); the
-    oracle recomputes every coordinate independently in SQL. Restricted
-    to crossings with both flanking blocks present and a >0.25 m ray
-    margin (half_span > offset), identically on both sides.
-    """
+
+def _on_lattice(lat, cols, values, enlarge_crossings):
+    """Run the REAL tile kernel (no line refinement) over the lattice
+    streets as a single global group — a correctness scenario at gate
+    scale (the scale path is generate_features' tiled cogroup). Each
+    row is ``values(out)`` of the kernel output, in mm, as long
+    ``cols``. ``values`` must be a nested function: Spark's workers
+    receive it by value, not by importing this module."""
     import numpy as np
     import pandas as pd
     from osm_sidewalkreator_spark.plans import kernels
-
-    st = PL.assign_widths(
-        PL.load_streets(spark, sf_dir).filter(F.col("n_vertices") == 2))
-    lat = st.filter((F.col("x1") == F.col("x2"))
-                    | (F.col("y1") == F.col("y2"))) \
-        .select("osm_id", "x1", "y1", "x2", "y2", "width_m")
-
-    cols = ["cx_mm", "cy_mm", "pax_mm", "pay_mm", "pbx_mm", "pby_mm",
-            "pdx_mm", "pdy_mm", "pex_mm", "pey_mm", "len_mm"]
-    schema = ", ".join(f"{c} long" for c in cols)
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("osm_id")
@@ -493,128 +482,40 @@ def q_crossing_geometry(spark, sf_dir):
         w = pdf["width_m"].to_numpy(np.float64)
         out = kernels.tile_pipeline(
             segs, w, refine_lines=False,
+            enlarge_crossings=enlarge_crossings,
             way_ids=pdf["osm_id"].to_numpy(dtype=object))
-        rows = []
-        for c in out["crossings"]:
-            co = c["coords"]          # A B C D E
-            vals = [co[2, 0], co[2, 1], co[0, 0], co[0, 1],
-                    co[1, 0], co[1, 1], co[3, 0], co[3, 1],
-                    co[4, 0], co[4, 1], c["length"]]
-            rows.append([int(round(v * 1000)) for v in vals])
+        rows = [[int(round(v * 1000)) for v in vals]
+                for vals in values(out)]
         return pd.DataFrame(rows, columns=cols)
 
-    # single global group: a correctness scenario at gate scale (the
-    # scale path for crossings is generate_features' tiled cogroup)
-    cross = (lat.withColumn("_g", F.lit(0)).groupBy("_g")
-             .applyInPandas(run, schema))
-
-    # expected (non-marginal, both-blocks-present) crossing centers,
-    # computed in DataFrame algebra independent of the kernel
-    ded = (lat.groupBy("x1", "y1", "x2", "y2")
-           .agg(F.min("osm_id").alias("osm_id"),
-                F.max("width_m").alias("w")))
-    e1 = ded.select("osm_id", F.col("x1").alias("px"),
-                    F.col("y1").alias("py"), F.col("x2").alias("qx"),
-                    F.col("y2").alias("qy"), "w")
-    e2 = ded.select("osm_id", F.col("x2").alias("px"),
-                    F.col("y2").alias("py"), F.col("x1").alias("qx"),
-                    F.col("y1").alias("qy"), "w")
-    eps = e1.unionByName(e2)
-    other = eps.select(F.col("px").alias("ox"), F.col("py").alias("oy"),
-                       F.col("w").alias("wo"),
-                       F.col("osm_id").alias("oid"))
-    mx = (eps.join(other, (F.col("px") == F.col("ox"))
-                   & (F.col("py") == F.col("oy"))
-                   & (F.col("osm_id") != F.col("oid")))
-          .groupBy("osm_id", "px", "py", "qx", "qy", "w")
-          .agg(F.max("wo").alias("mw")))
-    ext = lat.agg(
-        F.min(F.least("x1", "x2")).alias("xmin"),
-        F.max(F.greatest("x1", "x2")).alias("xmax"),
-        F.min(F.least("y1", "y2")).alias("ymin"),
-        F.max(F.greatest("y1", "y2")).alias("ymax"))
-    cand = (mx.crossJoin(F.broadcast(ext))
-            .withColumn("ux", F.signum(F.col("qx") - F.col("px")))
-            .withColumn("uy", F.signum(F.col("qy") - F.col("py")))
-            .withColumn("di", F.col("mw") / 2 + P.DEFAULT_CURVE_RADIUS
-                        + P.D_TO_ADD_TO_EACH_SIDE)
-            .filter(F.col("mw") / 2 + P.DEFAULT_CURVE_RADIUS
-                    + P.D_TO_ADD_TO_EACH_SIDE + 0.5
-                    > F.col("w") / 2 + 0.75)
-            .filter(((F.col("ux") != 0) & (F.col("py") > F.col("ymin"))
-                     & (F.col("py") < F.col("ymax")))
-                    | ((F.col("uy") != 0) & (F.col("px") > F.col("xmin"))
-                       & (F.col("px") < F.col("xmax")))))
-    expected = cand.select(
-        F.round((F.col("px") + F.col("ux") * F.col("di")) * 1000)
-         .cast("long").alias("cx_mm"),
-        F.round((F.col("py") + F.col("uy") * F.col("di")) * 1000)
-         .cast("long").alias("cy_mm"))
-    return cross.join(expected, ["cx_mm", "cy_mm"])
+    return (lat.withColumn("_g", F.lit(0)).groupBy("_g")
+            .applyInPandas(run, ", ".join(f"{c} long" for c in cols)))
 
 
-def q_crossing_enlarge(spark, sf_dir):
-    """Exact oracle for the GUI ENLARGEMENT crossing path (J10/G18
-    ``enlarge=True``, osm_sidewalkreator.py:3035-3170) on the lattice
-    sub-network, with widths overridden by a deterministic
-    coordinate hash so that some streets (w=17) are WIDER than their
-    junction's initial ray half-span (mw/2 + 4.5 <= w/2 + 0.5): the
-    single-shot ray MISSES those flanks and only the doubling loop
-    resolves them. On parallel lattice flanks the resolved hit is
-    reach-independent — A/E at +-(w/2 + 0.5) — so every coordinate is
-    closed-form regardless of how many doublings ran. Excluded (on
-    both sides identically): boundary streets (a never-hitting outward
-    side doubles to the iteration cap and dies), duplicated-coordinate
-    streets (the kernel emits one crossing per twin at the same
-    center), and rays with < 0.25 m resolution margin per doubling
-    step (fp tie safety; vacuous for this width set)."""
-    import numpy as np
-    import pandas as pd
-    from osm_sidewalkreator_spark.plans import kernels
-
-    st = PL.assign_widths(
-        PL.load_streets(spark, sf_dir).filter(F.col("n_vertices") == 2))
-    # deterministic coord-hash width override (duplicate-safe: twins
-    # share coords hence widths); exact on .0-valued lattice coords
-    u = (F.col("x1") + F.col("x2")).cast("long")
-    v = (F.col("y1") + F.col("y2")).cast("long")
-    hmod = F.abs(u * 3 + v * 5) % 7
-    w_ov = (F.when(hmod == 0, F.lit(17.0))
-            .when(hmod.isin(1, 2), F.lit(2.0))
-            .otherwise(F.col("width_m")))
-    lat = (st.filter((F.col("x1") == F.col("x2"))
-                     | (F.col("y1") == F.col("y2")))
-           .withColumn("width_m", w_ov)
-           .filter(F.col("width_m") >= 0.5)
-           .select("osm_id", "x1", "y1", "x2", "y2", "width_m"))
-
-    cols = ["cx_mm", "cy_mm", "pax_mm", "pay_mm", "pbx_mm", "pby_mm",
-            "pdx_mm", "pdy_mm", "pex_mm", "pey_mm", "len_mm"]
-    schema = ", ".join(f"{c} long" for c in cols)
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("osm_id")
-        segs = pdf[["x1", "y1", "x2", "y2"]].to_numpy(np.float64)
-        w = pdf["width_m"].to_numpy(np.float64)
-        out = kernels.tile_pipeline(
-            segs, w, refine_lines=False, enlarge_crossings=True,
-            way_ids=pdf["osm_id"].to_numpy(dtype=object))
-        rows = []
+def _lattice_crossings(lat, enlarge_crossings):
+    """The kernel's crossings on the lattice: center, A, B, D, E and
+    length, in mm."""
+    def values(out):
         for c in out["crossings"]:
             co = c["coords"]          # A B C D E
-            vals = [co[2, 0], co[2, 1], co[0, 0], co[0, 1],
-                    co[1, 0], co[1, 1], co[3, 0], co[3, 1],
-                    co[4, 0], co[4, 1], c["length"]]
-            rows.append([int(round(v * 1000)) for v in vals])
-        return pd.DataFrame(rows, columns=cols)
+            yield [co[2, 0], co[2, 1], co[0, 0], co[0, 1], co[1, 0],
+                   co[1, 1], co[3, 0], co[3, 1], co[4, 0], co[4, 1],
+                   c["length"]]
 
-    cross = (lat.withColumn("_g", F.lit(0)).groupBy("_g")
-             .applyInPandas(run, schema))
+    return _on_lattice(
+        lat, ["cx_mm", "cy_mm", "pax_mm", "pay_mm", "pbx_mm", "pby_mm",
+              "pdx_mm", "pdy_mm", "pex_mm", "pey_mm", "len_mm"],
+        values, enlarge_crossings)
 
-    # closed-form expectation: full coordinates, not just centers.
-    # mw comes from ALL incident streets (duplicated coords collapse to
-    # one representative — same width by construction); only the
-    # SUBJECT street is dropped when duplicated.
+
+def _lattice_crossing_ends(lat):
+    """One row per interior street end of the lattice, computed in
+    DataFrame algebra independent of the kernel: the end (px, py), the
+    street's far end (qx, qy), width ``w`` and unit direction (ux, uy),
+    ``n_dup`` streets on the same coordinates (collapsed to one
+    representative, same width by construction), the widest OTHER
+    street meeting the end (``mw``) and the crossing center's distance
+    ``di`` from it. Ends on the lattice's outer boundary are dropped."""
     ded = (lat.groupBy("x1", "y1", "x2", "y2")
            .agg(F.min("osm_id").alias("osm_id"),
                 F.max("width_m").alias("w"),
@@ -639,14 +540,84 @@ def q_crossing_enlarge(spark, sf_dir):
         F.max(F.greatest("x1", "x2")).alias("xmax"),
         F.min(F.least("y1", "y2")).alias("ymin"),
         F.max(F.greatest("y1", "y2")).alias("ymax"))
-    off = F.col("w") / 2 + 0.5
-    reach0 = F.col("mw") / 2 + P.DEFAULT_CURVE_RADIUS \
-        + P.D_TO_ADD_TO_EACH_SIDE + 0.5
-    cand = (mx.crossJoin(F.broadcast(ext))
+    return (mx.crossJoin(F.broadcast(ext))
             .withColumn("ux", F.signum(F.col("qx") - F.col("px")))
             .withColumn("uy", F.signum(F.col("qy") - F.col("py")))
             .withColumn("di", F.col("mw") / 2 + P.DEFAULT_CURVE_RADIUS
                         + P.D_TO_ADD_TO_EACH_SIDE)
+            .filter(((F.col("ux") != 0) & (F.col("py") > F.col("ymin"))
+                     & (F.col("py") < F.col("ymax")))
+                    | ((F.col("uy") != 0) & (F.col("px") > F.col("xmin"))
+                       & (F.col("px") < F.col("xmax")))))
+
+
+def q_crossing_geometry(spark, sf_dir):
+    """Exact oracle for the engine's CROSSING COORDINATES on the pure
+    lattice sub-network (J10/G18 non-enlargement path,
+    full_sidewalkreator_bbox_algorithm.py:833-924).
+
+    Scenario: the axis-aligned 2-vertex grid streets only (diagonals,
+    stubs, loops excluded on both sides). There the whole construction
+    is closed-form: noding is the identity, every block ring is a
+    rectangle inset by w/2 + d_to_add/2 per side with radius-3 corner
+    arcs that the ray (at d_interp = mw/2 + curve + d_to_add from the
+    junction, mw >= the corner street's width) always clears, so
+    A/E land on the straight flank at +-(w_self/2 + 0.5), kerbs at 25%,
+    length = w_self + 1. The REAL tile kernel computes the crossings
+    (ray x ring-edge intersection against the real buffered rings); the
+    oracle recomputes every coordinate independently in SQL. Restricted
+    to crossings with both flanking blocks present and a >0.25 m ray
+    margin (half_span > offset), identically on both sides.
+    """
+    lat = _lattice_streets(spark, sf_dir)
+    cross = _lattice_crossings(lat, False)
+    # expected (non-marginal, both-blocks-present) crossing centers
+    cand = _lattice_crossing_ends(lat).filter(
+        F.col("mw") / 2 + P.DEFAULT_CURVE_RADIUS
+        + P.D_TO_ADD_TO_EACH_SIDE + 0.5 > F.col("w") / 2 + 0.75)
+    expected = cand.select(
+        F.round((F.col("px") + F.col("ux") * F.col("di")) * 1000)
+         .cast("long").alias("cx_mm"),
+        F.round((F.col("py") + F.col("uy") * F.col("di")) * 1000)
+         .cast("long").alias("cy_mm"))
+    return cross.join(expected, ["cx_mm", "cy_mm"])
+
+
+def q_crossing_enlarge(spark, sf_dir):
+    """Exact oracle for the GUI ENLARGEMENT crossing path (J10/G18
+    ``enlarge=True``, osm_sidewalkreator.py:3035-3170) on the lattice
+    sub-network, with widths overridden by a deterministic
+    coordinate hash so that some streets (w=17) are WIDER than their
+    junction's initial ray half-span (mw/2 + 4.5 <= w/2 + 0.5): the
+    single-shot ray MISSES those flanks and only the doubling loop
+    resolves them. On parallel lattice flanks the resolved hit is
+    reach-independent — A/E at +-(w/2 + 0.5) — so every coordinate is
+    closed-form regardless of how many doublings ran. Excluded (on
+    both sides identically): boundary streets (a never-hitting outward
+    side doubles to the iteration cap and dies), duplicated-coordinate
+    streets (the kernel emits one crossing per twin at the same
+    center), and rays with < 0.25 m resolution margin per doubling
+    step (fp tie safety; vacuous for this width set)."""
+    # deterministic coord-hash width override (duplicate-safe: twins
+    # share coords hence widths); exact on .0-valued lattice coords
+    u = (F.col("x1") + F.col("x2")).cast("long")
+    v = (F.col("y1") + F.col("y2")).cast("long")
+    hmod = F.abs(u * 3 + v * 5) % 7
+    w_ov = (F.when(hmod == 0, F.lit(17.0))
+            .when(hmod.isin(1, 2), F.lit(2.0))
+            .otherwise(F.col("width_m")))
+    lat = (_lattice_streets(spark, sf_dir)
+           .withColumn("width_m", w_ov)
+           .filter(F.col("width_m") >= 0.5))
+    cross = _lattice_crossings(lat, True)
+
+    # closed-form expectation: full coordinates, not just centers.
+    # mw comes from ALL incident streets; only the SUBJECT street is
+    # dropped when duplicated.
+    off = F.col("w") / 2 + 0.5
+    reach0 = F.col("mw") / 2 + P.DEFAULT_CURVE_RADIUS \
+        + P.D_TO_ADD_TO_EACH_SIDE + 0.5
+    cand = (_lattice_crossing_ends(lat)
             .withColumn("off", off)
             .filter(F.col("n_dup") == 1)
             # fp-margin: no doubling step 2^k*reach0 lands within
@@ -654,11 +625,7 @@ def q_crossing_enlarge(spark, sf_dir):
             # 11 > off+0.25 for every width here)
             .filter(F.abs(reach0 - off) > 0.25)
             # not killed: lattice length w+1 << ABS_MAX_CROSSING_LEN
-            .filter(F.col("w") + 1 < P.ABS_MAX_CROSSING_LEN - 0.25)
-            .filter(((F.col("ux") != 0) & (F.col("py") > F.col("ymin"))
-                     & (F.col("py") < F.col("ymax")))
-                    | ((F.col("uy") != 0) & (F.col("px") > F.col("xmin"))
-                       & (F.col("px") < F.col("xmax")))))
+            .filter(F.col("w") + 1 < P.ABS_MAX_CROSSING_LEN - 0.25))
     cx = F.col("px") + F.col("ux") * F.col("di")
     cy = F.col("py") + F.col("uy") * F.col("di")
     adx, ady = F.col("uy"), -F.col("ux")
@@ -691,34 +658,14 @@ def q_ring_bbox(spark, sf_dir):
     widths, independent of the arc approximation. The REAL buffer /
     dissolve / morphological-close / hole-extraction kernel produces
     the rings; DuckDB reconstructs every bbox from the street table."""
-    import numpy as np
-    import pandas as pd
-    from osm_sidewalkreator_spark.plans import kernels
-
-    st = PL.assign_widths(
-        PL.load_streets(spark, sf_dir).filter(F.col("n_vertices") == 2))
-    lat = st.filter((F.col("x1") == F.col("x2"))
-                    | (F.col("y1") == F.col("y2"))) \
-        .select("osm_id", "x1", "y1", "x2", "y2", "width_m")
-    cols = ["xmin_mm", "ymin_mm", "xmax_mm", "ymax_mm"]
-    schema = ", ".join(f"{c} long" for c in cols)
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("osm_id")
-        segs = pdf[["x1", "y1", "x2", "y2"]].to_numpy(np.float64)
-        w = pdf["width_m"].to_numpy(np.float64)
-        out = kernels.tile_pipeline(
-            segs, w, refine_lines=False,
-            way_ids=pdf["osm_id"].to_numpy(dtype=object))
-        rows = []
+    def bboxes(out):
         for ln in out["sidewalks"]:
-            rows.append([int(round(v * 1000)) for v in
-                         (ln[:, 0].min(), ln[:, 1].min(),
-                          ln[:, 0].max(), ln[:, 1].max())])
-        return pd.DataFrame(rows, columns=cols)
+            yield (ln[:, 0].min(), ln[:, 1].min(),
+                   ln[:, 0].max(), ln[:, 1].max())
 
-    return (lat.withColumn("_g", F.lit(0)).groupBy("_g")
-            .applyInPandas(run, schema))
+    return _on_lattice(_lattice_streets(spark, sf_dir),
+                       ["xmin_mm", "ymin_mm", "xmax_mm", "ymax_mm"],
+                       bboxes, False)
 
 
 def q_voronoi_split(spark, sf_dir):

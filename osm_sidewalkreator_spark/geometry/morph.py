@@ -72,7 +72,7 @@ def segment_rects(segs: np.ndarray, radii: np.ndarray) -> np.ndarray:
 
 
 def vertex_discs(centers: np.ndarray, radii: np.ndarray,
-                 nseg: int = 5, snap: float = SNAP) -> np.ndarray:
+                 nseg: int = 5) -> np.ndarray:
     """Unique (center, radius) discs, canonical angular frame -> (m,V,2).
 
     V = 4*nseg; sample angles are offset half a step so no vertex lies on
@@ -82,8 +82,8 @@ def vertex_discs(centers: np.ndarray, radii: np.ndarray,
     centers = np.asarray(centers, dtype=np.float64)
     radii = np.broadcast_to(np.asarray(radii, dtype=np.float64),
                             (len(centers),))
-    key = np.column_stack([np.round(centers / snap),
-                           np.round(radii / snap)]).astype(np.int64)
+    key = np.column_stack([np.round(centers / SNAP),
+                           np.round(radii / SNAP)]).astype(np.int64)
     kv = np.ascontiguousarray(key).view(np.dtype((np.void, 24))).ravel()
     _, idx = np.unique(kv, return_index=True)
     c = centers[idx]
@@ -94,8 +94,8 @@ def vertex_discs(centers: np.ndarray, radii: np.ndarray,
                      c[:, 1:2] + r * np.sin(ang)[None, :]], axis=-1)
 
 
-def buffer_members(segs: np.ndarray, radii: np.ndarray, nseg: int = 5,
-                   snap: float = SNAP) -> list[np.ndarray]:
+def buffer_members(segs: np.ndarray, radii: np.ndarray, nseg: int = 5
+                   ) -> list[np.ndarray]:
     """Round buffer of segments as convex members: [rects, discs]."""
     segs = np.asarray(segs, dtype=np.float64)
     radii = np.broadcast_to(np.asarray(radii, dtype=np.float64), (len(segs),))
@@ -104,7 +104,7 @@ def buffer_members(segs: np.ndarray, radii: np.ndarray, nseg: int = 5,
     rects = segment_rects(segs[ok], radii[ok])
     centers = np.vstack([segs[:, :2], segs[:, 2:]])
     rr = np.concatenate([radii, radii])
-    discs = vertex_discs(centers, rr, nseg, snap)
+    discs = vertex_discs(centers, rr, nseg)
     return [rects, discs]
 
 
@@ -124,11 +124,11 @@ class ConvexSet:
     """A set of convex CCW polygons supporting batched signed-depth
     queries with a grid-hash bbox prefilter."""
 
-    def __init__(self, polys: np.ndarray, snap: float = SNAP):
+    def __init__(self, polys: np.ndarray):
         # snap to the noder's grid so candidate edges coincide exactly
         # with member boundary lines (depth on own boundary ~ 0)
         polys = np.asarray(polys, dtype=np.float64)
-        self.polys = np.round(polys / snap) * snap if len(polys) else polys
+        self.polys = np.round(polys / SNAP) * SNAP if len(polys) else polys
         if len(self.polys):
             self.boxes = polys_bboxes(self.polys)
             spans = np.maximum(self.boxes[:, 2] - self.boxes[:, 0],
@@ -262,8 +262,7 @@ class Layer:
     candidate: bool        # do its boundary edges seed the noding?
 
 
-def region_boundary(layers: list[Layer], snap: float = SNAP,
-                    eps: float = EPS_ON) -> np.ndarray:
+def region_boundary(layers: list[Layer]) -> np.ndarray:
     """Boundary of R = (∪ include-layers) \\ (∪ exclude-layers).
 
     Candidate edges come from layers flagged ``candidate`` — they must
@@ -304,7 +303,7 @@ def region_boundary(layers: list[Layer], snap: float = SNAP,
         pi, _si, depth, _mdir = layer.cset.query(cmx, cmy, pad=0.0)
         if len(pi) == 0:
             continue
-        deep = depth > ch[pi] + eps
+        deep = depth > ch[pi] + EPS_ON
         if layer.include:
             hit = pi[deep][inc_owned[pi[deep]]]
         else:
@@ -315,8 +314,8 @@ def region_boundary(layers: list[Layer], snap: float = SNAP,
     cand = cand[~drop]
     owner = owner[~drop]
 
-    noded, parent = node_segments(cand, snap)
-    noded, parent = dedup_undirected(noded, parent, snap)
+    noded, parent = node_segments(cand)
+    noded, parent = dedup_undirected(noded, parent)
     if len(noded) == 0:
         return noded
     own = owner[parent]
@@ -334,23 +333,23 @@ def region_boundary(layers: list[Layer], snap: float = SNAP,
     exc_r = np.zeros(n, dtype=bool)
     defer = np.zeros(n, dtype=bool)
     for li, layer in enumerate(layers):
-        pi, si, depth, mdir = layer.cset.query(mx, my, pad=eps)
+        pi, si, depth, mdir = layer.cset.query(mx, my, pad=EPS_ON)
         if len(pi) == 0:
             continue
         mkey = (np.int64(li) << 32) + si
         left = inc_l if layer.include else exc_l
         right = inc_r if layer.include else exc_r
-        inside = depth > eps
+        inside = depth > EPS_ON
         np.logical_or.at(left, pi[inside], True)
         np.logical_or.at(right, pi[inside], True)
-        band = ~inside & (depth >= -eps)
+        band = ~inside & (depth >= -EPS_ON)
         if band.any():
             bi = pi[band]
             bdir = mdir[band]
             cross = ux[bi] * bdir[:, 1] - uy[bi] * bdir[:, 0]
             dot = ux[bi] * bdir[:, 0] + uy[bi] * bdir[:, 1]
             # collinearity tolerance scales with snap-induced angular noise
-            coll = np.abs(cross) <= np.maximum(EPS_COLL, 6 * snap / ln[bi])
+            coll = np.abs(cross) <= np.maximum(EPS_COLL, 6 * SNAP / ln[bi])
             same = coll & (dot > 0)
             opp = coll & (dot <= 0)
             np.logical_or.at(left, bi[same], True)
@@ -376,8 +375,7 @@ def region_boundary(layers: list[Layer], snap: float = SNAP,
 
 # ---------- directed ring tracing ----------
 
-def _repair_graph(edges: np.ndarray, snap: float,
-                  tol: float = 64 * SNAP) -> np.ndarray:
+def _repair_graph(edges: np.ndarray) -> np.ndarray:
     """Heal float-noise defects in a directed boundary edge set.
 
     Dilate-then-erode reconstructs coincident support lines through
@@ -387,12 +385,13 @@ def _repair_graph(edges: np.ndarray, snap: float,
     ``tol`` (union-find over a grid hash), rewrite endpoints, then drop
     zero-length and duplicate directed edges.
     """
+    tol = 64 * SNAP
     for _ in range(2):
         n = len(edges)
         if n == 0:
             return edges
         pts = np.vstack([edges[:, :2], edges[:, 2:]])
-        q = np.round(pts / snap).astype(np.int64)
+        q = np.round(pts / SNAP).astype(np.int64)
         key = np.ascontiguousarray(q).view(np.dtype((np.void, 16))).ravel()
         uniq, inv = np.unique(key, return_inverse=True)
         first = np.full(len(uniq), len(key), dtype=np.int64)
@@ -454,7 +453,7 @@ def _repair_graph(edges: np.ndarray, snap: float,
                       new_edges[:, 3] - new_edges[:, 1])
         new_edges = new_edges[ln > 0]
         # drop duplicate directed edges (merged parallel chains)
-        qq = np.round(new_edges / snap).astype(np.int64)
+        qq = np.round(new_edges / SNAP).astype(np.int64)
         kk = np.ascontiguousarray(qq).view(np.dtype((np.void, 32))).ravel()
         _, idx = np.unique(kk, return_index=True)
         idx.sort()
@@ -462,7 +461,7 @@ def _repair_graph(edges: np.ndarray, snap: float,
     return edges
 
 
-def trace_directed_rings(edges: np.ndarray, snap: float = SNAP
+def trace_directed_rings(edges: np.ndarray
                          ) -> tuple[list[np.ndarray], list[np.ndarray]]:
     """Directed boundary edges (interior on left) -> (exterior_rings,
     hole_rings), both CCW-normalized vertex arrays.
@@ -471,11 +470,11 @@ def trace_directed_rings(edges: np.ndarray, snap: float = SNAP
     first clockwise of d's reverse direction. Open chains (numerical
     noise) and tiny rings are dropped.
     """
-    edges = _repair_graph(np.asarray(edges, dtype=np.float64), snap)
+    edges = _repair_graph(np.asarray(edges, dtype=np.float64))
     if len(edges) == 0:
         return [], []
     pts = np.vstack([edges[:, :2], edges[:, 2:]])
-    q = np.round(pts / snap).astype(np.int64)
+    q = np.round(pts / SNAP).astype(np.int64)
     key = np.ascontiguousarray(q).view(np.dtype((np.void, 16))).ravel()
     uniq, inv = np.unique(key, return_inverse=True)
     first = np.full(len(uniq), len(key), dtype=np.int64)
@@ -557,7 +556,7 @@ def trace_directed_rings(edges: np.ndarray, snap: float = SNAP
         xn = np.concatenate((x[1:], x[:1]))
         yn = np.concatenate((y[1:], y[:1]))
         area = 0.5 * float(np.dot(x, yn) - np.dot(y, xn))
-        if abs(area) <= (snap * 100) ** 2:
+        if abs(area) <= (SNAP * 100) ** 2:
             continue
         if area > 0:
             ext.append(ring)
@@ -568,11 +567,11 @@ def trace_directed_rings(edges: np.ndarray, snap: float = SNAP
 
 # ---------- high-level operations ----------
 
-def simplify_collinear(ring: np.ndarray, tol: float = 1e-9) -> np.ndarray:
+def simplify_collinear(ring: np.ndarray) -> np.ndarray:
     """Drop vertices whose perpendicular deviation from the chord of their
-    neighbors is below ``tol``; keeps ring topology.
+    neighbors is below 1e-9; keeps ring topology.
 
-    Default tol merges only *exactly* collinear chains: a looser tolerance
+    That tolerance merges only *exactly* collinear chains: a looser one
     would perturb ring edges off the convex-member boundary lines they lie
     on and create near-tangencies that break the combinatorial side
     classification downstream.
@@ -585,7 +584,7 @@ def simplify_collinear(ring: np.ndarray, tol: float = 1e-9) -> np.ndarray:
     ln = np.where(ln == 0, 1.0, ln)
     dev = np.abs(chord[:, 0] * (ring[:, 1] - prev[:, 1])
                  - chord[:, 1] * (ring[:, 0] - prev[:, 0])) / ln
-    keep = dev > tol
+    keep = dev > 1e-9
     if keep.sum() < 3:
         return ring
     return ring[keep]
@@ -605,18 +604,16 @@ def rings_to_edges(rings: list[np.ndarray]) -> np.ndarray:
     return np.hstack([flat, flat[idx]])
 
 
-def buffer_union(segs: np.ndarray, radii: np.ndarray, nseg: int = 5,
-                 snap: float = SNAP):
+def buffer_union(segs: np.ndarray, radii: np.ndarray, nseg: int = 5):
     """Round-buffer each segment and dissolve (G1+A1 of SURVEY §2).
 
     Returns (member_sets, exterior_rings, hole_rings); member_sets define
     the union's coverage for downstream morphology stages.
     """
-    rects, discs = buffer_members(segs, radii, nseg, snap)
-    sets = [ConvexSet(rects, snap), ConvexSet(discs, snap)]
+    rects, discs = buffer_members(segs, radii, nseg)
+    sets = [ConvexSet(rects), ConvexSet(discs)]
     layers = [Layer(s, include=True, candidate=True) for s in sets]
-    bnd = region_boundary(layers, snap)
-    ext, holes = trace_directed_rings(bnd, snap)
+    ext, holes = trace_directed_rings(region_boundary(layers))
     return sets, ext, holes
 
 
@@ -690,7 +687,7 @@ def _pad_polys(polys: list[np.ndarray]) -> np.ndarray:
 
 
 def _ring_buffer_members(rings: list[np.ndarray], radius: float,
-                         nseg: int, snap: float) -> list[np.ndarray]:
+                         nseg: int) -> list[np.ndarray]:
     simp = [simplify_collinear(r) for r in rings]
     edges = rings_to_edges(simp)
     if len(edges) == 0:
@@ -703,7 +700,7 @@ def _ring_buffer_members(rings: list[np.ndarray], radius: float,
 
 
 def morphological_close(u_sets: list[ConvexSet], rings_u: list[np.ndarray],
-                        radius: float, nseg: int = 5, snap: float = SNAP):
+                        radius: float, nseg: int = 5):
     """close(U, r) = erode(dilate(U, r), r).
 
     ``u_sets`` define U's coverage; ``rings_u`` are all its boundary rings
@@ -714,20 +711,18 @@ def morphological_close(u_sets: list[ConvexSet], rings_u: list[np.ndarray],
     if not rings_u:
         return [], []
     # dilate: D = U ∪ buffer(∂U, r)
-    d_members = _ring_buffer_members(rings_u, radius, nseg, snap)
-    d_sets = [ConvexSet(p, snap) for p in d_members]
+    d_members = _ring_buffer_members(rings_u, radius, nseg)
+    d_sets = [ConvexSet(p) for p in d_members]
     layers_d = ([Layer(s, True, True) for s in d_sets]
                 + [Layer(s, True, False) for s in u_sets])
-    bnd_d = region_boundary(layers_d, snap)
-    ext_d, holes_d = trace_directed_rings(bnd_d, snap)
+    ext_d, holes_d = trace_directed_rings(region_boundary(layers_d))
     rings_d = ext_d + holes_d
     if not rings_d:
         return [], []
     # erode: C = D \ buffer(∂D, r)
-    e_members = _ring_buffer_members(rings_d, radius, nseg, snap)
-    e_sets = [ConvexSet(p, snap) for p in e_members]
+    e_members = _ring_buffer_members(rings_d, radius, nseg)
+    e_sets = [ConvexSet(p) for p in e_members]
     layers_c = ([Layer(s, False, True) for s in e_sets]
                 + [Layer(s, True, False) for s in d_sets]
                 + [Layer(s, True, False) for s in u_sets])
-    bnd_c = region_boundary(layers_c, snap)
-    return trace_directed_rings(bnd_c, snap)
+    return trace_directed_rings(region_boundary(layers_c))

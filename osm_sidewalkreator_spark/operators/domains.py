@@ -48,8 +48,8 @@ from .sampling import _unit_hash
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)"
 
 
-def domain_expr(url_col="url"):
-    """Registrable host of a URL as a Column: lowercased, port and
+def domain_expr():
+    """Registrable host of the ``url`` column: lowercased, port and
     userinfo stripped, one leading ``www.`` label dropped. Empty
     string for non-URL junk AND for null urls (never null, so it is
     a safe groupBy key and both blocklist paths agree on it). Pure
@@ -62,15 +62,13 @@ def domain_expr(url_col="url"):
     because the canonical URL it belongs to must round-trip the
     original authority. Don't unify them: dedup identity and
     curation grouping legitimately disagree on userinfo."""
-    col = F.col(url_col) if isinstance(url_col, str) else url_col
-    host = F.lower(F.regexp_extract(col, _HOST_RE, 1))
+    host = F.lower(F.regexp_extract(F.col("url"), _HOST_RE, 1))
     out = F.when(host.startswith("www."),
                  F.substring(host, 5, 2 ** 30)).otherwise(host)
     return F.coalesce(out, F.lit(""))
 
 
 def cap_per_domain(docs: DataFrame, max_docs: int,
-                   url_col: str = "url", key_col: str = "doc_id",
                    seed: str = "domcap-v1") -> DataFrame:
     """EXACT per-domain cap: keep at most ``max_docs`` docs per
     domain, chosen by deterministic unit-hash order (an unbiased
@@ -89,9 +87,9 @@ def cap_per_domain(docs: DataFrame, max_docs: int,
     """
     if max_docs < 1:
         raise ValueError(f"max_docs must be >= 1: {max_docs}")
-    d = docs.withColumn("_dom", domain_expr(url_col))
+    d = docs.withColumn("_dom", domain_expr())
     w = Window.partitionBy("_dom").orderBy(
-        _unit_hash(F.col(key_col), seed).asc(), F.col(key_col).asc())
+        _unit_hash(F.col("doc_id"), seed).asc(), F.col("doc_id").asc())
     return (d.withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_dom") == "")
                     | (F.col("_rn") <= max_docs))
@@ -99,8 +97,6 @@ def cap_per_domain(docs: DataFrame, max_docs: int,
 
 
 def cap_per_domain_sampled(docs: DataFrame, max_docs: int,
-                           url_col: str = "url",
-                           key_col: str = "doc_id",
                            seed: str = "domcap-v1") -> DataFrame:
     """Scale-path per-domain cap: domains at or under the cap are
     kept whole; over-cap domains are thinned by the deterministic
@@ -113,7 +109,7 @@ def cap_per_domain_sampled(docs: DataFrame, max_docs: int,
     """
     if max_docs < 1:
         raise ValueError(f"max_docs must be >= 1: {max_docs}")
-    d = docs.withColumn("_dom", domain_expr(url_col))
+    d = docs.withColumn("_dom", domain_expr())
     # '' (junk/null url) exempt — same contract as the exact cap
     over = (d.groupBy("_dom").agg(F.count(F.lit(1)).alias("_n"))
             .filter((F.col("_n") > max_docs) & (F.col("_dom") != ""))
@@ -121,21 +117,20 @@ def cap_per_domain_sampled(docs: DataFrame, max_docs: int,
             .drop("_n"))
     kept = (d.join(F.broadcast(over), "_dom", "left")
             .filter(F.col("_frac").isNull()
-                    | (_unit_hash(F.col(key_col), seed)
+                    | (_unit_hash(F.col("doc_id"), seed)
                        < F.col("_frac")))
             .drop("_frac", "_dom"))
     return kept
 
 
-def filter_blocklist(docs: DataFrame, blocked: DataFrame | list,
-                     url_col: str = "url") -> DataFrame:
+def filter_blocklist(docs: DataFrame, blocked: DataFrame | list) -> DataFrame:
     """Drop docs whose domain is on a blocklist. ``blocked`` is a
     one-column DataFrame of domains (any column name) or a plain
     list. Blocklists are tiny relative to the corpus — broadcast
     left-anti, zero corpus shuffle. Entries are normalized through
     the same lowercase/www-strip rule as ``domain_expr`` so
     "WWW.Spam.Example" blocks "spam.example"."""
-    d = docs.withColumn("_dom", domain_expr(url_col))
+    d = docs.withColumn("_dom", domain_expr())
     if isinstance(blocked, list):
         norm = set()
         for b in blocked:
@@ -161,8 +156,7 @@ def filter_blocklist(docs: DataFrame, blocked: DataFrame | list,
 
 
 def split_corpus(docs: DataFrame, weights: dict[str, float],
-                 key_col: str = "doc_id", seed: str = "split-v1",
-                 out_col: str = "split") -> DataFrame:
+                 key_col: str = "doc_id", seed: str = "split-v1") -> DataFrame:
     """Deterministic disjoint train/val/test labeling: each doc's
     unit hash is compared against the cumulative weight ladder, in
     sorted label order, so the assignment is a pure function of
@@ -189,4 +183,4 @@ def split_corpus(docs: DataFrame, weights: dict[str, float],
             else expr.when(cond, F.lit(label))
     last = items[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(F.lit(last))
-    return docs.withColumn(out_col, expr)
+    return docs.withColumn("split", expr)

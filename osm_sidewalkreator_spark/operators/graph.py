@@ -51,11 +51,12 @@ from pyspark.sql import types as T
 _CC_DRIVER_MAX_EDGES = 200_000
 
 
-def _canon_edges(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    """Distinct (lo, hi) with lo < hi, self-loops dropped."""
+def _canon_edges(pairs: DataFrame) -> DataFrame:
+    """Distinct (lo, hi) of the (a, b) pairs with lo < hi, self-loops
+    dropped."""
     return (pairs
-            .select(F.least(F.col(a), F.col(b)).alias("lo"),
-                    F.greatest(F.col(a), F.col(b)).alias("hi"))
+            .select(F.least(F.col("a"), F.col("b")).alias("lo"),
+                    F.greatest(F.col("a"), F.col("b")).alias("hi"))
             .where(F.col("lo") != F.col("hi"))
             .distinct())
 
@@ -67,9 +68,9 @@ def _signature(edges: DataFrame) -> tuple:
     return (row["n"], row["x"])
 
 
-def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
-                         max_iter: int = 64) -> DataFrame:
-    """(node, component) for every node that appears in ``pairs``.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(node, component) for every node that appears in the (a, b)
+    ``pairs``.
 
     ``component`` is the minimum node id of the component (a canonical,
     deterministic label).  Ids may be any orderable Spark type — longs
@@ -79,8 +80,9 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
     Nodes with no edges do not appear (the caller left-joins and
     coalesces to self — see ``dedup_clusters``).
     """
+    max_iter = 64
     spark = pairs.sparkSession
-    e = _canon_edges(pairs, a, b)
+    e = _canon_edges(pairs)
     # one pass decides the path: collect at most MAX+1 distinct edges.
     # Small graphs (the common case for near-dup pair sets) resolve
     # driver-side with identical labels (component = min member id);
@@ -164,7 +166,6 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame,
-                   id_col: str = "doc_id", a: str = "a", b: str = "b",
                    prefer: str | None = None) -> DataFrame:
     """Resolve near-dup pairs into clusters and elect one keeper each.
 
@@ -182,12 +183,12 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
     partition sizes are near-dup cluster sizes (bounded in practice by
     the pair generators' hot-bucket caps), not corpus size.
     """
-    cc = connected_components(pairs, a=a, b=b)
-    labeled = (docs.join(cc, docs[id_col] == cc["node"], "left")
+    cc = connected_components(pairs)
+    labeled = (docs.join(cc, docs["doc_id"] == cc["node"], "left")
                .withColumn("cluster_id",
-                           F.coalesce(F.col("component"), F.col(id_col)))
+                           F.coalesce(F.col("component"), F.col("doc_id")))
                .drop("node", "component"))
-    order = [F.col(id_col).asc()]
+    order = [F.col("doc_id").asc()]
     if prefer is not None:
         order.insert(0, F.col(prefer).desc_nulls_last())
     w = Window.partitionBy("cluster_id")

@@ -21,8 +21,7 @@ from .tiling import (box_cells, cell_id, neighbor_cells, seg_box_overlap,
 
 def knn_join_points_segments(points: DataFrame, segments: DataFrame,
                              k: int = 1, max_dist: float = 50.0,
-                             cell_size: float = 128.0,
-                             point_id: str = "url") -> DataFrame:
+                             cell_size: float = 128.0) -> DataFrame:
     """k nearest segments per point within ``max_dist`` (J7/W1).
 
     The reference's ``QgsSpatialIndex.nearestNeighbor`` with
@@ -76,14 +75,14 @@ def knn_join_points_segments(points: DataFrame, segments: DataFrame,
         # multiple shared cells collapse inside the same min — one
         # shuffle instead of the dedup-groupBy + window pair (the double
         # shuffle measured 4x slower and anti-scaling at sf0.1)
-        best = j.groupBy(point_id).agg(
+        best = j.groupBy("url").agg(
             F.min(F.struct("dist", "seg_id")).alias("b"))
-        return best.select(point_id, F.col("b.seg_id").alias("seg_id"),
+        return best.select("url", F.col("b.seg_id").alias("seg_id"),
                            F.col("b.dist").alias("dist"),
                            F.lit(1).alias("knn_rank"))
     # a segment can reach a point from several candidate cells
-    j = j.groupBy(point_id, "seg_id").agg(F.min("dist").alias("dist"))
-    w = Window.partitionBy(point_id).orderBy(F.col("dist").asc(),
+    j = j.groupBy("url", "seg_id").agg(F.min("dist").alias("dist"))
+    w = Window.partitionBy("url").orderBy(F.col("dist").asc(),
                                              F.col("seg_id").asc())
     return (j.withColumn("knn_rank", F.row_number().over(w))
              .filter(F.col("knn_rank") <= k))
@@ -158,9 +157,7 @@ def incidence_ids_join(rects: DataFrame, segments: DataFrame,
 
 
 def pip_join_points_polygons(points: DataFrame, polys: DataFrame,
-                             cell_size: float = 128.0,
-                             point_id: str = "url",
-                             poly_id: str = "poly_id") -> DataFrame:
+                             cell_size: float = 128.0) -> DataFrame:
     """Generic point-in-polygon join (J9): cell candidates + an even-odd
     crossing count in the JVM.
 
@@ -178,14 +175,15 @@ def pip_join_points_polygons(points: DataFrame, polys: DataFrame,
     def over_edges(agg, c):
         return agg(F.transform("edges", lambda e: e[c]))
 
-    pl = (polys.select(poly_id, st_explode_segments("geometry").alias("edges"))
-               .select(poly_id, "edges",
+    pl = (polys.select("poly_id",
+                       st_explode_segments("geometry").alias("edges"))
+               .select("poly_id", "edges",
                        over_edges(F.array_min, "ax").alias("xmin"),
                        over_edges(F.array_min, "ay").alias("ymin"),
                        over_edges(F.array_max, "ax").alias("xmax"),
                        over_edges(F.array_max, "ay").alias("ymax"))
                .withColumn("cell", box_cells(cell_size)))
-    p = points.select(point_id, "x", "y").withColumn(
+    p = points.select("url", "x", "y").withColumn(
         "cell", cell_id(F.col("x"), F.col("y"), cell_size))
     x, y = F.col("x"), F.col("y")
 
@@ -203,5 +201,5 @@ def pip_join_points_polygons(points: DataFrame, polys: DataFrame,
     # (ymin) and push it below the UDF's project, decoding twice.
     in_rows = F.coalesce((y >= F.col("ymin")) & (y < F.col("ymax")),
                          F.lit(False))
-    return p.join(pl, "cell").filter(in_rows & odd).select(point_id, poly_id)
+    return p.join(pl, "cell").filter(in_rows & odd).select("url", "poly_id")
 

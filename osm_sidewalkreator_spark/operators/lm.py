@@ -117,15 +117,14 @@ def bigram_nll(docs: DataFrame,
         (F.round(-fold / F.col("n_bigrams"), 6) + 0.0).alias("nll"))
 
 
-def perplexity_filter(docs: DataFrame, max_nll: float,
-                      train: DataFrame | None = None) -> DataFrame:
+def perplexity_filter(docs: DataFrame, max_nll: float) -> DataFrame:
     """Keep docs whose bigram NLL is <= max_nll (plus docs too short
-    to score — a length filter is a different op). ``train`` selects
-    the fitting corpus (None = self-trained). Pick thresholds OFF
-    attainable values; nll is rounded to 6 decimals, so any
-    grain-interior value is safe."""
-    keep = bigram_nll(docs, train=train).filter(F.col("nll") <= max_nll) \
-                                        .select("doc_id")
+    to score — a length filter is a different op). The bigram model
+    is fitted on ``docs`` itself. Pick thresholds OFF attainable
+    values; nll is rounded to 6 decimals, so any grain-interior value
+    is safe."""
+    keep = bigram_nll(docs).filter(F.col("nll") <= max_nll) \
+                           .select("doc_id")
     short = docs.select("doc_id", F.size(F.split(F.col("text"), " "))
                         .alias("_n")).filter(F.col("_n") < 2) \
                 .select("doc_id")

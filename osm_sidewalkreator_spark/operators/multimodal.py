@@ -16,7 +16,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_META_SCHEMA = T.StructType([
@@ -43,9 +42,7 @@ def decode_media(payload: bytes, media_type: str, use_fake: bool):
     return arr[: side * side].reshape(side, side)
 
 
-def extract_media_features(df: DataFrame, payload_col: str = "html",
-                           media_type: str = "image/fake",
-                           use_fake: bool = True) -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over a binary column.
 
     Batch shape: Iterator[pd.DataFrame] -> Iterator[pd.DataFrame]; one
@@ -55,19 +52,13 @@ def extract_media_features(df: DataFrame, payload_col: str = "html",
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                img = decode_media(bytes(payload), media_type, use_fake)
-                rows.append((url, media_type, len(payload),
+            for url, payload in zip(pdf["url"], pdf["html"]):
+                img = decode_media(bytes(payload), "image/fake",
+                                   use_fake=True)
+                rows.append((url, "image/fake", len(payload),
                              float(img.mean()), float(img.std()),
                              img.shape[1], img.shape[0]))
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               MEDIA_META_SCHEMA])
 
-    return df.select("url", payload_col).mapInPandas(run, MEDIA_META_SCHEMA)
-
-
-def media_byte_stats(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Payload accounting without decode: JVM-side only."""
-    return df.select(
-        "url", F.length(F.col(payload_col)).alias("n_bytes"),
-        F.crc32(F.col(payload_col)).alias("payload_crc32"))
+    return df.select("url", "html").mapInPandas(run, MEDIA_META_SCHEMA)

@@ -32,12 +32,12 @@ from .tiling import box_cells, seg_box_overlap, seg_box_pairs
 _IV = "array<struct<t0:double,t1:double>>"
 
 
-def _candidates(segs: DataFrame, rects: DataFrame, cell_size: float,
-                seg_id: str, rect_id: str) -> DataFrame:
+def _candidates(segs: DataFrame, rects: DataFrame, cell_size: float
+                ) -> DataFrame:
     """Distinct (segment, rect) candidate pairs sharing a grid cell,
     with the clip interval columns attached."""
     j = seg_box_pairs(segs, rects, cell_size) \
-        .dropDuplicates([seg_id, rect_id])
+        .dropDuplicates(["osm_id", "block_id"])
     t0, t1, outside = _clip_interval()
     return (j.withColumn("_t0", t0).withColumn("_t1", t1)
              .filter(~outside & (t0 < t1)))
@@ -61,14 +61,12 @@ def _piece_coords(t0col, t1col):
 
 
 def intersection_overlay(segs: DataFrame, rects: DataFrame,
-                         cell_size: float = 128.0,
-                         seg_id: str = "osm_id",
-                         rect_id: str = "block_id") -> DataFrame:
+                         cell_size: float = 128.0) -> DataFrame:
     """J2 ``native:intersection``: one output row per (segment, polygon)
     pair that truly overlaps, geometry cut to the overlap, attributes of
     BOTH inputs carried (QGIS keeps input+overlay fields). Zero-length
     touches are dropped (line output)."""
-    cand = _candidates(segs, rects, cell_size, seg_id, rect_id)
+    cand = _candidates(segs, rects, cell_size)
     keep = [c for c in cand.columns if c not in
             ("_t0", "_t1", "ax", "ay", "bx", "by")]
     return cand.select(*keep,
@@ -76,9 +74,7 @@ def intersection_overlay(segs: DataFrame, rects: DataFrame,
 
 
 def difference_overlay(segs: DataFrame, rects: DataFrame,
-                       cell_size: float = 128.0,
-                       seg_id: str = "osm_id",
-                       rect_id: str = "block_id") -> DataFrame:
+                       cell_size: float = 128.0) -> DataFrame:
     """J3 ``native:difference``: each segment minus the UNION of all
     overlapping polygons; segments touching nothing pass through whole.
 
@@ -86,9 +82,9 @@ def difference_overlay(segs: DataFrame, rects: DataFrame,
     JVM fold merges overlapping/touching intervals -> complement pieces
     explode. Segment attrs ride along via first() (seg_id is unique in
     the input layer)."""
-    cand = _candidates(segs, rects, cell_size, seg_id, rect_id) \
-        .select(seg_id, "_t0", "_t1")
-    return _subtract_intervals(segs, cand, seg_id)
+    cand = _candidates(segs, rects, cell_size) \
+        .select("osm_id", "_t0", "_t1")
+    return _subtract_intervals(segs, cand, "osm_id")
 
 
 def _subtract_intervals(segs: DataFrame, cand: DataFrame,
@@ -277,7 +273,7 @@ def polygon_boundary_segments(polys: DataFrame, poly_id: str,
             F.col("bx").cast("string"), F.col("by").cast("string")))
 
 
-def _assemble_faces(seg_arr, member_fn, snap=1e-7, eps=1e-4):
+def _assemble_faces(seg_arr, member_fn):
     """Piece segments -> noded boundary cycles -> per-face region
     contribution for the region defined by ``member_fn`` (a point
     predicate over the ORIGINAL geometries).
@@ -297,6 +293,8 @@ def _assemble_faces(seg_arr, member_fn, snap=1e-7, eps=1e-4):
     (collinear overlapping inputs) are undefined, same contract as the
     even-odd interval kernel.
     """
+    snap = 1e-7
+    eps = 1e-4
     import numpy as np
 
     from ..geometry import core, faces, noding
@@ -342,7 +340,6 @@ def _assemble_faces(seg_arr, member_fn, snap=1e-7, eps=1e-4):
 
 def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
                              op: str = "intersection",
-                             cell_size: float = 128.0,
                              a_id: str = "a_id",
                              b_id: str = "b_id") -> DataFrame:
     """J2/J3 ``native:intersection``/``native:difference`` for POLYGON x
@@ -366,6 +363,7 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
     all overlapping B's (B-boundary pieces are additionally clipped
     against OTHER B polygons, so overlapping B's union correctly).
     """
+    cell_size = 128.0
     import numpy as np
     import pandas as pd
 

@@ -40,7 +40,6 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -70,8 +69,8 @@ def pack_next_fit(tokens: np.ndarray, capacity: int) -> np.ndarray:
 
 def pack_sequences(chunks: DataFrame, seq_tokens: int,
                    group_col="shard",
-                   order_cols: Iterable[str] = ("doc_id", "chunk_idx"),
-                   tokens_col: str = "n_chunk_tokens") -> DataFrame:
+                   order_cols: Iterable[str] = ("doc_id", "chunk_idx")
+                   ) -> DataFrame:
     """Add (seq_id, seq_pos, oversize) to a chunk table.
 
     ``seq_id`` numbers sequences within each ``group_col`` value (a
@@ -100,7 +99,7 @@ def pack_sequences(chunks: DataFrame, seq_tokens: int,
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(list(order_cols), kind="mergesort") \
                  .reset_index(drop=True)
-        toks = pdf[tokens_col].to_numpy(dtype=np.int64)
+        toks = pdf["n_chunk_tokens"].to_numpy(dtype=np.int64)
         if len(toks) and toks.min() < 1:
             raise ValueError("token counts must be >= 1")
         seq = pack_next_fit(toks, seq_tokens)

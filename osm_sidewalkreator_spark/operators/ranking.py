@@ -80,14 +80,7 @@ def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
             .filter(F.col("_m") > 0).drop("_m"))
 
 
-def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20) -> DataFrame:
-    """Top-k by BM25, ties to the lowest doc_id — a distributed
-    TakeOrdered (orderBy + limit), not a global sort."""
-    return (bm25_scores(docs, terms)
-            .orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k))
-
-
-def bm25_oracle_sql(terms: list[str], table: str = "documents") -> str:
+def bm25_oracle_sql(terms: list[str]) -> str:
     """Self-contained DuckDB SQL computing the same scores — the
     oracle recomputes N/avgdl/df itself rather than trusting literals
     from the engine under test."""
@@ -105,7 +98,7 @@ def bm25_oracle_sql(terms: list[str], table: str = "documents") -> str:
     m = " + ".join(f"d.tf{i}" for i in range(len(terms)))
     return f"""
         WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM {table}),
+                   FROM documents),
         d AS (SELECT doc_id, len(toks) AS dl,
                    {tfs}
               FROM t),

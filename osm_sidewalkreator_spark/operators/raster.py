@@ -41,14 +41,12 @@ def _axis_interval(p0: Column, d: Column, lo: Column, hi: Column
     return t0, t1
 
 
-def rasterize_segments(segs: DataFrame, cell_size: float,
-                       weight: str | None = None) -> DataFrame:
+def rasterize_segments(segs: DataFrame, cell_size: float) -> DataFrame:
     """Burn segments (ax, ay, bx, by) onto the grid.
 
     Returns one row per touched cell: ``cell_x``, ``cell_y``,
     ``n_segs`` (segments with positive in-cell length) and ``len_m``
-    (exact summed in-cell length, optionally scaled by the ``weight``
-    column — e.g. a width for area-burn semantics).
+    (exact summed in-cell length).
     """
     cs = float(cell_size)
     s = segs.withColumn("_cell", seg_cells(cs))
@@ -68,8 +66,6 @@ def rasterize_segments(segs: DataFrame, cell_size: float,
     t1 = F.least(tx1, ty1, F.lit(1.0))
     seg_len = F.sqrt(dx * dx + dy * dy)
     in_len = F.greatest(t1 - t0, F.lit(0.0)) * seg_len
-    if weight is not None:
-        in_len = in_len * F.col(weight)
     return (s.withColumn("_len", in_len)
             .filter(F.col("_len") > 0)
             .groupBy(F.col("_cx").alias("cell_x"),

@@ -103,7 +103,6 @@ def temperature_fractions(docs: DataFrame, temperature: float,
 
 def temperature_sample(docs: DataFrame, temperature: float,
                        target_rows: int, group_col: str = "source",
-                       key_col: str = "doc_id",
                        seed: str = "temp-v1") -> DataFrame:
     """Temperature-mix the corpus: counts -> fractions -> the same
     deterministic narrow-filter keep decision as ``weighted_sample``.
@@ -111,106 +110,7 @@ def temperature_sample(docs: DataFrame, temperature: float,
     filtered pass) — the count pass reads only ``group_col``."""
     fr = temperature_fractions(docs, temperature, target_rows,
                                group_col=group_col)
-    return weighted_sample(docs, fr, group_col=group_col,
-                           key_col=key_col, seed=seed)
-
-
-def epoch_upsample(docs: DataFrame, epochs: dict[str, float],
-                   group_col: str = "source", key_col: str = "doc_id",
-                   seed: str = "epoch-v1",
-                   default_epochs: float = 1.0) -> DataFrame:
-    """Repeat each group's docs a FRACTIONAL number of times — the
-    upsampling half of data mixing (temperature/weighted sampling only
-    drop rows; rare-domain recipes say "take 3.7 epochs of X").
-
-    A doc in a group with ``epochs = e`` appears ``floor(e)`` times,
-    plus once more when ``unit_hash < frac(e)`` — so expected copies
-    are exactly ``e`` per doc and any corpus subset reproduces the
-    same copy counts (pure function of the content key, like every
-    decision in this module). Output adds an ``epoch`` column (0-based
-    copy index) so downstream sharding can decorrelate copies by
-    hashing (key, epoch) instead of emitting adjacent duplicates.
-
-    Scale: narrow generate — ``explode(sequence(...))`` per row, no
-    shuffle, no RNG state. Epoch counts are whole-plan literals, so
-    the common ``e <= 1`` groups emit their single row with zero
-    amplification cost.
-    """
-    for g, e in epochs.items():
-        if e < 0:
-            raise ValueError(f"epochs for {g!r} must be >= 0: {e}")
-    if default_epochs < 0:
-        raise ValueError(f"default_epochs must be >= 0: {default_epochs}")
-    e_expr = F.lit(float(default_epochs))
-    for g, e in sorted(epochs.items()):
-        e_expr = F.when(F.col(group_col) == g,
-                        F.lit(float(e))).otherwise(e_expr)
-    # copies = floor(e) + (unit_hash < e - floor(e)); Spark's
-    # sequence(a, b) runs DESCENDING when a > b, so the 0-copy case
-    # must be an explicit empty array (explode then drops the row),
-    # and the generator must be the column's top-level expression
-    base = F.floor(e_expr).cast("long")
-    extra = (_unit_hash(F.col(key_col), seed)
-             < (e_expr - base.cast("double"))).cast("long")
-    copies = base + extra
-    arr = F.when(copies >= 1,
-                 F.sequence(F.lit(0).cast("long"), copies - 1)) \
-        .otherwise(F.array().cast("array<long>"))
-    return docs.withColumn("epoch", F.explode(arr))
-
-
-def group_tail_trim(df: DataFrame, score_col: str, q: float,
-                    group_col: str = "lang", key_col: str = "doc_id",
-                    ascending: bool = True) -> DataFrame:
-    """Keep each group's best ``q`` fraction by score, EXACTLY.
-
-    "Drop the worst-perplexity 20% per language" — the relative
-    (quantile) form of curation filtering, vs the absolute thresholds
-    quality/perplexity filters take. Keeps ``ceil(q * n_g)`` rows per
-    group: the rows ranked first by (score, key) — the key breaks
-    score ties deterministically, so the kept set is a pure function
-    of the data (exact cross-engine parity, no interpolated-threshold
-    ulp games).
-
-    Scale note: rank-within-group is a full shuffle+sort on
-    ``group_col`` — the exact path. At 100 TB prefer
-    ``group_quantile_filter`` (approx threshold, #groups-row agg +
-    narrow filter) unless exactness of the cut is contractual.
-    """
-    if not 0.0 <= q <= 1.0:
-        raise ValueError(f"q must be in [0,1]: {q}")
-    from pyspark.sql import Window
-    order = [F.col(score_col), F.col(key_col)] if ascending else \
-        [F.col(score_col).desc(), F.col(key_col)]
-    w = Window.partitionBy(group_col).orderBy(*order)
-    wn = Window.partitionBy(group_col)
-    return (df.withColumn("_rn", F.row_number().over(w))
-              .withColumn("_n", F.count(F.lit(1)).over(wn))
-              .filter(F.col("_rn") <= F.ceil(q * F.col("_n")))
-              .drop("_rn", "_n"))
-
-
-def group_quantile_filter(df: DataFrame, score_col: str, q: float,
-                          group_col: str = "lang",
-                          ascending: bool = True,
-                          accuracy: int = 10000) -> DataFrame:
-    """The 100 TB form of ``group_tail_trim``: per-group APPROXIMATE
-    quantile threshold (``approx_percentile``, Greenwald-Khanna — one
-    aggregate collapsing to #groups rows), broadcast back, narrow
-    filter. Keeps ~q per group within the sketch's rank error
-    (1/accuracy); the kept set is threshold-stable (every kept row's
-    score <=/>= the group threshold) rather than exact-count.
-    """
-    if not 0.0 <= q <= 1.0:
-        raise ValueError(f"q must be in [0,1]: {q}")
-    p = q if ascending else 1.0 - q
-    thr = df.groupBy(group_col).agg(
-        F.expr(f"approx_percentile({score_col}, {p}, {accuracy})")
-         .alias("_thr"))
-    out = df.join(F.broadcast(thr), group_col)
-    keep = (F.col(score_col) <= F.col("_thr")) if ascending \
-        else (F.col(score_col) >= F.col("_thr"))
-    return out.filter(keep).drop("_thr")
+    return weighted_sample(docs, fr, group_col=group_col, seed=seed)
 
 
 def shard_corpus(docs: DataFrame, n_shards: int,

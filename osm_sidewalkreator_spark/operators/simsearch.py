@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+DIM = 64            # embedding dimension the LSH planes span
+MAX_BUCKET = 4096   # per-table LSH bucket cap (hot-bucket guard)
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -263,12 +266,12 @@ def _bucket_udf(W: list, n_tables: int, n_planes: int):
     return _buckets
 
 
-def _lsh_buckets(e: DataFrame, n_tables: int, n_planes: int, dim: int,
-                 max_bucket: int) -> DataFrame:
+def _lsh_buckets(e: DataFrame, n_tables: int, n_planes: int
+                 ) -> DataFrame:
     """(vec_id, tbl, bucket): the ``n_tables`` hyperplane bucket ids of
-    every (vec_id, v) vector, one row per table, with buckets larger
-    than ``max_bucket`` dropped per table."""
-    W = _plane_weight_matrix(e.sparkSession, n_tables * n_planes, dim)
+    every (vec_id, v) ``DIM``-vector, one row per table, with buckets
+    larger than ``MAX_BUCKET`` dropped per table."""
+    W = _plane_weight_matrix(e.sparkSession, n_tables * n_planes, DIM)
     # all n_tables bucket ids in ONE Arrow-batched NumPy pass
     # (bit-identical fold order — see _bucket_udf)
     banded = e.select("vec_id", F.posexplode(_bucket_udf(
@@ -279,13 +282,11 @@ def _lsh_buckets(e: DataFrame, n_tables: int, n_planes: int, dim: int,
     # reuse it
     wb = Window.partitionBy("tbl", "bucket")
     return (banded.withColumn("_bn", F.count("*").over(wb))
-            .filter(F.col("_bn") <= max_bucket).drop("_bn"))
+            .filter(F.col("_bn") <= MAX_BUCKET).drop("_bn"))
 
 
 def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
-                    n_planes: int = 6, n_tables: int = 10,
-                    dim: int = 64, max_bucket: int = 4096,
-                    probe_hamming: int = 1) -> DataFrame:
+                    n_planes: int = 6, n_tables: int = 10) -> DataFrame:
     """Multi-table LSH approximate top-k: ``n_tables`` independent
     random-hyperplane signatures of ``n_planes`` bits each -> one
     (table, bucket) equi-join -> candidate-pair dedup -> exact cosine ->
@@ -296,14 +297,14 @@ def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
 
     - candidates come from the union of L tables, so recall is
       1-(1-P)^L per neighbor instead of P per table;
-    - ``probe_hamming=1`` turns on QUERY-SIDE multi-probe: each query
+    - QUERY-SIDE multi-probe at Hamming distance 1: each query
       also probes the n_planes buckets one bit-flip away (query side
       is the 1/query_mod subset, so the fan-out multiplies the small
       side of the join only), raising the per-table hit probability
       from p^b to p^b + b*p^(b-1)*(1-p);
-    - buckets larger than ``max_bucket`` are dropped per table (a
+    - buckets larger than ``MAX_BUCKET`` are dropped per table (a
       dense-cluster guard: the pair blowup of one megabucket is capped
-      at max_bucket^2 while its members stay reachable through their
+      at MAX_BUCKET^2 while its members stay reachable through their
       other L-1 tables);
     - the expensive array math runs once per DISTINCT candidate pair,
       after an id-only dedup, not once per (table, pair).
@@ -312,8 +313,8 @@ def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
     counter ``lsh_recall_at_5``): the driver embeddings are NEAR-
     UNIFORM (true top-5 cosines only 0.27-0.45, barely above the
     ~0 of random pairs), the adversarial regime for any ANN index —
-    bucketing alone (probe_hamming=0) measures 0.47 there, and the
-    default hamming-1 multi-probe raises it to 0.96 at the cost of a
+    bucketing alone (no multi-probe) measures 0.47 there, and the
+    hamming-1 multi-probe raises it to 0.96 at the cost of a
     large candidate fraction (on a corpus this uniform, ANY >=0.9
     recall method must inspect most pairs; that is a property of the
     data, not the index). On a clustered corpus (the realistic
@@ -321,18 +322,16 @@ def cosine_topk_lsh(emb: DataFrame, k: int = 5, query_mod: int = 50,
     even without multi-probe, with a small candidate fraction.
     """
     e = _vectors(emb)
-    banded = _lsh_buckets(e, n_tables, n_planes, dim, max_bucket)
-    qb = _queries(banded, query_mod)
-    if probe_hamming >= 1:
-        # query-side multi-probe: own bucket + every 1-bit flip. The
-        # XOR explode runs on the query subset only; the big data side
-        # keeps exactly one (tbl, bucket) row per table.
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << j))
-              for j in range(n_planes)])
-        qb = qb.select("query_id", "tbl",
-                       F.explode(probes).alias("bucket"))
+    banded = _lsh_buckets(e, n_tables, n_planes)
+    # query-side multi-probe: own bucket + every 1-bit flip. The XOR
+    # explode runs on the query subset only; the big data side keeps
+    # exactly one (tbl, bucket) row per table.
+    probes = F.array(
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << j))
+          for j in range(n_planes)])
+    qb = _queries(banded, query_mod).select(
+        "query_id", "tbl", F.explode(probes).alias("bucket"))
     cand = (qb.join(banded, ["tbl", "bucket"])
             .filter(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id").distinct())
@@ -353,10 +352,7 @@ def recall_at_k(approx: DataFrame, emb: DataFrame, k: int = 5,
 
 
 def embedding_neardup_dedup(emb: DataFrame, threshold: float = 0.35,
-                            use_lsh: bool = False,
-                            n_planes: int = 6, n_tables: int = 10,
-                            dim: int = 64,
-                            max_bucket: int = 4096) -> DataFrame:
+                            use_lsh: bool = False) -> DataFrame:
     """Embedding-cosine near-duplicate removal: drop every vector that
     has a near-duplicate (cosine >= threshold) with a SMALLER vec_id —
     the deterministic keep-first rule of web-corpus dedup pipelines.
@@ -364,19 +360,20 @@ def embedding_neardup_dedup(emb: DataFrame, threshold: float = 0.35,
     use_lsh=False is the exact all-pairs baseline (the correctness
     oracle shape; block-nested-loop at scale). use_lsh=True draws
     candidate pairs from the multi-table hyperplane buckets of
-    ``cosine_topk_lsh`` — the 100 TB path: per-table buckets larger
-    than ``max_bucket`` are dropped (same hot-bucket guard as
-    cosine_topk_lsh — one dense bucket would otherwise still mint
-    O(bucket^2) pairs), so pair count is bounded at max_bucket^2 per
-    surviving bucket instead of N^2, at the cost of LSH recall (a
-    missed pair keeps a duplicate, never drops a non-duplicate).
+    ``cosine_topk_lsh`` (6 planes, 10 tables) — the 100 TB path:
+    per-table buckets larger than ``MAX_BUCKET`` are dropped (same
+    hot-bucket guard as cosine_topk_lsh — one dense bucket would
+    otherwise still mint O(bucket^2) pairs), so pair count is bounded
+    at MAX_BUCKET^2 per surviving bucket instead of N^2, at the cost of
+    LSH recall (a missed pair keeps a duplicate, never drops a
+    non-duplicate).
 
     Cosine is rounded to 9 decimals before the threshold compare so an
     independent evaluator ranks borderline pairs identically.
     """
     e = _vectors(emb)
     if use_lsh:
-        banded = _lsh_buckets(e, n_tables, n_planes, dim, max_bucket)
+        banded = _lsh_buckets(e, 10, 6)
         cand = (banded.withColumnRenamed("vec_id", "query_id")
                 .join(banded, ["tbl", "bucket"])
                 .filter(F.col("query_id") < F.col("vec_id"))
@@ -422,7 +419,7 @@ def assign_cells(emb: DataFrame, centroids: list) -> DataFrame:
         "vec_id", _argmax(_cell_sims(centroids)).alias("cid"))
 
 
-def quantize_embeddings(emb: DataFrame, bits: int = 8) -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """Per-vector symmetric integer quantization of the embedding column.
 
     scale = max|v| / qmax (qmax = 2^(bits-1) - 1); q_i = floor(v_i /
@@ -438,6 +435,7 @@ def quantize_embeddings(emb: DataFrame, bits: int = 8) -> DataFrame:
     ranking runs entirely in integer dot products
     (see ``cosine_topk_quantized``).
     """
+    bits = 8
     qmax = (1 << (bits - 1)) - 1
     d = _vectors(emb)
     amax = F.aggregate(F.col("v"), F.lit(0.0),
@@ -454,8 +452,8 @@ def quantize_embeddings(emb: DataFrame, bits: int = 8) -> DataFrame:
     return d.select("vec_id", "scale", q.alias("qvec"))
 
 
-def cosine_topk_quantized(emb: DataFrame, k: int = 5, query_mod: int = 50,
-                          bits: int = 8) -> DataFrame:
+def cosine_topk_quantized(emb: DataFrame, k: int = 5, query_mod: int = 50
+                          ) -> DataFrame:
     """Top-k cosine neighbors ranked on int8-quantized vectors.
 
     Same join/rank shape as ``cosine_topk_bruteforce`` (and composes
@@ -466,7 +464,7 @@ def cosine_topk_quantized(emb: DataFrame, k: int = 5, query_mod: int = 50,
     which is what makes the DuckDB oracle parity exact rather than
     approximate.
     """
-    q8 = quantize_embeddings(emb, bits=bits)
+    q8 = quantize_embeddings(emb)
     # integer dots and self-dots in the block kernel are exactly
     # representable in float64, so every reassociation is EXACT here —
     # sqrt/divide/round then match bit for bit

@@ -75,7 +75,7 @@ def _shingles(col, n: int = 3):
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
-                        n: int = 3, max_df: int | None = None) -> DataFrame:
+                        max_df: int | None = None) -> DataFrame:
     """Near-duplicate pairs by exact word-3-gram Jaccard >= threshold.
 
     Inverted-index self-join on shingles (selective keys), shared-count
@@ -90,7 +90,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
     MinHash variant below is the principled scale path when exactness
     matters.
     """
-    sh = (docs.select("doc_id", _shingles(F.col("text"), n).alias("sh"))
+    sh = (docs.select("doc_id", _shingles(F.col("text")).alias("sh"))
           .filter(F.size("sh") > 0))
     sizes = sh.select("doc_id", F.size("sh").alias("sz"))
     ex = sh.select("doc_id", F.explode("sh").alias("shingle"))
@@ -114,17 +114,17 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
             .select("id_a", "id_b", "jaccard"))
 
 
-def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
-                      num_hashes: int = 16, bands: int = 4,
-                      n: int = 3) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash + banded LSH near-dup candidates, exact-Jaccard verified.
 
     Scale path of ``ngram_jaccard_pairs``: 16 minhash signatures from
     seeded xxhash64, 4 bands x 4 rows; only band-colliding pairs are
     verified. Probabilistic recall (not oracle-exact by construction).
     """
+    num_hashes = 16
+    bands = 4
     rows = num_hashes // bands
-    sh = (docs.select("doc_id", _shingles(F.col("text"), n).alias("sh"))
+    sh = (docs.select("doc_id", _shingles(F.col("text")).alias("sh"))
           .filter(F.size("sh") > 0))
     ex = sh.select("doc_id", F.explode("sh").alias("shingle"))
     mins = ex.groupBy("doc_id").agg(*[
@@ -427,7 +427,7 @@ PII_PATTERNS = (
 )
 
 
-def pii_scrub_expr(col: str = "text"):
+def pii_scrub_expr():
     """Scrubbed text as a plain Column (emails/phones/IPv4 replaced by
     typed placeholder tokens) — row-pure JVM ``regexp_replace`` chain,
     zero shuffles, composes into curation chains per the PLANS.md rule
@@ -435,7 +435,7 @@ def pii_scrub_expr(col: str = "text"):
     order is fixed (email, phone, ipv4): earlier replacements cannot
     create later patterns' matches because placeholders contain no
     digits or ``@``."""
-    out = F.col(col)
+    out = F.col("text")
     for _, pat, repl in PII_PATTERNS:
         out = F.regexp_replace(out, pat, repl)
     return out
@@ -443,9 +443,8 @@ def pii_scrub_expr(col: str = "text"):
 
 # --- benchmark decontamination ----------------------------------------
 
-def decontaminate(docs: DataFrame, eval_texts: DataFrame, n: int = 8,
-                  text_col: str = "text",
-                  eval_text_col: str = "text") -> DataFrame:
+def decontaminate(docs: DataFrame, eval_texts: DataFrame, n: int = 8
+                  ) -> DataFrame:
     """Flag training docs that share any word ``n``-gram with an
     evaluation corpus (benchmark decontamination, the standard
     pre-training hygiene step).
@@ -466,10 +465,10 @@ def decontaminate(docs: DataFrame, eval_texts: DataFrame, n: int = 8,
     def grams(col):
         return F.array_distinct(word_ngram_array(F.col(col), n))
 
-    ev = (eval_texts.select(F.explode(grams(eval_text_col))
+    ev = (eval_texts.select(F.explode(grams("text"))
                             .alias("gram")).distinct())
     hits = (docs.select("doc_id",
-                        F.explode(grams(text_col)).alias("gram"))
+                        F.explode(grams("text")).alias("gram"))
             .join(broadcast(ev), "gram")
             .groupBy("doc_id")
             .agg(F.count("*").cast("long")
@@ -481,9 +480,7 @@ def decontaminate(docs: DataFrame, eval_texts: DataFrame, n: int = 8,
 
 
 def remove_repeated_spans(docs: DataFrame, span_tokens: int = 50,
-                          min_count: int = 2,
-                          max_positions_per_gram: int = 10000
-                          ) -> DataFrame:
+                          min_count: int = 2) -> DataFrame:
     """Cut every token span that repeats across the corpus — the
     substring-level exact dedup of Lee et al. 2022 ("Deduplicating
     Training Data Makes Language Models Better"), which removes
@@ -513,10 +510,10 @@ def remove_repeated_spans(docs: DataFrame, span_tokens: int = 50,
     and the island merge + rebuild shuffle only FLAGGED docs' rows
     (the untouched majority never leaves its scan partition — it
     re-enters via a left join on the rewritten minority).
-    ``max_positions_per_gram`` caps a degenerate gram's fan-in (e.g.
-    the empty-ish token runs of machine text) the same way the LSH
-    hot-bucket guard does; capped grams keep their first N positions
-    per the count ordering, a documented under-removal.
+    A cap of 10000 positions per gram bounds a degenerate gram's
+    fan-in (e.g. the empty-ish token runs of machine text) the same way
+    the LSH hot-bucket guard does; capped grams keep their first 10000
+    positions per the count ordering, a documented under-removal.
 
     Determinism: every decision is a pure function of the corpus
     multiset (no hashing, no RNG) — the full pipeline is replayed
@@ -544,7 +541,7 @@ def remove_repeated_spans(docs: DataFrame, span_tokens: int = 50,
                .filter(F.col("_n") >= min_count)
                .withColumn("_rn", F.row_number().over(
                    wg.orderBy("doc_id", "p")))
-               .filter(F.col("_rn") <= max_positions_per_gram)
+               .filter(F.col("_rn") <= 10000)
                .select("doc_id", "p"))
 
     # gaps-and-islands per doc: a window [p, p+W) extends the current
@@ -591,37 +588,7 @@ def remove_repeated_spans(docs: DataFrame, span_tokens: int = 50,
     return out
 
 
-def content_digests(docs: DataFrame) -> DataFrame:
-    """One 16-byte content digest row per distinct text —
-    ``dedup_against``'s historical-store format (md5: the same
-    128-bit collision argument as ``exact_dedup``)."""
-    return docs.select(F.unhex(F.md5("text")).alias("h")).distinct()
-
-
-def dedup_against(docs: DataFrame, seen: DataFrame) -> DataFrame:
-    """Incremental exact dedup: drop docs whose text was already
-    ingested (``seen`` = ``content_digests`` of the historical
-    corpus), then exact-dedup within the batch (keep min doc_id).
-
-    The production loop for a daily crawl: yesterday's store is keyed
-    by digest only — the historical TEXT never re-shuffles, which is
-    the entire point (the store is petabytes; the digest table is
-    16 bytes/doc). Both joins are on the fixed-width digest; AQE
-    broadcasts the store side automatically when a small backfill
-    batch meets it, and the batch's within-dedup window reuses the
-    same shuffle key.
-    """
-    d = docs.withColumn("_h", F.unhex(F.md5("text")))
-    fresh = d.join(seen.select(F.col("h").alias("_h")), "_h",
-                   "left_anti")
-    keep = (fresh.withColumn(
-        "_keep", F.min("doc_id").over(Window.partitionBy("_h")))
-        .filter(F.col("doc_id") == F.col("_keep"))
-        .drop("_h", "_keep"))
-    return keep
-
-
-def normalize_text_expr(col="text"):
+def normalize_text_expr():
     """Standard pre-tokenization cleanup as a row-pure Column (zero
     shuffles, composes like ``pii_scrub_expr``):
 
@@ -636,8 +603,8 @@ def normalize_text_expr(col="text"):
     information the dedup/fingerprint family may key on — run them in
     the tokenizer where the loss is scoped.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    no_ctl = F.regexp_replace(c, "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]", "")
+    no_ctl = F.regexp_replace(F.col("text"),
+                              "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]", "")
     one_ws = F.regexp_replace(no_ctl, "[ \\t\\n\\r]+", " ")
     return F.trim(one_ws)
 
@@ -651,18 +618,8 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have",
 _GOPHER_BULLETS = ("•", "-", "*")
 
 
-def gopher_flags_expr(col: str = "text", min_words: int = 50,
-                      max_words: int = 100_000,
-                      min_mean_word_len: float = 3.0,
-                      max_mean_word_len: float = 10.0,
-                      max_symbol_ratio: float = 0.1,
-                      max_bullet_frac: float = 0.9,
-                      max_ellipsis_frac: float = 0.3,
-                      min_alpha_frac: float = 0.8,
-                      min_stopwords: int = 2,
-                      max_dup_line_frac: float = 0.3,
-                      max_dup_line_char_frac: float = 0.2):
-    """The Gopher document-quality rules as ONE struct Column of
+def gopher_flags_expr():
+    """The Gopher document-quality rules over ``text`` as ONE struct Column of
     booleans plus an overall ``pass`` — row-pure JVM column algebra
     (splits / higher-order array functions), so the whole rule set
     rides inside the scan stage with zero shuffles and DuckDB can
@@ -670,7 +627,7 @@ def gopher_flags_expr(col: str = "text", min_words: int = 50,
 
     Flags are True when the document VIOLATES the rule:
 
-    * ``bad_word_count``    word count outside [min_words, max_words]
+    * ``bad_word_count``    word count outside [50, 100000]
     * ``bad_mean_word_len`` mean word length outside [3, 10]
     * ``bad_symbol_ratio``  ('#' + '...') occurrences / words > 0.1
     * ``bad_bullet_lines``  > 90% of lines start with a bullet
@@ -683,7 +640,7 @@ def gopher_flags_expr(col: str = "text", min_words: int = 50,
     Fractions over empty denominators are treated as non-violations
     (an empty doc fails ``bad_word_count`` anyway).
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     words = F.filter(F.split(c, r"\s+"), lambda w: w != "")
     n_w = F.size(words)
     sum_wlen = F.aggregate(words, F.lit(0),
@@ -720,18 +677,16 @@ def gopher_flags_expr(col: str = "text", min_words: int = 50,
     frac = lambda num, den: F.when(den > 0, num / den) \
         .otherwise(F.lit(0.0))  # noqa: E731
     flags = {
-        "bad_word_count": (n_w < min_words) | (n_w > max_words),
-        "bad_mean_word_len": (mean_wlen < min_mean_word_len)
-        | (mean_wlen > max_mean_word_len),
-        "bad_symbol_ratio": sym_ratio > max_symbol_ratio,
-        "bad_bullet_lines": frac(bullet, n_l) > max_bullet_frac,
-        "bad_ellipsis_lines": frac(ell_end, n_l) > max_ellipsis_frac,
-        "bad_alpha_words": frac(alpha, n_w) < min_alpha_frac,
-        "bad_stopwords": stops < min_stopwords,
-        "bad_dup_lines": frac(n_l - n_dl, n_l) > max_dup_line_frac,
+        "bad_word_count": (n_w < 50) | (n_w > 100_000),
+        "bad_mean_word_len": (mean_wlen < 3.0) | (mean_wlen > 10.0),
+        "bad_symbol_ratio": sym_ratio > 0.1,
+        "bad_bullet_lines": frac(bullet, n_l) > 0.9,
+        "bad_ellipsis_lines": frac(ell_end, n_l) > 0.3,
+        "bad_alpha_words": frac(alpha, n_w) < 0.8,
+        "bad_stopwords": stops < 2,
+        "bad_dup_lines": frac(n_l - n_dl, n_l) > 0.3,
         "bad_dup_line_chars":
-            frac(line_chars - dist_chars, line_chars)
-            > max_dup_line_char_frac,
+            frac(line_chars - dist_chars, line_chars) > 0.2,
     }
     passed = None
     for v in flags.values():
@@ -740,12 +695,11 @@ def gopher_flags_expr(col: str = "text", min_words: int = 50,
                     passed.alias("pass"))
 
 
-def gopher_filter(docs: DataFrame, col: str = "text",
-                  **thresholds) -> DataFrame:
+def gopher_filter(docs: DataFrame) -> DataFrame:
     """Keep only documents passing every Gopher rule — a narrow
     filter (`gopher_flags_expr` is row-pure), composable into the
     curation chain at zero shuffle cost."""
-    return docs.filter(gopher_flags_expr(col, **thresholds)["pass"])
+    return docs.filter(gopher_flags_expr()["pass"])
 
 
 def latest_crawl(pages: DataFrame, url_col: str = "url",

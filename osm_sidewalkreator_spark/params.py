@@ -7,18 +7,13 @@ because the reference's golden fixtures were produced by it.
 All distances in meters.
 """
 
-# --- sidewalk generation (reference parameters.py:30-60, 108-111) ---
+# --- sidewalk generation (reference parameters.py:30-60) ---
 DEFAULT_CURVE_RADIUS = 3.0          # parameters.py:30
 MIN_D_TO_BUILDING = 1.0             # parameters.py:33
-BIG_BUFFER_D = 10_000.0             # parameters.py:42 (not needed: we extract holes directly)
 MINIMAL_BUFFER = 3.0                # parameters.py:45
-D_TO_ADD_INTERP_D = 2.0             # parameters.py:48
 PERC_DRAW_KERBS = 25.0              # headless path: full_sidewalkreator_bbox_algorithm.py:889 (GUI: 30, parameters.py:51)
 PERC_TOL_CROSSINGS = 25.0           # parameters.py:54
-PERC_TO_INTERPOLATE = 0.4           # parameters.py:57
 D_TO_ADD_TO_EACH_SIDE = 1.0         # parameters.py:60
-FALLBACK_DEFAULT_WIDTH = 6.0        # parameters.py:108
-MAX_SIDEWALK_WIDTH_METERS = 25.0    # parameters.py:111
 
 # --- cleaning / filtering (reference parameters.py:143-172) ---
 PROTOBLOCKS_BUFFER = 0.5            # parameters.py:143
@@ -36,8 +31,6 @@ ABS_MAX_CROSSING_LEN = 100.0        # parameters.py:172
 # --- crossings, headless-path constants ---
 # full_sidewalkreator_bbox_algorithm.py:683 (endpoint search buffer, m)
 ENDPOINT_SEARCH_BUFFER = 2.0
-# full_sidewalkreator_bbox_algorithm.py:722 (>=1 other street at endpoint)
-MIN_OTHER_STREETS_AT_ENDPOINT = 1
 # full_sidewalkreator_bbox_algorithm.py:827 (min segment length for crossing)
 MIN_SEG_LEN_FOR_CROSSING = 20.0
 KERB_PERC = PERC_DRAW_KERBS / 100.0
@@ -81,7 +74,6 @@ MIN_VALID_WIDTH = 0.5               # drop classes below (osm_sidewalkreator.py:
 
 # --- engine knobs (no reference analog: Spark-scale parameters) ---
 ARC_SEGMENTS_PER_QUADRANT = 5       # buffer arc discretization (QGIS segments=5 default)
-SNAP_GRID = 1e-6                    # coordinate snap grid for noding, m
 TILE_SIZE_M = 512.0                 # per-tile geometry pipeline tile edge, m
 # halo must exceed the geometric influence radius: half the largest city
 # block (ownership is by centroid/representative point) + max buffer

@@ -46,12 +46,10 @@ def curation_stages(docs: DataFrame, *, normalize: bool = False,
                     langs: tuple[str, ...] | None = None,
                     max_dup_3gram: float | None = None,
                     max_boilerplate: float | None = None,
-                    boilerplate_df: int = 5,
                     scrub_pii: bool = False,
                     strip_spans_tokens: int | None = None,
                     max_nll: float | None = None,
                     decontaminate_against: DataFrame | None = None,
-                    decontam_ngram: int = 8,
                     jaccard: float = 0.5, chunk_tokens: int = 128,
                     overlap: int = 16) -> dict[str, DataFrame]:
     """The curation chain with its intermediates exposed: returns
@@ -63,14 +61,14 @@ def curation_stages(docs: DataFrame, *, normalize: bool = False,
     Optional filters: ``max_dup_3gram`` drops docs whose in-document
     duplicate-3-gram fraction exceeds it (row-pure — costs nothing);
     ``max_boilerplate`` drops docs whose corpus-common-shingle ratio
-    (``common_shingle_ratio`` with ``boilerplate_df``) exceeds it —
+    (``common_shingle_ratio``, shingles in more than 5 docs) exceeds it —
     this one is a corpus-level statistic, so enabling it legitimately
     adds the DF-index shuffles + one doc_id join.
 
     ``scrub_pii`` rewrites ``text`` through the row-pure
     ``pii_scrub_expr`` placeholder chain BEFORE any scoring (zero
     added shuffles). ``decontaminate_against`` drops docs sharing any
-    word ``decontam_ngram``-gram with the given (small) eval corpus:
+    word 8-gram with the given (small) eval corpus:
     the eval grams broadcast, corpus grams explode-join them, and the
     flagged id set broadcasts back into a left-anti — no corpus-wide
     shuffle is added.
@@ -123,13 +121,12 @@ def curation_stages(docs: DataFrame, *, normalize: bool = False,
     if max_dup_3gram is not None:
         d = d.filter(TX.dup_ngram_expr(3) <= F.lit(max_dup_3gram))
     if max_boilerplate is not None:
-        bp = TX.common_shingle_ratio(d, max_df=boilerplate_df) \
+        bp = TX.common_shingle_ratio(d) \
             .filter(F.col("common_ratio") > max_boilerplate) \
             .select("doc_id")
         d = d.join(bp, "doc_id", "left_anti")
     if decontaminate_against is not None:
-        flagged = (TX.decontaminate(d, decontaminate_against,
-                                    n=decontam_ngram)
+        flagged = (TX.decontaminate(d, decontaminate_against)
                    .filter(F.col("n_contaminated_ngrams") > 0)
                    .select("doc_id"))
         d = d.join(F.broadcast(flagged), "doc_id", "left_anti")
@@ -177,24 +174,10 @@ def curation_stages(docs: DataFrame, *, normalize: bool = False,
             "chunks": chunks}
 
 
-def curate_corpus(docs: DataFrame, *, normalize: bool = False,
-                  block_domains: list | None = None,
-                  max_per_domain: int | None = None,
-                  domain_cap_exact: bool = False,
-                  min_quality: float = 0.0,
-                  gopher: bool = False,
-                  langs: tuple[str, ...] | None = None,
-                  max_dup_3gram: float | None = None,
-                  max_boilerplate: float | None = None,
-                  boilerplate_df: int = 5,
-                  scrub_pii: bool = False,
-                  strip_spans_tokens: int | None = None,
-                  max_nll: float | None = None,
-                  decontaminate_against: DataFrame | None = None,
-                  decontam_ngram: int = 8,
-                  jaccard: float = 0.5, chunk_tokens: int = 128,
-                  overlap: int = 16) -> DataFrame:
-    """Curated, deduplicated, chunked corpus ready for tokenization.
+def curate_corpus(docs: DataFrame, **opts) -> DataFrame:
+    """Curated, deduplicated, chunked corpus ready for tokenization:
+    the ``chunks`` frame of ``curation_stages``, whose keyword options
+    ``opts`` are.
 
     Returns one row per chunk: (doc_id, lang, quality, cluster_id,
     cluster_size, chunk_idx, n_chunks, n_chunk_tokens, chunk_text).
@@ -204,14 +187,4 @@ def curate_corpus(docs: DataFrame, *, normalize: bool = False,
     languages (None keeps all); near-dup clusters keep their
     highest-quality member (ties -> lowest doc_id).
     """
-    return curation_stages(
-        docs, normalize=normalize, block_domains=block_domains,
-        max_per_domain=max_per_domain,
-        domain_cap_exact=domain_cap_exact,
-        min_quality=min_quality, gopher=gopher, langs=langs,
-        max_dup_3gram=max_dup_3gram, max_boilerplate=max_boilerplate,
-        boilerplate_df=boilerplate_df, scrub_pii=scrub_pii,
-        strip_spans_tokens=strip_spans_tokens, max_nll=max_nll,
-        decontaminate_against=decontaminate_against,
-        decontam_ngram=decontam_ngram, jaccard=jaccard,
-        chunk_tokens=chunk_tokens, overlap=overlap)["chunks"]
+    return curation_stages(docs, **opts)["chunks"]

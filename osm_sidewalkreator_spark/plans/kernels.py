@@ -107,8 +107,6 @@ def _within_buffered_blocks(segs: np.ndarray, blocks: list[np.ndarray],
 
 
 def dangle_keep_mask(segs: np.ndarray, blocks: list[np.ndarray],
-                     tol: float = 1e-6,
-                     buffer: float = P.PROTOBLOCKS_BUFFER,
                      bounds: tuple | None = None) -> np.ndarray:
     """Single-pass dead-end removal mask with the cul-de-sac exemption
     (``remove_lines_from_no_block`` ``generic_functions.py:859-918``,
@@ -121,6 +119,7 @@ def dangle_keep_mask(segs: np.ndarray, blocks: list[np.ndarray],
     as connected (without this, tiling would invent dangles at every
     halo edge and per-tile output would diverge from the global run).
     """
+    tol = 1e-6
     n = len(segs)
     if n == 0:
         return np.zeros(0, dtype=bool)
@@ -136,15 +135,16 @@ def dangle_keep_mask(segs: np.ndarray, blocks: list[np.ndarray],
         he = he | on_edge(segs[:, 2], segs[:, 3])
     keep = hs & he
     if not keep.all():
-        exempt = _within_buffered_blocks(segs[~keep], blocks, buffer)
+        exempt = _within_buffered_blocks(segs[~keep], blocks,
+                                         P.PROTOBLOCKS_BUFFER)
         keep[np.flatnonzero(~keep)[exempt]] = True
     return keep
 
 
 def filter_protoblocks_by_existing_sidewalks(
         blocks: list[np.ndarray], esw_segs: np.ndarray,
-        esw_way_ids: np.ndarray, esw_way_lens: np.ndarray,
-        cutoff: float = P.CUTOFF_PERCENT_PROTOBLOCK) -> list[np.ndarray]:
+        esw_way_ids: np.ndarray,
+        esw_way_lens: np.ndarray) -> list[np.ndarray]:
     """A10: drop protoblocks already surrounded by mapped sidewalks
     (osm_sidewalkreator.py:733-762,
     full_sidewalkreator_bbox_algorithm.py:1440-1487).
@@ -152,8 +152,8 @@ def filter_protoblocks_by_existing_sidewalks(
     For each protoblock, incident existing-sidewalk WAYS (any segment
     not disjoint from the block polygon) contribute their FULL feature
     length once (generic_functions.py:1448-1456); drop the block when
-    ``((inc_len/4)^2 / area) * 100 > cutoff`` — the (len/4)^2 square
-    approximation of the enclosed sidewalk loop's area.
+    ``((inc_len/4)^2 / area) * 100 > P.CUTOFF_PERCENT_PROTOBLOCK`` — the
+    (len/4)^2 square approximation of the enclosed sidewalk loop's area.
     """
     if not blocks or len(esw_segs) == 0:
         return blocks
@@ -174,27 +174,26 @@ def filter_protoblocks_by_existing_sidewalks(
         inc_len = float(esw_way_lens[inc][first].sum())
         area = abs(core.ring_signed_area(ring))
         ratio = (((inc_len / 4.0) ** 2) / area) * 100.0 if area > 0 else 0.0
-        if ratio <= cutoff:
+        if ratio <= P.CUTOFF_PERCENT_PROTOBLOCK:
             kept.append(ring)
     return kept
 
 
-def protoblocks(noded_segs: np.ndarray, min_area: float = 1.0
-                ) -> list[np.ndarray]:
+def protoblocks(noded_segs: np.ndarray) -> list[np.ndarray]:
     """Polygonize the noded street network into city-block rings (G6).
 
     Dangles never form faces, so pre-removal is not required for
     correctness (the reference removes them for performance).
     """
-    return faces.polygonize(noded_segs, min_area=min_area)
+    return faces.polygonize(noded_segs, min_area=1.0)
 
 
 # ---------- building-distance width shrink ----------
 
-def min_segseg_dists(asegs: np.ndarray, bsegs: np.ndarray,
-                     chunk: int = 64) -> np.ndarray:
+def min_segseg_dists(asegs: np.ndarray, bsegs: np.ndarray) -> np.ndarray:
     """Min distance from each segment in ``asegs`` to ANY segment in
     ``bsegs`` (0 when they intersect). Chunked pairwise broadcast."""
+    chunk = 64
     n = len(asegs)
     out = np.full(n, np.inf)
     if len(bsegs) == 0 or n == 0:
@@ -246,53 +245,50 @@ def _segs_intersect_matrix(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 
 
 def shrink_widths_by_buildings(segs: np.ndarray, widths: np.ndarray,
-                               building_segs: np.ndarray,
-                               min_d: float = P.MIN_D_TO_BUILDING,
-                               d_to_add: float = P.D_TO_ADD_TO_EACH_SIDE,
-                               min_width: float = P.MINIMAL_BUFFER
-                               ) -> np.ndarray:
+                               building_segs: np.ndarray) -> np.ndarray:
     """G20 building-overlap width shrink (osm_sidewalkreator.py:1843-1893):
 
     ac = w/2 + d_to_add/2; dif = (dist_to_buildings - min_d) - ac;
-    if dif < 0 -> new_width = max(2*(ac + dif), min_width).
+    if dif < 0 -> new_width = max(2*(ac + dif), min_width), with d_to_add,
+    min_d and min_width = P.D_TO_ADD_TO_EACH_SIDE, P.MIN_D_TO_BUILDING and
+    P.MINIMAL_BUFFER.
     """
     widths = np.asarray(widths, dtype=np.float64).copy()
     if len(building_segs) == 0 or len(segs) == 0:
         return widths
     d = min_segseg_dists(np.asarray(segs, dtype=np.float64),
                          np.asarray(building_segs, dtype=np.float64))
-    ac = widths / 2 + d_to_add / 2
-    dif = (d - min_d) - ac
-    new_w = np.maximum(2 * (ac + dif), min_width)
+    ac = widths / 2 + P.D_TO_ADD_TO_EACH_SIDE / 2
+    dif = (d - P.MIN_D_TO_BUILDING) - ac
+    new_w = np.maximum(2 * (ac + dif), P.MINIMAL_BUFFER)
     return np.where(dif < 0, new_w, widths)
 
 
 # ---------- sidewalk generation ----------
 
-def sidewalk_rings(noded_segs: np.ndarray, widths: np.ndarray,
-                   d_to_add: float = P.D_TO_ADD_TO_EACH_SIDE,
-                   curve_radius: float = P.DEFAULT_CURVE_RADIUS,
-                   min_ratio: float = P.MIN_AREA_PERIMETER_RATIO,
-                   nseg: int = P.ARC_SEGMENTS_PER_QUADRANT
+def sidewalk_rings(noded_segs: np.ndarray, widths: np.ndarray
                    ) -> tuple[list[np.ndarray], list[np.ndarray]]:
     """Street network -> sidewalk axis rings.
 
-    buffer(width/2 + d_to_add/2, round) -> dissolve -> close(curve_radius)
-    -> hole rings -> drop area/perimeter < min_ratio
+    buffer(width/2 + P.D_TO_ADD_TO_EACH_SIDE/2, round) -> dissolve
+    -> close(P.DEFAULT_CURVE_RADIUS) -> hole rings
+    -> drop area/perimeter < P.MIN_AREA_PERIMETER_RATIO
     (sidewalk_generation_logic.py:292-430 + filter at :44-77).
 
     Returns (sidewalk_rings, closed_exterior_rings). The exterior rings
     are returned for the protoblock-disjoint filter and zone logic.
     """
-    radii = np.asarray(widths, dtype=np.float64) / 2 + d_to_add / 2
+    nseg = P.ARC_SEGMENTS_PER_QUADRANT
+    radii = (np.asarray(widths, dtype=np.float64) / 2
+             + P.D_TO_ADD_TO_EACH_SIDE / 2)
     u_sets, ext_u, holes_u = morph.buffer_union(noded_segs, radii, nseg)
     ext_c, holes_c = morph.morphological_close(u_sets, ext_u + holes_u,
-                                               curve_radius, nseg)
+                                               P.DEFAULT_CURVE_RADIUS, nseg)
     out = []
     for h in holes_c:
         area = core.ring_signed_area(h)
         perim = core.ring_perimeter(h)
-        if perim > 0 and area / perim >= min_ratio:
+        if perim > 0 and area / perim >= P.MIN_AREA_PERIMETER_RATIO:
             out.append(h)
     return out, ext_c
 
@@ -302,27 +298,18 @@ def sidewalk_rings(noded_segs: np.ndarray, widths: np.ndarray,
 def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
                         sidewalk_segs: np.ndarray,
                         way_ids: np.ndarray | None = None,
-                        search_buffer: float = P.ENDPOINT_SEARCH_BUFFER,
-                        min_seg_len: float = P.MIN_SEG_LEN_FOR_CROSSING,
-                        kerb_perc: float = P.KERB_PERC,
-                        curve_radius: float = P.DEFAULT_CURVE_RADIUS,
-                        d_to_add: float = P.D_TO_ADD_TO_EACH_SIDE,
-                        perc_tol: float = P.PERC_TOL_CROSSINGS,
                         remove_above_tol: bool = False,
-                        knn_max_dist: float = P.KNN_MAX_DIST,
-                        enlarge: bool = False,
-                        max_iter: int = P.MAX_CROSSINGS_ITERATIONS,
-                        increment_inward: float = P.INCREMENT_INWARD,
-                        abs_max_len: float = P.ABS_MAX_CROSSING_LEN):
+                        enlarge: bool = False):
     """Crossing 5-point polylines + kerb points at street endpoints.
 
     Mirrors ``generate_crossings_and_kerbs``
     (full_sidewalkreator_bbox_algorithm.py:515-938): for each split street
-    segment endpoint with >=1 other street within ``search_buffer``,
-    interpolate a crossing center inward, cast a perpendicular ray of
-    half-span (max_w/2 + curve + d_to_add + 0.5) both ways, take the
-    nearest sidewalk intersections as A/E, kerbs B/D at ``kerb_perc``
-    along A->C and E->C.
+    segment endpoint with >=1 other street within
+    ``P.ENDPOINT_SEARCH_BUFFER``, interpolate a crossing center inward,
+    cast a perpendicular ray of half-span (max_w/2 + curve + d_to_add +
+    0.5, with ``P.DEFAULT_CURVE_RADIUS`` and ``P.D_TO_ADD_TO_EACH_SIDE``)
+    both ways, take the nearest sidewalk intersections as A/E, kerbs B/D
+    at ``P.KERB_PERC`` along A->C and E->C.
 
     ``way_ids``: optional per-segment parent-way labels. Segments of the
     SAME way never count as "other streets" at an endpoint — the
@@ -333,8 +320,8 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     Quality attributes (GUI path, osm_sidewalkreator.py:1642-1674):
     every crossing carries ``ortho_len_dif`` = round(len - (d_to_add +
     own_width), 3), ``above_tol`` = len > (d_to_add + own_width) *
-    (1 + perc_tol/100), and ``nearest_centerpoint`` = rounded distance
-    to the closest other crossing center within ``knn_max_dist``
+    (1 + P.PERC_TOL_CROSSINGS/100), and ``nearest_centerpoint`` = rounded
+    distance to the closest other crossing center within ``P.KNN_MAX_DIST``
     (:1727-1764; None when no neighbor). ``remove_above_tol`` applies
     the GUI's optional drop (checkbox default is OFF, matching the
     headless path that produced the golden fixtures).
@@ -343,10 +330,10 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     (osm_sidewalkreator.py:3035-3170) instead of the single-shot ray:
     per side, a missing sidewalk intersection doubles that side's reach;
     a crossing longer than the tolerance steps the center inward by
-    ``increment_inward`` (while it stays short of the segment midpoint);
-    longer than ``abs_max_len`` or ``max_iter`` iterations kills the
-    crossing. The headless path (golden fixtures) is the default
-    single-shot.
+    ``P.INCREMENT_INWARD`` (while it stays short of the segment midpoint);
+    longer than ``P.ABS_MAX_CROSSING_LEN`` or ``P.MAX_CROSSINGS_ITERATIONS``
+    iterations kills the crossing. The headless path (golden fixtures)
+    is the default single-shot.
 
     Returns (crossings, kerbs):
     - crossings: list of dicts {coords (5,2), length, center (2,),
@@ -364,6 +351,7 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     lens = core.segment_lengths(noded_segs)
 
     # ---- endpoint adjacency via grid-hash candidates (vectorized) ----
+    search_buffer = P.ENDPOINT_SEARCH_BUFFER
     # endpoint within search_buffer of another segment; the reference
     # buffers the endpoint and tests polygon intersection (:683-701).
     # A point within distance r of a segment lies inside the segment's
@@ -405,7 +393,7 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     b = noded_segs[seg_i, 2:]
     ln = lens[seg_i]
     mw = max_w[sel]
-    d_interp = mw * 0.5 + curve_radius + d_to_add
+    d_interp = mw * 0.5 + P.DEFAULT_CURVE_RADIUS + P.D_TO_ADD_TO_EACH_SIDE
     d_interp = np.where(d_interp > 0.5 * ln, ln * 0.1, d_interp)  # :742-744
 
     def _interp(dist):
@@ -413,7 +401,8 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
         return a + t[:, None] * (b - a)
 
     is_p0 = end_i == 0
-    raw_d_interp = mw * 0.5 + curve_radius + d_to_add
+    raw_d_interp = (mw * 0.5 + P.DEFAULT_CURVE_RADIUS
+                    + P.D_TO_ADD_TO_EACH_SIDE)
     di_valid = raw_d_interp <= 0.5 * ln   # GUI "curr_distance" usable
     center = np.where(is_p0[:, None], _interp(d_interp),
                       _interp(ln - d_interp))
@@ -426,7 +415,8 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     ok = norm > 0
     sel_ok = np.flatnonzero(ok)
     center = center[sel_ok]
-    half_span = mw[sel_ok] * 0.5 + curve_radius + d_to_add + 0.5
+    half_span = (mw[sel_ok] * 0.5 + P.DEFAULT_CURVE_RADIUS
+                 + P.D_TO_ADD_TO_EACH_SIDE + 0.5)
     perp = np.column_stack([-dvec[sel_ok, 1], dvec[sel_ok, 0]]) \
         / norm[sel_ok][:, None] * half_span[:, None]
     a2p, b2p = a[sel_ok], b[sel_ok]
@@ -444,7 +434,7 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     d_int, di_valid, end_i = d_int[order], di_valid[order], end_i[order]
 
     # min-seg-len drop (:827)
-    keep = ln >= min_seg_len
+    keep = ln >= P.MIN_SEG_LEN_FOR_CROSSING
     center, perp, ln = center[keep], perp[keep], ln[keep]
     w_self, a2p, b2p = w_self[keep], a2p[keep], b2p[keep]
     d_int, di_valid, end_i = d_int[keep], di_valid[keep], end_i[keep]
@@ -505,8 +495,8 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
         # GUI bounded resolution loop replaces unresolved/too-long rays
         best_pt, center, dead = _gui_enlargement_loop(
             center, perp, sw, best_pt, a2p, b2p, ln, end_i == 0, d_int,
-            di_valid, (d_to_add + w_self) * (1 + perc_tol / 100.0),
-            max_iter, increment_inward, abs_max_len)
+            di_valid, (P.D_TO_ADD_TO_EACH_SIDE + w_self)
+            * (1 + P.PERC_TOL_CROSSINGS / 100.0))
         both = (~np.isnan(best_pt[:, 0, 0]) & ~np.isnan(best_pt[:, 1, 0])
                 & ~dead)
     sel_r = np.flatnonzero(both)
@@ -515,8 +505,8 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     A = best_pt[sel_r, 0]
     E = best_pt[sel_r, 1]
     C = center[sel_r]
-    B = A + (C - A) * kerb_perc
-    D = E + (C - E) * kerb_perc
+    B = A + (C - A) * P.KERB_PERC
+    D = E + (C - E) * P.KERB_PERC
     coords = np.stack([A, B, C, D, E], axis=1)    # (k,5,2)
     dif = np.diff(coords, axis=1)
     hyp = np.hypot(dif[:, :, 0], dif[:, :, 1])
@@ -524,16 +514,16 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     length = ((hyp[:, 0] + hyp[:, 1]) + hyp[:, 2]) + hyp[:, 3]
 
     # quality attributes (osm_sidewalkreator.py:1660-1676)
-    ortholen = d_to_add + w_self[sel_r]
+    ortholen = P.D_TO_ADD_TO_EACH_SIDE + w_self[sel_r]
     len_dif = np.round(length - ortholen, 3)
-    above = length > ortholen * (1 + perc_tol / 100.0)
+    above = length > ortholen * (1 + P.PERC_TOL_CROSSINGS / 100.0)
     if remove_above_tol:
         keep2 = ~above
         A, E, C, B, D = A[keep2], E[keep2], C[keep2], B[keep2], D[keep2]
         coords, length = coords[keep2], length[keep2]
         len_dif, above = len_dif[keep2], above[keep2]
     k_final = len(coords)
-    # nearest other crossing center within knn_max_dist (:1727-1764)
+    # nearest other crossing center within P.KNN_MAX_DIST (:1727-1764)
     nearest = [None] * k_final
     if k_final > 1:
         dx = C[:, 0][:, None] - C[:, 0][None, :]
@@ -541,7 +531,7 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
         dd = np.hypot(dx, dy)
         np.fill_diagonal(dd, np.inf)
         d1 = dd.min(axis=1)
-        nearest = [round(float(v), 3) if v <= knn_max_dist else None
+        nearest = [round(float(v), 3) if v <= P.KNN_MAX_DIST else None
                    for v in d1]
 
     for k in range(k_final):
@@ -604,12 +594,12 @@ def _side_ray_hits(cen: np.ndarray, dvec: np.ndarray, sw: np.ndarray
 
 
 def _gui_enlargement_loop(center, perp, sw, best_pt, a2p, b2p, ln, is_p0,
-                          d_int, di_valid, max_len, max_iter,
-                          increment_inward, abs_max_len):
+                          d_int, di_valid, max_len):
     """GUI crossing resolution (osm_sidewalkreator.py:3035-3170): per
     side, double the ray reach while that side misses the sidewalks; a
     too-long crossing steps its center inward while it stays short of
-    the segment midpoint; > ``abs_max_len`` or iteration cap kills it.
+    the segment midpoint; > ``P.ABS_MAX_CROSSING_LEN`` or the iteration
+    cap kills it.
     Vectorized over the active subset each iteration."""
     m = len(center)
     center = center.copy()
@@ -619,7 +609,7 @@ def _gui_enlargement_loop(center, perp, sw, best_pt, a2p, b2p, ln, is_p0,
     cur_d = d_int.copy()
     resolved = np.zeros(m, dtype=bool)
     dead = np.zeros(m, dtype=bool)
-    for _ in range(max_iter + 1):
+    for _ in range(P.MAX_CROSSINGS_ITERATIONS + 1):
         act = np.flatnonzero(~resolved & ~dead)
         if len(act) == 0:
             break
@@ -633,10 +623,10 @@ def _gui_enlargement_loop(center, perp, sw, best_pt, a2p, b2p, ln, is_p0,
         idx = act[bh]
         if len(idx):
             L = np.hypot(Apt[bh, 0] - Ept[bh, 0], Apt[bh, 1] - Ept[bh, 1])
-            kill = L > abs_max_len
+            kill = L > P.ABS_MAX_CROSSING_LEN
             dead[idx[kill]] = True
             toolong = ~kill & (L > max_len[idx]) & di_valid[idx]
-            nd = cur_d[idx] + increment_inward
+            nd = cur_d[idx] + P.INCREMENT_INWARD
             can_step = toolong & (nd < ln[idx] / 2)
             stepi = idx[can_step]
             if len(stepi):
@@ -656,8 +646,7 @@ def _gui_enlargement_loop(center, perp, sw, best_pt, a2p, b2p, ln, is_p0,
 
 # ---------- linework utilities ----------
 
-def clip_segments_to_box(segs: np.ndarray, box: tuple,
-                         attrs: list | None = None):
+def clip_segments_to_box(segs: np.ndarray, box: tuple):
     """Liang-Barsky clip of segments to an axis-aligned box (vectorized).
 
     The tile kernel's guard against geometry leaking in from far outside
@@ -691,7 +680,7 @@ def clip_segments_to_box(segs: np.ndarray, box: tuple,
                           ay[keep] + t1[keep] * dy[keep]])
     return cl, idx
 
-def merge_touching_lines(segs: np.ndarray, snap: float = noding.SNAP,
+def merge_touching_lines(segs: np.ndarray,
                          break_at: np.ndarray | None = None
                          ) -> list[np.ndarray]:
     """linemerge (A3, ``native:mergelines`` via
@@ -701,12 +690,12 @@ def merge_touching_lines(segs: np.ndarray, snap: float = noding.SNAP,
     split-with-lines refinements, where cut locations must stay ends)."""
     if len(segs) == 0:
         return []
-    verts, evi = faces.build_vertices(segs, snap)
+    verts, evi = faces.build_vertices(segs, noding.SNAP)
     deg = np.bincount(evi.ravel(), minlength=len(verts))
     if break_at is not None and len(break_at):
-        q = np.round(verts / snap).astype(np.int64)
+        q = np.round(verts / noding.SNAP).astype(np.int64)
         vk = set(map(tuple, q))
-        bq = np.round(np.asarray(break_at, dtype=np.float64) / snap
+        bq = np.round(np.asarray(break_at, dtype=np.float64) / noding.SNAP
                       ).astype(np.int64)
         brk = set(map(tuple, bq)) & vk
         if brk:
@@ -763,8 +752,7 @@ def merge_touching_lines(segs: np.ndarray, snap: float = noding.SNAP,
 
 
 def clip_lines_outside_polygons(line_segs: np.ndarray,
-                                member_sets: list,
-                                snap: float = noding.SNAP) -> np.ndarray:
+                                member_sets: list) -> np.ndarray:
     """Difference of lines minus polygon union (J3 applied to sidewalk
     lines: ``excluding_exclusion_zones`` osm_sidewalkreator.py:2250-2259).
 
@@ -778,7 +766,7 @@ def clip_lines_outside_polygons(line_segs: np.ndarray,
         morph.polys_boundary_edges(cs.polys) for cs in member_sets
         if len(cs.polys)]) if member_sets else np.empty((0, 4))
     allseg = np.vstack([line_segs, bnd])
-    noded, parent = noding.node_segments(allseg, snap)
+    noded, parent = noding.node_segments(allseg)
     own = parent < len(line_segs)
     noded = noded[own]
     mx = (noded[:, 0] + noded[:, 2]) / 2
@@ -880,7 +868,6 @@ def tile_pipeline(segs: np.ndarray, widths: np.ndarray,
                   existing_sw: tuple | None = None,
                   refine_lines: bool = True,
                   bounds: tuple | None = None,
-                  remove_dead_ends: bool = True,
                   dangle_iterations: int = 1,
                   max_split_len: float | None = None,
                   enlarge_crossings: bool = False,
@@ -931,7 +918,7 @@ def tile_pipeline(segs: np.ndarray, widths: np.ndarray,
     # G15: the reference deletes dead-end stubs BEFORE drawing sidewalks
     # (osm_sidewalkreator.py:803-810), so stubs get no rings/crossings;
     # cul-de-sacs inside the (A10-filtered) block area stay
-    if remove_dead_ends and len(noded):
+    if len(noded):
         for _ in range(max(1, dangle_iterations)):
             dk = dangle_keep_mask(noded, blocks, bounds=bounds)
             if dk.all():

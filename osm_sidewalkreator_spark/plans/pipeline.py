@@ -695,8 +695,6 @@ def run_tiles(spark: SparkSession, tiled: DataFrame, ctx: DataFrame | None,
 
 
 def generate_features(spark: SparkSession, sf_dir: str,
-                      tile_size: float = P.TILE_SIZE_M,
-                      halo: float = P.TILE_HALO_M,
                       **pipe_opts) -> DataFrame:
     """End-to-end: streets -> per-tile sidewalk/crossing/kerb/protoblock
     features (local-TM WKB) with halo-overlap tiling + ownership dedup.
@@ -706,9 +704,9 @@ def generate_features(spark: SparkSession, sf_dir: str,
     ``pipe_opts`` forward to ``kernels.tile_pipeline`` (optional GUI
     parity stages, see ``make_tile_kernel``).
     """
-    tiled, ctx = tiled_inputs(spark, sf_dir, tile_size, halo)
+    tiled, ctx = tiled_inputs(spark, sf_dir)
     return run_tiles(spark, tiled, ctx, tile_census(spark, tiled),
-                     make_tile_kernel(tile_size, halo, **pipe_opts),
+                     make_tile_kernel(P.TILE_SIZE_M, **pipe_opts),
                      FEATURE_SCHEMA)
 
 

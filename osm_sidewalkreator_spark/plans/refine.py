@@ -15,8 +15,7 @@ from ..geometry import core, gridhash, noding, voronoi
 from . import kernels
 
 
-def polygon_corners(ring: np.ndarray, lo_deg: float = 160.0,
-                    hi_deg: float = 200.0) -> np.ndarray:
+def polygon_corners(ring: np.ndarray) -> np.ndarray:
     """Polygon corner vertices with straight vertices removed (P18,
     ``select_vertex_pol_nodes`` generic_functions.py:1348-1387: interior
     angles in (160°, 200°) are dropped)."""
@@ -29,7 +28,7 @@ def polygon_corners(ring: np.ndarray, lo_deg: float = 160.0,
         np.cross(ring - prev, nxt - ring),
         ((ring - prev) * (nxt - ring)).sum(axis=1))))
     interior = 180.0 - ang  # deviation-from-straight -> interior angle
-    keep = ~((interior > lo_deg) & (interior < hi_deg))
+    keep = ~((interior > 160.0) & (interior < 200.0))
     return ring[keep]
 
 
@@ -46,11 +45,10 @@ def corner_spokes(ring: np.ndarray) -> np.ndarray:
         corners[:, 0], corners[:, 1]])
 
 
-def split_lines_with_lines(lines: list[np.ndarray], cutters: np.ndarray,
-                           tiny_tol: float = P.TINY_SEGMENTS_TOL
+def split_lines_with_lines(lines: list[np.ndarray], cutters: np.ndarray
                            ) -> list[np.ndarray]:
     """Split polylines at intersections with cutter segments (J5 applied
-    to refinement; drop pieces shorter than ``tiny_segments_tol``,
+    to refinement; drop pieces shorter than ``P.TINY_SEGMENTS_TOL``,
     osm_sidewalkreator.py:3225-3246)."""
     if not lines:
         return []
@@ -63,14 +61,16 @@ def split_lines_with_lines(lines: list[np.ndarray], cutters: np.ndarray,
     cut_pts = np.vstack([noded[~own][:, :2], noded[~own][:, 2:]]) \
         if (~own).any() else None
     pieces = kernels.merge_touching_lines(noded[own], break_at=cut_pts)
-    return [p for p in pieces if core.polyline_length(p) >= tiny_tol]
+    return [p for p in pieces
+            if core.polyline_length(p) >= P.TINY_SEGMENTS_TOL]
 
 
-def split_polyline_by_max_len(line: np.ndarray, max_len: float,
-                              percent_add: float = 0.01) -> list[np.ndarray]:
+def split_polyline_by_max_len(line: np.ndarray, max_len: float
+                              ) -> list[np.ndarray]:
     """Split a polyline into equal pieces no longer than ``max_len``
     (G12, ``split_lines_by_max_len`` generic_functions.py:108-121 with
     the anti-float-drift ``percent_add``)."""
+    percent_add = 0.01
     total = core.polyline_length(line)
     if total <= max_len:
         return [line]
@@ -245,8 +245,8 @@ def insert_extra_vertices(lines: list[np.ndarray],
                           ref_nodes: np.ndarray,
                           tol: float,
                           node_owners: np.ndarray | None = None,
-                          line_owners: list | None = None,
-                          eps: float = 1e-9) -> list[np.ndarray]:
+                          line_owners: list | None = None
+                          ) -> list[np.ndarray]:
     """The ``native:snapgeometries`` "insert extra vertices where
     required" refinement that behaviors 0/1 imply (J11,
     generic_functions.py:230-305): after vertices have moved, every
@@ -260,6 +260,7 @@ def insert_extra_vertices(lines: list[np.ndarray],
     are skipped; several nodes on one segment are inserted in order of
     their projection parameter. ``node_owners``/``line_owners`` mirror
     ``snap_lines_to_reference``'s self-snap exclusion."""
+    eps = 1e-9
     if len(ref_nodes) == 0:
         return lines
     out = []
@@ -397,14 +398,14 @@ def export_snap_sequence(sidewalk_lines: list[np.ndarray],
 
 
 def merge_small_stretches(lines: list[np.ndarray],
-                          min_len: float = P.MIN_STRETCH_SIZE,
-                          tol: float = 1e-6, max_iter: int = 50
+                          min_len: float = P.MIN_STRETCH_SIZE
                           ) -> list[np.ndarray]:
     """Merge stretches shorter than ``min_stretch_size`` into a touching
     neighbor (J12, ``try_to_merge_small_stretches``
     osm_sidewalkreator.py:3940-4068). Endpoint-shared lines are
     concatenated; unmatched short orphans are kept (reference keeps
     them too when no neighbor touches)."""
+    tol = 1e-6
     lines = [ln.copy() for ln in lines if len(ln) > 1]
 
     def _cell(p) -> tuple[int, int]:
@@ -412,7 +413,7 @@ def merge_small_stretches(lines: list[np.ndarray],
 
     _ORD = {0: 0, -1: 1}
 
-    for _ in range(max_iter):
+    for _ in range(50):
         lens = [core.polyline_length(ln) for ln in lines]
         small = [i for i, l in enumerate(lens) if l < min_len]
         if not small:
@@ -472,12 +473,12 @@ def merge_small_stretches(lines: list[np.ndarray],
 
 
 def voronoi_split_block(sidewalk_lines: list[np.ndarray],
-                        pois: np.ndarray, block_ring: np.ndarray,
-                        min_pois: int = 3) -> list[np.ndarray]:
+                        pois: np.ndarray, block_ring: np.ndarray
+                        ) -> list[np.ndarray]:
     """Voronoi POI splitting within one protoblock (G11,
     ``voronoi_splitting`` osm_sidewalkreator.py:3493-3557): cells of the
     block's POIs cut the block's sidewalk lines."""
-    if len(pois) < min_pois:
+    if len(pois) < 3:
         return sidewalk_lines
     env = voronoi.envelope_bbox(np.vstack([block_ring, pois]), pad=50.0)
     cells = voronoi.voronoi_cells(pois, env)

@@ -25,7 +25,6 @@ LAST_MINUTELY_STREAM_STATE_ROWS: list[int] = []
 
 def minutely_event_counts_stream(spark: SparkSession, events_dir: str,
                                  query_name: str = "events_stream_agg",
-                                 watermark: str = "10 minutes",
                                  output_mode: str = "append") -> DataFrame:
     """Streaming tumbling-window count/sum per event_type.
 
@@ -35,7 +34,7 @@ def minutely_event_counts_stream(spark: SparkSession, events_dir: str,
 
     The default ``output_mode="append"`` is the production template:
     the watermark finalizes each 1-minute window once event time moves
-    past window.end + watermark, EMITS it exactly once, and EVICTS it
+    past window.end + 10 minutes, EMITS it exactly once, and EVICTS it
     from state — bounded state on a continuous stream. For the bounded
     gate input the caller stages a sentinel row past every real window
     (``_stage_events_with_sentinel`` with ``maxFilesPerTrigger=1``) so
@@ -52,7 +51,7 @@ def minutely_event_counts_stream(spark: SparkSession, events_dir: str,
         # append mode only emits windows the final watermark has passed
         # — on a bounded availableNow input that requires a staged
         # sentinel row past every real window, or the tail of the data
-        # (at least the last `watermark` worth) is silently never
+        # (at least the last 10 minutes' worth) is silently never
         # emitted. Refuse to run lossy rather than return a truncated
         # result (the input is bounded by contract, so this one cheap
         # scan is acceptable).
@@ -71,7 +70,7 @@ def minutely_event_counts_stream(spark: SparkSession, events_dir: str,
     src = reader.parquet(events_dir)
     # parquet NTZ timestamps need a tz-aware event-time column
     src = src.withColumn("ts", F.to_timestamp("ts"))
-    agg = (src.withWatermark("ts", watermark)
+    agg = (src.withWatermark("ts", "10 minutes")
            .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
            .agg(F.count("*").alias("n"),
                 F.sum(F.round(F.col("value") * 1000).cast("long"))
@@ -174,52 +173,40 @@ def _stage_events_with_sentinel(spark: SparkSession, sf_dir: str,
 
 
 def sessionize_events(spark: SparkSession, sf_dir: str,
-                      gap: str = "12 hours",
-                      streaming: bool = False,
-                      output_mode: str = "append") -> DataFrame:
+                      streaming: bool = False) -> DataFrame:
     """Per-user session windows (``F.session_window`` — Spark's native
     merging session windows, the engine's stateful-aggregation path for
     SURVEY.md §2.9).
 
-    A session groups a user's events whose inter-event gap is < ``gap``;
-    the window end extends ``gap`` past the last event ([start, end)
+    A session groups a user's events whose inter-event gap is < 12 h;
+    the window end extends 12 h past the last event ([start, end)
     semantics — an event landing exactly on the closing boundary opens
     a NEW session). Works identically as a batch aggregation (the
     oracle gate path) and as a watermarked stream (``streaming=True``).
 
-    The streaming path defaults to ``outputMode("append")`` — the
+    The streaming path runs in ``outputMode("append")`` — the
     production template: the watermark EVICTS each session from state
     once it passes the session's close, so state stays bounded on a
     continuous stream. On the bounded gate input a sentinel row staged
     after the real data (see ``_stage_events_with_sentinel``) pushes
     the final watermark past every real session, making the append
     output set-equal to the batch aggregation; the sentinel's own
-    session is filtered from the result. ``output_mode="complete"``
-    keeps the old retain-everything behavior (bounded runs only).
+    session is filtered from the result.
     """
     if streaming:
-        if output_mode == "append":
-            stage = _stage_events_with_sentinel(spark, sf_dir,
-                                                gap_h=12,
-                                                watermark_min=10)
-        else:
-            stage = Path(tempfile.gettempdir()) / "sidewalkreator_stream" \
-                / Path(sf_dir).name
-            stage.mkdir(parents=True, exist_ok=True)
-            dst = stage / "events.parquet"
-            if not dst.exists():
-                shutil.copy(f"{sf_dir}/events.parquet", dst)
+        stage = _stage_events_with_sentinel(spark, sf_dir, gap_h=12,
+                                            watermark_min=10)
         schema = spark.read.parquet(str(stage)).schema
-        reader = spark.readStream.schema(schema)
-        if output_mode == "append":
-            reader = reader.option("maxFilesPerTrigger", "1")
+        reader = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", "1"))
         ev = (reader.parquet(str(stage))
               .withColumn("ts", F.to_timestamp("ts")))
         ev = ev.withWatermark("ts", "10 minutes")
     else:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
             .withColumn("ts", F.to_timestamp("ts"))
-    agg = (ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+    agg = (ev.groupBy(F.session_window("ts", "12 hours").alias("w"),
+                      "user_id")
            .agg(F.count("*").alias("n_events"),
                 F.sum(F.round(F.col("value") * 1000).cast("long"))
                  .alias("value_milli")))
@@ -229,10 +216,9 @@ def sessionize_events(spark: SparkSession, sf_dir: str,
                 "n_events", "value_milli"]
     if not streaming:
         return agg.select(*out_cols)
-    name = f"events_sessions_{Path(sf_dir).name.replace('.', '_')}" \
-        + ("_app" if output_mode == "append" else "")
+    name = f"events_sessions_{Path(sf_dir).name.replace('.', '_')}_app"
     q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode)
+         .outputMode("append")
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
@@ -241,7 +227,5 @@ def sessionize_events(spark: SparkSession, sf_dir: str,
         p["stateOperators"][0]["numRowsTotal"]
         for p in (q.recentProgress or [])
         if p.get("stateOperators")]
-    out = spark.table(name)
-    if output_mode == "append":
-        out = out.filter(F.col("user_id") != _SENTINEL_USER)
+    out = spark.table(name).filter(F.col("user_id") != _SENTINEL_USER)
     return out.select(*out_cols)

@@ -14,8 +14,6 @@ import shutil
 import tempfile
 from pathlib import Path
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -48,8 +46,7 @@ def _dedup_fn(key, pdfs, state: GroupState):
 
 
 def stream_dedup_events(spark: SparkSession, events_dir: str,
-                        query_name: str = "events_dedup_stream",
-                        watermark: str = "10 minutes") -> DataFrame:
+                        query_name: str = "events_dedup_stream") -> DataFrame:
     """First occurrence of every event_id across all micro-batches;
     duplicates (replays, at-least-once sources) are dropped. State is
     one row per unseen-until-now id, evicted 7 days past the watermark.
@@ -57,7 +54,7 @@ def stream_dedup_events(spark: SparkSession, events_dir: str,
     schema = spark.read.parquet(events_dir).schema
     src = (spark.readStream.schema(schema).parquet(events_dir)
            .withColumn("ts", F.to_timestamp("ts"))
-           .withWatermark("ts", watermark))
+           .withWatermark("ts", "10 minutes"))
     out = (src.groupBy("event_id")
            .applyInPandasWithState(
                _dedup_fn, _OUT_SCHEMA, _STATE_SCHEMA, "append",
@@ -70,9 +67,8 @@ def stream_dedup_events(spark: SparkSession, events_dir: str,
     return spark.table(query_name)
 
 
-def run_stream_dedup(spark: SparkSession, sf_dir: str,
-                     duplicate_fraction: float = 0.2) -> DataFrame:
-    """Stage the events table PLUS a replayed slice (duplicate ids) as
+def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stage the events table PLUS a replayed 20% slice (duplicate ids) as
     two source files, then run the stateful dedup over the stream."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -86,7 +82,7 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str,
     # test fixtures, and a Spark sort+limit+write job here doubled the
     # query's wall-clock for no coverage gain
     t = pq.read_table(f"{sf_dir}/events.parquet")
-    n = int(t.num_rows * duplicate_fraction)
+    n = int(t.num_rows * 0.2)
     idx = pc.sort_indices(t, sort_keys=[("event_id", "ascending")])[:n]
     pq.write_table(t.take(idx), stage / "part1.parquet")
     name = f"events_dedup_{Path(sf_dir).name.replace('.', '_')}"

@@ -24,7 +24,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from .geometry import wkb
-from .geometry.projection import tm_forward, tm_inverse
+from .geometry.projection import tm_inverse
 
 CITY_LON0, CITY_LAT0 = -49.2957, -25.4599
 SPACING = 100.0
@@ -347,8 +347,9 @@ _VOCAB = np.array([
 ], dtype=object)
 
 
-def _write_pages(out: Path, n: int, chunk: int = 250_000):
+def _write_pages(out: Path, n: int):
     """Pages table writer: deterministic tokens from splitmix64(i)."""
+    chunk = 250_000
     writer = None
     schema = pa.schema([
         ("url", pa.string()),

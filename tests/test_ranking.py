@@ -36,17 +36,6 @@ def test_bm25_matches_duckdb_exactly(spark, docs):
     assert len(got) > 0
 
 
-def test_bm25_topk_order_and_ties(spark, docs):
-    top = R.bm25_topk(docs, ["hash"], k=10).collect()
-    assert len(top) == 10
-    scores = [r.bm25 for r in top]
-    assert scores == sorted(scores, reverse=True)
-    # ties (equal rounded score) resolve to ascending doc_id
-    for a, b in zip(top, top[1:]):
-        if a.bm25 == b.bm25:
-            assert a.doc_id < b.doc_id
-
-
 def test_bm25_scoring_stage_is_narrow(spark, docs):
     # the stats row is collected; the SCORING pass itself must be a
     # shuffle-free projection (the 100 TB contract in the docstring)

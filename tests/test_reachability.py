@@ -1,18 +1,35 @@
-"""No top-level def that no entrypoint reaches.
+"""No def, constant, import or parameter that no caller uses.
 
-An AST name closure from the real entrypoints over the package and
-``__spark_entry__.py``:
+Four checks over the package and ``__spark_entry__.py``, all on the AST
+(no Spark):
 
-- roots: the functions ``queries()`` returns, ``oracle_sql`` and
-  ``entry``; every module-level statement and decorator in the package;
-  every name used in the runnable scripts (``ENTRY_SCRIPTS``);
-- a reached def adds every name its body uses;
-- an ``ast.Name``, an ``ast.Attribute`` and an identifier-shaped string
-  constant each count as a reference (comments never do). Imports are
-  not references, so a def only imported somewhere is not reached.
+1. Reachability. An AST name closure from the real entrypoints:
 
-Names are matched without their module, which can only over-reach: a
-def is flagged only when no reached code names it at all.
+   - roots: the functions ``queries()`` returns, ``oracle_sql`` and
+     ``entry``; every module-level statement of the package that is not
+     a definition, and every decorator; every name used in the runnable
+     scripts (``ENTRY_SCRIPTS``);
+   - definitions: top-level defs and classes, and module-level
+     assignments to plain names (constants); a reached definition adds
+     every name its body (or right-hand side) uses;
+   - an ``ast.Name`` and an ``ast.Attribute`` each count as a reference,
+     and in the package so does an identifier-shaped string constant
+     (comments never do). Strings of ``__spark_entry__.py`` do not
+     count: they are SQL text and registry keys, so a query dropped
+     from ``queries()`` is not kept alive by its oracle's key. Imports
+     are not references, so a def only imported somewhere is not
+     reached.
+
+   Names are matched without their module, which can only over-reach:
+   a definition is flagged only when no reached code names it at all.
+2. Registry. ``queries()`` and ``oracle_sql()`` have the same keys.
+3. Imports. Every module-level import binds a name its module uses.
+4. Parameters. Every defaulted parameter of a top-level def is set by
+   some call in the repository (entrypoints, ``perfbench/``, scripts,
+   tests): passed by keyword or by position, or the def is called with
+   ``*``/``**``. Callees are matched by name only, which can only
+   over-count what is set. A parameter no call sets is a constant, so
+   it belongs in the body.
 """
 
 from __future__ import annotations
@@ -51,45 +68,28 @@ KEEP = {
         "helper of rasterize_segments",
 }
 
-# Unreached defs whose deletion is deferred to the next change, which
-# retires them with the 22 tests that still exercise them (deleting
-# them here too would have retired 55 tests in one change).
-# Module -> its deferred defs and the tests that exercise them.
-DEFERRED_BY_MODULE = {
-    "operators.bpe": (
-        ("_encode_word", "bpe_encode", "bpe_train", "bpe_word_counts",
-         "train_bpe_on_corpus"), "tests/test_bpe.py"),
-    "operators.embed": (
-        ("PCAModel", "embedding_moments", "fit_pca", "project"),
-        "tests/test_embed_pca.py"),
-    "operators.sampling": (
-        ("epoch_upsample", "group_tail_trim", "group_quantile_filter"),
-        "tests/test_sampling.py"),
-    "operators.textops": (
-        ("content_digests", "dedup_against"),
-        "tests/test_repeated_spans.py"),
-    "operators.multimodal": (
-        ("media_byte_stats",), "tests/test_retired_queries.py"),
-    "operators.ranking": (("bm25_topk",), "tests/test_ranking.py"),
+# Each defaulted parameter that no call sets but stays a parameter.
+# Only deployment settings belong here.
+PARAM_KEEP = {
+    "osm_sidewalkreator_spark.session.get_spark.master":
+        "deployment setting: the Spark master URL of the cluster; "
+        "unset means the local host's cores",
 }
-DEFERRED = {
-    f"osm_sidewalkreator_spark.{mod}.{name}": tests
-    for mod, (names, tests) in DEFERRED_BY_MODULE.items()
-    for name in names}
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
-def _refs(node: ast.AST) -> set[str]:
+def _refs(node: ast.AST, strings: bool = True) -> set[str]:
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
-        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
-              and _IDENT.match(n.value)):
+        elif (strings and isinstance(n, ast.Constant)
+              and isinstance(n.value, str) and _IDENT.match(n.value)):
             out.add(n.value)
     return out
 
@@ -99,21 +99,42 @@ def _module_name(path: Path) -> str:
     return ".".join(rel.parts)
 
 
-def _entry_roots(tree: ast.Module) -> set[str]:
-    roots = {"oracle_sql", "entry"}
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef) and node.name == "queries":
-            for ret in ast.walk(node):
-                if isinstance(ret, ast.Return) and isinstance(
-                        ret.value, ast.Dict):
-                    roots |= {v.id for v in ret.value.values
-                              if isinstance(v, ast.Name)}
-    return roots
+def _sources() -> list[Path]:
+    return sorted(PACKAGE.rglob("*.py")) + [ENTRY]
+
+
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
+def _assigned_names(node: ast.AST) -> list[str]:
+    """Plain names a module-level assignment binds (dunders excluded)."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, ast.Tuple) else [t]
+        names += [e.id for e in elts if isinstance(e, ast.Name)
+                  and not e.id.startswith("__")]
+    return names
+
+
+def _returned_dict(tree: ast.Module, func: str) -> ast.Dict:
+    fn = next(n for n in tree.body
+              if isinstance(n, ast.FunctionDef) and n.name == func)
+    return next(r.value for r in ast.walk(fn)
+                if isinstance(r, ast.Return)
+                and isinstance(r.value, ast.Dict))
 
 
 def unreached_defs() -> dict[str, int]:
-    """Qualified name -> line count of each top-level def not reached."""
-    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    """Qualified name -> line count of each top-level def or module
+    constant not reached."""
+    defs: dict[str, list[tuple[str, ast.AST, bool]]] = {}
     reached: set[str] = set()
     pending: list[str] = []
 
@@ -122,40 +143,144 @@ def unreached_defs() -> dict[str, int]:
             reached.add(name)
             pending.append(name)
 
-    sources = sorted(PACKAGE.rglob("*.py")) + [ENTRY]
-    for path in sources:
-        tree = ast.parse(path.read_text(), str(path))
+    for path in _sources():
+        tree = _parse(path)
         mod = _module_name(path)
+        strings = path != ENTRY
         for node in tree.body:
+            names = _assigned_names(node)
             if isinstance(node, _DEFS):
-                defs.setdefault(node.name, []).append((mod, node))
-                if path != ENTRY:
+                defs.setdefault(node.name, []).append((mod, node, strings))
+                if strings:
                     for dec in node.decorator_list:
                         reach(_refs(dec))
-            elif path != ENTRY:
+            elif names:
+                for name in names:
+                    defs.setdefault(name, []).append((mod, node, strings))
+            elif strings:
                 reach(_refs(node))
         if path == ENTRY:
-            reach(_entry_roots(tree))
+            roots = {"oracle_sql", "entry"}
+            roots |= {v.id for v in _returned_dict(tree, "queries").values
+                      if isinstance(v, ast.Name)}
+            reach(roots)
     for pattern in ENTRY_SCRIPTS:
         for path in sorted(ROOT.glob(pattern)):
-            reach(_refs(ast.parse(path.read_text(), str(path))))
+            reach(_refs(_parse(path)))
 
     while pending:
-        for _, node in defs.get(pending.pop(), ()):
-            reach(_refs(node))
+        for _, node, strings in defs.get(pending.pop(), ()):
+            reach(_refs(node, strings))
 
     return {f"{mod}.{name}": node.end_lineno - node.lineno + 1
             for name, found in defs.items() if name not in reached
-            for mod, node in found}
+            for mod, node, _ in found}
+
+
+def unused_imports() -> list[str]:
+    """``module.name`` of each module-level import its module never
+    names."""
+    out = []
+    for path in _sources():
+        tree = _parse(path)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) \
+                    and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for alias in node.names:
+                    name = (alias.asname or alias.name).split(".")[0]
+                    # a package __init__ imports to re-export
+                    if name not in used and path.name != "__init__.py":
+                        out.append(f"{_module_name(path)}.{name}")
+    return out
+
+
+def _defaulted_params(fn: ast.FunctionDef) -> dict[str, int | None]:
+    """Defaulted parameter -> its position (None if keyword-only)."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out: dict[str, int | None] = {
+        arg.arg: i for i, arg in enumerate(pos) if i >= first}
+    out.update({arg.arg: None for arg, d in zip(a.kwonlyargs,
+                                                 a.kw_defaults)
+                if d is not None})
+    return out
+
+
+def unset_params() -> list[str]:
+    """``module.def.param`` of each defaulted parameter of a top-level
+    def that no call in the repository sets."""
+    params: dict[str, list[tuple[str, dict]]] = {}
+    for path in _sources():
+        for node in _parse(path).body:
+            if isinstance(node, _FUNCS):
+                dflt = _defaulted_params(node)
+                if dflt:
+                    params.setdefault(node.name, []).append(
+                        (_module_name(path), dflt))
+    keywords: dict[str, set[str]] = {name: set() for name in params}
+    n_pos = dict.fromkeys(params, 0)
+    starred: set[str] = set()
+    for path in sorted(ROOT.rglob("*.py")):
+        if any(p.startswith(".") or p == "data"
+               for p in path.relative_to(ROOT).parts):
+            continue
+        for n in ast.walk(_parse(path)):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else \
+                f.attr if isinstance(f, ast.Attribute) else None
+            if name not in params:
+                continue
+            if any(isinstance(a, ast.Starred) for a in n.args) \
+                    or any(k.arg is None for k in n.keywords):
+                starred.add(name)
+            keywords[name] |= {k.arg for k in n.keywords}
+            n_pos[name] = max(n_pos[name], len(n.args))
+    return sorted(
+        f"{mod}.{name}.{p}"
+        for name, found in params.items() if name not in starred
+        for mod, dflt in found for p, i in dflt.items()
+        if p not in keywords[name] and (i is None or i >= n_pos[name]))
 
 
 def test_every_top_level_def_is_reached_or_kept():
     unreached = unreached_defs()
     assert len(KEEP) <= 9
-    dead = sorted(set(unreached) - set(KEEP) - set(DEFERRED))
+    dead = sorted(set(unreached) - set(KEEP))
     assert not dead, (
-        f"{len(dead)} top-level defs ({sum(unreached[d] for d in dead)} "
-        "lines) that no entrypoint reaches:\n" + "\n".join(dead))
-    # a keep-list or deferred entry that is now reached (or gone) is stale
-    listed = set(KEEP) | set(DEFERRED)
-    assert listed <= set(unreached), sorted(listed - set(unreached))
+        f"{len(dead)} top-level defs and module constants "
+        f"({sum(unreached[d] for d in dead)} lines) that no entrypoint "
+        "reaches:\n" + "\n".join(dead))
+    # a keep-list entry that is now reached (or gone) is stale
+    assert set(KEEP) <= set(unreached), sorted(set(KEEP) - set(unreached))
+
+
+def test_registry_and_oracles_have_the_same_queries():
+    tree = _parse(ENTRY)
+    keys = {f: {k.value for k in _returned_dict(tree, f).keys}
+            for f in ("queries", "oracle_sql")}
+    assert keys["queries"] == keys["oracle_sql"], (
+        "queries() only: " + str(sorted(keys["queries"] - keys["oracle_sql"]))
+        + "; oracle_sql() only: "
+        + str(sorted(keys["oracle_sql"] - keys["queries"])))
+
+
+def test_every_module_import_is_used():
+    unused = unused_imports()
+    assert not unused, (f"{len(unused)} module imports their module "
+                        "never names:\n" + "\n".join(unused))
+
+
+def test_every_defaulted_parameter_is_set_by_some_call():
+    unset = unset_params()
+    never = sorted(set(unset) - set(PARAM_KEEP))
+    assert not never, (
+        f"{len(never)} defaulted parameters that no call sets (make "
+        "each its value, read in the body):\n" + "\n".join(never))
+    assert set(PARAM_KEEP) <= set(unset), \
+        sorted(set(PARAM_KEEP) - set(unset))

@@ -135,37 +135,6 @@ def test_short_docs_and_validation(spark):
         TX.remove_repeated_spans(d, min_count=1)
 
 
-def test_incremental_dedup_against_matches_duckdb(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    hist = docs.filter("doc_id < 200")
-    batch = docs.filter("doc_id >= 150")   # overlap re-ingests 50 texts
-    seen = TX.content_digests(hist)
-    got = sorted(r.doc_id for r in
-                 TX.dedup_against(batch, seen).select("doc_id")
-                 .collect())
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW d AS SELECT * FROM "
-                f"'{SF}/documents.parquet'")
-    want = [r[0] for r in con.execute("""
-        WITH hist AS (SELECT DISTINCT md5(text) h FROM d
-                      WHERE doc_id < 200),
-        fresh AS (SELECT doc_id, text FROM d
-                  WHERE doc_id >= 150
-                    AND md5(text) NOT IN (SELECT h FROM hist))
-        SELECT doc_id FROM fresh
-        WHERE doc_id = (SELECT min(doc_id) FROM fresh f2
-                        WHERE f2.text = fresh.text)
-        ORDER BY doc_id
-    """).fetchall()]
-    con.close()
-    assert got == want
-    assert 0 < len(got) < 350
-    # idempotence: re-running against the union store drops everything
-    seen2 = TX.content_digests(hist.select("text").union(
-        batch.select("text")))
-    assert TX.dedup_against(batch, seen2).count() == 0
-
-
 def test_normalize_text_matches_duckdb(spark):
     rows = [
         (0, "  a\tb\nc\r\nd  "),

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 import __spark_entry__ as E
 from osm_sidewalkreator_spark import params as P
 from osm_sidewalkreator_spark.operators import joins as J
-from osm_sidewalkreator_spark.operators import multimodal as MM
 from osm_sidewalkreator_spark.operators import simsearch as SS
 from osm_sidewalkreator_spark.operators import textops as TX
 from osm_sidewalkreator_spark.pages import (
@@ -82,18 +81,6 @@ def test_pipeline_stage_queries_still_run(spark):
              E._features(spark, SF).groupBy("kind").count().collect()}
     for kind in ("protoblock", "sidewalk", "crossing", "kerb"):
         assert kinds.get(kind, 0) > 0, kind
-
-
-def test_html_bytes_matches_octet_length(spark):
-    # the byte accounting is pure octet_length: assert it against the
-    # JVM length() of the binary column
-    pages = load_pages(spark, SF)
-    out = MM.media_byte_stats(pages).select("url", "n_bytes")
-    want = pages.select("url", F.length("html").alias("want"))
-    bad = (out.join(want, "url")
-           .filter(F.col("n_bytes") != F.col("want")).count())
-    assert bad == 0
-    assert out.count() == want.count() > 0
 
 
 @needs_golden

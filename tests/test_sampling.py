@@ -3,7 +3,6 @@
 import duckdb
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from osm_sidewalkreator_spark.operators import sampling as SA
 from osm_sidewalkreator_spark.operators import textops as TX
@@ -177,95 +176,3 @@ def test_temperature_sample_hits_target(spark):
     kept = SA.temperature_sample(d, temperature=2.0, target_rows=2000)
     n = kept.count()
     assert abs(n - 2000) < 150  # ~3 sigma of binomial(5000, ~0.4)
-
-
-def test_epoch_upsample_matches_duckdb(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    got = (SA.epoch_upsample(docs, {"src0": 3.7, "src1": 0.4, "src2": 0.0},
-                             seed="epoch-v1", default_epochs=1.0)
-           .select("doc_id", "source", "epoch").toPandas()
-           .sort_values(["doc_id", "epoch"]).reset_index(drop=True))
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS "
-                f"SELECT * FROM '{SF}/documents.parquet'")
-    want = con.execute(f"""
-        WITH e AS (SELECT doc_id, source,
-            CASE source WHEN 'src0' THEN 3.7 WHEN 'src1' THEN 0.4
-                 WHEN 'src2' THEN 0.0 ELSE 1.0 END AS ep
-            FROM documents),
-        n AS (SELECT doc_id, source,
-            CAST(floor(ep) AS BIGINT)
-            + CASE WHEN {_unit_sql('epoch-v1')} < ep - floor(ep)
-                   THEN 1 ELSE 0 END AS copies
-            FROM e)
-        SELECT doc_id, source, unnest(range(copies)) AS epoch
-        FROM n WHERE copies > 0
-        ORDER BY doc_id, epoch
-    """).df()
-    con.close()
-    assert got.doc_id.tolist() == want.doc_id.tolist()
-    assert got.epoch.tolist() == want.epoch.tolist()
-    assert len(got) > 0
-
-
-def test_epoch_upsample_semantics(spark):
-    rows = [(i, "x", "a") for i in range(4000)]
-    d = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = SA.epoch_upsample(d, {"a": 2.5})
-    n = out.count()
-    assert abs(n - 10000) < 250          # expected copies = 2.5/doc
-    # every doc appears at least floor(e) times, at most ceil(e)
-    per = out.groupBy("doc_id").count().toPandas()["count"]
-    assert per.min() == 2 and per.max() == 3
-    # zero-epoch group vanishes; plan stays narrow (no Exchange)
-    assert SA.epoch_upsample(d, {"a": 0.0}).count() == 0
-    plan = (SA.epoch_upsample(d, {"a": 2.5})
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-    with pytest.raises(ValueError):
-        SA.epoch_upsample(d, {"a": -1.0})
-
-
-def test_group_tail_trim_matches_duckdb(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    scored = docs.select("doc_id", "lang",
-                         (F.length("text") % 97).alias("score"))
-    got = (SA.group_tail_trim(scored, "score", 0.6)
-           .select("doc_id").toPandas()
-           .sort_values("doc_id").reset_index(drop=True))
-    pdf = scored.toPandas()
-    con = duckdb.connect()
-    con.register("s", pdf)
-    want = con.execute("""
-        SELECT doc_id FROM (
-          SELECT doc_id,
-                 row_number() OVER (PARTITION BY lang
-                                    ORDER BY score, doc_id) AS rn,
-                 count(*) OVER (PARTITION BY lang) AS n
-          FROM s)
-        WHERE rn <= ceil(0.6 * n)
-        ORDER BY doc_id
-    """).df()
-    con.close()
-    assert got.doc_id.tolist() == want.doc_id.tolist()
-    assert 0 < len(got) < len(pdf)
-
-
-def test_group_quantile_filter_tracks_exact_trim(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    scored = docs.select("doc_id", "lang",
-                         (F.xxhash64("text") % 100000).alias("score"))
-    exact = SA.group_tail_trim(scored, "score", 0.7).count()
-    approx = SA.group_quantile_filter(scored, "score", 0.7).count()
-    # sketch rank error at accuracy=10000 over 500 rows: exact-ish
-    assert abs(approx - exact) <= 5
-    # descending direction keeps the top tail
-    top = SA.group_quantile_filter(scored, "score", 0.2,
-                                   ascending=False)
-    pdf = top.toPandas()
-    lo = scored.toPandas()
-    for lang, grp in pdf.groupby("lang"):
-        allg = lo[lo.lang == lang].score
-        assert grp.score.min() >= allg.quantile(0.75)
-    with pytest.raises(ValueError):
-        SA.group_quantile_filter(scored, "score", 1.5)
