@@ -1334,7 +1334,7 @@ _LB_T1 = """least(1.0,
 _LB_OUT = """(((bx-ax) = 0 AND ((ax-xmin) < 0 OR (xmax-ax) < 0))
     OR ((by-ay) = 0 AND ((ay-ymin) < 0 OR (ymax-ay) < 0)))"""
 # mm-rounded clipped endpoints of the [t0, t1] piece (t=0/1 keep the
-# original coordinate bit-identically, matching overlay._piece_coords)
+# original coordinate bit-identically, matching predicates._piece_coords)
 _LB_PIECE_MM = """
     CAST(round((CASE WHEN t0 = 0.0 THEN ax
                 ELSE ax + t0*(bx-ax) END) * 1000) AS BIGINT) AS ax_mm,

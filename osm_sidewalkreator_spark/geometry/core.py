@@ -1,5 +1,5 @@
 """Vectorized coordinate math (lengths, areas, interpolation, PIP,
-point-segment distance).
+point-segment distance, segment crossing).
 
 Reference semantics anchors:
 - length/area/perimeter columns: ``generic_functions.py:518-557``
@@ -112,9 +112,14 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray,
     return inside
 
 
-def point_segment_distance(px: np.ndarray, py: np.ndarray,
-                           segs: np.ndarray) -> np.ndarray:
-    """Pairwise distance: points (n,) vs segments (n,4) elementwise."""
+def closest_on_segments(px: np.ndarray, py: np.ndarray, segs: np.ndarray
+                        ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Closest point of each segment to each point, and its distance.
+
+    ``px``/``py`` broadcast against the (m,) columns of ``segs`` (m,4):
+    (m,) points pair elementwise, (n,1) points give (n,m) results.
+    Returns (cx, cy, dist); a zero-length segment's closest point is its
+    start."""
     ax, ay, bx, by = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
     dx, dy = bx - ax, by - ay
     ll = dx * dx + dy * dy
@@ -122,7 +127,25 @@ def point_segment_distance(px: np.ndarray, py: np.ndarray,
         t = ((px - ax) * dx + (py - ay) * dy) / ll
     t = np.where(ll == 0, 0.0, np.clip(t, 0.0, 1.0))
     cx, cy = ax + t * dx, ay + t * dy
-    return np.hypot(px - cx, py - cy)
+    return cx, cy, np.hypot(px - cx, py - cy)
+
+
+def segments_cross(a1: np.ndarray, d1: np.ndarray, segs: np.ndarray
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """Closed segment x segment test of a1 + t*d1 against the segments
+    ``segs`` [x1,y1,x2,y2] = a2 + u*d2, t and u in [0, 1]; (..., 2)
+    ``a1``/``d1`` and (..., 4) ``segs`` broadcast. Parallel pairs
+    (|d1 x d2| <= 1e-12) never cross. Returns (hit, t)."""
+    a2 = segs[..., :2]
+    d2 = segs[..., 2:] - a2
+    denom = d1[..., 0] * d2[..., 1] - d1[..., 1] * d2[..., 0]
+    e = a2 - a1
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = (e[..., 0] * d2[..., 1] - e[..., 1] * d2[..., 0]) / denom
+        u = (e[..., 0] * d1[..., 1] - e[..., 1] * d1[..., 0]) / denom
+    hit = ((np.abs(denom) > 1e-12) & (t >= 0) & (t <= 1)
+           & (u >= 0) & (u <= 1))
+    return hit, t
 
 
 def explode_polyline_to_segments(coords: np.ndarray) -> np.ndarray:

@@ -2,8 +2,9 @@
 
 Gives the engine its ``native:polygonize`` equivalent
 (``generic_functions.py:195-217``, used for protoblocks at
-``osm_sidewalkreator.py:724``) and the ring-tracing step of the
-union/morphology pipeline (``morph.py``).
+``osm_sidewalkreator.py:724``), and owns the SNAP vertex key
+(``build_vertices``) that ``morph.py``'s directed ring tracing also
+uses.
 
 Standard planar-subdivision traversal: at every vertex the outgoing
 directed edges are sorted by angle; the successor of directed edge (u,v)
@@ -16,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .core import ring_signed_area
 from .noding import SNAP
 
 
@@ -94,11 +96,7 @@ def trace_faces(verts: np.ndarray, edge_vidx: np.ndarray
             cyc_dirs.append(d)
             d = nxt[d]
         vids = [int(origin[d]) for d in cyc_dirs]
-        coords = verts[vids]
-        x, y = coords[:, 0], coords[:, 1]
-        xn = np.concatenate((x[1:], x[:1]))
-        yn = np.concatenate((y[1:], y[:1]))
-        area = 0.5 * float(np.dot(x, yn) - np.dot(y, xn))
+        area = ring_signed_area(verts[vids])
         edges = [(int(eids[d % m]), d < m) for d in cyc_dirs]
         faces.append({"vids": vids, "area": area, "edges": edges})
     return faces

@@ -56,16 +56,33 @@ def _gather_ranges(lo: np.ndarray, hi: np.ndarray
     return rows, idx
 
 
-def join_points_to_boxes(px: np.ndarray, py: np.ndarray, boxes: np.ndarray,
-                         bin_size: float) -> tuple[np.ndarray, np.ndarray]:
-    """Candidate (point_idx, box_idx) pairs where the point's cell is
-    covered by the box's cell range. Exact bbox check applied."""
-    if len(boxes) == 0 or len(px) == 0:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
+def seg_bboxes(segs: np.ndarray, pad: float) -> np.ndarray:
+    """(n,4) segments -> (n,4) [xmin,ymin,xmax,ymax] bboxes padded by
+    ``pad``."""
+    return np.column_stack([
+        np.minimum(segs[:, 0], segs[:, 2]) - pad,
+        np.minimum(segs[:, 1], segs[:, 3]) - pad,
+        np.maximum(segs[:, 0], segs[:, 2]) + pad,
+        np.maximum(segs[:, 1], segs[:, 3]) + pad])
+
+
+def cell_index(boxes: np.ndarray, bin_size: float
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """(cell_keys, owners) of the boxes' cell covers, sorted by key: the
+    lookup structure of ``points_in_boxes``, built once per box set."""
     owners, cells = explode_bbox_cells(boxes, bin_size)
     order = np.argsort(cells, kind="stable")
-    cells_s = cells[order]
-    owners_s = owners[order]
+    return cells[order], owners[order]
+
+
+def points_in_boxes(px: np.ndarray, py: np.ndarray,
+                    index: tuple[np.ndarray, np.ndarray], boxes: np.ndarray,
+                    bin_size: float, pad: float
+                    ) -> tuple[np.ndarray, np.ndarray]:
+    """(point_idx, box_idx) pairs where the point lies in the box padded
+    by ``pad``. ``index`` is ``cell_index`` of boxes padded by at least
+    ``pad`` (a wider cover only adds candidates the exact check drops)."""
+    cells_s, owners_s = index
     pk = _cell_key(np.floor(px / bin_size).astype(np.int64),
                    np.floor(py / bin_size).astype(np.int64))
     lo = np.searchsorted(cells_s, pk, side="left")
@@ -73,7 +90,39 @@ def join_points_to_boxes(px: np.ndarray, py: np.ndarray, boxes: np.ndarray,
     pi, idx = _gather_ranges(lo, hi)
     bi = owners_s[idx]
     if len(pi):
-        keep = ((px[pi] >= boxes[bi, 0]) & (px[pi] <= boxes[bi, 2])
-                & (py[pi] >= boxes[bi, 1]) & (py[pi] <= boxes[bi, 3]))
+        keep = ((px[pi] >= boxes[bi, 0] - pad)
+                & (px[pi] <= boxes[bi, 2] + pad)
+                & (py[pi] >= boxes[bi, 1] - pad)
+                & (py[pi] <= boxes[bi, 3] + pad))
         pi, bi = pi[keep], bi[keep]
     return pi, bi
+
+
+def join_points_to_boxes(px: np.ndarray, py: np.ndarray, boxes: np.ndarray,
+                         bin_size: float) -> tuple[np.ndarray, np.ndarray]:
+    """Candidate (point_idx, box_idx) pairs where the point's cell is
+    covered by the box's cell range. Exact bbox check applied."""
+    if len(boxes) == 0 or len(px) == 0:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    return points_in_boxes(px, py, cell_index(boxes, bin_size), boxes,
+                           bin_size, 0.0)
+
+
+def points_near_segments(px: np.ndarray, py: np.ndarray, segs: np.ndarray,
+                         tol: float) -> tuple[np.ndarray, np.ndarray]:
+    """Candidate (point_idx, seg_idx) pairs for "point within ``tol`` of
+    segment": the point lies in the segment's bbox padded by ``tol``.
+    Cells are the median padded bbox extent (at least ``tol``)."""
+    boxes = seg_bboxes(segs, tol)
+    ext = np.maximum(boxes[:, 2] - boxes[:, 0], boxes[:, 3] - boxes[:, 1])
+    bin_size = max(float(np.median(ext)), tol, 1e-9)
+    return join_points_to_boxes(px, py, boxes, bin_size)
+
+
+def first_min_per_key(key: np.ndarray, dist: np.ndarray, tie: np.ndarray
+                      ) -> np.ndarray:
+    """Index of each key's smallest ``dist`` (ties to the smallest
+    ``tie``), in ascending key order. ``key`` must be nonempty."""
+    order = np.lexsort((tie, dist, key))
+    key_s = key[order]
+    return order[np.concatenate([[True], key_s[1:] != key_s[:-1]])]

@@ -40,8 +40,10 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from .gridhash import _cell_key, _gather_ranges, explode_bbox_cells
-from .noding import SNAP, dedup_undirected, node_segments
+from .core import ring_signed_area
+from .faces import build_vertices
+from .gridhash import cell_index, points_in_boxes
+from .noding import SNAP, dedup_undirected, node_segments, snap_round
 
 EPS_ON = 5e-5    # on-boundary band, m (must exceed snap displacement)
 EPS_COLL = 1e-6  # sin(angle) floor for collinearity
@@ -128,7 +130,7 @@ class ConvexSet:
         # snap to the noder's grid so candidate edges coincide exactly
         # with member boundary lines (depth on own boundary ~ 0)
         polys = np.asarray(polys, dtype=np.float64)
-        self.polys = np.round(polys / SNAP) * SNAP if len(polys) else polys
+        self.polys = snap_round(polys) if len(polys) else polys
         if len(self.polys):
             self.boxes = polys_bboxes(self.polys)
             spans = np.maximum(self.boxes[:, 2] - self.boxes[:, 0],
@@ -188,9 +190,7 @@ class ConvexSet:
             boxes = self.boxes.copy()
             boxes[:, :2] -= self._pad_cache
             boxes[:, 2:] += self._pad_cache
-            owners, cells = explode_bbox_cells(boxes, self.bin)
-            order = np.argsort(cells, kind="stable")
-            self._cells = (cells[order], owners[order])
+            self._cells = cell_index(boxes, self.bin)
         return self._cells
 
     def query(self, px: np.ndarray, py: np.ndarray, pad: float
@@ -201,19 +201,8 @@ class ConvexSet:
         if len(self.polys) == 0 or len(px) == 0:
             z = np.empty(0, np.int64)
             return z, z, np.empty(0), np.empty((0, 2))
-        cells_s, owners_s = self._cell_index(pad)
-        pk = _cell_key(np.floor(px / self.bin).astype(np.int64),
-                       np.floor(py / self.bin).astype(np.int64))
-        lo = np.searchsorted(cells_s, pk, side="left")
-        hi = np.searchsorted(cells_s, pk, side="right")
-        pi, idx = _gather_ranges(lo, hi)
-        si = owners_s[idx]
-        if len(pi):
-            keep = ((px[pi] >= self.boxes[si, 0] - pad)
-                    & (px[pi] <= self.boxes[si, 2] + pad)
-                    & (py[pi] >= self.boxes[si, 1] - pad)
-                    & (py[pi] <= self.boxes[si, 3] + pad))
-            pi, si = pi[keep], si[keep]
+        pi, si = points_in_boxes(px, py, self._cell_index(pad), self.boxes,
+                                 self.bin, pad)
         if len(pi) == 0:
             z = np.empty(0, np.int64)
             return z, z, np.empty(0), np.empty((0, 2))
@@ -390,15 +379,10 @@ def _repair_graph(edges: np.ndarray) -> np.ndarray:
         n = len(edges)
         if n == 0:
             return edges
-        pts = np.vstack([edges[:, :2], edges[:, 2:]])
-        q = np.round(pts / SNAP).astype(np.int64)
-        key = np.ascontiguousarray(q).view(np.dtype((np.void, 16))).ravel()
-        uniq, inv = np.unique(key, return_inverse=True)
-        first = np.full(len(uniq), len(key), dtype=np.int64)
-        np.minimum.at(first, inv, np.arange(len(key)))
-        verts = pts[first]
-        outd = np.bincount(inv[:n], minlength=len(uniq))
-        ind = np.bincount(inv[n:], minlength=len(uniq))
+        verts, evi = build_vertices(edges)
+        tail, head = evi[:, 0], evi[:, 1]
+        outd = np.bincount(tail, minlength=len(verts))
+        ind = np.bincount(head, minlength=len(verts))
         bad = np.flatnonzero(outd != ind)
         if len(bad) == 0:
             return edges
@@ -440,11 +424,11 @@ def _repair_graph(edges: np.ndarray) -> np.ndarray:
         # hot tile kernel); identical semantics — only endpoints whose
         # vertex id is in repl are rewritten, others keep their
         # original float coords
-        vmap = np.full(len(uniq), -1, dtype=np.int64)
+        vmap = np.full(len(verts), -1, dtype=np.int64)
         vmap[np.fromiter(repl.keys(), np.int64, len(repl))] = \
             np.fromiter(repl.values(), np.int64, len(repl))
-        mt = vmap[inv[:n]]
-        mh = vmap[inv[n:]]
+        mt = vmap[tail]
+        mh = vmap[head]
         selt = mt >= 0
         selh = mh >= 0
         new_edges[selt, 0:2] = verts[mt[selt]]
@@ -473,16 +457,8 @@ def trace_directed_rings(edges: np.ndarray
     edges = _repair_graph(np.asarray(edges, dtype=np.float64))
     if len(edges) == 0:
         return [], []
-    pts = np.vstack([edges[:, :2], edges[:, 2:]])
-    q = np.round(pts / SNAP).astype(np.int64)
-    key = np.ascontiguousarray(q).view(np.dtype((np.void, 16))).ravel()
-    uniq, inv = np.unique(key, return_inverse=True)
-    first = np.full(len(uniq), len(key), dtype=np.int64)
-    np.minimum.at(first, inv, np.arange(len(key)))
-    verts = pts[first]
-    n = len(edges)
-    tail = inv[:n]
-    head = inv[n:]
+    verts, evi = build_vertices(edges)
+    tail, head = evi[:, 0], evi[:, 1]
     ok = tail != head
     tail, head = tail[ok], head[ok]
     m = len(tail)
@@ -552,10 +528,7 @@ def trace_directed_rings(edges: np.ndarray
         if broken or len(chain) < 3:
             continue
         ring = verts[tail[chain]]
-        x, y = ring[:, 0], ring[:, 1]
-        xn = np.concatenate((x[1:], x[:1]))
-        yn = np.concatenate((y[1:], y[:1]))
-        area = 0.5 * float(np.dot(x, yn) - np.dot(y, xn))
+        area = ring_signed_area(ring)
         if abs(area) <= (SNAP * 100) ** 2:
             continue
         if area > 0:

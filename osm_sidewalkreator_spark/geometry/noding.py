@@ -14,6 +14,8 @@ from collections import OrderedDict
 
 import numpy as np
 
+from .gridhash import cell_index, seg_bboxes
+
 SNAP = 1e-5  # coordinate snap grid, meters (0.01 mm)
 
 
@@ -63,27 +65,7 @@ def snap_round(a: np.ndarray, snap: float = SNAP) -> np.ndarray:
 
 def _candidate_pairs(segs: np.ndarray, bin_size: float) -> np.ndarray:
     """Grid-hash bbox overlap candidates -> (k,2) index pairs i<j."""
-    n = len(segs)
-    xmin = np.minimum(segs[:, 0], segs[:, 2])
-    xmax = np.maximum(segs[:, 0], segs[:, 2])
-    ymin = np.minimum(segs[:, 1], segs[:, 3])
-    ymax = np.maximum(segs[:, 1], segs[:, 3])
-    ix0 = np.floor(xmin / bin_size).astype(np.int64)
-    ix1 = np.floor(xmax / bin_size).astype(np.int64)
-    iy0 = np.floor(ymin / bin_size).astype(np.int64)
-    iy1 = np.floor(ymax / bin_size).astype(np.int64)
-    # explode (seg, cell) membership — flat-vectorized
-    from .gridhash import _segmented_arange
-    ny = iy1 - iy0 + 1
-    counts = (ix1 - ix0 + 1) * ny
-    seg_ids = np.repeat(np.arange(n), counts)
-    k = _segmented_arange(counts)
-    ny_o = ny[seg_ids]
-    cells = (((ix0[seg_ids] + k // ny_o) << 32)
-             ^ ((iy0[seg_ids] + k % ny_o) & 0xFFFFFFFF))
-    order = np.argsort(cells, kind="stable")
-    cells_s = cells[order]
-    segs_s = seg_ids[order]
+    cells_s, segs_s = cell_index(seg_bboxes(segs, 0.0), bin_size)
     # vectorized within-group pair enumeration: for offset d, element i
     # pairs with i+d when both are in the same cell group (loop runs
     # max-group-size times, each iteration fully vectorized)

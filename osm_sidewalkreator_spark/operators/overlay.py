@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .predicates import _clip_interval
+from .predicates import _clipped, _piece_coords
 from .tiling import box_cells, seg_box_overlap, seg_box_pairs
 
 _IV = "array<struct<t0:double,t1:double>>"
@@ -36,28 +36,8 @@ def _candidates(segs: DataFrame, rects: DataFrame, cell_size: float
                 ) -> DataFrame:
     """Distinct (segment, rect) candidate pairs sharing a grid cell,
     with the clip interval columns attached."""
-    j = seg_box_pairs(segs, rects, cell_size) \
-        .dropDuplicates(["osm_id", "block_id"])
-    t0, t1, outside = _clip_interval()
-    return (j.withColumn("_t0", t0).withColumn("_t1", t1)
-             .filter(~outside & (t0 < t1)))
-
-
-def _piece_coords(t0col, t1col):
-    """Clipped endpoint columns; untouched endpoints stay bit-identical
-    (t=0/1 interpolation would drift by an ULP)."""
-    dx = F.col("bx") - F.col("ax")
-    dy = F.col("by") - F.col("ay")
-    return [
-        F.when(t0col == 0.0, F.col("ax"))
-         .otherwise(F.col("ax") + t0col * dx).alias("px_a"),
-        F.when(t0col == 0.0, F.col("ay"))
-         .otherwise(F.col("ay") + t0col * dy).alias("py_a"),
-        F.when(t1col == 1.0, F.col("bx"))
-         .otherwise(F.col("ax") + t1col * dx).alias("px_b"),
-        F.when(t1col == 1.0, F.col("by"))
-         .otherwise(F.col("ay") + t1col * dy).alias("py_b"),
-    ]
+    return _clipped(seg_box_pairs(segs, rects, cell_size)
+                    .dropDuplicates(["osm_id", "block_id"]))
 
 
 def intersection_overlay(segs: DataFrame, rects: DataFrame,
@@ -69,8 +49,7 @@ def intersection_overlay(segs: DataFrame, rects: DataFrame,
     cand = _candidates(segs, rects, cell_size)
     keep = [c for c in cand.columns if c not in
             ("_t0", "_t1", "ax", "ay", "bx", "by")]
-    return cand.select(*keep,
-                       *_piece_coords(F.col("_t0"), F.col("_t1")))
+    return cand.select(*keep, *_piece_coords())
 
 
 def difference_overlay(segs: DataFrame, rects: DataFrame,
@@ -124,8 +103,7 @@ def _subtract_intervals(segs: DataFrame, cand: DataFrame,
             .select(seg_id, *attrs, "ax", "ay", "bx", "by",
                     F.col("_p.t0").alias("_t0"),
                     F.col("_p.t1").alias("_t1"))
-            .select(seg_id, *attrs,
-                    *_piece_coords(F.col("_t0"), F.col("_t1"))))
+            .select(seg_id, *attrs, *_piece_coords()))
     whole = (segs.join(iv.select(seg_id), seg_id, "left_anti")
              .select(seg_id, *attrs,
                      F.col("ax").alias("px_a"), F.col("ay").alias("py_a"),
@@ -154,6 +132,7 @@ def polygon_clip_intervals(segs: DataFrame, polys: DataFrame,
     import pandas as pd
 
     from ..geometry import core, wkb
+    from ..geometry.morph import rings_to_edges
 
     s = segs.select(seg_id, "ax", "ay", "bx", "by")
     p = polys.select(poly_id, "xmin", "ymin", "xmax", "ymax", "geometry")
@@ -173,10 +152,7 @@ def polygon_clip_intervals(segs: DataFrame, polys: DataFrame,
             for blob, grp in pdf.groupby("geometry", sort=False):
                 rings = [r for po in wkb.decode_polygons(bytes(blob))
                          for r in po]
-                edges = np.vstack([np.column_stack(
-                    [r[:, 0], r[:, 1],
-                     np.roll(r[:, 0], -1), np.roll(r[:, 1], -1)])
-                    for r in rings])
+                edges = rings_to_edges(rings)
                 S = grp[["ax", "ay", "bx", "by"]].to_numpy(np.float64)
                 dxs = (S[:, 2] - S[:, 0])[:, None]
                 dys = (S[:, 3] - S[:, 1])[:, None]
@@ -390,8 +366,7 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
         seg_id="_sk", poly_id="_aid")
     owners_b = bseg.select("_sk", F.col(b_id).alias("_bid_own"))
     pb = (ivb.join(owners_b, "_sk")
-          .select(F.col("_aid"), F.col("_bid_own"),
-                  *_piece_coords(F.col("_t0"), F.col("_t1"))))
+          .select(F.col("_aid"), F.col("_bid_own"), *_piece_coords()))
 
     if op == "intersection":
         # pieces of dA inside B, per (a, b)
@@ -402,7 +377,7 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
         owners_a = aseg.select("_sk", F.col(a_id).alias("_aid"))
         pa = (iva.join(owners_a, "_sk")
               .select("_aid", F.col("_bid").alias("_bid_own"),
-                      *_piece_coords(F.col("_t0"), F.col("_t1"))))
+                      *_piece_coords()))
         pieces = pa.unionByName(pb)
         # candidate pair geometries (cell join on bboxes)
         ac = ap.select(box_cells(cell_size).alias("cell"),

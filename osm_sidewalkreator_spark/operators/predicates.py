@@ -15,6 +15,10 @@ DE-9IM for a 1-D segment vs a 2-D region:
   line-vs-area, always false (QGIS returns the empty set for them too)
 
 The clip interval is Liang-Barsky unrolled into greatest/least columns.
+This module owns the segment x rect clip: ``_clipped`` (the
+positive-length filter) and ``_piece_coords`` (the piece's endpoints)
+serve the overlays, the AOI clip of ``plans/pipeline.py`` and the
+rasterizer.
 """
 
 from __future__ import annotations
@@ -41,6 +45,33 @@ def _clip_interval() -> tuple[Column, Column, Column]:
         t1 = F.when(p > 0, F.least(t1, r)).otherwise(t1)
         outside = outside | ((p == 0) & (q < 0))
     return t0, t1, outside
+
+
+def _clipped(j: DataFrame) -> DataFrame:
+    """Rows of ``j`` whose segment meets its rect in a piece of positive
+    length, with the piece's parameter interval as ``_t0``/``_t1``."""
+    t0, t1, outside = _clip_interval()
+    return (j.withColumn("_t0", t0).withColumn("_t1", t1)
+             .filter(~outside & (t0 < t1)))
+
+
+def _piece_coords() -> list[Column]:
+    """Endpoint columns ``px_a, py_a, px_b, py_b`` of the ``[_t0, _t1]``
+    piece; untouched endpoints stay bit-identical (t=0/1 interpolation
+    would drift by an ULP: ax + 1.0*(bx-ax) != bx in general)."""
+    t0, t1 = F.col("_t0"), F.col("_t1")
+    dx = F.col("bx") - F.col("ax")
+    dy = F.col("by") - F.col("ay")
+    return [
+        F.when(t0 == 0.0, F.col("ax"))
+         .otherwise(F.col("ax") + t0 * dx).alias("px_a"),
+        F.when(t0 == 0.0, F.col("ay"))
+         .otherwise(F.col("ay") + t0 * dy).alias("py_a"),
+        F.when(t1 == 1.0, F.col("bx"))
+         .otherwise(F.col("ax") + t1 * dx).alias("px_b"),
+        F.when(t1 == 1.0, F.col("by"))
+         .otherwise(F.col("ay") + t1 * dy).alias("py_b"),
+    ]
 
 
 def _with_flags(j: DataFrame) -> DataFrame:

@@ -10,35 +10,21 @@ here matches the DEM table layout of FIXTURES.md §6).
 
 Plan shape (100 TB-safe): candidate cells come from the segment's bbox
 cover (JVM ``sequence``/``transform``/``explode`` — no Python), the
-exact in-cell length is a closed-form Liang-Barsky parameter-interval
-clip in whole-stage-codegen'd column expressions, zero-length
-candidates are filtered, and one ``groupBy(cell)`` aggregates the
-burn. One shuffle, on the cell key; AQE splits skewed hot cells as
-in every other cell join.
+exact in-cell length comes from the Liang-Barsky parameter-interval
+clip of ``operators/predicates.py`` against the cell's rect (the clip
+the overlays and the AOI clip use, whole-stage-codegen'd column
+expressions), zero-length candidates are filtered, and one
+``groupBy(cell)`` aggregates the burn. One shuffle, on the cell key;
+AQE splits skewed hot cells as in every other cell join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .predicates import _clipped
 from .tiling import seg_cells
-
-
-def _axis_interval(p0: Column, d: Column, lo: Column, hi: Column
-                   ) -> tuple[Column, Column]:
-    """Parameter interval [t0, t1] where p0 + t*d lies within [lo, hi];
-    degenerate axis (d == 0) contributes the full [0, 1] interval when
-    inside, else an empty one."""
-    t_a = (lo - p0) / d
-    t_b = (hi - p0) / d
-    t0 = F.when(d != 0, F.least(t_a, t_b)) \
-        .otherwise(F.when((p0 >= lo) & (p0 <= hi), F.lit(0.0))
-                   .otherwise(F.lit(1.0)))
-    t1 = F.when(d != 0, F.greatest(t_a, t_b)) \
-        .otherwise(F.when((p0 >= lo) & (p0 <= hi), F.lit(1.0))
-                   .otherwise(F.lit(0.0)))
-    return t0, t1
 
 
 def rasterize_segments(segs: DataFrame, cell_size: float) -> DataFrame:
@@ -55,18 +41,16 @@ def rasterize_segments(segs: DataFrame, cell_size: float) -> DataFrame:
     # sign-extend the low 32 bits (negative cell_y survives the pack)
     cy = F.shiftright(F.shiftleft(
         F.col("_cell").bitwiseAND(F.lit(0xFFFFFFFF)), 32), 32)
-    s = s.withColumn("_cx", cx).withColumn("_cy", cy)
+    s = (s.withColumn("_cx", cx).withColumn("_cy", cy)
+         .withColumn("xmin", F.col("_cx") * F.lit(cs))
+         .withColumn("ymin", F.col("_cy") * F.lit(cs))
+         .withColumn("xmax", F.col("xmin") + F.lit(cs))
+         .withColumn("ymax", F.col("ymin") + F.lit(cs)))
     dx = F.col("bx") - F.col("ax")
     dy = F.col("by") - F.col("ay")
-    x0 = F.col("_cx") * F.lit(cs)
-    y0 = F.col("_cy") * F.lit(cs)
-    tx0, tx1 = _axis_interval(F.col("ax"), dx, x0, x0 + F.lit(cs))
-    ty0, ty1 = _axis_interval(F.col("ay"), dy, y0, y0 + F.lit(cs))
-    t0 = F.greatest(tx0, ty0, F.lit(0.0))
-    t1 = F.least(tx1, ty1, F.lit(1.0))
     seg_len = F.sqrt(dx * dx + dy * dy)
-    in_len = F.greatest(t1 - t0, F.lit(0.0)) * seg_len
-    return (s.withColumn("_len", in_len)
+    in_len = (F.col("_t1") - F.col("_t0")) * seg_len
+    return (_clipped(s).withColumn("_len", in_len)
             .filter(F.col("_len") > 0)
             .groupBy(F.col("_cx").alias("cell_x"),
                      F.col("_cy").alias("cell_y"))

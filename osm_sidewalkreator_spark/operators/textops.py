@@ -36,7 +36,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
             .select("keeper_id", "dup_count"))
 
 
-def _shingles(col, n: int = 3):
+def _shingles(col):
     """Distinct word-3-gram shingles of ``col``, first-occurrence order.
 
     Arrow-batched construction (r06): the previous JVM form —
@@ -46,9 +46,8 @@ def _shingles(col, n: int = 3):
     reproduces its semantics exactly: split on a single space with
     trailing empties kept (Java ``split(re, -1)`` == ``str.split(" ")``),
     "t1 t2 t3" joining, and ``array_distinct``'s keep-first-occurrence
-    dedup (``dict.fromkeys``). Null text -> null array, < n tokens ->
+    dedup (``dict.fromkeys``). Null text -> null array, < 3 tokens ->
     empty array, both as before."""
-    assert n == 3, "engine shingle op is fixed at word-3-grams"
 
     @pandas_udf("array<string>")
     def _sh3(texts: pd.Series) -> pd.Series:

@@ -50,22 +50,15 @@ def _endpoint_connected(cur: np.ndarray, tol: float
         # a lone segment has no "other" to touch
         z = np.zeros(n, dtype=bool)
         return z, z.copy()
-    boxes = np.column_stack([
-        np.minimum(cur[:, 0], cur[:, 2]) - tol,
-        np.minimum(cur[:, 1], cur[:, 3]) - tol,
-        np.maximum(cur[:, 0], cur[:, 2]) + tol,
-        np.maximum(cur[:, 1], cur[:, 3]) + tol])
-    ext = np.maximum(boxes[:, 2] - boxes[:, 0], boxes[:, 3] - boxes[:, 1])
-    bin_size = max(float(np.median(ext)), tol, 1e-9)
     px = np.concatenate([cur[:, 0], cur[:, 2]])
     py = np.concatenate([cur[:, 1], cur[:, 3]])
     owner = np.tile(np.arange(n, dtype=np.int64), 2)
-    pi, bi = gridhash.join_points_to_boxes(px, py, boxes, bin_size)
+    pi, bi = gridhash.points_near_segments(px, py, cur, tol)
     m = bi != owner[pi]
     pi, bi = pi[m], bi[m]
     hit = np.zeros(2 * n, dtype=bool)
     if len(pi):
-        d = core.point_segment_distance(px[pi], py[pi], cur[bi])
+        d = core.closest_on_segments(px[pi], py[pi], cur[bi])[2]
         hit[pi[d <= tol]] = True
     return hit[:n], hit[n:]
 
@@ -95,13 +88,10 @@ def _within_buffered_blocks(segs: np.ndarray, blocks: list[np.ndarray],
         hit = core.points_in_ring(tx, ty, blk)
         near = ~hit
         if near.any():
-            edges = np.column_stack([blk, np.roll(blk, -1, axis=0)])
-            dmin = np.full(near.sum(), np.inf)
-            ex, ey = tx[near], ty[near]
-            for e in edges:
-                dmin = np.minimum(dmin, core.point_segment_distance(
-                    ex, ey, np.broadcast_to(e, (len(ex), 4))))
-            hit[near] = dmin <= buffer
+            edges = morph.rings_to_edges([blk])
+            d = core.closest_on_segments(tx[near][:, None],
+                                         ty[near][:, None], edges)[2]
+            hit[near] = d.min(axis=1) <= buffer
         inside[todo] |= hit
     return inside[:n] & inside[n:2 * n] & inside[2 * n:]
 
@@ -164,8 +154,11 @@ def filter_protoblocks_by_existing_sidewalks(
         inc = core.points_in_ring(esw_segs[:, 0], esw_segs[:, 1], ring) \
             | core.points_in_ring(esw_segs[:, 2], esw_segs[:, 3], ring)
         if not inc.all():
-            edges = np.hstack([ring, np.roll(ring, -1, axis=0)])
-            inc |= _segs_intersect_matrix(esw_segs, edges).any(axis=1)
+            edges = morph.rings_to_edges([ring])
+            a = esw_segs[:, None, :2]
+            cross, _ = core.segments_cross(a, esw_segs[:, None, 2:] - a,
+                                           edges)
+            inc |= cross.any(axis=1)
         if not inc.any():
             kept.append(ring)
             continue
@@ -202,46 +195,18 @@ def min_segseg_dists(asegs: np.ndarray, bsegs: np.ndarray) -> np.ndarray:
         e = min(s + chunk, n)
         A = asegs[s:e]
         # endpoint-to-segment distances both ways (T, M)
-        d1 = _pts_to_segs(A[:, 0], A[:, 1], bsegs)
-        d2 = _pts_to_segs(A[:, 2], A[:, 3], bsegs)
-        d3 = _pts_to_segs(bsegs[:, 0], bsegs[:, 1], A)
-        d4 = _pts_to_segs(bsegs[:, 2], bsegs[:, 3], A)
+        d1 = core.closest_on_segments(A[:, :1], A[:, 1:2], bsegs)[2]
+        d2 = core.closest_on_segments(A[:, 2:3], A[:, 3:], bsegs)[2]
+        d3 = core.closest_on_segments(bsegs[:, :1], bsegs[:, 1:2], A)[2]
+        d4 = core.closest_on_segments(bsegs[:, 2:3], bsegs[:, 3:], A)[2]
         d = np.minimum(np.minimum(d1, d2),
                        np.minimum(d3.T, d4.T))
         # zero out crossing pairs
-        cross = _segs_intersect_matrix(A, bsegs)
+        a = A[:, None, :2]
+        cross, _ = core.segments_cross(a, A[:, None, 2:] - a, bsegs)
         d[cross] = 0.0
         out[s:e] = d.min(axis=1)
     return out
-
-
-def _pts_to_segs(px, py, segs):
-    """(T,) points vs (M,) segments -> (T, M) distances."""
-    ax, ay = segs[:, 0], segs[:, 1]
-    dx = segs[:, 2] - ax
-    dy = segs[:, 3] - ay
-    ll = dx * dx + dy * dy
-    ll_safe = np.where(ll == 0, 1.0, ll)
-    t = ((px[:, None] - ax) * dx + (py[:, None] - ay) * dy) / ll_safe
-    t = np.where(ll == 0, 0.0, np.clip(t, 0.0, 1.0))
-    cx = ax + t * dx
-    cy = ay + t * dy
-    return np.hypot(px[:, None] - cx, py[:, None] - cy)
-
-
-def _segs_intersect_matrix(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """(T,M) proper/touching intersection test."""
-    a1x, a1y, b1x, b1y = (A[:, i][:, None] for i in range(4))
-    a2x, a2y, b2x, b2y = (B[:, i][None, :] for i in range(4))
-    d1x, d1y = b1x - a1x, b1y - a1y
-    d2x, d2y = b2x - a2x, b2y - a2y
-    denom = d1x * d2y - d1y * d2x
-    ex, ey = a2x - a1x, a2y - a1y
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = (ex * d2y - ey * d2x) / denom
-        u = (ex * d1y - ey * d1x) / denom
-    return ((np.abs(denom) > 1e-12) & (t >= 0) & (t <= 1)
-            & (u >= 0) & (u <= 1))
 
 
 def shrink_widths_by_buildings(segs: np.ndarray, widths: np.ndarray,
@@ -360,17 +325,12 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     ep_y = np.concatenate([noded_segs[:, 1], noded_segs[:, 3]])
     ep_seg = np.tile(np.arange(n), 2)
     ep_end = np.repeat(np.array([0, 1]), n)       # 0 = P0, 1 = PF
-    boxes = np.column_stack([
-        np.minimum(noded_segs[:, 0], noded_segs[:, 2]) - search_buffer,
-        np.minimum(noded_segs[:, 1], noded_segs[:, 3]) - search_buffer,
-        np.maximum(noded_segs[:, 0], noded_segs[:, 2]) + search_buffer,
-        np.maximum(noded_segs[:, 1], noded_segs[:, 3]) + search_buffer])
+    boxes = gridhash.seg_bboxes(noded_segs, search_buffer)
     med = float(np.median(lens[lens > 0])) if (lens > 0).any() else 1.0
     bin_size = max(search_buffer * 4, med)
     pi, bi = gridhash.join_points_to_boxes(ep_x, ep_y, boxes, bin_size)
     if len(pi):
-        d = core.point_segment_distance(ep_x[pi], ep_y[pi],
-                                        noded_segs[bi])
+        d = core.closest_on_segments(ep_x[pi], ep_y[pi], noded_segs[bi])[2]
         near = (d <= search_buffer) & (bi != ep_seg[pi])
         if way_ids is not None:
             w = np.asarray(way_ids)
@@ -443,35 +403,17 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
         return crossings, kerbs
 
     # ---- ray x sidewalk intersections (vectorized over grid pairs) ----
-    # ray pA->pE spans center +- perp; a sidewalk segment can only hit it
-    # if its bbox padded by the max half-span contains the center.
+    # ray pA->pE spans center +- perp
     sw = np.asarray(sidewalk_segs, dtype=np.float64)
     span_max = float(np.hypot(perp[:, 0], perp[:, 1]).max())
-    sboxes = np.column_stack([
-        np.minimum(sw[:, 0], sw[:, 2]) - span_max,
-        np.minimum(sw[:, 1], sw[:, 3]) - span_max,
-        np.maximum(sw[:, 0], sw[:, 2]) + span_max,
-        np.maximum(sw[:, 1], sw[:, 3]) + span_max])
-    slen = np.hypot(sw[:, 2] - sw[:, 0], sw[:, 3] - sw[:, 1])
-    sbin = max(span_max * 2,
-               float(np.median(slen[slen > 0])) if (slen > 0).any() else 1.0)
-    ci, si2 = gridhash.join_points_to_boxes(center[:, 0], center[:, 1],
-                                            sboxes, sbin)
+    ci, si2 = _ray_candidates(center, span_max, sw)
     pA = center - perp
     pE = center + perp
     best_pt = np.full((m, 2, 2), np.nan)          # (ray, side A/E, xy)
     if len(ci):
         a1 = pA[ci]
         d1 = pE[ci] - a1
-        a2 = sw[si2, :2]
-        d2 = sw[si2, 2:] - a2
-        denom = d1[:, 0] * d2[:, 1] - d1[:, 1] * d2[:, 0]
-        okd = np.abs(denom) > 1e-12
-        e = a2 - a1
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = (e[:, 0] * d2[:, 1] - e[:, 1] * d2[:, 0]) / denom
-            u = (e[:, 0] * d1[:, 1] - e[:, 1] * d1[:, 0]) / denom
-        hit = okd & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1)
+        hit, t = core.segments_cross(a1, d1, sw[si2])
         if hit.any():
             hci = ci[hit]
             hsi = si2[hit]
@@ -481,14 +423,11 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
             a_side = dA < dE
             side = np.where(a_side, 0, 1)
             dist = np.where(a_side, dA, dE)
-            # first-minimum per (ray, side), ties to the smallest
+            # nearest hit per (ray, side), ties to the smallest
             # sidewalk-segment index (matches argmin over seg order)
             key = hci * 2 + side
-            o2 = np.lexsort((hsi, dist, key))
-            key_s = key[o2]
-            first = np.concatenate([[True], key_s[1:] != key_s[:-1]])
-            kf = key_s[first]
-            best_pt[kf // 2, kf % 2] = pts[o2][first]
+            sel = gridhash.first_min_per_key(key, dist, hsi)
+            best_pt[key[sel] // 2, key[sel] % 2] = pts[sel]
 
     both = ~np.isnan(best_pt[:, 0, 0]) & ~np.isnan(best_pt[:, 1, 0])
     if enlarge:
@@ -546,6 +485,18 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     return crossings, kerbs
 
 
+def _ray_candidates(centers: np.ndarray, reach: float, sw: np.ndarray
+                    ) -> tuple[np.ndarray, np.ndarray]:
+    """Candidate (ray, sidewalk segment) pairs for rays that stay within
+    ``reach`` of their ``centers``: a segment can only meet such a ray
+    if its bbox padded by ``reach`` contains the center."""
+    slen = core.segment_lengths(sw)
+    sbin = max(reach * 2,
+               float(np.median(slen[slen > 0])) if (slen > 0).any() else 1.0)
+    return gridhash.join_points_to_boxes(centers[:, 0], centers[:, 1],
+                                         gridhash.seg_bboxes(sw, reach), sbin)
+
+
 def _side_ray_hits(cen: np.ndarray, dvec: np.ndarray, sw: np.ndarray
                    ) -> tuple[np.ndarray, np.ndarray]:
     """Nearest-to-origin intersection of rays [cen, cen+dvec] with
@@ -556,40 +507,19 @@ def _side_ray_hits(cen: np.ndarray, dvec: np.ndarray, sw: np.ndarray
     if m == 0 or len(sw) == 0:
         return has, pts_out
     reach = float(np.hypot(dvec[:, 0], dvec[:, 1]).max())
-    boxes = np.column_stack([
-        np.minimum(sw[:, 0], sw[:, 2]) - reach,
-        np.minimum(sw[:, 1], sw[:, 3]) - reach,
-        np.maximum(sw[:, 0], sw[:, 2]) + reach,
-        np.maximum(sw[:, 1], sw[:, 3]) + reach])
-    slen = np.hypot(sw[:, 2] - sw[:, 0], sw[:, 3] - sw[:, 1])
-    sbin = max(reach * 2,
-               float(np.median(slen[slen > 0])) if (slen > 0).any() else 1.0)
-    ci, si = gridhash.join_points_to_boxes(cen[:, 0], cen[:, 1], boxes, sbin)
+    ci, si = _ray_candidates(cen, reach, sw)
     if len(ci) == 0:
         return has, pts_out
     a1 = cen[ci]
     d1 = dvec[ci]
-    a2 = sw[si, :2]
-    d2 = sw[si, 2:] - a2
-    denom = d1[:, 0] * d2[:, 1] - d1[:, 1] * d2[:, 0]
-    okd = np.abs(denom) > 1e-12
-    e = a2 - a1
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = (e[:, 0] * d2[:, 1] - e[:, 1] * d2[:, 0]) / denom
-        u = (e[:, 0] * d1[:, 1] - e[:, 1] * d1[:, 0]) / denom
-    hit = okd & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1)
+    hit, t = core.segments_cross(a1, d1, sw[si])
     if not hit.any():
         return has, pts_out
     hci = ci[hit]
-    hsi = si[hit]
     tt = t[hit]
-    o2 = np.lexsort((hsi, tt, hci))
-    hci_s = hci[o2]
-    first = np.concatenate([[True], hci_s[1:] != hci_s[:-1]])
-    sel = o2[first]
-    pts = a1[hit][sel] + t[hit][sel][:, None] * d1[hit][sel]
-    has[hci_s[first]] = True
-    pts_out[hci_s[first]] = pts
+    sel = gridhash.first_min_per_key(hci, tt, si[hit])
+    has[hci[sel]] = True
+    pts_out[hci[sel]] = a1[hit][sel] + tt[sel][:, None] * d1[hit][sel]
     return has, pts_out
 
 

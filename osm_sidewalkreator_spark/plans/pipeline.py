@@ -32,6 +32,7 @@ from .. import params as P
 from ..geometry import core, wkb
 from ..synth import CITY_LAT0, CITY_LON0, ensure_synth
 from ..functions.geo import st_explode_segments, make_transform_udf
+from ..operators.predicates import _clipped, _piece_coords
 from ..operators.tiling import seg_cells
 from ..sources.catalog import load_table, parquet_path, table_prefix
 from . import kernels
@@ -66,34 +67,18 @@ def clip_segments_to_rect(segs: DataFrame, rect: DataFrame) -> DataFrame:
     """True AOI clip (P1, ``cliplayer_v2`` generic_functions.py:391-401):
     cut each segment AT the AOI boundary, not just prefilter features.
 
-    ``rect``: one-row (xmin, ymin, xmax, ymax) broadcast. Liang-Barsky
-    interval in pure column algebra (same formulas as
-    operators/predicates.py); non-intersecting segments drop, partial
-    ones are replaced by their inside piece. Zero-length leftovers
-    (segments that only touch the boundary) are dropped.
+    ``rect``: one-row (xmin, ymin, xmax, ymax) broadcast. The Liang-Barsky
+    interval and the piece endpoints are ``operators/predicates.py``'s
+    column algebra; non-intersecting segments drop, partial ones are
+    replaced by their inside piece. Zero-length leftovers (segments that
+    only touch the boundary) are dropped.
     """
-    from ..operators.predicates import _clip_interval
-    j = segs.crossJoin(F.broadcast(rect.select("xmin", "ymin",
-                                               "xmax", "ymax")))
-    t0, t1, outside = _clip_interval()
-    j = (j.withColumn("_t0", t0).withColumn("_t1", t1)
-          .filter(~outside & (t0 < t1)))
-    dx = F.col("bx") - F.col("ax")
-    dy = F.col("by") - F.col("ay")
-    # untouched endpoints stay bit-identical (t=0/1 interpolation would
-    # drift by an ULP: ax + 1.0*(bx-ax) != bx in general)
-    t0c, t1c = F.col("_t0"), F.col("_t1")
-    out = j.select(
-        *[c for c in segs.columns if c not in ("ax", "ay", "bx", "by")],
-        F.when(t0c == 0.0, F.col("ax"))
-         .otherwise(F.col("ax") + t0c * dx).alias("ax"),
-        F.when(t0c == 0.0, F.col("ay"))
-         .otherwise(F.col("ay") + t0c * dy).alias("ay"),
-        F.when(t1c == 1.0, F.col("bx"))
-         .otherwise(F.col("ax") + t1c * dx).alias("bx"),
-        F.when(t1c == 1.0, F.col("by"))
-         .otherwise(F.col("ay") + t1c * dy).alias("by"))
-    return out.select(*segs.columns)
+    j = _clipped(segs.crossJoin(F.broadcast(rect.select("xmin", "ymin",
+                                                         "xmax", "ymax"))))
+    ends = ("ax", "ay", "bx", "by")
+    return j.select(*[c for c in segs.columns if c not in ends],
+                    *[c.alias(n) for c, n in zip(_piece_coords(), ends)]
+                    ).select(*segs.columns)
 
 
 def assign_widths(streets: DataFrame) -> DataFrame:

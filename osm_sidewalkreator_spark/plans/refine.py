@@ -11,7 +11,7 @@ from __future__ import annotations
 import numpy as np
 
 from .. import params as P
-from ..geometry import core, gridhash, noding, voronoi
+from ..geometry import core, gridhash, morph, noding, voronoi
 from . import kernels
 
 
@@ -135,52 +135,28 @@ def snap_lines_to_reference(lines: list[np.ndarray], ref_segs: np.ndarray,
     itself."""
     if len(ref_segs) == 0:
         return lines
-    ax, ay = ref_segs[:, 0], ref_segs[:, 1]
-    dx = ref_segs[:, 2] - ax
-    dy = ref_segs[:, 3] - ay
-    ll = dx * dx + dy * dy
-    ll_safe = np.where(ll == 0, 1.0, ll)
     if behavior == 1 and line_owners is None:
         # hot path (the in-pipeline J11 pass): all vertices, no owner
-        # masking. r06: one flat grid-hash candidate join over ALL
-        # lines' vertices vs tol-padded segment boxes replaces the
-        # per-line dense (vertices x all-ref-segs) distance matrix —
-        # any segment farther than tol cannot snap, so the prefilter
-        # is a superset of every possible hit. Distances use the
-        # identical formula per (vertex, segment) pair, and the
-        # (vertex, d, segment-index) lexsort reproduces np.argmin's
-        # lowest-index-among-ties rule, so snapped outputs are
-        # bit-identical to the dense scan.
+        # masking. One flat grid-hash candidate join over ALL lines'
+        # vertices vs tol-padded segment boxes instead of the dense
+        # (vertices x ref-segs) matrix below: any segment farther than
+        # tol cannot snap. The per-vertex first minimum over
+        # (d, segment index) is np.argmin's lowest-index-among-ties
+        # rule, so snapped outputs equal the dense scan's bit for bit.
         if not lines:
             return lines
         counts = np.fromiter((len(l) for l in lines), np.int64,
                              len(lines))
         flat = np.concatenate(lines)
         px_f, py_f = flat[:, 0], flat[:, 1]
-        boxes = np.column_stack([
-            np.minimum(ref_segs[:, 0], ref_segs[:, 2]) - tol,
-            np.minimum(ref_segs[:, 1], ref_segs[:, 3]) - tol,
-            np.maximum(ref_segs[:, 0], ref_segs[:, 2]) + tol,
-            np.maximum(ref_segs[:, 1], ref_segs[:, 3]) + tol])
-        ext = np.maximum(boxes[:, 2] - boxes[:, 0],
-                         boxes[:, 3] - boxes[:, 1])
-        bin_size = max(float(np.median(ext)), tol, 1e-9)
-        pi, si = gridhash.join_points_to_boxes(px_f, py_f, boxes,
-                                               bin_size)
+        pi, si = gridhash.points_near_segments(px_f, py_f, ref_segs, tol)
         snapped_flat = flat.copy()
         if len(pi):
-            t = ((px_f[pi] - ax[si]) * dx[si]
-                 + (py_f[pi] - ay[si]) * dy[si]) / ll_safe[si]
-            t = np.where(ll[si] == 0, 0.0, np.clip(t, 0.0, 1.0))
-            cx = ax[si] + t * dx[si]
-            cy = ay[si] + t * dy[si]
-            d = np.hypot(px_f[pi] - cx, py_f[pi] - cy)
-            order = np.lexsort((si, d, pi))
-            pi_s = pi[order]
-            first = np.concatenate([[True], pi_s[1:] != pi_s[:-1]])
-            sel = order[first]
+            cx, cy, d = core.closest_on_segments(px_f[pi], py_f[pi],
+                                                 ref_segs[si])
+            sel = gridhash.first_min_per_key(pi, d, si)
             hit = d[sel] <= tol
-            vsel = pi_s[first][hit]
+            vsel = pi[sel][hit]
             snapped_flat[vsel, 0] = cx[sel][hit]
             snapped_flat[vsel, 1] = cy[sel][hit]
         ends = np.cumsum(counts)
@@ -216,11 +192,7 @@ def snap_lines_to_reference(lines: list[np.ndarray], ref_segs: np.ndarray,
             node_hit = np.zeros(len(vidx), dtype=bool)
 
         if behavior in (0, 1):
-            t = ((px - ax) * dx + (py - ay) * dy) / ll_safe
-            t = np.where(ll == 0, 0.0, np.clip(t, 0.0, 1.0))
-            cx = ax + t * dx
-            cy = ay + t * dy
-            d = np.hypot(px - cx, py - cy)
+            cx, cy, d = core.closest_on_segments(px, py, ref_segs)
             if own is not None and ref_owners is not None:
                 d[:, ref_owners == own] = np.inf
             k = np.argmin(d, axis=1)
@@ -308,11 +280,8 @@ def insert_extra_vertices(lines: list[np.ndarray],
         # one node may sit within tol of several segments (e.g. near a
         # subject corner): insert it only into the CLOSEST hit segment,
         # matching the snapper's single-anchor semantics
-        order = np.lexsort((d[ni, si], ni))
-        ni, si = ni[order], si[order]
-        first = np.ones(len(ni), dtype=bool)
-        first[1:] = ni[1:] != ni[:-1]
-        ni, si = ni[first], si[first]
+        sel = gridhash.first_min_per_key(ni, d[ni, si], si)
+        ni, si = ni[sel], si[sel]
         # dedup identical node coordinates (shared seg endpoints show
         # up twice in endpoint-derived node sets)
         key = np.round(nodes[ni] / max(eps, 1e-12)).astype(np.int64)
@@ -482,10 +451,5 @@ def voronoi_split_block(sidewalk_lines: list[np.ndarray],
         return sidewalk_lines
     env = voronoi.envelope_bbox(np.vstack([block_ring, pois]), pad=50.0)
     cells = voronoi.voronoi_cells(pois, env)
-    cutters = []
-    for c in cells:
-        if len(c) >= 2:
-            nxt = np.roll(c, -1, axis=0)
-            cutters.append(np.hstack([c, nxt]))
-    cut = np.concatenate(cutters) if cutters else np.empty((0, 4))
+    cut = morph.rings_to_edges([c for c in cells if len(c) >= 2])
     return split_lines_with_lines(sidewalk_lines, cut)

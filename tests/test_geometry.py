@@ -145,7 +145,8 @@ def city():
 
 @pytest.fixture(scope="module")
 def city_out(city):
-    return kernels.tile_pipeline(*city)
+    segs, widths = city
+    return kernels.tile_pipeline(segs, widths)
 
 
 def test_pipeline_protoblock_count(city_out):
@@ -155,12 +156,14 @@ def test_pipeline_protoblock_count(city_out):
 
 def test_pipeline_sidewalk_rings(city):
     # without refinement: one closed ring per block interior
-    out = kernels.tile_pipeline(*city, refine_lines=False)
+    segs, widths = city
+    out = kernels.tile_pipeline(segs, widths, refine_lines=False)
     assert len(out["sidewalks"]) == 30
 
 
 def test_pipeline_refinement_preserves_length(city, city_out):
-    raw = kernels.tile_pipeline(*city, refine_lines=False)
+    segs, widths = city
+    raw = kernels.tile_pipeline(segs, widths, refine_lines=False)
     raw_len = sum(core.polyline_length(l) for l in raw["sidewalks"])
     ref_len = sum(core.polyline_length(l) for l in city_out["sidewalks"])
     # corner splitting multiplies pieces but conserves total length

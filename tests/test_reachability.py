@@ -26,10 +26,13 @@ Four checks over the package and ``__spark_entry__.py``, all on the AST
 3. Imports. Every module-level import binds a name its module uses.
 4. Parameters. Every defaulted parameter of a top-level def is set by
    some call in the repository (entrypoints, ``perfbench/``, scripts,
-   tests): passed by keyword or by position, or the def is called with
-   ``*``/``**``. Callees are matched by name only, which can only
-   over-count what is set. A parameter no call sets is a constant, so
-   it belongs in the body.
+   tests): passed by keyword or by position. A ``**kw`` argument sets
+   the keys of the dict literal or ``dict(...)`` its def binds to
+   ``kw``, or, when ``kw`` is that def's own ``**`` parameter, the keys
+   the def's callers pass into it; any other ``**`` argument, and any
+   ``*`` argument, sets every parameter. Callees are matched by name
+   only, which can only over-count what is set. A parameter no call
+   sets is a constant, so it belongs in the body.
 """
 
 from __future__ import annotations
@@ -64,8 +67,6 @@ KEEP = {
         "DuckDB side of q_golden_crossing_length",
     "osm_sidewalkreator_spark.operators.raster.rasterize_segments":
         "the only vector->raster path of the raster<->vector joins",
-    "osm_sidewalkreator_spark.operators.raster._axis_interval":
-        "helper of rasterize_segments",
 }
 
 # Each defaulted parameter that no call sets but stays a parameter.
@@ -210,9 +211,53 @@ def _defaulted_params(fn: ast.FunctionDef) -> dict[str, int | None]:
     return out
 
 
+def _dict_keys(node: ast.AST) -> set[str] | None:
+    """Keys of a ``{...}`` literal or ``dict(k=...)`` call, else None."""
+    if isinstance(node, ast.Dict) and all(
+            isinstance(k, ast.Constant) and isinstance(k.value, str)
+            for k in node.keys):
+        return {k.value for k in node.keys}
+    if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+            and node.func.id == "dict" and not node.args
+            and all(k.arg for k in node.keywords)):
+        return {k.arg for k in node.keywords}
+    return None
+
+
+def _calls(node: ast.AST, stack: tuple = ()):
+    """(call, enclosing defs innermost last) for every call under node."""
+    for child in ast.iter_child_nodes(node):
+        inner = stack + (child,) if isinstance(child, _FUNCS) else stack
+        if isinstance(child, ast.Call):
+            yield child, stack
+        yield from _calls(child, inner)
+
+
+def _kwargs_source(name: str, stack: tuple):
+    """What ``**name`` unpacks inside the defs ``stack``: the name of the
+    def whose own ``**`` parameter it is (a str), the keys of the dict
+    literal or ``dict(...)`` that def binds to it (a set), or None."""
+    for fn in reversed(stack):
+        if fn.args.kwarg is not None and fn.args.kwarg.arg == name:
+            return fn.name
+        bound = [n.value for n in ast.walk(fn) if isinstance(n, ast.Assign)
+                 and any(isinstance(t, ast.Name) and t.id == name
+                         for t in n.targets)]
+        if bound:
+            keys = [_dict_keys(v) for v in bound]
+            return None if None in keys else set().union(*keys)
+    return None
+
+
 def unset_params() -> list[str]:
     """``module.def.param`` of each defaulted parameter of a top-level
-    def that no call in the repository sets."""
+    def that no call in the repository sets.
+
+    A ``g(**kw)`` call sets only the keys ``kw`` can hold: those of a
+    dict literal or ``dict(...)`` its def binds to ``kw``, or, when
+    ``kw`` is the calling def's own ``**`` parameter, the keys the calls
+    of that def pass to it. Any other ``**`` argument, and any ``*``
+    argument, counts as setting every parameter."""
     params: dict[str, list[tuple[str, dict]]] = {}
     for path in _sources():
         for node in _parse(path).body:
@@ -221,36 +266,70 @@ def unset_params() -> list[str]:
                 if dflt:
                     params.setdefault(node.name, []).append(
                         (_module_name(path), dflt))
-    keywords: dict[str, set[str]] = {name: set() for name in params}
-    n_pos = dict.fromkeys(params, 0)
+    keywords: dict[str, set[str]] = {}
+    n_pos: dict[str, int] = {}
+    named: dict[str, set[str]] = {}
     starred: set[str] = set()
+    forwards: set[tuple[str, str]] = set()
     for path in sorted(ROOT.rglob("*.py")):
         if any(p.startswith(".") or p == "data"
                for p in path.relative_to(ROOT).parts):
             continue
-        for n in ast.walk(_parse(path)):
-            if not isinstance(n, ast.Call):
-                continue
+        tree = _parse(path)
+        for fn in ast.walk(tree):
+            if isinstance(fn, _FUNCS):
+                a = fn.args
+                named.setdefault(fn.name, set()).update(
+                    x.arg for x in a.posonlyargs + a.args + a.kwonlyargs)
+        for n, stack in _calls(tree):
             f = n.func
             name = f.id if isinstance(f, ast.Name) else \
                 f.attr if isinstance(f, ast.Attribute) else None
-            if name not in params:
+            if name is None:
                 continue
-            if any(isinstance(a, ast.Starred) for a in n.args) \
-                    or any(k.arg is None for k in n.keywords):
+            keys = keywords.setdefault(name, set())
+            keys |= {k.arg for k in n.keywords if k.arg}
+            n_pos[name] = max(n_pos.get(name, 0), len(n.args))
+            if any(isinstance(a, ast.Starred) for a in n.args):
                 starred.add(name)
-            keywords[name] |= {k.arg for k in n.keywords}
-            n_pos[name] = max(n_pos[name], len(n.args))
+            for k in n.keywords:
+                if k.arg is not None:
+                    continue
+                src = _dict_keys(k.value)
+                if src is None and isinstance(k.value, ast.Name):
+                    src = _kwargs_source(k.value.id, stack)
+                if isinstance(src, str):
+                    forwards.add((src, name))
+                elif src is None:
+                    starred.add(name)
+                else:
+                    keys |= src
+    # a def's ** parameter holds the keys its calls pass beyond its
+    # named parameters; follow the forwards until nothing changes
+    changed = True
+    while changed:
+        changed = False
+        for src, dst in forwards:
+            extra = (keywords.get(src, set()) - named.get(src, set())
+                     - keywords.setdefault(dst, set()))
+            if extra:
+                keywords[dst] |= extra
+                changed = True
+        for src, dst in forwards:
+            if src in starred and dst not in starred:
+                starred.add(dst)
+                changed = True
     return sorted(
         f"{mod}.{name}.{p}"
         for name, found in params.items() if name not in starred
         for mod, dflt in found for p, i in dflt.items()
-        if p not in keywords[name] and (i is None or i >= n_pos[name]))
+        if p not in keywords.get(name, set())
+        and (i is None or i >= n_pos.get(name, 0)))
 
 
 def test_every_top_level_def_is_reached_or_kept():
     unreached = unreached_defs()
-    assert len(KEEP) <= 9
+    assert len(KEEP) <= 8
     dead = sorted(set(unreached) - set(KEEP))
     assert not dead, (
         f"{len(dead)} top-level defs and module constants "

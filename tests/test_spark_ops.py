@@ -126,11 +126,11 @@ def test_knn_join_agrees_with_bruteforce(spark):
         spark.createDataFrame(pts), spark.createDataFrame(segs),
         k=1, max_dist=50.0, cell_size=64.0).toPandas()
     # NumPy brute force
-    from osm_sidewalkreator_spark.geometry.core import point_segment_distance
+    from osm_sidewalkreator_spark.geometry.core import closest_on_segments
     sarr = segs[["ax", "ay", "bx", "by"]].to_numpy()
-    best = point_segment_distance(pts["x"].to_numpy()[:, None],
-                                  pts["y"].to_numpy()[:, None],
-                                  sarr).min(axis=1)
+    best = closest_on_segments(pts["x"].to_numpy()[:, None],
+                               pts["y"].to_numpy()[:, None],
+                               sarr)[2].min(axis=1)
     expected = {u for u, d in zip(pts["url"], best) if d <= 50.0}
     assert set(got["url"]) == expected
     gd = dict(zip(got["url"], got["dist"]))

@@ -105,8 +105,8 @@ def _crossings_loop_reference(noded_segs, widths, sidewalk_segs,
         if ln == 0:
             continue
         for end_code, ep in ((0, a), (1, b)):
-            d = core.point_segment_distance(
-                np.full(n, ep[0]), np.full(n, ep[1]), noded_segs)
+            d = core.closest_on_segments(
+                np.full(n, ep[0]), np.full(n, ep[1]), noded_segs)[2]
             near = d <= search_buffer
             near[si] = False
             if way_ids is not None:
