@@ -1,15 +1,13 @@
-"""Arrow-vectorized scalar geometry functions (pandas UDFs) plus
-JVM-side column helpers. The hot paths (tiling, distance math, hashing)
-stay in ``pyspark.sql.functions`` built-ins; WKB decode/encode is the
-only work that crosses into Python, batched via Arrow.
+"""Arrow-vectorized scalar geometry functions (pandas UDFs) over WKB
+columns: length, endpoints, TM projection and segment explode. The hot
+paths (tiling, distance math, hashing) stay in
+``pyspark.sql.functions`` built-ins; WKB decode/encode is the only work
+that crosses into Python, batched via Arrow.
 """
 
-from .geo import (st_area, st_centroid, st_endpoints, st_length,
-                  st_num_points, st_perimeter, st_transform_tm,
-                  st_transform_4326, st_explode_segments)
+from .geo import (st_endpoints, st_length, st_transform_tm,
+                  st_explode_segments)
 
 __all__ = [
-    "st_area", "st_centroid", "st_endpoints", "st_length",
-    "st_num_points", "st_perimeter", "st_transform_tm",
-    "st_transform_4326", "st_explode_segments",
+    "st_endpoints", "st_length", "st_transform_tm", "st_explode_segments",
 ]

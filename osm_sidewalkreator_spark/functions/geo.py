@@ -1,13 +1,15 @@
 """Scalar geometry pandas UDFs over WKB columns.
 
-Each mirrors a reference per-feature operation (SURVEY.md §2.2):
+The UDFs and the reference per-feature operations they mirror
+(SURVEY.md §2.2):
 
-- ``st_length`` / ``st_area`` / ``st_perimeter``: ``create_area_field`` /
-  ``create_perimeter_field`` (``generic_functions.py:518-557``)
-- ``st_centroid``: ``gen_centroids_layer`` (``generic_functions.py:363-370``)
-- ``st_transform_tm`` / ``st_transform_4326``: ``reproject_layer_localTM``
-  (``generic_functions.py:619-665``)
-- ``st_num_points``: ``count_of_vertex`` (``generic_functions.py:1615-1630``)
+- ``st_length``: the length fields of ``generic_functions.py:518-557``
+- ``st_endpoints``: the first and last vertex of a line
+- ``st_transform_tm`` and ``make_transform_udf``:
+  ``reproject_layer_localTM`` (``generic_functions.py:619-665``)
+- ``st_explode_segments``: the 2-point segments of a geometry's edges
+- ``st_interpolate``: ``QgsGeometry.interpolate``
+  (``osm_sidewalkreator.py:1365``)
 
 All are Series->Series Arrow-batched (no per-row Python at the DataFrame
 level; the per-geometry decode loop runs over a batch inside the worker).
@@ -30,55 +32,6 @@ def st_length(col: pd.Series) -> pd.Series:
     for i, blob in enumerate(col):
         t, parts = wkb.decode(blob)
         out[i] = sum(core.polyline_length(p) for p in parts if len(p) > 1)
-    return pd.Series(out)
-
-
-@pandas_udf(T.DoubleType())
-def st_area(col: pd.Series) -> pd.Series:
-    out = np.empty(len(col))
-    for i, blob in enumerate(col):
-        total = 0.0
-        for rings in wkb.decode_polygons(blob):
-            total += abs(core.ring_signed_area(rings[0]))
-            for h in rings[1:]:
-                total -= abs(core.ring_signed_area(h))
-        out[i] = total
-    return pd.Series(out)
-
-
-@pandas_udf(T.DoubleType())
-def st_perimeter(col: pd.Series) -> pd.Series:
-    out = np.empty(len(col))
-    for i, blob in enumerate(col):
-        out[i] = sum(core.ring_perimeter(r)
-                     for rings in wkb.decode_polygons(blob) for r in rings)
-    return pd.Series(out)
-
-
-@pandas_udf(T.StructType([T.StructField("x", T.DoubleType()),
-                          T.StructField("y", T.DoubleType())]))
-def st_centroid(col: pd.Series) -> pd.DataFrame:
-    xs = np.empty(len(col))
-    ys = np.empty(len(col))
-    for i, blob in enumerate(col):
-        t, parts = wkb.decode(blob)
-        if t in (wkb.POLYGON, wkb.MULTIPOLYGON):
-            cx, cy = core.ring_centroid(parts[0])
-        elif t == wkb.POINT:
-            cx, cy = parts[0][0]
-        else:
-            allc = np.vstack(parts)
-            cx, cy = float(allc[:, 0].mean()), float(allc[:, 1].mean())
-        xs[i], ys[i] = cx, cy
-    return pd.DataFrame({"x": xs, "y": ys})
-
-
-@pandas_udf(T.IntegerType())
-def st_num_points(col: pd.Series) -> pd.Series:
-    out = np.empty(len(col), dtype=np.int32)
-    for i, blob in enumerate(col):
-        _, parts = wkb.decode(blob)
-        out[i] = sum(len(p) for p in parts)
     return pd.Series(out)
 
 
@@ -109,35 +62,23 @@ def _reencode(t: int, parts: list[np.ndarray]) -> bytes:
 
 def make_transform_udf(lon0: float, lat0: float, forward: bool):
     """Projection UDF factory bound to an AOI-local TM origin."""
+    proj = tm_forward if forward else tm_inverse
+
+    def xy(a: np.ndarray) -> np.ndarray:
+        return np.column_stack(proj(a[:, 0], a[:, 1], lon0, lat0))
 
     @pandas_udf(T.BinaryType())
     def _udf(col: pd.Series) -> pd.Series:
         out = []
         for blob in col:
-            t, parts = wkb.decode(blob)
+            t = wkb.geom_type(blob)
             if t in (wkb.POLYGON, wkb.MULTIPOLYGON):
-                polys = wkb.decode_polygons(blob)
-                newp = []
-                for rings in polys:
-                    nr = []
-                    for r in rings:
-                        if forward:
-                            x, y = tm_forward(r[:, 0], r[:, 1], lon0, lat0)
-                        else:
-                            x, y = tm_inverse(r[:, 0], r[:, 1], lon0, lat0)
-                        nr.append(np.column_stack([x, y]))
-                    newp.append((nr[0], nr[1:]))
+                newp = [(xy(rings[0]), [xy(r) for r in rings[1:]])
+                        for rings in wkb.decode_polygons(blob)]
                 out.append(wkb.multipolygon_wkb(newp) if t == wkb.MULTIPOLYGON
-                           else wkb.polygon_wkb(newp[0][0], newp[0][1]))
+                           else wkb.polygon_wkb(*newp[0]))
                 continue
-            np_parts = []
-            for p in parts:
-                if forward:
-                    x, y = tm_forward(p[:, 0], p[:, 1], lon0, lat0)
-                else:
-                    x, y = tm_inverse(p[:, 0], p[:, 1], lon0, lat0)
-                np_parts.append(np.column_stack([x, y]))
-            out.append(_reencode(t, np_parts))
+            out.append(_reencode(t, [xy(p) for p in wkb.decode(blob)[1]]))
         return pd.Series(out)
 
     return _udf
@@ -146,11 +87,6 @@ def make_transform_udf(lon0: float, lat0: float, forward: bool):
 def st_transform_tm(col, lon0: float, lat0: float):
     """EPSG:4326 WKB -> local TM meters WKB (P2/P3 of SURVEY §2.2)."""
     return make_transform_udf(lon0, lat0, True)(col)
-
-
-def st_transform_4326(col, lon0: float, lat0: float):
-    """Local TM meters WKB -> EPSG:4326 WKB."""
-    return make_transform_udf(lon0, lat0, False)(col)
 
 
 _SEG_SCHEMA = T.ArrayType(T.StructType([
@@ -165,22 +101,13 @@ def st_explode_segments(col: pd.Series) -> pd.Series:
 
     A (Multi)Polygon gives every edge of every ring of every part, each
     ring closed back to its first vertex (``core.points_in_ring``'s
-    wrap-around). Zero-length segments are dropped either way."""
-    out = []
-    for blob in col:
-        segs = []
-        if wkb.geom_type(blob) in (wkb.POLYGON, wkb.MULTIPOLYGON):
-            lines = [np.vstack([r, r[:1]])
-                     for rings in wkb.decode_polygons(blob) for r in rings]
-        else:
-            lines = wkb.decode_lines(blob)
-        for p in lines:
-            s = core.explode_polyline_to_segments(p)
-            segs.extend({"ax": float(a), "ay": float(b),
-                         "bx": float(c), "by": float(d)}
-                        for a, b, c, d in s)
-        out.append(segs)
-    return pd.Series(out)
+    wrap-around). Zero-length segments are dropped either way; a row
+    without a segment gets an empty array."""
+    flat, nv, rows = wkb.decode_column(col, wkb.decode_paths)
+    segs, part = core.explode_parts(flat, nv)
+    cut = np.searchsorted(rows[part], np.arange(len(col) + 1))
+    recs = [dict(zip(("ax", "ay", "bx", "by"), s)) for s in segs.tolist()]
+    return pd.Series([recs[a:b] for a, b in zip(cut[:-1], cut[1:])])
 
 
 def st_interpolate(col, frac_col):

@@ -148,11 +148,18 @@ def segments_cross(a1: np.ndarray, d1: np.ndarray, segs: np.ndarray
     return hit, t
 
 
-def explode_polyline_to_segments(coords: np.ndarray) -> np.ndarray:
-    """(n,2) polyline -> (n-1,4) segment array, zero-length dropped."""
-    a = coords[:-1]
-    b = coords[1:]
-    segs = np.hstack([a, b])
-    keep = (segs[:, 0] != segs[:, 2]) | (segs[:, 1] != segs[:, 3])
-    return segs[keep]
+def explode_parts(flat: np.ndarray, nv) -> tuple[np.ndarray, np.ndarray]:
+    """A batch of polylines -> their 2-point segments.
 
+    ``flat`` (N,2) holds every part's vertices back to back, ``nv`` the
+    vertex count of each part. Returns the (M,4) [x1,y1,x2,y2] segments
+    in part and vertex order, zero-length ones dropped, and the index of
+    the part each came from."""
+    nv = np.asarray(nv, dtype=np.int64)
+    sel = np.ones(len(flat), dtype=bool)
+    sel[np.cumsum(nv)[nv > 0] - 1] = False      # each part's last vertex
+    ai = np.flatnonzero(sel)
+    segs = np.hstack([flat[ai], flat[ai + 1]])
+    keep = (segs[:, 0] != segs[:, 2]) | (segs[:, 1] != segs[:, 3])
+    part = np.repeat(np.arange(len(nv)), np.maximum(nv - 1, 0))
+    return segs[keep], part[keep]

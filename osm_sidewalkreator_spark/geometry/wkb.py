@@ -152,3 +152,34 @@ def decode_polygons(wkb: bytes) -> list[list[np.ndarray]]:
         return out
     raise ValueError(f"expected (multi)polygon, got {t}")
 
+
+def decode_rings(wkb: bytes) -> list[np.ndarray]:
+    """Polygon or MultiPolygon -> every ring of every part, shells and
+    holes, each as stored."""
+    return [r for rings in decode_polygons(wkb) for r in rings]
+
+
+def decode_paths(wkb: bytes) -> list[np.ndarray]:
+    """The polylines whose segments are the geometry's edges: the lines
+    of a (Multi)LineString, or every ring of a (Multi)Polygon closed
+    back to its first vertex (a ring stored closed gains a zero-length
+    last edge, which ``core.explode_parts`` drops)."""
+    if geom_type(wkb) in (POLYGON, MULTIPOLYGON):
+        return [np.vstack([r, r[:1]]) for r in decode_rings(wkb)]
+    return decode_lines(wkb)
+
+
+def decode_column(blobs, decode_one) -> tuple[np.ndarray, np.ndarray,
+                                              np.ndarray]:
+    """A batch of WKB values -> the parts ``decode_one`` gives for each,
+    as ``core.explode_parts`` takes them: one flat (N,2) vertex array
+    and each part's vertex count, plus the row each part came from."""
+    parts: list[np.ndarray] = []
+    rows: list[int] = []
+    for i, blob in enumerate(blobs):
+        ps = decode_one(bytes(blob))
+        parts += ps
+        rows += [i] * len(ps)
+    nv = np.fromiter(map(len, parts), np.int64, len(parts))
+    flat = np.concatenate(parts) if parts else np.empty((0, 2))
+    return flat, nv, np.asarray(rows, dtype=np.int64)

@@ -150,8 +150,7 @@ def polygon_clip_intervals(segs: DataFrame, polys: DataFrame,
         for pdf in it:
             rows = []
             for blob, grp in pdf.groupby("geometry", sort=False):
-                rings = [r for po in wkb.decode_polygons(bytes(blob))
-                         for r in po]
+                rings = wkb.decode_rings(bytes(blob))
                 edges = rings_to_edges(rings)
                 S = grp[["ax", "ay", "bx", "by"]].to_numpy(np.float64)
                 dxs = (S[:, 2] - S[:, 0])[:, None]
@@ -196,8 +195,8 @@ def polygon_boundary_segments(polys: DataFrame, poly_id: str,
     """Explode (multi)polygon WKB boundaries (shells + holes) into
     2-point segments with a per-segment string key ``_sk``.
 
-    The WKB parse is per-polygon Python (unavoidable), but segments are
-    emitted as whole NumPy arrays per ring — no per-vertex loop. ``_sk``
+    The WKB parse is per-polygon Python (unavoidable), but the explode
+    is one ``core.explode_parts`` per batch — no per-vertex loop. ``_sk``
     is CONTENT-DERIVED (prefix + id + segment coordinates, concatenated
     JVM-side): stable across plan re-evaluations (the segment frame
     feeds both the interval kernel and the subtraction input, which are
@@ -206,10 +205,9 @@ def polygon_boundary_segments(polys: DataFrame, poly_id: str,
     the coordinates participate. Exact-duplicate segments of one
     polygon collapse to one key and receive the same — correct —
     interval set."""
-    import numpy as np
     import pandas as pd
 
-    from ..geometry import wkb
+    from ..geometry import core, wkb
 
     pid_t = polys.schema[poly_id].dataType.simpleString()
     out_schema = (f"{poly_id} {pid_t}, "
@@ -217,28 +215,13 @@ def polygon_boundary_segments(polys: DataFrame, poly_id: str,
 
     def kernel(it):
         for pdf in it:
-            segs, pids, counts = [], [], []
-            for pid, blob in zip(pdf[poly_id], pdf["geometry"]):
-                for po in wkb.decode_polygons(bytes(blob)):
-                    for ring in po:
-                        b = np.roll(ring, -1, axis=0)
-                        m = (ring[:, 0] != b[:, 0]) \
-                            | (ring[:, 1] != b[:, 1])
-                        if m.any():
-                            segs.append(
-                                np.column_stack([ring[m], b[m]]))
-                            pids.append(pid)
-                            counts.append(int(m.sum()))
-            if not segs:
-                yield pd.DataFrame(
-                    columns=[poly_id, "ax", "ay", "bx", "by"])
-                continue
-            arr = np.concatenate(segs)
+            flat, nv, rows = wkb.decode_column(pdf["geometry"],
+                                               wkb.decode_paths)
+            segs, part = core.explode_parts(flat, nv)
             yield pd.DataFrame({
-                poly_id: np.repeat(np.array(pids, dtype=object),
-                                   counts),
-                "ax": arr[:, 0], "ay": arr[:, 1],
-                "bx": arr[:, 2], "by": arr[:, 3]})
+                poly_id: pdf[poly_id].to_numpy()[rows[part]],
+                "ax": segs[:, 0], "ay": segs[:, 1],
+                "bx": segs[:, 2], "by": segs[:, 3]})
 
     seg = polys.select(poly_id, "geometry").mapInPandas(kernel,
                                                         out_schema)
@@ -397,11 +380,9 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
             # an id may span several rows (multipolygon row-per-part):
             # union every part's rings (even-odd over disjoint parts)
             arings = [r for blob in geoms_pdf["a_wkb"].drop_duplicates()
-                      for po in wkb.decode_polygons(bytes(blob))
-                      for r in po]
+                      for r in wkb.decode_rings(bytes(blob))]
             brings = [r for blob in geoms_pdf["b_wkb"].drop_duplicates()
-                      for po in wkb.decode_polygons(bytes(blob))
-                      for r in po]
+                      for r in wkb.decode_rings(bytes(blob))]
             segs = pieces_pdf[["px_a", "py_a", "px_b", "py_b"]] \
                 .to_numpy(np.float64)
 
@@ -477,11 +458,9 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
             return pd.DataFrame(columns=cols)
         from ..geometry import core as _core
         arings = [r for blob in geoms_pdf["a_wkb"].drop_duplicates()
-                  for po in wkb.decode_polygons(bytes(blob))
-                  for r in po]
-        bring_sets = [
-            [r for po in wkb.decode_polygons(bytes(blob)) for r in po]
-            for blob in geoms_pdf["b_wkb"].drop_duplicates()]
+                  for r in wkb.decode_rings(bytes(blob))]
+        bring_sets = [wkb.decode_rings(bytes(blob))
+                      for blob in geoms_pdf["b_wkb"].drop_duplicates()]
         segs = pieces_pdf[["px_a", "py_a", "px_b", "py_b"]] \
             .to_numpy(np.float64)
 

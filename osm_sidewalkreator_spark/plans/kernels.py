@@ -734,14 +734,13 @@ def single_sided_zone(segs: np.ndarray, dists: np.ndarray,
 
 def sidewalk_tag_zones(segs: np.ndarray, widths: np.ndarray,
                        sidewalk: np.ndarray, s_left: np.ndarray,
-                       s_right: np.ndarray, s_both: np.ndarray,
-                       d_to_add: float = P.D_TO_ADD_TO_EACH_SIDE):
+                       s_right: np.ndarray, s_both: np.ndarray):
     """Sure / exclusion zones from OSM sidewalk tags (G21,
     ``sidewalk_generation_logic.py:436-588``).
 
-    half_width = width/2 + d_to_add/2 + 0.5 (tag_buffer_dist of the
-    reference). Returns (sure_polys, exclusion_polys) as (n,V,2) arrays
-    (both-sided zones are the two single-sided quads).
+    half_width = width/2 + D_TO_ADD_TO_EACH_SIDE/2 + 0.5 (tag_buffer_dist
+    of the reference). Returns (sure_polys, exclusion_polys) as (n,V,2)
+    arrays (both-sided zones are the two single-sided quads).
     """
     n = len(segs)
 
@@ -755,7 +754,8 @@ def sidewalk_tag_zones(segs: np.ndarray, widths: np.ndarray,
     sl = _norm(s_left)
     sr = _norm(s_right)
     sb = _norm(s_both)
-    tag_dist = np.asarray(widths, dtype=np.float64) / 2 + d_to_add / 2 + 0.5
+    tag_dist = (np.asarray(widths, dtype=np.float64) / 2
+                + P.D_TO_ADD_TO_EACH_SIDE / 2 + 0.5)
     segs = np.asarray(segs, dtype=np.float64)
     left_q = single_sided_zone(segs, tag_dist, True)
     right_q = single_sided_zone(segs, tag_dist, False)
@@ -901,9 +901,9 @@ def tile_pipeline(segs: np.ndarray, widths: np.ndarray,
         from . import refine
         # snap sidewalks to crossing lines (osm_sidewalkreator.py:1792-1796)
         if crossings:
-            cross_segs = np.concatenate([
-                core.explode_polyline_to_segments(c["coords"])
-                for c in crossings])
+            cross_segs, _ = core.explode_parts(
+                np.concatenate([c["coords"] for c in crossings]),
+                [len(c["coords"]) for c in crossings])
             sidewalk_lines = refine.snap_lines_to_reference(
                 sidewalk_lines, cross_segs, tol=P.SNAP_DISJOINTED_TOL)
         # protoblock-corner splitting (G13)

@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 from .. import params as P
 from ..geometry import core, wkb
 from ..synth import CITY_LAT0, CITY_LON0, ensure_synth
-from ..functions.geo import st_explode_segments, make_transform_udf
+from ..functions.geo import make_transform_udf
 from ..operators.predicates import _clipped, _piece_coords
 from ..operators.tiling import seg_cells
 from ..sources.catalog import load_table, parquet_path, table_prefix
@@ -99,77 +99,44 @@ def assign_widths(streets: DataFrame) -> DataFrame:
             .filter(F.col("width_m") >= P.MIN_VALID_WIDTH))
 
 
-def street_segments_tm(streets: DataFrame) -> DataFrame:
-    """Explode street polylines into 2-point segments in TM meters.
+def _segments_tm(src: DataFrame) -> DataFrame:
+    """Rows of EPSG:4326 (Multi)LineString WKB ``geometry`` -> their
+    2-point segments in TM meters, each carrying its row's other columns.
 
-    Geometry arrives as EPSG:4326 WKB; reproject (P3) then explode (the
-    per-vertex dedup of G14 collapses the duplicate-vertex fixtures as a
-    zero-length-segment drop, same rule as
-    ``explode_polyline_to_segments``).
-
-    One fused ``mapInPandas`` stage does decode -> batched projection ->
-    vectorized segment construction. The previous chain (scalar
-    transform UDF re-ENCODING WKB, a second UDF re-DECODING it into
-    per-segment Python dicts, then a JVM explode of the struct array)
-    crossed the Python boundary twice and built a dict per segment
-    (guide §4.1/§4.2). ``tm_forward`` is elementwise, so projecting the
-    batch-concatenated coordinate array yields bit-identical floats.
-    """
-    attrs = ["osm_id", "highway", "width_m", "sidewalk", "sidewalk_left",
-             "sidewalk_right", "sidewalk_both"]
-    src = streets.select(*attrs, "geometry")
-    fields = [src.schema[c] for c in attrs[:1]] + [
-        T.StructField("highway", T.StringType()),
-        T.StructField("width", T.DoubleType()),
-        T.StructField("sidewalk", T.StringType()),
-        T.StructField("sidewalk_left", T.StringType()),
-        T.StructField("sidewalk_right", T.StringType()),
-        T.StructField("sidewalk_both", T.StringType()),
-        T.StructField("ax", T.DoubleType()),
-        T.StructField("ay", T.DoubleType()),
-        T.StructField("bx", T.DoubleType()),
-        T.StructField("by", T.DoubleType()),
-    ]
-    schema = T.StructType(fields)
-    out_cols = ["osm_id", "highway", "width", "sidewalk", "sidewalk_left",
-                "sidewalk_right", "sidewalk_both"]
-    in_cols = attrs
+    One fused ``mapInPandas``: decode, one batched projection (P3) and
+    ``core.explode_parts``, whose zero-length drop is the per-vertex
+    dedup of G14 on the duplicate-vertex fixtures. ``tm_forward`` is
+    elementwise, so projecting the batch's vertices at once gives the
+    floats of a per-line projection."""
+    attrs = [c for c in src.columns if c != "geometry"]
+    ends = ["ax", "ay", "bx", "by"]
+    schema = T.StructType([src.schema[c] for c in attrs] + [
+        T.StructField(c, T.DoubleType()) for c in ends])
 
     def explode_tm(batches):
         from ..geometry.projection import tm_forward
-        empty = pd.DataFrame({c: [] for c in
-                              out_cols + ["ax", "ay", "bx", "by"]})
         for pdf in batches:
-            row_idx: list[int] = []
-            parts: list[np.ndarray] = []
-            for i, blob in enumerate(pdf["geometry"]):
-                for p in wkb.decode_lines(bytes(blob)):
-                    row_idx.append(i)
-                    parts.append(p)
-            if not parts:
-                yield empty
-                continue
-            flat = np.vstack(parts)
+            flat, nv, rows = wkb.decode_column(pdf["geometry"],
+                                               wkb.decode_lines)
             x, y = tm_forward(flat[:, 0], flat[:, 1], CITY_LON0, CITY_LAT0)
-            nv = np.fromiter((len(p) for p in parts), np.int64, len(parts))
-            ends = np.cumsum(nv)
-            sel = np.ones(len(flat), dtype=bool)
-            sel[ends - 1] = False          # each part's last vertex
-            ai = np.flatnonzero(sel)
-            ax_, ay_ = x[ai], y[ai]
-            bx_, by_ = x[ai + 1], y[ai + 1]
-            keep = (ax_ != bx_) | (ay_ != by_)   # G14 zero-length drop
-            rows = np.repeat(np.asarray(row_idx, np.int64), nv - 1)[keep]
-            data = {}
-            for src_c, out_c in zip(in_cols, out_cols):
-                data[out_c] = pdf[src_c].to_numpy()[rows]
-            data["ax"] = ax_[keep]
-            data["ay"] = ay_[keep]
-            data["bx"] = bx_[keep]
-            data["by"] = by_[keep]
-            yield pd.DataFrame(data)
+            segs, part = core.explode_parts(np.column_stack([x, y]), nv)
+            out = {c: pdf[c].to_numpy()[rows[part]] for c in attrs}
+            out.update(zip(ends, segs.T))
+            yield pd.DataFrame(out)
 
-    seg = src.mapInPandas(explode_tm, schema)
+    return src.mapInPandas(explode_tm, schema)
+
+
+def street_segments_tm(streets: DataFrame) -> DataFrame:
+    """Explode street polylines (EPSG:4326 WKB) into 2-point segments in
+    TM meters (``_segments_tm``), then pre-split long ones. The tag
+    columns are strings whatever the input types them as (an all-null
+    parquet column reads as int)."""
+    tags = ("highway", "sidewalk", "sidewalk_left", "sidewalk_right",
+            "sidewalk_both")
+    seg = _segments_tm(streets.select(
+        "osm_id", F.col("width_m").alias("width"),
+        *[F.col(c).cast("string").alias(c) for c in tags], "geometry"))
     # pre-split long segments into <=MAX_PIECE chunks (JVM column math):
     # a km-long way must not land whole in every tile its bbox covers —
     # its PIECES have tight bboxes, so tiling stays O(length/tile), not
@@ -382,12 +349,7 @@ def existing_sidewalk_segments(streets: DataFrame) -> DataFrame:
     capture at osm_sidewalkreator.py:662-676)."""
     esw = streets.filter(F.element_at(F.col("tags"), "footway")
                          == "sidewalk")
-    tm = esw.withColumn(
-        "geom_tm", make_transform_udf(CITY_LON0, CITY_LAT0, True)("geometry"))
-    seg = (tm.withColumn("seg", F.explode(st_explode_segments("geom_tm")))
-           .select("osm_id",
-                   F.col("seg.ax").alias("ax"), F.col("seg.ay").alias("ay"),
-                   F.col("seg.bx").alias("bx"), F.col("seg.by").alias("by")))
+    seg = _segments_tm(esw.select("osm_id", "geometry"))
     seglen = F.sqrt(F.pow(F.col("bx") - F.col("ax"), 2)
                     + F.pow(F.col("by") - F.col("ay"), 2))
     way_len = (seg.groupBy("osm_id")
@@ -406,10 +368,6 @@ def load_context_tiled(spark: SparkSession, sf_dir: str,
     synth = ensure_synth(sf_dir)
     buildings = spark.read.parquet(str(synth / "buildings.parquet"))
 
-    # fused decode + boundary-segment explode (same motivation and
-    # same zero-length-drop rule as street_segments_tm): the previous
-    # scalar UDF built a Python dict per segment and round-tripped an
-    # array-of-struct column through a JVM explode
     bseg_schema = T.StructType([
         T.StructField("ckind", T.StringType()),
         T.StructField("ax", T.DoubleType()),
@@ -421,33 +379,15 @@ def load_context_tiled(spark: SparkSession, sf_dir: str,
     ])
 
     def explode_boundaries(batches):
-        cols = ["ckind", "ax", "ay", "bx", "by", "cid", "clen"]
-        empty = pd.DataFrame({c: [] for c in cols})
         for pdf in batches:
-            rings: list[np.ndarray] = []
-            for blob in pdf["geometry"]:
-                for rr in wkb.decode_polygons(bytes(blob)):
-                    for r in rr:
-                        closed = (r if np.array_equal(r[0], r[-1])
-                                  else np.vstack([r, r[:1]]))
-                        rings.append(closed)
-            if not rings:
-                yield empty
-                continue
-            flat = np.vstack(rings)
-            nv = np.fromiter((len(r) for r in rings), np.int64, len(rings))
-            ends = np.cumsum(nv)
-            sel = np.ones(len(flat), dtype=bool)
-            sel[ends - 1] = False
-            ai = np.flatnonzero(sel)
-            ax_, ay_ = flat[ai, 0], flat[ai, 1]
-            bx_, by_ = flat[ai + 1, 0], flat[ai + 1, 1]
-            keep = (ax_ != bx_) | (ay_ != by_)
-            n = int(keep.sum())
+            flat, nv, _ = wkb.decode_column(pdf["geometry"],
+                                            wkb.decode_paths)
+            segs, _ = core.explode_parts(flat, nv)
+            n = len(segs)
             yield pd.DataFrame({
                 "ckind": np.full(n, "bseg", dtype=object),
-                "ax": ax_[keep], "ay": ay_[keep],
-                "bx": bx_[keep], "by": by_[keep],
+                "ax": segs[:, 0], "ay": segs[:, 1],
+                "bx": segs[:, 2], "by": segs[:, 3],
                 "cid": np.full(n, None, dtype=object),
                 "clen": np.full(n, np.nan)})
 

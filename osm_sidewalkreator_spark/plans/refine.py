@@ -52,8 +52,8 @@ def split_lines_with_lines(lines: list[np.ndarray], cutters: np.ndarray
     osm_sidewalkreator.py:3225-3246)."""
     if not lines:
         return []
-    line_segs = np.concatenate([core.explode_polyline_to_segments(ln)
-                                for ln in lines if len(ln) > 1])
+    line_segs, _ = core.explode_parts(np.concatenate(lines),
+                                      [len(ln) for ln in lines])
     allseg = np.vstack([line_segs, cutters]) if len(cutters) else line_segs
     noded, parent = noding.node_segments(allseg)
     own = parent < len(line_segs)
@@ -324,18 +324,9 @@ def export_snap_sequence(sidewalk_lines: list[np.ndarray],
     the topological property downstream network joins rely on.
     Behavior 5 (pass 2) is the endpoints-only variant and never
     inserts."""
-    from ..geometry import core
-
     def explode(lines):
-        segs, owners = [], []
-        for i, ln in enumerate(lines):
-            s = core.explode_polyline_to_segments(ln)
-            if len(s):
-                segs.append(s)
-                owners.append(np.full(len(s), i))
-        if not segs:
-            return np.empty((0, 4)), np.empty(0, dtype=np.int64)
-        return np.concatenate(segs), np.concatenate(owners)
+        return core.explode_parts(np.concatenate(lines),
+                                  [len(ln) for ln in lines])
 
     if sidewalk_lines:
         segs, owners = explode(sidewalk_lines)

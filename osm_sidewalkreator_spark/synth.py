@@ -50,7 +50,13 @@ def scale_name(sf_dir: str) -> str:
 
 
 def splitmix64(x: np.ndarray) -> np.ndarray:
-    """Deterministic 64-bit mix (public-domain splitmix64 constants)."""
+    """Deterministic 64-bit mix in the shape of SplitMix64.
+
+    Not SplitMix64 itself: the third multiplier, 0x94D49BBB133111EB,
+    differs from SplitMix64's 0x94D049BB133111EB (the one
+    ``plans.pipeline._splitmix64`` uses). It stays as it is, because
+    every synthetic table, and so every gate hash, is generated with
+    it; do not merge the two."""
     z = (np.asarray(x, dtype=np.uint64) + np.uint64(0x9E3779B97F4A7C15))
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D49BBB133111EB)

@@ -45,6 +45,67 @@ def test_wkb_roundtrip_polygon_with_hole():
     np.testing.assert_array_equal(rings[0][1], hole)
 
 
+# ---------- parts -> segments ----------
+
+def _explode_loop_reference(parts):
+    """Per-part, per-vertex loop: every consecutive vertex pair that is
+    not a repeated vertex, with the index of its part."""
+    segs, owner = [], []
+    for i, p in enumerate(parts):
+        for a, b in zip(p[:-1], p[1:]):
+            if a[0] != b[0] or a[1] != b[1]:
+                segs.append([*a, *b])
+                owner.append(i)
+    return np.array(segs, float).reshape(-1, 4), np.array(owner, np.int64)
+
+
+def _random_parts(rng, n):
+    parts = []
+    for _ in range(n):
+        p = rng.integers(0, 4, (rng.integers(1, 8), 2)).astype(float)
+        kind = rng.integers(0, 4)
+        if kind == 3:       # a 1-vertex part: no segment
+            p = p[:1]
+        elif kind == 1:       # repeated consecutive vertices
+            p = np.repeat(p, rng.integers(1, 3, len(p)), axis=0)
+        elif kind == 2:     # a ring, open or stored closed
+            p = np.vstack([p, p[:1]]) if rng.integers(0, 2) else p
+            p = np.vstack([p, p[:1]])       # closed as decode_paths does
+        parts.append(p)
+    return parts
+
+
+def test_explode_parts_matches_loop():
+    rng = np.random.default_rng(5)
+    for n in (1, 2, 7, 40, 200):
+        parts = _random_parts(rng, n)
+        segs, part = core.explode_parts(np.concatenate(parts),
+                                        [len(p) for p in parts])
+        want_segs, want_part = _explode_loop_reference(parts)
+        np.testing.assert_array_equal(segs, want_segs)
+        np.testing.assert_array_equal(part, want_part)
+        assert part.dtype == np.int64
+
+
+def test_explode_parts_of_multipolygon_wkb():
+    """Every ring of every part, closed once, whether stored open or
+    closed: the same edges, in order, with the wrap-around edge."""
+    shell = np.array([[0, 0], [10, 0], [10, 10], [0, 10]], float)
+    hole = np.array([[4, 4], [6, 4], [6, 6], [4, 6], [4, 4]], float)
+    shell2 = np.array([[20, 0], [30, 0], [30, 5], [30, 5], [20, 0]], float)
+    blob = wkb.multipolygon_wkb([(shell, [hole]), (shell2, [])])
+    assert [len(r) for r in wkb.decode_rings(blob)] == [4, 5, 5]
+    flat, nv, rows = wkb.decode_column([blob, blob], wkb.decode_paths)
+    segs, part = core.explode_parts(flat, nv)
+    rings = [shell, hole, shell2]
+    want, want_part = _explode_loop_reference(
+        [np.vstack([r, r[:1]]) for r in rings] * 2)
+    np.testing.assert_array_equal(segs, want)
+    np.testing.assert_array_equal(part, want_part)
+    np.testing.assert_array_equal(rows[part], np.repeat([0, 1], 11))
+    assert len(segs) == 22          # 4 + 4 + 3 edges per row
+
+
 # ---------- noding + polygonize ----------
 
 def test_polygonize_unit_square():

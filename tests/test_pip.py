@@ -76,18 +76,17 @@ def test_pip_jvm_refine_matches_numpy_even_odd(spark):
             polys[pid] = wkb.polygon_wkb(shell)
     xy = [rng.uniform(-40, 330, (3000, 2))]
     for blob in polys.values():
-        for rings in wkb.decode_polygons(blob):
-            for r in rings:
-                xy.append(r)
-                flat = r[:-1][r[:-1, 1] == r[1:, 1]]
-                nxt = r[1:][r[:-1, 1] == r[1:, 1]]
-                xy.append((flat + nxt) / 2)
+        for r in wkb.decode_rings(blob):
+            xy.append(r)
+            flat = r[:-1][r[:-1, 1] == r[1:, 1]]
+            nxt = r[1:][r[:-1, 1] == r[1:, 1]]
+            xy.append((flat + nxt) / 2)
     xy = np.vstack(xy)
     points = [(f"p{i}", x, y) for i, (x, y) in enumerate(xy)]
 
     want = set()
     for pid, blob in polys.items():
-        rings = [r for part in wkb.decode_polygons(blob) for r in part]
+        rings = wkb.decode_rings(blob)
         inside = core.points_in_polygon(xy[:, 0], xy[:, 1], rings)
         want |= {(f"p{i}", pid) for i in np.flatnonzero(inside)}
     got = _pip(spark, points, list(polys.items()))

@@ -16,9 +16,10 @@ Four checks over the package and ``__spark_entry__.py``, all on the AST
      and in the package so does an identifier-shaped string constant
      (comments never do). Strings of ``__spark_entry__.py`` do not
      count: they are SQL text and registry keys, so a query dropped
-     from ``queries()`` is not kept alive by its oracle's key. Imports
-     are not references, so a def only imported somewhere is not
-     reached.
+     from ``queries()`` is not kept alive by its oracle's key. Nor do
+     the strings of an ``__all__`` list: it names what a module
+     offers, not what code uses. Imports are not references, so a def
+     only imported somewhere is not reached.
 
    Names are matched without their module, which can only over-reach:
    a definition is flagged only when no reached code names it at all.
@@ -29,10 +30,12 @@ Four checks over the package and ``__spark_entry__.py``, all on the AST
    tests): passed by keyword or by position. A ``**kw`` argument sets
    the keys of the dict literal or ``dict(...)`` its def binds to
    ``kw``, or, when ``kw`` is that def's own ``**`` parameter, the keys
-   the def's callers pass into it; any other ``**`` argument, and any
-   ``*`` argument, sets every parameter. Callees are matched by name
-   only, which can only over-count what is set. A parameter no call
-   sets is a constant, so it belongs in the body.
+   the def's callers pass into it; any other ``**`` argument sets
+   every parameter. A ``*`` argument sets one position per element of
+   the tuple or list literal it unpacks; any other ``*`` argument sets
+   nothing. Callees are matched by name only, which can only
+   over-count what is set. A parameter no call sets is a constant, so
+   it belongs in the body.
 """
 
 from __future__ import annotations
@@ -124,6 +127,14 @@ def _assigned_names(node: ast.AST) -> list[str]:
     return names
 
 
+def _is_all(node: ast.AST) -> bool:
+    """An ``__all__ = [...]`` export list: it names what a module
+    offers, not what any code uses."""
+    return isinstance(node, (ast.Assign, ast.AnnAssign)) and any(
+        isinstance(t, ast.Name) and t.id == "__all__"
+        for t in getattr(node, "targets", [getattr(node, "target", None)]))
+
+
 def _returned_dict(tree: ast.Module, func: str) -> ast.Dict:
     fn = next(n for n in tree.body
               if isinstance(n, ast.FunctionDef) and n.name == func)
@@ -158,7 +169,7 @@ def unreached_defs() -> dict[str, int]:
             elif names:
                 for name in names:
                     defs.setdefault(name, []).append((mod, node, strings))
-            elif strings:
+            elif strings and not _is_all(node):
                 reach(_refs(node))
         if path == ENTRY:
             roots = {"oracle_sql", "entry"}
@@ -249,6 +260,21 @@ def _kwargs_source(name: str, stack: tuple):
     return None
 
 
+def _positions(args: list[ast.expr]) -> int:
+    """How many leading positions a call's arguments set: a ``*`` of a
+    tuple or list literal sets one per element, any other ``*`` sets
+    none (nor any position after it)."""
+    n = 0
+    for a in args:
+        if not isinstance(a, ast.Starred):
+            n += 1
+        elif isinstance(a.value, (ast.Tuple, ast.List)):
+            n += len(a.value.elts)
+        else:
+            break
+    return n
+
+
 def unset_params() -> list[str]:
     """``module.def.param`` of each defaulted parameter of a top-level
     def that no call in the repository sets.
@@ -256,8 +282,9 @@ def unset_params() -> list[str]:
     A ``g(**kw)`` call sets only the keys ``kw`` can hold: those of a
     dict literal or ``dict(...)`` its def binds to ``kw``, or, when
     ``kw`` is the calling def's own ``**`` parameter, the keys the calls
-    of that def pass to it. Any other ``**`` argument, and any ``*``
-    argument, counts as setting every parameter."""
+    of that def pass to it. Any other ``**`` argument counts as setting
+    every parameter; a ``*`` argument sets only the positions of the
+    literal it unpacks (``_positions``)."""
     params: dict[str, list[tuple[str, dict]]] = {}
     for path in _sources():
         for node in _parse(path).body:
@@ -289,9 +316,7 @@ def unset_params() -> list[str]:
                 continue
             keys = keywords.setdefault(name, set())
             keys |= {k.arg for k in n.keywords if k.arg}
-            n_pos[name] = max(n_pos.get(name, 0), len(n.args))
-            if any(isinstance(a, ast.Starred) for a in n.args):
-                starred.add(name)
+            n_pos[name] = max(n_pos.get(name, 0), _positions(n.args))
             for k in n.keywords:
                 if k.arg is not None:
                     continue

@@ -88,11 +88,11 @@ def test_kerb_ref_id_names_its_crossing(spark, features):
 
 
 def test_crossings_have_5_vertices(spark, features):
-    from osm_sidewalkreator_spark.functions.geo import st_num_points
-    bad = (features.filter(F.col("kind") == "crossing")
-           .withColumn("nv", st_num_points("geometry"))
-           .filter(F.col("nv") != 5).count())
-    assert bad == 0
+    from osm_sidewalkreator_spark.geometry import wkb
+    nv = [sum(map(len, wkb.decode_lines(bytes(r.geometry))))
+          for r in features.filter(F.col("kind") == "crossing")
+          .select("geometry").collect()]
+    assert nv and set(nv) == {5}
 
 
 def test_pip_rect_join_matches_truth(spark):
@@ -767,3 +767,48 @@ def test_generate_features_pipe_opts_passthrough(spark, features):
     # gaps ahead of merge_small_stretches), never create them
     assert got["sidewalk"] <= base["sidewalk"]
     assert got["sidewalk"] >= base["sidewalk"] * 0.9
+
+
+# sha256 over the sorted rows of each segment frame at sf0.001, recorded
+# before the WKB -> segments decode was merged into one path: the merge
+# must not move a bit or a row
+SEGMENT_FRAME_SHA = {
+    "street_segments_tm":
+        "ad1ce1569ea85a94f8f16cb62b730a090111136b097ef514f8787914fc26118b",
+    "existing_sidewalk_segments":
+        "3572311c690669439a157e915061ba24eae23b367244fdb7d44e3c642d68b095",
+    "load_context_tiled":
+        "1ebaa396bc47c307a66206d67503a33d5a1070f9a803262e8a9c77d5c2a94424",
+    "polygon_boundary_segments":
+        "e767bdd6d8456c5b0cef7d222568669acf3310416033588fe9ac5a24397218c9",
+}
+
+
+def segment_frames(spark) -> dict:
+    from osm_sidewalkreator_spark.operators.overlay import (
+        polygon_boundary_segments)
+    from osm_sidewalkreator_spark.synth import ensure_synth
+    streets = PL.load_streets(spark, SF)
+    buildings = spark.read.parquet(
+        str(ensure_synth(SF) / "buildings.parquet"))
+    return {
+        "street_segments_tm": PL.street_segments_tm(
+            PL.assign_widths(streets)),
+        "existing_sidewalk_segments": PL.existing_sidewalk_segments(
+            streets),
+        "load_context_tiled": PL.load_context_tiled(
+            spark, SF, P.TILE_SIZE_M, P.TILE_HALO_M),
+        "polygon_boundary_segments": polygon_boundary_segments(
+            buildings, "osm_id", "b"),
+    }
+
+
+def frame_sha(df) -> str:
+    import hashlib
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def test_segment_frames_match_pinned_hashes(spark):
+    got = {k: frame_sha(df) for k, df in segment_frames(spark).items()}
+    assert got == SEGMENT_FRAME_SHA

@@ -240,10 +240,13 @@ def test_tag_zones_vectorized_matches_loop():
     segs = rng.uniform(0, 100, (n, 4))
     widths = rng.uniform(2, 10, n)
     vocab = ["", "no", "yes", "left", "right", "both", "separate", None]
-    cols = [np.array([vocab[k] for k in rng.integers(0, len(vocab), n)],
-                     dtype=object) for _ in range(4)]
-    want = _tag_zones_loop_reference(segs, widths, *cols)
-    got = kernels.sidewalk_tag_zones(segs, widths, *cols)
+    sidewalk, s_left, s_right, s_both = [
+        np.array([vocab[k] for k in rng.integers(0, len(vocab), n)],
+                 dtype=object) for _ in range(4)]
+    want = _tag_zones_loop_reference(segs, widths, sidewalk, s_left,
+                                     s_right, s_both)
+    got = kernels.sidewalk_tag_zones(segs, widths, sidewalk, s_left,
+                                     s_right, s_both)
     for g_list, w_list in zip(got, want):
         assert len(g_list) == len(w_list)
         for g, x in zip(g_list, w_list):
