@@ -24,7 +24,7 @@ import threading
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -346,15 +346,23 @@ def existing_sidewalk_segments(streets: DataFrame) -> DataFrame:
     """Pre-existing ``footway=sidewalk`` ways as TM segments with each
     parent way's TOTAL length attached (the A10 incidence sums FULL
     feature lengths, not clipped pieces — generic_functions.py:1448-1456,
-    capture at osm_sidewalkreator.py:662-676)."""
+    capture at osm_sidewalkreator.py:662-676).
+
+    The sum is a window over ``osm_id``, so the decode runs once. The
+    window orders a way's segments by a row id taken right after the
+    explode (one way's segments come from one input row, so one
+    partition), so they are added in explode order even when the
+    window's sort spills."""
     esw = streets.filter(F.element_at(F.col("tags"), "footway")
                          == "sidewalk")
-    seg = _segments_tm(esw.select("osm_id", "geometry"))
+    seg = (_segments_tm(esw.select("osm_id", "geometry"))
+           .withColumn("_seq", F.monotonically_increasing_id()))
     seglen = F.sqrt(F.pow(F.col("bx") - F.col("ax"), 2)
                     + F.pow(F.col("by") - F.col("ay"), 2))
-    way_len = (seg.groupBy("osm_id")
-               .agg(F.sum(seglen).alias("way_len")))
-    return seg.join(F.broadcast(way_len), "osm_id")
+    way = (Window.partitionBy("osm_id").orderBy("_seq")
+           .rowsBetween(Window.unboundedPreceding,
+                        Window.unboundedFollowing))
+    return seg.withColumn("way_len", F.sum(seglen).over(way)).drop("_seq")
 
 
 def load_context_tiled(spark: SparkSession, sf_dir: str,

@@ -6,6 +6,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The driver JVM's profile: JDK 17's four Tier-4 (C2) thresholds at
+# 10x their defaults (5000, 600, 15000, 40000).
+LOCAL_JIT_PROFILE = ("-XX:Tier4InvocationThreshold=50000"
+                     " -XX:Tier4MinInvocationThreshold=6000"
+                     " -XX:Tier4CompileThreshold=150000"
+                     " -XX:Tier4BackEdgeThreshold=400000")
+
 
 def host_defaults() -> tuple[int, str]:
     """(cpus, driver memory) for a local session on this host: the CPUs
@@ -29,6 +36,23 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
     AQE is on (skew-join handling for hot urban cells is a north-rule
     requirement); Arrow is on (every geometry kernel crosses the
     JVM<->Python boundary as Arrow batches).
+
+    The driver JVM starts with ``LOCAL_JIT_PROFILE`` as
+    ``spark.driver.defaultJavaOptions``. A session lasts a minute or
+    two, and most of its setup and first-call CPU went to C2 compiling
+    Spark methods that run only a few thousand times before the process
+    exits. With C2's thresholds at 10x, C1 still compiles everything
+    early and only code that stays hot, such as the whole-stage-codegen
+    loops of an sf0.1 run, reaches C2 (city_dense, 4 vCPU: setup CPU
+    25.7 -> 19.2 s, first call 38.6 -> 28.3 s; sf0.1 ``bench.py``
+    headline unchanged). C1 alone saved more CPU but ran the sf0.1
+    headline 34% slower (knn, int8 cosine top-k and the DEM kerb slope
+    2-5x), so C2 stays. In local mode the driver JVM is the executor,
+    so the profile reaches every task. Driver options never reach a
+    cluster's executors, which keep the JDK defaults, and a JVM that
+    ``spark-submit`` already started keeps its own options;
+    ``--driver-java-options`` come later on the JVM's command line and
+    win.
     """
     # glibc malloc: without these, every large NumPy temporary is a
     # fresh mmap/munmap — 32 workers hammering page-zeroing serializes
@@ -54,6 +78,7 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.defaultJavaOptions", LOCAL_JIT_PROFILE)
         .config("spark.ui.enabled", "false")
         # propagate the malloc tunables to executor-side Python workers
         # on real clusters (local mode inherits the driver env)

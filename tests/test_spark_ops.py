@@ -812,3 +812,12 @@ def frame_sha(df) -> str:
 def test_segment_frames_match_pinned_hashes(spark):
     got = {k: frame_sha(df) for k, df in segment_frames(spark).items()}
     assert got == SEGMENT_FRAME_SHA
+
+
+def test_existing_sidewalk_segments_decodes_once(spark):
+    """The way-length sum reads the one decode it sums over: the plan
+    holds one fused ``mapInPandas`` and one scan of the streets."""
+    plan = (PL.existing_sidewalk_segments(PL.load_streets(spark, SF))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
