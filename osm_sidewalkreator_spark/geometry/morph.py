@@ -30,8 +30,9 @@ member (strictly-inside / strictly-outside / on-boundary with a
 collinear interior-side test); exactly-coincident collinear boundaries
 owned by two members are resolved by an owner-priority tie-break so the
 edge is emitted exactly once. Kept edges are oriented with R's interior
-on the left and traced into rings: CCW rings are component exteriors, CW
-rings are holes.
+on the left and traced into rings by ``faces``' successor rule and walk
+(the ones ``faces.polygonize`` runs for protoblocks): CCW rings are
+component exteriors, CW rings are holes.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from .core import ring_signed_area
-from .faces import build_vertices
+from .faces import build_vertices, cycles, next_edges
 from .gridhash import cell_index, points_in_boxes
 from .noding import SNAP, dedup_undirected, node_segments, snap_round
 
@@ -450,84 +451,20 @@ def trace_directed_rings(edges: np.ndarray
     """Directed boundary edges (interior on left) -> (exterior_rings,
     hole_rings), both CCW-normalized vertex arrays.
 
-    Successor of directed edge d at its head = the outgoing directed edge
-    first clockwise of d's reverse direction. Open chains (numerical
-    noise) and tiny rings are dropped.
+    The graph is ``faces``' (successor rule ``faces.next_edges``, walk
+    ``faces.cycles``), run on the repaired edges as given, not doubled.
+    Open chains (numerical noise) and tiny rings are dropped.
     """
     edges = _repair_graph(np.asarray(edges, dtype=np.float64))
     if len(edges) == 0:
         return [], []
     verts, evi = build_vertices(edges)
-    tail, head = evi[:, 0], evi[:, 1]
-    ok = tail != head
-    tail, head = tail[ok], head[ok]
-    m = len(tail)
-    if m == 0:
-        return [], []
-    ang = np.arctan2(verts[head][:, 1] - verts[tail][:, 1],
-                     verts[head][:, 0] - verts[tail][:, 0])
-    rev_ang = (ang + 2 * np.pi) % (2 * np.pi) - np.pi  # ang + pi wrapped
-    # Successor of d = among outgoing edges at head[d], the one with the
-    # largest angle strictly below rev_ang[d]-1e-12, wrapping to the
-    # group max if none. Vectorized as one merged sort: candidates
-    # keyed by tail and queries keyed by head share the ordering; the
-    # predecessor CANDIDATE of each query slot inside its key group is
-    # the answer. Queries sort BEFORE candidates at equal value (tie
-    # column), preserving the strict `<`; tied-angle candidate runs
-    # resolve to their run start, matching argmax's first-of-ties.
-    keys = np.concatenate([tail, head])
-    vals = np.concatenate([ang, rev_ang - 1e-12])
-    tie = np.concatenate([np.ones(m, np.int8), np.zeros(m, np.int8)])
-    edge_id = np.concatenate([np.arange(m), np.arange(m)])
-    order = np.lexsort((tie, vals, keys))
-    k_s = keys[order]
-    v_s = vals[order]
-    is_cand = tie[order] == 1
-    pos = np.arange(2 * m)
-    new_grp = np.empty(2 * m, dtype=bool)
-    new_grp[0] = True
-    new_grp[1:] = k_s[1:] != k_s[:-1]
-    run_new = is_cand.copy()
-    run_new[1:] &= (~is_cand[:-1]) | new_grp[1:] | (v_s[1:] != v_s[:-1])
-    run_first = np.maximum.accumulate(np.where(run_new, pos, -1))
-    ff = np.maximum.accumulate(np.where(is_cand, run_first, -1))
-    grp_first = np.maximum.accumulate(np.where(new_grp, pos, 0))
-    grp_id = np.cumsum(new_grp) - 1
-    grp_last_cand = np.full(grp_id[-1] + 1, -1, dtype=np.int64)
-    np.maximum.at(grp_last_cand, grp_id[is_cand], pos[is_cand])
-    qpos = pos[~is_cand]
-    pred = ff[qpos]
-    valid = pred >= grp_first[qpos]
-    glc = grp_last_cand[grp_id[qpos]]
-    wrap = np.where(glc >= 0, run_first[np.maximum(glc, 0)], -1)
-    chosen = np.where(valid, pred, wrap)
-    ok = chosen >= 0
-    nxt = np.full(m, -1, dtype=np.int64)
-    qd = edge_id[order][qpos]
-    nxt[qd[ok]] = edge_id[order][np.maximum(chosen, 0)][ok]
-    visited = np.zeros(m, dtype=bool)
+    tail, head = evi[evi[:, 0] != evi[:, 1]].T
     ext, holes = [], []
-    for d0 in range(m):
-        if visited[d0]:
+    for walk, closed in cycles(next_edges(verts, tail, head)):
+        if not closed or len(walk) < 3:
             continue
-        chain = []
-        d = d0
-        broken = False
-        while True:
-            if visited[d]:
-                broken = True
-                break
-            visited[d] = True
-            chain.append(d)
-            d = nxt[d]
-            if d < 0:
-                broken = True
-                break
-            if d == d0:
-                break
-        if broken or len(chain) < 3:
-            continue
-        ring = verts[tail[chain]]
+        ring = verts[tail[walk]]
         area = ring_signed_area(ring)
         if abs(area) <= (SNAP * 100) ** 2:
             continue

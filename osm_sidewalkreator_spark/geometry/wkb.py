@@ -71,6 +71,37 @@ def _read_coords(wkb: bytes, off: int) -> tuple[np.ndarray, int]:
     return arr, off + 16 * n
 
 
+def _read(wkb: bytes, off: int) -> tuple[int, list[list[np.ndarray]], int]:
+    """The geometry at ``off`` -> (type, its coordinate arrays grouped
+    by part, end offset). Point, LineString and Polygon are one part (a
+    polygon's arrays are its rings, shell first); a Multi* has one part
+    per member."""
+    _, t = _HDR.unpack_from(wkb, off)
+    t &= 0xFF  # mask Z/M/SRID flag variants
+    off += _HDR.size
+    if t == POINT:
+        arr = np.frombuffer(wkb, dtype="<f8", count=2, offset=off).reshape(1, 2)
+        return t, [[arr]], off + 16
+    if t == LINESTRING:
+        arr, off = _read_coords(wkb, off)
+        return t, [[arr]], off
+    if t not in (POLYGON, MULTIPOINT, MULTILINESTRING, MULTIPOLYGON):
+        raise ValueError(f"unsupported wkb type {t}")
+    (n,) = _U32.unpack_from(wkb, off)
+    off += 4
+    if t == POLYGON:
+        rings = []
+        for _ in range(n):
+            r, off = _read_coords(wkb, off)
+            rings.append(r)
+        return t, [rings], off
+    parts = []
+    for _ in range(n):
+        _, sub, off = _read(wkb, off)
+        parts += sub
+    return t, parts, off
+
+
 def decode(wkb: bytes) -> tuple[int, list[np.ndarray]]:
     """Decode any supported geometry to (type, list of coordinate arrays).
 
@@ -78,52 +109,8 @@ def decode(wkb: bytes) -> tuple[int, list[np.ndarray]]:
     per ring (shell first); Multi* -> concatenation of each part's arrays.
     For MultiPolygon, ring grouping is recoverable via ``decode_polygons``.
     """
-    byte_order, t = _HDR.unpack_from(wkb, 0)
-    t &= 0xFF
-    off = _HDR.size
-    if t == POINT:
-        arr = np.frombuffer(wkb, dtype="<f8", count=2, offset=off).reshape(1, 2)
-        return t, [arr]
-    if t == LINESTRING:
-        arr, _ = _read_coords(wkb, off)
-        return t, [arr]
-    if t == POLYGON:
-        (nr,) = _U32.unpack_from(wkb, off)
-        off += 4
-        rings = []
-        for _ in range(nr):
-            r, off = _read_coords(wkb, off)
-            rings.append(r)
-        return t, rings
-    if t in (MULTIPOINT, MULTILINESTRING, MULTIPOLYGON):
-        (np_, ) = _U32.unpack_from(wkb, off)
-        off += 4
-        parts: list[np.ndarray] = []
-        for _ in range(np_):
-            sub_t, sub_parts = decode(wkb[off:])
-            parts.extend(sub_parts)
-            off += _part_size(wkb, off)
-        return t, parts
-    raise ValueError(f"unsupported wkb type {t}")
-
-
-def _part_size(wkb: bytes, off: int) -> int:
-    _, t = _HDR.unpack_from(wkb, off)
-    t &= 0xFF
-    p = off + _HDR.size
-    if t == POINT:
-        return _HDR.size + 16
-    if t == LINESTRING:
-        (n,) = _U32.unpack_from(wkb, p)
-        return _HDR.size + 4 + 16 * n
-    if t == POLYGON:
-        (nr,) = _U32.unpack_from(wkb, p)
-        p += 4
-        for _ in range(nr):
-            (n,) = _U32.unpack_from(wkb, p)
-            p += 4 + 16 * n
-        return p - off
-    raise ValueError(f"unsupported nested wkb type {t}")
+    t, parts, _ = _read(wkb, 0)
+    return t, [a for part in parts for a in part]
 
 
 def decode_lines(wkb: bytes) -> list[np.ndarray]:
@@ -136,21 +123,10 @@ def decode_lines(wkb: bytes) -> list[np.ndarray]:
 
 def decode_polygons(wkb: bytes) -> list[list[np.ndarray]]:
     """Polygon or MultiPolygon -> list of [shell, hole, ...] ring lists."""
-    byte_order, t = _HDR.unpack_from(wkb, 0)
-    t &= 0xFF
-    if t == POLYGON:
-        _, rings = decode(wkb)
-        return [rings]
-    if t == MULTIPOLYGON:
-        (np_,) = _U32.unpack_from(wkb, _HDR.size)
-        off = _HDR.size + 4
-        out = []
-        for _ in range(np_):
-            _, rings = decode(wkb[off:])
-            out.append(rings)
-            off += _part_size(wkb, off)
-        return out
-    raise ValueError(f"expected (multi)polygon, got {t}")
+    t, parts, _ = _read(wkb, 0)
+    if t not in (POLYGON, MULTIPOLYGON):
+        raise ValueError(f"expected (multi)polygon, got {t}")
+    return parts
 
 
 def decode_rings(wkb: bytes) -> list[np.ndarray]:

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 # Broadcast-scale fast path: when the DISTINCT edge set fits a
 # broadcast-sized bound, resolve components with one driver-side
 # union-find instead of O(log^2 n) alternating-star rounds. Each star
@@ -117,7 +119,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
                     ra, rb = rb, ra
                 parent[rb] = ra
         labels = [(v, find(v)) for v in parent]
-        return spark.createDataFrame(labels, schema)
+        return local_frame(spark, labels, schema)
     e = e.localCheckpoint(eager=True)
     sig = _signature(e)
     for _ in range(max_iter):

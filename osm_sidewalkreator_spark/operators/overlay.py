@@ -136,8 +136,10 @@ def polygon_clip_intervals(segs: DataFrame, polys: DataFrame,
 
     s = segs.select(seg_id, "ax", "ay", "bx", "by")
     p = polys.select(poly_id, "xmin", "ymin", "xmax", "ymax", "geometry")
+    # one pair per (segment, polygon row): an id stored row-per-part
+    # must clip against every part
     j = (seg_box_pairs(s, p, cell_size)
-         .dropDuplicates([seg_id, poly_id])
+         .dropDuplicates([seg_id, poly_id, "geometry"])
          .filter(seg_box_overlap()))
 
     sid_t = segs.schema[seg_id].dataType.simpleString()
@@ -322,13 +324,14 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
     all overlapping B's (B-boundary pieces are additionally clipped
     against OTHER B polygons, so overlapping B's union correctly).
     """
+    if op not in ("intersection", "difference"):
+        raise ValueError(op)
     cell_size = 128.0
     import numpy as np
     import pandas as pd
 
-    from ..geometry import wkb
+    from ..geometry import core, wkb
 
-    spark = a_polys.sparkSession
     # id dtypes flow from the input schemas (string ids etc. work the
     # same as the boundary-segment path)
     aid_t = a_polys.schema[a_id].dataType.simpleString()
@@ -351,134 +354,94 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
     pb = (ivb.join(owners_b, "_sk")
           .select(F.col("_aid"), F.col("_bid_own"), *_piece_coords()))
 
+    # pieces of dA inside B, per (a, b)
+    iva = polygon_clip_intervals(
+        aseg.select("_sk", "ax", "ay", "bx", "by"),
+        bp.withColumnRenamed(b_id, "_bid"), cell_size,
+        seg_id="_sk", poly_id="_bid")
     if op == "intersection":
-        # pieces of dA inside B, per (a, b)
-        iva = polygon_clip_intervals(
-            aseg.select("_sk", "ax", "ay", "bx", "by"),
-            bp.withColumnRenamed(b_id, "_bid"), cell_size,
-            seg_id="_sk", poly_id="_bid")
         owners_a = aseg.select("_sk", F.col(a_id).alias("_aid"))
         pa = (iva.join(owners_a, "_sk")
               .select("_aid", F.col("_bid").alias("_bid_own"),
                       *_piece_coords()))
         pieces = pa.unionByName(pb)
-        # candidate pair geometries (cell join on bboxes)
-        ac = ap.select(box_cells(cell_size).alias("cell"),
-                       F.col(a_id).alias("_aid"),
-                       F.col("geometry").alias("a_wkb"))
-        bc = bp.select(box_cells(cell_size).alias("cell"),
-                       F.col(b_id).alias("_bid_own"),
-                       F.col("geometry").alias("b_wkb"))
-        geoms = (ac.join(bc, "cell").drop("cell")
-                 .dropDuplicates(["_aid", "_bid_own", "a_wkb", "b_wkb"]))
-
-        def ikernel(key, pieces_pdf, geoms_pdf):
-            cols = [a_id, b_id, "area", "perim"]
-            if len(pieces_pdf) == 0 or len(geoms_pdf) == 0:
-                return pd.DataFrame(columns=cols)
-            from ..geometry import core as _core
-            # an id may span several rows (multipolygon row-per-part):
-            # union every part's rings (even-odd over disjoint parts)
-            arings = [r for blob in geoms_pdf["a_wkb"].drop_duplicates()
-                      for r in wkb.decode_rings(bytes(blob))]
-            brings = [r for blob in geoms_pdf["b_wkb"].drop_duplicates()
-                      for r in wkb.decode_rings(bytes(blob))]
-            segs = pieces_pdf[["px_a", "py_a", "px_b", "py_b"]] \
-                .to_numpy(np.float64)
-
-            def keep(x, y):
-                xx = np.array([x])
-                yy = np.array([y])
-                return bool(_core.points_in_polygon(xx, yy, arings)[0]
-                            and _core.points_in_polygon(xx, yy,
-                                                        brings)[0])
-
-            rows = [(key[0], key[1], a, p)
-                    for a, p in _assemble_faces(segs, keep)]
-            return pd.DataFrame(rows, columns=cols)
-
-        return (pieces.groupBy("_aid", "_bid_own")
-                .cogroup(geoms.groupBy("_aid", "_bid_own"))
-                .applyInPandas(ikernel,
-                               f"{a_id} {aid_t}, {b_id} {bid_t}, "
-                               "area double, perim double"))
-
-    if op != "difference":
-        raise ValueError(op)
-
-    # dA pieces OUTSIDE the union of B: subtract all inside-B intervals
-    iva = polygon_clip_intervals(
-        aseg.select("_sk", "ax", "ay", "bx", "by"),
-        bp.withColumnRenamed(b_id, "_bid"), cell_size,
-        seg_id="_sk", poly_id="_bid").select("_sk", "_t0", "_t1")
-    pa_out = _subtract_intervals(
-        aseg.select("_sk", F.col(a_id).alias("_aid"),
-                    "ax", "ay", "bx", "by"),
-        iva, "_sk").select("_aid", "px_a", "py_a", "px_b", "py_b")
-    # dB pieces inside A, then minus OTHER B polygons (B union boundary)
-    # content-derived key: the DF is evaluated twice (interval source +
-    # subtraction input) and the keys must match across both plans, so
-    # no monotonically_increasing_id here
-    pb_seg = (pb.withColumn(
-        "_pk", F.concat_ws("#", F.col("_aid").cast("string"),
-                           F.col("_bid_own").cast("string"),
-                           F.col("px_a").cast("string"),
-                           F.col("py_a").cast("string"),
-                           F.col("px_b").cast("string"),
-                           F.col("py_b").cast("string")))
-        .select("_pk", "_aid", "_bid_own",
-                F.col("px_a").alias("ax"), F.col("py_a").alias("ay"),
-                F.col("px_b").alias("bx"), F.col("py_b").alias("by")))
-    # evaluated twice (interval source + subtraction input): persist so
-    # the upstream even-odd kernel chain runs once
-    pb_seg = pb_seg.persist()
-    ivo = polygon_clip_intervals(
-        pb_seg.select("_pk", "ax", "ay", "bx", "by"),
-        bp.withColumnRenamed(b_id, "_bid2"), cell_size,
-        seg_id="_pk", poly_id="_bid2")
-    ivo = (ivo.join(pb_seg.select("_pk", "_bid_own"), "_pk")
-           .filter(F.col("_bid2") != F.col("_bid_own"))
-           .select("_pk", "_t0", "_t1"))
-    pb_out = _subtract_intervals(
-        pb_seg.select("_pk", "_aid", "ax", "ay", "bx", "by"),
-        ivo, "_pk").select("_aid", "px_a", "py_a", "px_b", "py_b")
-    pieces = pa_out.unionByName(pb_out)
-    # per-A geometry context: A wkb + every candidate B wkb
+        key = ["_aid", "_bid_own"]
+    else:
+        # dA pieces OUTSIDE the union of B: subtract all inside-B
+        # intervals
+        pa_out = _subtract_intervals(
+            aseg.select("_sk", F.col(a_id).alias("_aid"),
+                        "ax", "ay", "bx", "by"),
+            iva.select("_sk", "_t0", "_t1"), "_sk"
+        ).select("_aid", "px_a", "py_a", "px_b", "py_b")
+        # dB pieces inside A, then minus OTHER B polygons (B union
+        # boundary). content-derived key: the DF is evaluated twice
+        # (interval source + subtraction input) and the keys must
+        # match across both plans, so no monotonically_increasing_id
+        pb_seg = (pb.withColumn(
+            "_pk", F.concat_ws("#", F.col("_aid").cast("string"),
+                               F.col("_bid_own").cast("string"),
+                               F.col("px_a").cast("string"),
+                               F.col("py_a").cast("string"),
+                               F.col("px_b").cast("string"),
+                               F.col("py_b").cast("string")))
+            .select("_pk", "_aid", "_bid_own",
+                    F.col("px_a").alias("ax"), F.col("py_a").alias("ay"),
+                    F.col("px_b").alias("bx"), F.col("py_b").alias("by")))
+        # evaluated twice (interval source + subtraction input):
+        # persist so the upstream even-odd kernel chain runs once
+        pb_seg = pb_seg.persist()
+        ivo = polygon_clip_intervals(
+            pb_seg.select("_pk", "ax", "ay", "bx", "by"),
+            bp.withColumnRenamed(b_id, "_bid2"), cell_size,
+            seg_id="_pk", poly_id="_bid2")
+        ivo = (ivo.join(pb_seg.select("_pk", "_bid_own"), "_pk")
+               .filter(F.col("_bid2") != F.col("_bid_own"))
+               .select("_pk", "_t0", "_t1"))
+        pb_out = _subtract_intervals(
+            pb_seg.select("_pk", "_aid", "ax", "ay", "bx", "by"),
+            ivo, "_pk").select("_aid", "px_a", "py_a", "px_b", "py_b")
+        pieces = pa_out.unionByName(pb_out)
+        key = ["_aid"]
+    # per group: its A wkb + every candidate B wkb (cell join on bboxes)
     ac = ap.select(box_cells(cell_size).alias("cell"),
                    F.col(a_id).alias("_aid"),
                    F.col("geometry").alias("a_wkb"))
     bc = bp.select(box_cells(cell_size).alias("cell"),
+                   F.col(b_id).alias("_bid_own"),
                    F.col("geometry").alias("b_wkb"))
     geoms = (ac.join(bc, "cell").drop("cell")
-             .dropDuplicates(["_aid", "a_wkb", "b_wkb"]))
+             .dropDuplicates([*key, "a_wkb", "b_wkb"]))
+    want_b = op == "intersection"
 
-    def dkernel(key, pieces_pdf, geoms_pdf):
+    def kernel(k, pieces_pdf, geoms_pdf):
         cols = [a_id, b_id, "area", "perim"]
         if len(pieces_pdf) == 0 or len(geoms_pdf) == 0:
             return pd.DataFrame(columns=cols)
-        from ..geometry import core as _core
+        # an id may span several rows (multipolygon row-per-part)
         arings = [r for blob in geoms_pdf["a_wkb"].drop_duplicates()
                   for r in wkb.decode_rings(bytes(blob))]
-        bring_sets = [wkb.decode_rings(bytes(blob))
-                      for blob in geoms_pdf["b_wkb"].drop_duplicates()]
+        bsets = [wkb.decode_rings(bytes(blob))
+                 for blob in geoms_pdf["b_wkb"].drop_duplicates()]
+        if want_b:
+            # one B: union every part's rings (even-odd over disjoint
+            # parts)
+            bsets = [[r for rings in bsets for r in rings]]
         segs = pieces_pdf[["px_a", "py_a", "px_b", "py_b"]] \
             .to_numpy(np.float64)
 
         def keep(x, y):
             xx = np.array([x])
             yy = np.array([y])
-            if not _core.points_in_polygon(xx, yy, arings)[0]:
-                return False
-            return not any(_core.points_in_polygon(xx, yy, br)[0]
-                           for br in bring_sets)
+            return bool(core.points_in_polygon(xx, yy, arings)[0]) and \
+                any(core.points_in_polygon(xx, yy, rings)[0]
+                    for rings in bsets) == want_b
 
-        rows = [(key[0], b_none, a, p)
-                for a, p in _assemble_faces(segs, keep)]
+        b = k[1] if want_b else b_none
+        rows = [(k[0], b, a, p) for a, p in _assemble_faces(segs, keep)]
         return pd.DataFrame(rows, columns=cols)
 
-    return (pieces.groupBy("_aid")
-            .cogroup(geoms.groupBy("_aid"))
-            .applyInPandas(dkernel,
+    return (pieces.groupBy(*key).cogroup(geoms.groupBy(*key))
+            .applyInPandas(kernel,
                            f"{a_id} {aid_t}, {b_id} {bid_t}, "
                            "area double, perim double"))
-

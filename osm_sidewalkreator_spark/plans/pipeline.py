@@ -34,6 +34,7 @@ from ..synth import CITY_LAT0, CITY_LON0, ensure_synth
 from ..functions.geo import make_transform_udf
 from ..operators.predicates import _clipped, _piece_coords
 from ..operators.tiling import seg_cells
+from ..session import local_frame
 from ..sources.catalog import load_table, parquet_path, table_prefix
 from . import kernels
 
@@ -515,25 +516,6 @@ def tiled_inputs(spark: SparkSession, sf_dir: str,
 def _release(entry: _Inputs) -> None:
     entry.tiled.unpersist()
     entry.ctx.unpersist()
-
-
-def local_frame(spark: SparkSession, rows, schema: T.StructType | str
-                ) -> DataFrame:
-    """``rows`` (tuples in ``schema`` order) as a LocalRelation.
-
-    Built as an Arrow table, the frame runs no Spark job when it is
-    collected, joined or broadcast. ``createDataFrame`` of a Python list
-    is an RDD instead, and every evaluation of it is a job of
-    ``defaultParallelism`` Python tasks (see ``run_tiles``)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    return spark.createDataFrame(pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow),
-        schema)
 
 
 def tile_census(spark: SparkSession, tiled: DataFrame) -> DataFrame:

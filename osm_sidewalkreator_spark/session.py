@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+import shlex
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # The driver JVM's profile: JDK 17's four Tier-4 (C2) thresholds at
 # 10x their defaults (5000, 600, 15000, 40000).
@@ -28,10 +30,15 @@ def host_defaults() -> tuple[int, str]:
     return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
 
 
-def get_spark(app: str = "osm_sidewalkreator_spark",
-              master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
     """Build (or reuse) a SparkSession tuned for the engine.
+
+    The master is the one ``spark-submit`` was given, when it started
+    this driver (``PYSPARK_GATEWAY_PORT`` is set) or when
+    ``PYSPARK_SUBMIT_ARGS`` carries a ``--master``; otherwise
+    ``local[cpus]`` (``host_defaults``). ``SparkConf`` alone cannot tell
+    the two apart: under plain ``python`` it reads ``local[*]`` too.
+    Shuffle partitions = cores.
 
     AQE is on (skew-join handling for hot urban cells is a north-rule
     requirement); Arrow is on (every geometry kernel crosses the
@@ -65,13 +72,10 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
         "glibc.malloc.mmap_threshold=134217728"
         ":glibc.malloc.trim_threshold=134217728")
     cpus, driver_mem = host_defaults()
-    master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder
-        .master(master)
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -85,6 +89,29 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
         .config("spark.executorEnv.GLIBC_TUNABLES",
                 os.environ["GLIBC_TUNABLES"])
     )
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    if "PYSPARK_GATEWAY_PORT" not in os.environ and not any(
+            a == "--master" or a.startswith("--master=") for a in args):
+        builder = builder.master(f"local[{cpus}]")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str
+                ) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a LocalRelation.
+
+    Built as an Arrow table, the frame runs no Spark job when it is
+    collected, joined or broadcast. ``createDataFrame`` of a Python list
+    is an RDD instead, and every evaluation of it is a job of
+    ``defaultParallelism`` Python tasks (see ``pipeline.run_tiles``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow),
+        schema)

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import pipeline as PL
+from ..session import local_frame
 
 
 class TileManifest:
@@ -117,7 +118,7 @@ def run_tiled_job(spark: SparkSession, segs_tiled: DataFrame,
     done = man.committed()
     pending = census
     if done:
-        man_df = PL.local_frame(
+        man_df = local_frame(
             spark,
             [(r["tile"], r["input_fingerprint"]) for r in done.values()],
             "tile long, fp long")
@@ -159,7 +160,7 @@ def run_tiled_job(spark: SparkSession, segs_tiled: DataFrame,
     paths = [r["path"] for r in man.committed().values()
              if r.get("path") and Path(r["path"]).exists()]
     if not paths:
-        return PL.local_frame(spark, [], schema)
+        return local_frame(spark, [], schema)
     # a tile whose segments all left the input keeps its manifest row,
     # but not its place in the result
     return (spark.read.schema(schema).parquet(*paths)

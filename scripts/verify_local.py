@@ -48,7 +48,7 @@ def table_hash(rows, cols):
 
 def main():
     only = set(sys.argv[1:])
-    spark = get_spark(shuffle_partitions=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "

@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 def _oracle(chunk: int, overlap: int) -> pd.DataFrame:

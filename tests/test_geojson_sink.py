@@ -16,7 +16,7 @@ import numpy as np
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 @pytest.fixture(scope="module")

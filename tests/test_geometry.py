@@ -133,6 +133,67 @@ def test_polygonize_dangle_no_extra_face():
     assert abs(abs(core.ring_signed_area(f[0])) - 1.0) < 1e-9
 
 
+def _faces_oracle(segs, min_area):
+    """Per-vertex face walk: at the head of each directed edge, sort the
+    outgoing edges by angle and take the one before the twin."""
+    verts, evi = faces.build_vertices(segs)
+    out = {}
+    for u, v in evi:
+        if u != v:
+            out.setdefault(u, []).append(v)
+            out.setdefault(v, []).append(u)
+
+    def angle(a, b):
+        return np.arctan2(verts[b, 1] - verts[a, 1], verts[b, 0] - verts[a, 0])
+
+    fans = {a: sorted(bs, key=lambda b: angle(a, b)) for a, bs in out.items()}
+    seen, rings = set(), []
+    for a0, bs in out.items():
+        for b0 in bs:
+            ids, a, b = [], a0, b0
+            while (a, b) not in seen:
+                seen.add((a, b))
+                ids.append(a)
+                fan = fans[b]
+                a, b = b, fan[fan.index(a) - 1]
+            if ids and core.ring_signed_area(verts[ids]) > min_area:
+                rings.append(verts[ids])
+    return rings
+
+
+def _canon(rings):
+    """Rings as vertex tuples rotated to start at their least vertex."""
+    out = []
+    for r in rings:
+        pts = [tuple(p) for p in r.tolist()]
+        i = pts.index(min(pts))
+        out.append(tuple(pts[i:] + pts[:i]))
+    return sorted(out)
+
+
+def test_polygonize_matches_per_vertex_oracle():
+    """Property test over random noded graphs, half of them
+    axis-aligned grids with missing edges (the successor rule's reverse
+    angle must be the twin's own: a horizontal edge's twin at +pi, not
+    -pi), half free segment soups with dangles."""
+    rng = np.random.default_rng(16)
+    for case in range(60):
+        if case % 2 == 0:
+            k, s = int(rng.integers(2, 7)), float(rng.choice([1.0, 5.0, 40.0]))
+            h = [[j * s, i * s, (j + 1) * s, i * s]
+                 for i in range(k) for j in range(k - 1)]
+            segs = np.array(h + [[b, a, d, c] for a, b, c, d in h])
+            segs = segs[rng.random(len(segs)) < 0.85]
+            flip = rng.random(len(segs)) < 0.5
+            segs[flip] = segs[flip][:, [2, 3, 0, 1]]
+        else:
+            segs = rng.uniform(0, 100, (int(rng.integers(3, 25)), 4))
+        noded, p = noding.node_segments(segs)
+        noded, p = noding.dedup_undirected(noded, p)
+        got = faces.polygonize(noded, min_area=1e-9)
+        assert _canon(got) == _canon(_faces_oracle(noded, 1e-9)), case
+
+
 # ---------- buffer / dissolve / close ----------
 
 def test_buffer_single_segment_area():

@@ -42,7 +42,7 @@ CRAFTED = [
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 @pytest.fixture(scope="module")

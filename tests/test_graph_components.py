@@ -35,7 +35,7 @@ SELECT node, MIN(r) AS component FROM reach GROUP BY node
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 def _oracle(pairs_pdf: pd.DataFrame) -> set:
@@ -54,6 +54,20 @@ def _engine(spark, pairs_pdf: pd.DataFrame) -> set:
     assert len({r["node"] for r in got}) == len(got), \
         "a node carries two component labels"
     return labels
+
+
+def test_small_graph_labels_are_a_local_relation(spark):
+    """Below the driver bound the labels are a LocalRelation (an Arrow
+    table, no job per evaluation), not an RDD of Python rows."""
+    for rows, ddl, want in (
+            ([(1, 2), (2, 3), (7, 5)], "a long, b long",
+             [(1, 1), (2, 1), (3, 1), (5, 5), (7, 5)]),
+            ([("x", "y")], "a string, b string", [("x", "x"), ("y", "x")])):
+        cc = connected_components(spark.createDataFrame(rows, ddl))
+        plan = cc._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", \
+            plan.toString()
+        assert sorted(map(tuple, cc.collect())) == want
 
 
 def test_cc_random_graphs_match_duckdb_oracle(spark):

@@ -11,7 +11,7 @@ CELL = 10.0
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 @pytest.fixture(scope="module")

@@ -10,7 +10,7 @@ from osm_sidewalkreator_spark.operators import overlay as OV
 @pytest.fixture(scope="module")
 def spark():
     from osm_sidewalkreator_spark.session import get_spark
-    return get_spark(shuffle_partitions=4)
+    return get_spark()
 
 
 def _interval(seg, rect):

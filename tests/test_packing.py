@@ -15,7 +15,7 @@ CAP = 256
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 @pytest.fixture(scope="module")

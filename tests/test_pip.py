@@ -18,7 +18,7 @@ PG = T.StructType([T.StructField("poly_id", T.LongType()),
 
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark(app="tests", shuffle_partitions=8)
+    return get_spark(app="tests")
 
 
 def _square(x0, y0, s):

@@ -47,7 +47,7 @@ def test_hull_degenerate():
 @pytest.fixture(scope="module")
 def spark():
     from osm_sidewalkreator_spark.session import get_spark
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 def test_relation_flags_against_de9im_cases(spark):

@@ -21,7 +21,7 @@ from osm_sidewalkreator_spark.session import get_spark
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=4)
+    return get_spark()
 
 
 def _chunks_reference(tokens: list[str], chunk: int, overlap: int):

@@ -30,7 +30,7 @@ Q8 = f"""
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 def test_quantize_matches_duckdb_exactly(spark):

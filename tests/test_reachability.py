@@ -74,11 +74,7 @@ KEEP = {
 
 # Each defaulted parameter that no call sets but stays a parameter.
 # Only deployment settings belong here.
-PARAM_KEEP = {
-    "osm_sidewalkreator_spark.session.get_spark.master":
-        "deployment setting: the Spark master URL of the cluster; "
-        "unset means the local host's cores",
-}
+PARAM_KEEP: dict[str, str] = {}
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

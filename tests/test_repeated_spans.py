@@ -13,7 +13,7 @@ W = 8
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 def _oracle_sql(w: int, c: int) -> str:

@@ -14,7 +14,7 @@ DOCS = f"read_parquet('{SF}/documents.parquet')"
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 def test_repetition_stats_matches_duckdb(spark):

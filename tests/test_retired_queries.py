@@ -27,7 +27,7 @@ needs_golden = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def spark():
-    return get_spark(shuffle_partitions=8)
+    return get_spark()
 
 
 def test_geocode_pages_covers_every_page(spark):

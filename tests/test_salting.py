@@ -20,7 +20,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark(app="tests", shuffle_partitions=8)
+    return get_spark(app="tests")
 
 
 def _pages_and_blocks(spark):

@@ -25,7 +25,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app="tests", shuffle_partitions=8)
+    s = get_spark(app="tests")
     yield s
 
 
@@ -671,6 +671,42 @@ def test_polygon_overlay_string_ids_and_multirow(spark):
     drows = diff.collect()
     assert all(r["b_id"] is None for r in drows)
     assert abs(sum(r["area"] for r in drows) - (3200 - 400)) < 1e-3
+
+
+def test_polygon_clip_intervals_keeps_every_part(spark):
+    """A polygon id stored row-per-part clips against every part, at any
+    shuffle partition count: segment 1 lies in part one, segment 2 in
+    part two, segment 3 crosses both."""
+    from osm_sidewalkreator_spark.geometry import wkb as WKB
+    from osm_sidewalkreator_spark.operators.overlay import (
+        polygon_clip_intervals)
+
+    def square(x0):
+        ring = np.array([[x0, 0.7], [x0 + 40, 0.7], [x0 + 40, 40.7],
+                         [x0, 40.7], [x0, 0.7]])
+        return ("p", x0, 0.7, x0 + 40, 40.7,
+                bytearray(WKB.polygon_wkb(ring)))
+
+    polys = spark.createDataFrame(
+        [square(0.3), square(60.3)],
+        "poly_id string, xmin double, ymin double, xmax double, "
+        "ymax double, geometry binary")
+    segs = spark.createDataFrame(
+        [(1, 10.5, 10.9, 30.5, 10.9), (2, 70.5, 10.9, 90.5, 10.9),
+         (3, 10.5, 20.9, 90.5, 20.9)],
+        "osm_id long, ax double, ay double, bx double, by double")
+    want = [(1, 0.0, 1.0), (2, 0.0, 1.0), (3, 0.0, 0.3725),
+            (3, 0.6225, 1.0)]
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 4, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            got = sorted((r.osm_id, round(r._t0, 9), round(r._t1, 9))
+                         for r in polygon_clip_intervals(segs, polys)
+                         .collect())
+            assert got == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def test_catalog_table_seam(spark):
