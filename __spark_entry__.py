@@ -334,10 +334,9 @@ def q_clip_aoi_geometry(spark, sf_dir):
 
 
 def q_sessionize(spark, sf_dir):
-    """Per-user session windows (native F.session_window, 12 h gap):
-    session start/end epoch, event count, milli-value sum. Same
-    aggregation runs as a watermarked stream (sessionize_events
-    streaming=True, tested in tests/test_spark_ops.py)."""
+    """Per-user session windows (native F.session_window, 12 h gap) as
+    a watermarked append-mode stream: session start/end epoch, event
+    count, milli-value sum."""
     from osm_sidewalkreator_spark.streaming.events_stream import (
         sessionize_events)
     return sessionize_events(spark, sf_dir)
@@ -348,7 +347,7 @@ def q_stream_dedup(spark, sf_dir):
     TTL past watermark): events replayed 20% duplicated across source
     files; first occurrence of each event_id survives. Replays are
     byte-identical rows, so the exact oracle is the distinct source."""
-    from osm_sidewalkreator_spark.streaming.stateful import (
+    from osm_sidewalkreator_spark.streaming.events_stream import (
         run_stream_dedup)
     out = run_stream_dedup(spark, sf_dir)
     return out.select(

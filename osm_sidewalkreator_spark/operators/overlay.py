@@ -279,14 +279,12 @@ def _assemble_faces(seg_arr, member_fn):
     # probe-containment matrix (minimal faces of one component are
     # disjoint, so only disconnected nested components register here)
     n = len(cycles)
+    probes = np.array([g["probe"] for g in cycles]).reshape(n, 2)
     inside = np.zeros((n, n), dtype=bool)
-    for gi, g in enumerate(cycles):
-        px = np.array([g["probe"][0]])
-        py = np.array([g["probe"][1]])
-        for fi, f in enumerate(cycles):
-            if fi != gi:
-                inside[gi, fi] = bool(
-                    core.points_in_ring(px, py, f["ring"])[0])
+    for fi, f in enumerate(cycles):
+        inside[:, fi] = core.points_in_ring(probes[:, 0], probes[:, 1],
+                                            f["ring"])
+    np.fill_diagonal(inside, False)
     out = []
     for fi, f in enumerate(cycles):
         if not f["keep"]:

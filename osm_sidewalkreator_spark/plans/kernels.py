@@ -917,12 +917,13 @@ def tile_pipeline(segs: np.ndarray, widths: np.ndarray,
             for b in blocks:
                 inside = core.points_in_ring(pois[:, 0], pois[:, 1], b)
                 if inside.sum() >= 3:
-                    in_block, out_block = [], []
-                    for ln in sidewalk_lines:
-                        rep = ln[len(ln) // 2]
-                        (in_block if core.points_in_ring(
-                            rep[None, 0], rep[None, 1], b)[0]
-                         else out_block).append(ln)
+                    reps = np.array([ln[len(ln) // 2] for ln in
+                                     sidewalk_lines]).reshape(-1, 2)
+                    in_mask = core.points_in_ring(reps[:, 0], reps[:, 1], b)
+                    in_block = [ln for ln, m in zip(sidewalk_lines, in_mask)
+                                if m]
+                    out_block = [ln for ln, m in zip(sidewalk_lines,
+                                                     in_mask) if not m]
                     split = refine.voronoi_split_block(
                         in_block, pois[inside], b)
                     sidewalk_lines = out_block + split

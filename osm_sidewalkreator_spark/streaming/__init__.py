@@ -1,7 +1,10 @@
-"""Incremental processing: checkpoint manifest + resume.
+"""Incremental processing: the per-tile checkpoint and the event streams.
 
-The reference is a batch GUI plugin (SURVEY.md §2.9 — no streaming
-operators); the north-rule's "resumable from checkpoint with
-per-partition lineage + metrics" is implemented as a manifest table of
-per-tile commits (``checkpoint.py``), not Structured Streaming.
+- ``checkpoint.py``: resume from a manifest of per-tile commits, with
+  per-tile lineage and metrics. This is how the tiled job resumes; it
+  does not use Structured Streaming.
+- ``events_stream.py``: three Structured Streaming queries over the
+  events table (tumbling windows, session windows, stateful dedup), each
+  run to completion with ``Trigger.AvailableNow``. The reference, a batch
+  GUI plugin, has no streaming operators (SURVEY.md §2.9).
 """

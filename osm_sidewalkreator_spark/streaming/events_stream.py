@@ -1,231 +1,158 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the events table: three availableNow streams.
 
-The reference has no streaming operators (SURVEY.md §2.9); this is the
-engine's forward-looking stream path: file-source readStream ->
-watermarked tumbling-window aggregation -> sink. ``availableNow`` runs
-the same query as an incremental batch, which is how the correctness
-gate can compare it against a plain SQL oracle (a tumbling window over
-bounded input is exactly GROUP BY date_trunc).
+The reference has no streaming operators (SURVEY.md §2.9); these are the
+engine's own. Every stream stages the events table plus one later file
+into a fresh directory (``_stage``), reads it one file per trigger under
+a 10-minute watermark, and runs to completion into a memory sink
+(``_run``). A bounded availableNow run returns the rows of the batch
+query, so the gate's SQL oracles are the reference:
+
+- ``run_events_stream``: 1-minute tumbling-window count and value sum
+  per event_type (GROUP BY date_trunc('minute', ts));
+- ``sessionize_events``: per-user session windows with a 12 h gap;
+- ``run_stream_dedup``: first occurrence of every event_id, kept by
+  ``applyInPandasWithState`` keyed state (SURVEY.md §2.10).
+
+The window and session streams run in append mode: the watermark emits
+each window once and evicts it from state, so state stays bounded on a
+continuous stream. Their later file is one sentinel row past every
+window's and session's close; its trigger moves the final watermark past
+all of them, and its own window and session are filtered out. The dedup
+stream's later file replays 20% of the events.
 """
 
 from __future__ import annotations
 
-import shutil
+import datetime
+import os
 import tempfile
-from pathlib import Path
+from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+_SENTINEL_USER = -1
+_OUT_SCHEMA = ("event_id long, ts timestamp, user_id long, "
+               "event_type string, value double")
+_OUT_COLS = ["event_id", "ts", "user_id", "event_type", "value"]
+_TTL_MS = 7 * 24 * 3600 * 1000
 
 
-# numRowsTotal per micro-batch of the most recent append-mode
-# minutely stream (test hook mirroring the sessionize eviction proof)
-LAST_MINUTELY_STREAM_STATE_ROWS: list[int] = []
+@contextmanager
+def _stage(spark: SparkSession, sf_dir: str, name: str, extra):
+    """Stream over a fresh directory holding ``events.parquet`` and the
+    later file ``extra(events)``, removed when the block exits.
+
+    The real file gets the older mtime, so ``maxFilesPerTrigger=1``
+    reads it in the first trigger and the later file in the second."""
+    with tempfile.TemporaryDirectory(prefix=f"{name}_") as stage:
+        events = pq.read_table(f"{sf_dir}/events.parquet")
+        real = os.path.join(stage, "events.parquet")
+        pq.write_table(events, real)
+        later = os.path.join(stage, "later.parquet")
+        pq.write_table(extra(events), later)
+        past = os.stat(later).st_mtime - 60
+        os.utime(real, (past, past))
+        schema = from_arrow_schema(events.schema, prefer_timestamp_ntz=True)
+        yield (spark.readStream.schema(schema)
+               .option("maxFilesPerTrigger", "1").parquet(stage)
+               # parquet NTZ timestamps need a tz-aware event-time column
+               .withColumn("ts", F.to_timestamp("ts"))
+               .withWatermark("ts", "10 minutes"))
 
 
-def minutely_event_counts_stream(spark: SparkSession, events_dir: str,
-                                 query_name: str = "events_stream_agg",
-                                 output_mode: str = "append") -> DataFrame:
-    """Streaming tumbling-window count/sum per event_type.
+def _run(df: DataFrame, name: str) -> DataFrame:
+    """Run the stream to completion (availableNow) into the memory table
+    ``name`` and return that table."""
+    (df.writeStream.format("memory").queryName(name).outputMode("append")
+     .trigger(availableNow=True).start().awaitTermination())
+    return df.sparkSession.table(name)
 
-    ``events_dir`` must be a directory of parquet files. Runs with
-    Trigger.AvailableNow to completion and returns the materialized
-    result (memory sink).
 
-    The default ``output_mode="append"`` is the production template:
-    the watermark finalizes each 1-minute window once event time moves
-    past window.end + 10 minutes, EMITS it exactly once, and EVICTS it
-    from state — bounded state on a continuous stream. For the bounded
-    gate input the caller stages a sentinel row past every real window
-    (``_stage_events_with_sentinel`` with ``maxFilesPerTrigger=1``) so
-    the final watermark closes them all; sentinel rows (event_type
-    ``"_sentinel"``) are filtered from the result.
-    ``output_mode="complete"`` retains ALL windows in state forever —
-    unbounded on a real stream; kept only as a bounded-input debugging
-    flag.
-    """
-    batch = spark.read.parquet(events_dir)
-    schema = batch.schema
-    reader = spark.readStream.schema(schema)
-    if output_mode == "append":
-        # append mode only emits windows the final watermark has passed
-        # — on a bounded availableNow input that requires a staged
-        # sentinel row past every real window, or the tail of the data
-        # (at least the last 10 minutes' worth) is silently never
-        # emitted. Refuse to run lossy rather than return a truncated
-        # result (the input is bounded by contract, so this one cheap
-        # scan is acceptable).
-        if batch.filter(F.col("event_type") == "_sentinel") \
-                .limit(1).count() == 0:
-            raise ValueError(
-                f"{events_dir}: append mode needs a watermark-advancing "
-                "sentinel row (event_type='_sentinel') staged after the "
-                "real events — use run_events_stream / "
-                "_stage_events_with_sentinel, or pass "
-                "output_mode='complete' for bounded-input debugging")
-        # one file per micro-batch: the (older-mtime) real file's batch
-        # advances the watermark so the sentinel batch can close and
-        # evict every real window
-        reader = reader.option("maxFilesPerTrigger", "1")
-    src = reader.parquet(events_dir)
-    # parquet NTZ timestamps need a tz-aware event-time column
-    src = src.withColumn("ts", F.to_timestamp("ts"))
-    agg = (src.withWatermark("ts", "10 minutes")
-           .groupBy(F.window("ts", "1 minute").alias("w"), "event_type")
-           .agg(F.count("*").alias("n"),
-                F.sum(F.round(F.col("value") * 1000).cast("long"))
-                 .alias("value_milli")))
-    q = (agg.writeStream.format("memory").queryName(query_name)
-         .outputMode(output_mode)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    global LAST_MINUTELY_STREAM_STATE_ROWS
-    LAST_MINUTELY_STREAM_STATE_ROWS = [
-        p["stateOperators"][0]["numRowsTotal"]
-        for p in (q.recentProgress or [])
-        if p.get("stateOperators")]
-    out = spark.table(query_name).select(
+def _sentinel(events: pa.Table) -> pa.Table:
+    """One row past the close of every window and session: the last
+    event + 12 h session gap + 10 min watermark + 1 h margin."""
+    ts = pc.max(events["ts"]).as_py() + datetime.timedelta(hours=12,
+                                                           minutes=70)
+    row = {"ts": ts, "user_id": _SENTINEL_USER, "event_type": "_sentinel"}
+    return pa.table([pa.array([row.get(f.name)], f.type)
+                     for f in events.schema], schema=events.schema)
+
+
+def _replay(events: pa.Table) -> pa.Table:
+    """The 20% of events with the lowest ids, replayed (duplicate ids)."""
+    idx = pc.sort_indices(events, sort_keys=[("event_id", "ascending")])
+    return events.take(idx[:int(events.num_rows * 0.2)])
+
+
+def _value_milli():
+    return F.sum(F.round(F.col("value") * 1000).cast("long")) \
+        .alias("value_milli")
+
+
+def run_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count and milli-value sum per (event_type, minute)."""
+    with _stage(spark, sf_dir, "events_minutely", _sentinel) as ev:
+        out = _run(ev.groupBy(F.window("ts", "1 minute").alias("w"),
+                              "event_type")
+                   .agg(F.count("*").alias("n"), _value_milli()),
+                   "events_minutely")
+    return out.filter(F.col("event_type") != "_sentinel").select(
         "event_type",
         F.unix_timestamp(F.col("w.start")).alias("minute_epoch"),
         "n", "value_milli")
-    if output_mode == "append":
-        out = out.filter(F.col("event_type") != "_sentinel")
-    return out
 
 
-def run_events_stream(spark: SparkSession, sf_dir: str,
-                      output_mode: str = "append") -> DataFrame:
-    """Stage the events table into a stream-source directory (with a
-    watermark-advancing sentinel in append mode) and run the windowed
-    aggregation."""
-    if output_mode == "append":
-        stage = _stage_events_with_sentinel(spark, sf_dir, gap_h=0,
-                                            watermark_min=10,
-                                            prefix="minutely_append")
-    else:
-        stage = Path(tempfile.gettempdir()) / "sidewalkreator_stream" \
-            / Path(sf_dir).name
-        stage.mkdir(parents=True, exist_ok=True)
-        dst = stage / "events.parquet"
-        if not dst.exists():
-            shutil.copy(f"{sf_dir}/events.parquet", dst)
-    name = f"events_stream_{Path(sf_dir).name.replace('.', '_')}" \
-        + ("_app" if output_mode == "append" else "")
-    return minutely_event_counts_stream(spark, str(stage), name,
-                                        output_mode=output_mode)
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user sessions (``F.session_window``, Spark's merging session
+    windows): a user's events whose gaps are < 12 h. The window ends
+    12 h after the last event ([start, end), so an event exactly on the
+    closing boundary opens a new session)."""
+    with _stage(spark, sf_dir, "events_sessions", _sentinel) as ev:
+        out = _run(ev.groupBy(F.session_window("ts", "12 hours").alias("w"),
+                              "user_id")
+                   .agg(F.count("*").alias("n_events"), _value_milli()),
+                   "events_sessions")
+    return out.filter(F.col("user_id") != _SENTINEL_USER).select(
+        "user_id",
+        F.unix_timestamp(F.col("w.start")).alias("start_s"),
+        F.unix_timestamp(F.col("w.end")).alias("end_s"),
+        "n_events", "value_milli")
 
 
-# numRowsTotal per micro-batch of the most recent append-mode
-# sessionize stream (test hook: state must SHRINK once the watermark
-# passes closed sessions — the eviction proof)
-LAST_SESSION_STREAM_STATE_ROWS: list[int] = []
-
-_SENTINEL_USER = -1
-
-
-def _stage_events_with_sentinel(spark: SparkSession, sf_dir: str,
-                                gap_h: int, watermark_min: int,
-                                prefix: str = "sessions_append") -> Path:
-    """Stage the events table as TWO stream-source files: the real
-    events, then one sentinel row (user_id=-1) whose event time lies
-    past every real session's close + watermark. Processed last
-    (maxFilesPerTrigger=1, older mtime on the real file), it advances
-    the global watermark past all real sessions so APPEND mode emits —
-    and evicts — every one of them on the bounded input."""
-    import datetime
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    stage = Path(tempfile.gettempdir()) / "sidewalkreator_stream" \
-        / f"{prefix}_{Path(sf_dir).name}"
-    src = f"{sf_dir}/events.parquet"
-    dst = stage / "events.parquet"
-    sen = stage / "zz_sentinel.parquet"
-    if dst.exists() and sen.exists():
-        return stage
-    stage.mkdir(parents=True, exist_ok=True)
-    shutil.copy(src, dst)
-    max_ts = (spark.read.parquet(src)
-              .agg(F.max(F.to_timestamp("ts"))).collect()[0][0])
-    sentinel_ts = max_ts + datetime.timedelta(
-        hours=gap_h, minutes=watermark_min + 60)
-    schema = pq.read_schema(src)
-    arrays = []
-    for f in schema:
-        if f.name == "ts":
-            arrays.append(pa.array([sentinel_ts], type=f.type))
-        elif f.name == "user_id":
-            arrays.append(pa.array([_SENTINEL_USER], type=f.type))
-        elif pa.types.is_integer(f.type):
-            arrays.append(pa.array([0], type=f.type))
-        elif pa.types.is_floating(f.type):
-            arrays.append(pa.array([0.0], type=f.type))
-        else:
-            arrays.append(pa.array(["_sentinel"], type=f.type))
-    pq.write_table(pa.Table.from_arrays(arrays, schema=schema), sen)
-    # real file strictly older than the sentinel -> processed first
-    past = os.stat(sen).st_mtime - 60
-    os.utime(dst, (past, past))
-    return stage
+def _dedup_fn(key, pdfs, state: GroupState):
+    if state.hasTimedOut:
+        state.remove()
+        return
+    if state.exists:
+        # drain the iterator (required) and emit nothing: a first
+        # occurrence was already emitted in an earlier micro-batch
+        for _ in pdfs:
+            pass
+        return
+    first = None
+    for pdf in pdfs:
+        if first is None and len(pdf):
+            first = pdf.iloc[:1][_OUT_COLS]
+    if first is not None:
+        state.update((1,))
+        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + _TTL_MS)
+        yield first
 
 
-def sessionize_events(spark: SparkSession, sf_dir: str,
-                      streaming: bool = False) -> DataFrame:
-    """Per-user session windows (``F.session_window`` — Spark's native
-    merging session windows, the engine's stateful-aggregation path for
-    SURVEY.md §2.9).
-
-    A session groups a user's events whose inter-event gap is < 12 h;
-    the window end extends 12 h past the last event ([start, end)
-    semantics — an event landing exactly on the closing boundary opens
-    a NEW session). Works identically as a batch aggregation (the
-    oracle gate path) and as a watermarked stream (``streaming=True``).
-
-    The streaming path runs in ``outputMode("append")`` — the
-    production template: the watermark EVICTS each session from state
-    once it passes the session's close, so state stays bounded on a
-    continuous stream. On the bounded gate input a sentinel row staged
-    after the real data (see ``_stage_events_with_sentinel``) pushes
-    the final watermark past every real session, making the append
-    output set-equal to the batch aggregation; the sentinel's own
-    session is filtered from the result.
-    """
-    if streaming:
-        stage = _stage_events_with_sentinel(spark, sf_dir, gap_h=12,
-                                            watermark_min=10)
-        schema = spark.read.parquet(str(stage)).schema
-        reader = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", "1"))
-        ev = (reader.parquet(str(stage))
-              .withColumn("ts", F.to_timestamp("ts")))
-        ev = ev.withWatermark("ts", "10 minutes")
-    else:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-            .withColumn("ts", F.to_timestamp("ts"))
-    agg = (ev.groupBy(F.session_window("ts", "12 hours").alias("w"),
-                      "user_id")
-           .agg(F.count("*").alias("n_events"),
-                F.sum(F.round(F.col("value") * 1000).cast("long"))
-                 .alias("value_milli")))
-    out_cols = ["user_id",
-                F.unix_timestamp(F.col("w.start")).alias("start_s"),
-                F.unix_timestamp(F.col("w.end")).alias("end_s"),
-                "n_events", "value_milli"]
-    if not streaming:
-        return agg.select(*out_cols)
-    name = f"events_sessions_{Path(sf_dir).name.replace('.', '_')}_app"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    global LAST_SESSION_STREAM_STATE_ROWS
-    LAST_SESSION_STREAM_STATE_ROWS = [
-        p["stateOperators"][0]["numRowsTotal"]
-        for p in (q.recentProgress or [])
-        if p.get("stateOperators")]
-    out = spark.table(name).filter(F.col("user_id") != _SENTINEL_USER)
-    return out.select(*out_cols)
+def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First occurrence of every event_id across micro-batches; the
+    replayed duplicates (the at-least-once case) are dropped. State is
+    one flag per seen id, evicted 7 days past the watermark. Spark's
+    ``dropDuplicatesWithinWatermark`` covers plain dedup; this is the
+    template for stateful logic the built-ins cannot express
+    (conditional emission, custom eviction, counters)."""
+    with _stage(spark, sf_dir, "events_dedup", _replay) as ev:
+        return _run(ev.groupBy("event_id").applyInPandasWithState(
+            _dedup_fn, _OUT_SCHEMA, "seen int", "append",
+            GroupStateTimeout.EventTimeTimeout), "events_dedup")

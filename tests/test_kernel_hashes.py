@@ -2,8 +2,9 @@
 
 ``kernels.tile_pipeline`` runs on the synthetic city of
 ``tests/test_geometry.py`` (6x6 grid, one diagonal, one building
-hugging a street, one mapped sidewalk loop inside a block), and every
-output array is hashed (sha256 over its
+hugging a street, one mapped sidewalk loop inside a block; the
+``voronoi_pois`` variant adds 60 seeded POIs, so the per-block Voronoi
+split runs), and every output array is hashed (sha256 over its
 dtype, shape and bytes). A refactor of the geometric primitives must
 leave every hash unchanged; a hash change means some float moved.
 """
@@ -75,6 +76,9 @@ EXPECTED = {
     "export_snap": {
         **_SHARED, "crossings": "4d530df0e3319437",
         "kerbs": "0aea659dc8ab166b", "sidewalks": "c0acd513127da369"},
+    "voronoi_pois": {
+        **_SHARED, "crossings": "4d530df0e3319437",
+        "kerbs": "0aea659dc8ab166b", "sidewalks": "7f09f0649c0ee0fe"},
 }
 
 
@@ -83,6 +87,8 @@ def test_tile_pipeline_output_is_bit_exact(variant):
     segs, widths, bseg, existing = _city()
     out = kernels.tile_pipeline(
         segs, widths, building_segs=bseg, existing_sw=existing,
+        pois=np.random.default_rng(7).uniform(0, 500, size=(60, 2))
+        if variant == "voronoi_pois" else None,
         enlarge_crossings=variant == "enlarge_crossings",
         export_snap=variant == "export_snap")
     assert output_hashes(out) == EXPECTED[variant]

@@ -1,6 +1,6 @@
 """No def, constant, import or parameter that no caller uses.
 
-Four checks over the package and ``__spark_entry__.py``, all on the AST
+Five checks over the package and ``__spark_entry__.py``, all on the AST
 (no Spark):
 
 1. Reachability. An AST name closure from the real entrypoints:
@@ -36,6 +36,10 @@ Four checks over the package and ``__spark_entry__.py``, all on the AST
    nothing. Callees are matched by name only, which can only
    over-count what is set. A parameter no call sets is a constant, so
    it belongs in the body.
+5. Module state. No function rebinds a module-level name with
+   ``global``, apart from the ``GLOBAL_KEEP`` list: module-level state
+   a call leaves behind is read by whoever runs next, and a result a
+   caller needs belongs in the return value.
 """
 
 from __future__ import annotations
@@ -75,6 +79,12 @@ KEEP = {
 # Each defaulted parameter that no call sets but stays a parameter.
 # Only deployment settings belong here.
 PARAM_KEEP: dict[str, str] = {}
+
+# Each function that rebinds a module-level name, with its reason.
+GLOBAL_KEEP = {
+    "osm_sidewalkreator_spark.geometry.noding._triu_cached":
+        "byte-budgeted LRU cache of np.triu_indices, a measured hotspot",
+}
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -348,6 +358,23 @@ def unset_params() -> list[str]:
         and (i is None or i >= n_pos.get(name, 0)))
 
 
+def global_rebinds() -> list[str]:
+    """``module.def`` (``module.outer.inner`` when nested) of each
+    function that declares a ``global``."""
+    out = []
+
+    def visit(node: ast.AST, where: str):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Global):
+                out.append(where)
+            visit(child, f"{where}.{child.name}"
+                  if isinstance(child, _DEFS) else where)
+
+    for path in _sources():
+        visit(_parse(path), _module_name(path))
+    return sorted(set(out))
+
+
 def test_every_top_level_def_is_reached_or_kept():
     unreached = unreached_defs()
     assert len(KEEP) <= 8
@@ -384,3 +411,13 @@ def test_every_defaulted_parameter_is_set_by_some_call():
         "each its value, read in the body):\n" + "\n".join(never))
     assert set(PARAM_KEEP) <= set(unset), \
         sorted(set(PARAM_KEEP) - set(unset))
+
+
+def test_no_function_rebinds_module_state():
+    found = global_rebinds()
+    extra = sorted(set(found) - set(GLOBAL_KEEP))
+    assert not extra, (
+        f"{len(extra)} functions that rebind a module-level name with "
+        "`global`:\n" + "\n".join(extra))
+    assert set(GLOBAL_KEEP) <= set(found), \
+        sorted(set(GLOBAL_KEEP) - set(found))

@@ -49,21 +49,6 @@ def test_simhash_matches_md5_variant_shape(spark):
                for r in rows)
 
 
-def test_events_minutely_equals_streaming_rollup(spark):
-    # the Structured Streaming rollup equals the batch GROUP BY of the
-    # same minutes, set for set
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    batch = (ev.groupBy("event_type",
-                        F.unix_timestamp(F.date_trunc("minute", "ts"))
-                        .alias("minute_epoch"))
-             .agg(F.count("*").alias("n"),
-                  F.sum(F.round(F.col("value") * 1000).cast("long"))
-                  .alias("value_milli")))
-    a = {tuple(r) for r in batch.collect()}
-    b = {tuple(r) for r in E.q_events_streaming(spark, SF).collect()}
-    assert a == b and len(a) > 0
-
-
 def test_cosine_lsh_and_ivf_topk_contract(spark):
     # the IVF half went with cosine_topk_ivf; the LSH top-k remains
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")

@@ -4,8 +4,11 @@ Mirrors the reference's algorithm-level tests with mocked I/O
 (SURVEY.md §5 item 3): fixed synthetic city in, invariant counts out.
 """
 
+import contextlib
 import os
+import time
 import warnings
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -452,53 +455,119 @@ def test_jaccard_df_cap_scale_guard(spark):
     assert capped_tight <= {t[:2] for t in exact}
 
 
+@contextlib.contextmanager
+def _stream_triggers(spark, name):
+    """Progress of each trigger of the stream ``name`` run inside the
+    block, complete once the block exits (a listener receives it)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+    progress, ended = [], set()
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.name == name:
+                progress.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.add(str(event.id))
+
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        yield progress
+        # listener events arrive asynchronously: wait for the query's end
+        deadline = time.monotonic() + 60
+        while not (progress and str(progress[0].id) in ended) \
+                and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert progress and str(progress[0].id) in ended
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def _state_rows(progress):
+    return [p.stateOperators[0].numRowsTotal for p in progress]
+
+
+def _minutely_batch(spark, sf_dir):
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return {tuple(r) for r in ev.groupBy(
+        "event_type",
+        F.unix_timestamp(F.date_trunc("minute", "ts")).alias("minute_epoch"))
+        .agg(F.count("*").alias("n"),
+             F.sum(F.round(F.col("value") * 1000).cast("long"))
+             .alias("value_milli")).collect()}
+
+
+def _sessions_batch(spark, sf_dir):
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
+        .withColumn("ts", F.to_timestamp("ts"))
+    agg = ev.groupBy(F.session_window("ts", "12 hours").alias("w"),
+                     "user_id") \
+        .agg(F.count("*").alias("n_events"),
+             F.sum(F.round(F.col("value") * 1000).cast("long"))
+             .alias("value_milli"))
+    return {tuple(r) for r in agg.select(
+        "user_id", F.unix_timestamp("w.start"), F.unix_timestamp("w.end"),
+        "n_events", "value_milli").collect()}
+
+
 def test_sessionize_stream_matches_batch(spark):
     """Native session windows: the watermarked APPEND-mode stream (the
-    production template — watermark evicts closed sessions) emits
-    exactly the batch aggregation on the bounded input, and its state
-    footprint SHRINKS once the sentinel advances the watermark past
-    every real session (SURVEY.md 2.9)."""
+    watermark evicts closed sessions) emits exactly the batch
+    aggregation on the bounded input, and its state SHRINKS once the
+    sentinel advances the watermark past every real session
+    (SURVEY.md 2.9)."""
     from osm_sidewalkreator_spark.streaming import events_stream as ES
-    batch = {tuple(r) for r in ES.sessionize_events(spark, SF).collect()}
-    stream = {tuple(r) for r in
-              ES.sessionize_events(spark, SF, streaming=True).collect()}
-    assert batch == stream and len(batch) > 300
-    state = ES.LAST_SESSION_STREAM_STATE_ROWS
+    with _stream_triggers(spark, "events_sessions") as progress:
+        stream = {tuple(r) for r in
+                  ES.sessionize_events(spark, SF).collect()}
+    assert stream == _sessions_batch(spark, SF) and len(stream) > 300
+    state = _state_rows(progress)
     # eviction proof: state does not grow across the final triggers and
     # ends holding (at most) the sentinel's own session
     assert len(state) >= 2 and state[-1] <= 1 and state[-1] < max(state)
 
 
 def test_minutely_stream_append_evicts_state(spark):
-    """The tumbling-window stream runs APPEND-mode (production
-    template): emits the same windows as complete mode on the bounded
-    input, and the watermark EVICTS closed windows from state (the
-    sessionize sentinel technique applied to the simpler case)."""
+    """The tumbling-window stream runs APPEND-mode: it emits exactly the
+    batch GROUP BY of the same minutes, and the watermark EVICTS closed
+    windows from state."""
     from osm_sidewalkreator_spark.streaming import events_stream as ES
-    app = {tuple(r) for r in
-           ES.run_events_stream(spark, SF).collect()}
-    state = list(ES.LAST_MINUTELY_STREAM_STATE_ROWS)  # before the
-    # complete-mode run below overwrites the hook
-    comp = {tuple(r) for r in
-            ES.run_events_stream(spark, SF,
-                                 output_mode="complete").collect()}
-    assert app == comp and len(app) > 100
+    with _stream_triggers(spark, "events_minutely") as progress:
+        app = {tuple(r) for r in ES.run_events_stream(spark, SF).collect()}
+    assert app == _minutely_batch(spark, SF) and len(app) > 100
+    state = _state_rows(progress)
     # eviction proof: state shrinks to (at most) the sentinel's own
     # window once the watermark passes every real window
     assert len(state) >= 2 and state[-1] <= 1 and state[-1] < max(state)
 
 
-def test_minutely_append_requires_sentinel(spark):
-    """Direct append-mode calls on a directory WITHOUT a staged
-    sentinel must refuse to run (the final watermark would silently
-    swallow at least the last `watermark` worth of windows) instead of
-    returning a truncated result."""
-    import pytest
+def test_stream_stages_each_input_afresh(spark, tmp_path):
+    """Two input directories with the same basename and different events
+    each stream their own events: nothing staged for one input is
+    reused for another."""
+    import pyarrow.parquet as pq
     from osm_sidewalkreator_spark.streaming import events_stream as ES
-    with pytest.raises(ValueError, match="sentinel"):
-        ES.minutely_event_counts_stream(
-            spark, f"{SF}/events.parquet",
-            query_name="no_sentinel_should_raise")
+    events = pq.read_table(f"{SF}/events.parquet")
+    got = []
+    for i, part in enumerate((events.slice(0, 500), events.slice(500))):
+        sf_dir = tmp_path / str(i) / Path(SF).name
+        sf_dir.mkdir(parents=True)
+        pq.write_table(part, sf_dir / "events.parquet")
+        minutely = {tuple(r) for r in
+                    ES.run_events_stream(spark, str(sf_dir)).collect()}
+        sessions = {tuple(r) for r in
+                    ES.sessionize_events(spark, str(sf_dir)).collect()}
+        assert minutely == _minutely_batch(spark, sf_dir)
+        assert sessions == _sessions_batch(spark, sf_dir)
+        got.append((minutely, sessions))
+    assert got[0][0] != got[1][0] and got[0][1] != got[1][1]
 
 
 def test_embedding_neardup_lsh_subset(spark):
@@ -515,14 +584,18 @@ def test_embedding_neardup_lsh_subset(spark):
 
 
 def test_stream_dedup_stateful(spark):
-    """applyInPandasWithState dedup: 20% replayed events collapse to
-    exactly the distinct source ids (custom stateful op, SURVEY 2.10)."""
-    from osm_sidewalkreator_spark.streaming.stateful import (
-        run_stream_dedup)
-    out = run_stream_dedup(spark, SF)
-    ids = [r.event_id for r in out.select("event_id").collect()]
+    """applyInPandasWithState dedup: the events arrive in one trigger and
+    the 20% replay in the next, which finds every id in state and adds
+    no row; the output is exactly the distinct source ids (custom
+    stateful op, SURVEY 2.10)."""
+    from osm_sidewalkreator_spark.streaming import events_stream as ES
+    with _stream_triggers(spark, "events_dedup") as progress:
+        ids = [r.event_id for r in
+               ES.run_stream_dedup(spark, SF).select("event_id").collect()]
     src_n = spark.read.parquet(f"{SF}/events.parquet").count()
     assert len(ids) == len(set(ids)) == src_n
+    triggers = [(p.numInputRows, p.sink.numOutputRows) for p in progress]
+    assert triggers == [(src_n, src_n), (src_n // 5, 0)]
 
 
 def test_pair_dot_is_bit_identical_to_jvm_fold(spark):
