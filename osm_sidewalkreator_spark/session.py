@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
 import shlex
+import shutil
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -14,6 +19,17 @@ LOCAL_JIT_PROFILE = ("-XX:Tier4InvocationThreshold=50000"
                      " -XX:Tier4MinInvocationThreshold=6000"
                      " -XX:Tier4CompileThreshold=150000"
                      " -XX:Tier4BackEdgeThreshold=400000")
+
+# Class-data archives of local driver JVMs, one per JDK and jar list,
+# with the empty conf dir their classpath starts with.
+JVM_DIR = Path(__file__).resolve().parent.parent / "data" / "jvm"
+# the first four bytes of a complete JDK 17 dynamic archive (its header,
+# written last)
+_CDS_MAGIC = 0xF00BABA8
+# environment that puts more entries on the driver's classpath
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+
+_log = logging.getLogger(__name__)
 
 
 def host_defaults() -> tuple[int, str]:
@@ -28,6 +44,81 @@ def host_defaults() -> tuple[int, str]:
                       if ln.startswith("MemAvailable:"))
         mem = f"{max(1, kb // 2**21)}g"
     return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
+
+
+def cds_options(jvm_dir: Path, conf_dir: Path, java_home: Path,
+                jars_dir: Path) -> tuple[str | None, Path | None]:
+    """(class-data-sharing options, SPARK_CONF_DIR) for a driver JVM of
+    ``java_home`` about to start on the jars of ``jars_dir``, with
+    ``conf_dir`` its Spark conf dir; (None, None) when it gets none.
+
+    The archive is ``jvm_dir/<key>.jsa``. ``<key>`` hashes the JDK (its
+    path and ``release`` file), ``jvm_dir`` and the name, size and
+    mtime of every jar: what the JVM checks before it maps an archive.
+    Archives and logs with another key are deleted. A complete archive
+    (one that starts with the dynamic-archive magic) is mapped;
+    otherwise the JVM records its classes and writes the archive at
+    exit. CDS logging goes to ``jvm_dir/<key>.log``, none to stdout.
+
+    JDK 17 will not record with a non-empty directory on the classpath,
+    and spark-class puts the conf dir first on it, so the JVM gets the
+    empty ``jvm_dir/conf`` instead. That changes nothing only when the
+    conf dir holds nothing but ``*.template`` files; if it holds any
+    other file, the JVM gets no CDS option."""
+    real = next((n for n in (os.listdir(conf_dir) if conf_dir.is_dir()
+                             else ()) if not n.endswith(".template")), None)
+    if real:
+        _log.warning("no class-data archive: Spark conf dir %s holds %s",
+                     conf_dir, real)
+        return None, None
+    release = java_home / "release"
+    h = hashlib.sha256(f"{java_home}\n{jvm_dir}\n".encode())
+    h.update(release.read_bytes() if release.is_file() else b"")
+    for jar in sorted(jars_dir.glob("*.jar")):
+        st = jar.stat()
+        h.update(f"{jar.name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    key = h.hexdigest()[:16]
+    empty_conf = jvm_dir / "conf"
+    empty_conf.mkdir(parents=True, exist_ok=True)
+    for old in jvm_dir.iterdir():
+        if old.suffix in (".jsa", ".log") and old.stem != key:
+            old.unlink()
+    archive, log = jvm_dir / f"{key}.jsa", jvm_dir / f"{key}.log"
+    magic = 0
+    if archive.is_file():
+        with open(archive, "rb") as f:
+            magic = int.from_bytes(f.read(4), "little")
+        if magic != _CDS_MAGIC:
+            _log.warning("class-data archive %s is incomplete: recording "
+                         "it again", archive)
+    flag = ("SharedArchiveFile" if magic == _CDS_MAGIC
+            else "ArchiveClassesAtExit")
+    return (shlex.join([f"-XX:{flag}={archive}", "-Xlog:cds*=off",
+                        f"-Xlog:cds=info:file={log}::filecount=0"]),
+            empty_conf)
+
+
+def _launch_cds() -> tuple[str | None, Path | None]:
+    """``cds_options`` for the driver JVM this process is about to
+    launch: the JDK and Spark home that spark-class would use."""
+    from pyspark.find_spark_home import _find_spark_home
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    extra = [v for v in _CLASSPATH_ENV if os.environ.get(v)]
+    if extra or "--driver-class-path" in args or "extraClassPath" in args:
+        _log.warning("no class-data archive: the driver classpath has "
+                     "extra entries (%s)", ", ".join(extra) or args)
+        return None, None
+    java_home = os.environ.get("JAVA_HOME")
+    if not java_home:
+        java = shutil.which("java")
+        if not java:
+            return None, None
+        java_home = Path(os.path.realpath(java)).parent.parent
+    spark_home = Path(_find_spark_home())
+    conf_dir = Path(os.environ.get("SPARK_CONF_DIR")
+                    or spark_home / "conf")
+    return cds_options(JVM_DIR, conf_dir, Path(java_home),
+                       spark_home / "jars")
 
 
 def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
@@ -60,6 +151,23 @@ def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
     ``spark-submit`` already started keeps its own options;
     ``--driver-java-options`` come later on the JVM's command line and
     win.
+
+    The driver JVM that this call launches also maps a class-data
+    archive (``cds_options``): the classes that the first local session
+    in a checkout loaded, recorded by its JVM into ``data/jvm/<key>.jsa``
+    (140-195 MB, one per JDK and jar list; ``<key>.log`` beside it says
+    whether a session mapped it). A mapped archive skips loading and
+    verifying Spark's classes from jars, the largest start-up cost the
+    JIT profile left. The recording session pays for it: its start is a
+    few seconds slower and its JVM spends about 10 s writing the archive
+    at exit. An archive the JVM cannot use (a write cut short leaves
+    its header zeroed) is ignored at start and recorded again. JDK 17
+    records no class path with a non-empty directory on it, and
+    spark-class puts the conf dir first, so the JVM gets the empty
+    ``data/jvm/conf`` as ``SPARK_CONF_DIR``. That is the same conf only
+    when the conf dir holds nothing but ``*.template`` files; with any
+    other file in it, or with Hadoop or extra class-path entries, the
+    JVM gets no archive.
     """
     # glibc malloc: without these, every large NumPy temporary is a
     # fresh mmap/munmap — 32 workers hammering page-zeroing serializes
@@ -72,6 +180,12 @@ def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
         "glibc.malloc.mmap_threshold=134217728"
         ":glibc.malloc.trim_threshold=134217728")
     cpus, driver_mem = host_defaults()
+    java_opts, conf_dir = LOCAL_JIT_PROFILE, None
+    # only a JVM this call launches takes driver options
+    if SparkContext._gateway is None \
+            and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cds, conf_dir = _launch_cds()
+        java_opts = " ".join(filter(None, (java_opts, cds)))
     builder = (
         SparkSession.builder
         .appName(app)
@@ -82,7 +196,7 @@ def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_mem)
-        .config("spark.driver.defaultJavaOptions", LOCAL_JIT_PROFILE)
+        .config("spark.driver.defaultJavaOptions", java_opts)
         .config("spark.ui.enabled", "false")
         # propagate the malloc tunables to executor-side Python workers
         # on real clusters (local mode inherits the driver env)
@@ -93,7 +207,17 @@ def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
     if "PYSPARK_GATEWAY_PORT" not in os.environ and not any(
             a == "--master" or a.startswith("--master=") for a in args):
         builder = builder.master(f"local[{cpus}]")
-    spark = builder.getOrCreate()
+    saved = os.environ.get("SPARK_CONF_DIR")
+    if conf_dir is not None:
+        os.environ["SPARK_CONF_DIR"] = str(conf_dir)
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if conf_dir is not None:
+            if saved is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -141,14 +141,19 @@ def _dedup_fn(key, pdfs, state: GroupState):
             first = pdf.iloc[:1][_OUT_COLS]
     if first is not None:
         state.update((1,))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + _TTL_MS)
+        # the first trigger's watermark is still 0: count the TTL from
+        # the event's own time, so a key outlives the next trigger
+        ts_ms = first["ts"].iloc[0].value // 1_000_000
+        state.setTimeoutTimestamp(
+            max(state.getCurrentWatermarkMs(), ts_ms) + _TTL_MS)
         yield first
 
 
 def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First occurrence of every event_id across micro-batches; the
     replayed duplicates (the at-least-once case) are dropped. State is
-    one flag per seen id, evicted 7 days past the watermark. Spark's
+    one flag per seen id, evicted 7 days past its first event (or past
+    the watermark when that is later). Spark's
     ``dropDuplicatesWithinWatermark`` covers plain dedup; this is the
     template for stateful logic the built-ins cannot express
     (conditional emission, custom eviction, counters)."""

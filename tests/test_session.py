@@ -1,9 +1,13 @@
 """The session factory: the driver JVM starts with delayed C2
-thresholds, and the master is spark-submit's when it gave one, else the
-host's cores."""
+thresholds and a class-data archive, and the master is spark-submit's
+when it gave one, else the host's cores."""
 
+import json
+import logging
 import os
 import re
+import shlex
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -31,18 +35,32 @@ def test_local_session_jvm_runs_the_jit_profile(spark):
     assert set(TIER4_FLAGS) <= set(args), args
 
 
+CDS_FLAGS = ("-XX:SharedArchiveFile=", "-XX:ArchiveClassesAtExit=")
+
+
+def test_local_session_jvm_runs_with_a_class_data_archive(spark):
+    args = list(spark.sparkContext._jvm.java.lang.management
+                .ManagementFactory.getRuntimeMXBean().getInputArguments())
+    cds = [a for a in args if a.startswith(CDS_FLAGS)]
+    assert len(cds) == 1, args
+    assert Path(cds[0].split("=", 1)[1]).parent == ROOT / "data" / "jvm"
+
+
 PROBE = """
+import json
 from osm_sidewalkreator_spark.session import get_spark
 s = get_spark()
 print("MASTER", s.sparkContext.master,
       s.conf.get("spark.sql.shuffle.partitions"))
+print("CONF", json.dumps(sorted(s.sparkContext.getConf().getAll())))
 s.stop()
 """
 
 
-def _master(launcher, tmp_path):
-    """(master, shuffle partitions) of a ``get_spark()`` session in a
-    fresh driver started by ``launcher`` with SPARK_GRAFT_CPUS=2."""
+def _probe(launcher, tmp_path, **env_extra):
+    """stdout of a ``get_spark()`` session in a fresh driver started by
+    ``launcher`` with SPARK_GRAFT_CPUS=2: a MASTER line (master, shuffle
+    partitions) and a CONF line (the SparkConf as JSON)."""
     from pyspark.find_spark_home import _find_spark_home
     script = tmp_path / "probe.py"
     script.write_text(PROBE)
@@ -51,7 +69,7 @@ def _master(launcher, tmp_path):
     env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g",
                PYSPARK_PYTHON=sys.executable,
                PYSPARK_DRIVER_PYTHON=sys.executable,
-               PYTHONPATH=str(ROOT))
+               PYTHONPATH=str(ROOT), **env_extra)
     if launcher == "spark-submit":
         cmd = [os.path.join(_find_spark_home(), "bin", "spark-submit"),
                "--master", "local[1]", str(script)]
@@ -59,8 +77,16 @@ def _master(launcher, tmp_path):
         cmd = [sys.executable, str(script)]
     out = subprocess.run(cmd, env=env, capture_output=True, text=True,
                          timeout=600)
-    found = re.search(r"^MASTER (\S+) (\S+)$", out.stdout, re.M)
-    assert found, out.stdout + out.stderr[-2000:]
+    assert re.search(r"^MASTER ", out.stdout, re.M), \
+        out.stdout + out.stderr[-2000:]
+    # CDS logging goes to data/jvm/<key>.log, never to stdout
+    assert "[cds]" not in out.stdout, out.stdout
+    return out.stdout
+
+
+def _master(launcher, tmp_path):
+    found = re.search(r"^MASTER (\S+) (\S+)$",
+                      _probe(launcher, tmp_path), re.M)
     return found.groups()
 
 
@@ -70,3 +96,132 @@ def test_spark_submit_master_is_kept(tmp_path):
 
 def test_plain_python_runs_on_the_host_cores(tmp_path):
     assert _master("python", tmp_path) == ("local[2]", "2")
+
+
+def _conf(stdout):
+    """The probe's SparkConf without the keys each launch sets anew."""
+    conf = dict(json.loads(re.search(r"^CONF (.*)$", stdout, re.M)[1]))
+    for k in ("spark.app.id", "spark.app.startTime", "spark.app.submitTime",
+              "spark.driver.port"):
+        conf.pop(k)
+    return conf
+
+
+def test_conf_dir_override_changes_only_the_java_options(tmp_path):
+    """A session whose template-only conf dir was swapped for the empty
+    ``data/jvm/conf`` has the SparkConf of one that kept a conf dir
+    holding a real (empty) file, and so got no CDS flag, apart from the
+    java options."""
+    swapped = _conf(_probe("python", tmp_path))
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text("")
+    kept = _conf(_probe("python", tmp_path, SPARK_CONF_DIR=str(conf_dir)))
+    opts = "spark.driver.defaultJavaOptions"
+    assert kept.pop(opts) == S.LOCAL_JIT_PROFILE
+    assert swapped.pop(opts).startswith(S.LOCAL_JIT_PROFILE + " -XX:")
+    assert swapped == kept
+
+
+def test_jvm_ignores_an_archive_with_a_zeroed_header(tmp_path):
+    """A JVM killed while writing leaves the header (written last)
+    zeroed; a later JVM pointed at that file starts without it."""
+    java = shutil.which("java", path=os.path.join(
+        os.environ.get("JAVA_HOME", ""), "bin")) or shutil.which("java")
+    archive = tmp_path / "a.jsa"
+    archive.write_bytes(bytes(1 << 20))
+    out = subprocess.run([java, f"-XX:SharedArchiveFile={archive}",
+                          "-version"], capture_output=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+
+
+# ---- the archive decision (no Spark) ----
+
+@pytest.fixture
+def cds_dirs(tmp_path):
+    """(jvm dir, conf dir, JDK home, jars dir): a template-only conf dir,
+    a JDK with a ``release`` file and one jar."""
+    dirs = [tmp_path / n for n in ("jvm", "conf", "jdk", "jars")]
+    for d in dirs[1:]:
+        d.mkdir()
+    (dirs[1] / "spark-env.sh.template").write_text("# template\n")
+    (dirs[2] / "release").write_text('JAVA_VERSION="17.0.20"\n')
+    (dirs[3] / "spark-core.jar").write_bytes(b"PK" * 10)
+    return dirs
+
+
+def _flag(opts):
+    """(flag name, archive path) of ``cds_options``' options."""
+    flag = next(a for a in shlex.split(opts) if a.startswith(CDS_FLAGS))
+    name, path = flag.split("=", 1)
+    return name, Path(path)
+
+
+def test_empty_jvm_dir_records(cds_dirs):
+    jvm = cds_dirs[0]
+    opts, conf = S.cds_options(*cds_dirs)
+    name, archive = _flag(opts)
+    assert name == "-XX:ArchiveClassesAtExit"
+    assert archive.parent == jvm and archive.suffix == ".jsa"
+    assert f"file={jvm / archive.stem}.log" in opts
+    assert "-Xlog:cds*=off" in shlex.split(opts)
+    assert conf == jvm / "conf" and list(conf.iterdir()) == []
+
+
+def test_complete_archive_is_mapped(cds_dirs):
+    _, archive = _flag(S.cds_options(*cds_dirs)[0])
+    archive.write_bytes((0xF00BABA8).to_bytes(4, "little") + bytes(60))
+    assert _flag(S.cds_options(*cds_dirs)[0]) == (
+        "-XX:SharedArchiveFile", archive)
+
+
+def test_zeroed_header_is_recorded_again(cds_dirs, caplog):
+    _, archive = _flag(S.cds_options(*cds_dirs)[0])
+    archive.write_bytes(bytes(64))
+    with caplog.at_level(logging.WARNING, logger=S.__name__):
+        assert _flag(S.cds_options(*cds_dirs)[0]) == (
+            "-XX:ArchiveClassesAtExit", archive)
+    assert len(caplog.records) == 1
+    assert str(archive) in caplog.records[0].getMessage()
+
+
+def test_conf_dir_with_a_real_file_gets_no_archive(cds_dirs, caplog,
+                                                   monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(cds_dirs[1]))
+    (cds_dirs[1] / "spark-defaults.conf").write_text("")
+    with caplog.at_level(logging.WARNING, logger=S.__name__):
+        assert S.cds_options(*cds_dirs) == (None, None)
+    assert len(caplog.records) == 1
+    assert os.environ["SPARK_CONF_DIR"] == str(cds_dirs[1])
+    assert not cds_dirs[0].exists()
+
+
+def test_key_follows_the_jars_and_the_jdk(cds_dirs):
+    def key():
+        return _flag(S.cds_options(*cds_dirs)[0])[1].stem
+    first = key()
+    assert key() == first
+    (cds_dirs[3] / "extra.jar").write_bytes(b"PK")
+    with_jar = key()
+    (cds_dirs[2] / "release").write_text('JAVA_VERSION="17.0.21"\n')
+    assert len({first, with_jar, key()}) == 3
+
+
+def test_archives_with_another_key_are_removed(cds_dirs):
+    jvm = cds_dirs[0]
+    jvm.mkdir()
+    stale = [jvm / "0123456789abcdef.jsa", jvm / "0123456789abcdef.log"]
+    for f in stale:
+        f.write_bytes(b"old")
+    _, archive = _flag(S.cds_options(*cds_dirs)[0])
+    assert not any(f.exists() for f in stale)
+    assert archive.stem != "0123456789abcdef"
+
+
+def test_extra_classpath_entries_get_no_archive(monkeypatch, caplog):
+    """A recording JVM fails on any non-empty directory on its
+    classpath, and ``HADOOP_CONF_DIR`` puts one there."""
+    monkeypatch.setenv("HADOOP_CONF_DIR", str(ROOT))
+    with caplog.at_level(logging.WARNING, logger=S.__name__):
+        assert S._launch_cds() == (None, None)
+    assert "HADOOP_CONF_DIR" in caplog.records[0].getMessage()

@@ -5,6 +5,7 @@ Mirrors the reference's algorithm-level tests with mocked I/O
 """
 
 import contextlib
+import datetime
 import os
 import time
 import warnings
@@ -586,8 +587,10 @@ def test_embedding_neardup_lsh_subset(spark):
 def test_stream_dedup_stateful(spark):
     """applyInPandasWithState dedup: the events arrive in one trigger and
     the 20% replay in the next, which finds every id in state and adds
-    no row; the output is exactly the distinct source ids (custom
-    stateful op, SURVEY 2.10)."""
+    no row; the output is exactly the distinct source ids, and state
+    keeps each id for 7 days of event time (custom stateful op, SURVEY
+    2.10)."""
+    import pyarrow.parquet as pq
     from osm_sidewalkreator_spark.streaming import events_stream as ES
     with _stream_triggers(spark, "events_dedup") as progress:
         ids = [r.event_id for r in
@@ -596,6 +599,15 @@ def test_stream_dedup_stateful(spark):
     assert len(ids) == len(set(ids)) == src_n
     triggers = [(p.numInputRows, p.sink.numOutputRows) for p in progress]
     assert triggers == [(src_n, src_n), (src_n // 5, 0)]
+    # the 7-day TTL counts from each event's time: the replay trigger's
+    # watermark (last event - 10 min) evicts exactly the keys whose event
+    # is more than 7 days older than it, not every key of trigger 0
+    ts = pq.read_table(f"{SF}/events.parquet", columns=["ts"])["ts"]
+    ts = ts.to_pylist()
+    wm = max(ts) - datetime.timedelta(minutes=10)
+    ttl = datetime.timedelta(milliseconds=ES._TTL_MS)
+    live = sum(t + ttl >= wm for t in ts)
+    assert 0 < live < src_n and _state_rows(progress)[-1] == live
 
 
 def test_pair_dot_is_bit_identical_to_jvm_fold(spark):
