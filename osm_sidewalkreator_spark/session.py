@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import atexit
+import fcntl
 import hashlib
 import logging
 import os
 import shlex
 import shutil
+import subprocess
 from pathlib import Path
 
 from pyspark import SparkContext
@@ -23,9 +26,8 @@ LOCAL_JIT_PROFILE = ("-XX:Tier4InvocationThreshold=50000"
 # Class-data archives of local driver JVMs, one per JDK and jar list,
 # with the empty conf dir their classpath starts with.
 JVM_DIR = Path(__file__).resolve().parent.parent / "data" / "jvm"
-# the first four bytes of a complete JDK 17 dynamic archive (its header,
-# written last)
-_CDS_MAGIC = 0xF00BABA8
+# the first four bytes of a complete JDK 17 static archive
+_CDS_MAGIC = 0xF00BABA2
 # environment that puts more entries on the driver's classpath
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 
@@ -46,31 +48,44 @@ def host_defaults() -> tuple[int, str]:
     return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
 
 
+def _complete(archive: Path) -> bool:
+    """``archive`` exists and starts with the static-archive magic."""
+    if not archive.is_file():
+        return False
+    with open(archive, "rb") as f:
+        return int.from_bytes(f.read(4), "little") == _CDS_MAGIC
+
+
 def cds_options(jvm_dir: Path, conf_dir: Path, java_home: Path,
-                jars_dir: Path) -> tuple[str | None, Path | None]:
-    """(class-data-sharing options, SPARK_CONF_DIR) for a driver JVM of
-    ``java_home`` about to start on the jars of ``jars_dir``, with
-    ``conf_dir`` its Spark conf dir; (None, None) when it gets none.
+                jars_dir: Path
+                ) -> tuple[str | None, Path | None, Path | None]:
+    """(class-data-sharing options, SPARK_CONF_DIR, class list to dump)
+    for a driver JVM of ``java_home`` about to start on the jars of
+    ``jars_dir``, with ``conf_dir`` its Spark conf dir; all None when it
+    gets no option.
 
     The archive is ``jvm_dir/<key>.jsa``. ``<key>`` hashes the JDK (its
     path and ``release`` file), ``jvm_dir`` and the name, size and
     mtime of every jar: what the JVM checks before it maps an archive.
-    Archives and logs with another key are deleted. A complete archive
-    (one that starts with the dynamic-archive magic) is mapped;
-    otherwise the JVM records its classes and writes the archive at
-    exit. CDS logging goes to ``jvm_dir/<key>.log``, none to stdout.
+    Files with another key are deleted. A complete archive (one that
+    starts with the static-archive magic) is mapped, and its CDS log
+    goes to ``jvm_dir/<key>.log``, none to stdout. Otherwise the JVM
+    lists the classes it loads in ``jvm_dir/<key>.<pid>.classlist``
+    (``pid`` this process's), which costs it nothing measurable, and
+    that list comes back as the third item: ``dump_archive`` builds the
+    archive from it in a JVM of its own.
 
-    JDK 17 will not record with a non-empty directory on the classpath,
-    and spark-class puts the conf dir first on it, so the JVM gets the
-    empty ``jvm_dir/conf`` instead. That changes nothing only when the
-    conf dir holds nothing but ``*.template`` files; if it holds any
-    other file, the JVM gets no CDS option."""
+    JDK 17 dumps no archive of a class path with a non-empty directory
+    on it, and spark-class puts the conf dir first on the JVM's, so the
+    JVM gets the empty ``jvm_dir/conf`` instead. That changes nothing only
+    when the conf dir holds nothing but ``*.template`` files; if it
+    holds any other file, the JVM gets no CDS option."""
     real = next((n for n in (os.listdir(conf_dir) if conf_dir.is_dir()
                              else ()) if not n.endswith(".template")), None)
     if real:
         _log.warning("no class-data archive: Spark conf dir %s holds %s",
                      conf_dir, real)
-        return None, None
+        return None, None, None
     release = java_home / "release"
     h = hashlib.sha256(f"{java_home}\n{jvm_dir}\n".encode())
     h.update(release.read_bytes() if release.is_file() else b"")
@@ -81,24 +96,66 @@ def cds_options(jvm_dir: Path, conf_dir: Path, java_home: Path,
     empty_conf = jvm_dir / "conf"
     empty_conf.mkdir(parents=True, exist_ok=True)
     for old in jvm_dir.iterdir():
-        if old.suffix in (".jsa", ".log") and old.stem != key:
+        if old.is_file() and not old.name.startswith(key + "."):
             old.unlink()
-    archive, log = jvm_dir / f"{key}.jsa", jvm_dir / f"{key}.log"
-    magic = 0
-    if archive.is_file():
-        with open(archive, "rb") as f:
-            magic = int.from_bytes(f.read(4), "little")
-        if magic != _CDS_MAGIC:
-            _log.warning("class-data archive %s is incomplete: recording "
-                         "it again", archive)
-    flag = ("SharedArchiveFile" if magic == _CDS_MAGIC
-            else "ArchiveClassesAtExit")
-    return (shlex.join([f"-XX:{flag}={archive}", "-Xlog:cds*=off",
-                        f"-Xlog:cds=info:file={log}::filecount=0"]),
-            empty_conf)
+    archive = jvm_dir / f"{key}.jsa"
+    if _complete(archive):
+        return (shlex.join([f"-XX:SharedArchiveFile={archive}",
+                            "-Xlog:cds*=off", "-Xlog:cds=info:file="
+                            f"{archive.with_suffix('.log')}::filecount=0"]),
+                empty_conf, None)
+    if archive.exists():
+        _log.warning("class-data archive %s is incomplete: recording "
+                     "it again", archive)
+    classlist = jvm_dir / f"{key}.{os.getpid()}.classlist"
+    return (shlex.join([f"-XX:DumpLoadedClassList={classlist}"]),
+            empty_conf, classlist)
 
 
-def _launch_cds() -> tuple[str | None, Path | None]:
+def dump_archive(classlist: Path, java: Path, classpath: str) -> None:
+    """Build the archive ``<key>.jsa`` beside ``classlist``
+    (``<key>.<pid>.classlist``) with a static dump (``java
+    -Xshare:dump``) of the classes it lists, on ``classpath``, the class
+    path of the JVM that listed them.
+
+    The dump runs in a JVM of its own, after the session's work: about
+    36-45 s of one core on a 4 vCPU host for Spark's 14,000 classes (the
+    JDK interprets a static dump), and a file of up to about 200 MB. It
+    writes ``<key>.tmp`` and renames it to ``<key>.jsa`` only when the
+    JVM exits 0 and the file is complete, so no JVM maps a part-written
+    archive. Its output goes to ``<key>.log``, none to stdout. A
+    process that finds the archive complete, or another process dumping
+    it, dumps nothing. A built archive makes every class list of its key
+    useless, so they all go."""
+    key = classlist.name.split(".", 1)[0]
+    archive = classlist.with_name(f"{key}.jsa")
+    tmp = archive.with_suffix(".tmp")
+    with open(archive.with_suffix(".lock"), "w") as lock:
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError:
+            return
+        if _complete(archive) or not classlist.is_file():
+            return
+        with open(archive.with_suffix(".log"), "w") as log:
+            rc = subprocess.run(
+                [str(java), "-Xshare:dump",
+                 f"-XX:SharedClassListFile={classlist}",
+                 f"-XX:SharedArchiveFile={tmp}", "-cp", classpath],
+                stdin=subprocess.DEVNULL, stdout=log,
+                stderr=subprocess.STDOUT).returncode
+        if rc == 0 and _complete(tmp):
+            os.replace(tmp, archive)
+            for done in archive.parent.glob(f"{key}.*.classlist"):
+                done.unlink()
+        else:
+            _log.warning("class-data archive %s: the dump exited %d (see "
+                         "%s)", archive, rc, archive.with_suffix(".log"))
+            tmp.unlink(missing_ok=True)
+            classlist.unlink(missing_ok=True)
+
+
+def _launch_cds() -> tuple[str | None, Path | None, Path | None]:
     """``cds_options`` for the driver JVM this process is about to
     launch: the JDK and Spark home that spark-class would use."""
     from pyspark.find_spark_home import _find_spark_home
@@ -107,12 +164,12 @@ def _launch_cds() -> tuple[str | None, Path | None]:
     if extra or "--driver-class-path" in args or "extraClassPath" in args:
         _log.warning("no class-data archive: the driver classpath has "
                      "extra entries (%s)", ", ".join(extra) or args)
-        return None, None
+        return None, None, None
     java_home = os.environ.get("JAVA_HOME")
     if not java_home:
         java = shutil.which("java")
         if not java:
-            return None, None
+            return None, None, None
         java_home = Path(os.path.realpath(java)).parent.parent
     spark_home = Path(_find_spark_home())
     conf_dir = Path(os.environ.get("SPARK_CONF_DIR")
@@ -152,22 +209,10 @@ def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
     ``--driver-java-options`` come later on the JVM's command line and
     win.
 
-    The driver JVM that this call launches also maps a class-data
-    archive (``cds_options``): the classes that the first local session
-    in a checkout loaded, recorded by its JVM into ``data/jvm/<key>.jsa``
-    (140-195 MB, one per JDK and jar list; ``<key>.log`` beside it says
-    whether a session mapped it). A mapped archive skips loading and
-    verifying Spark's classes from jars, the largest start-up cost the
-    JIT profile left. The recording session pays for it: its start is a
-    few seconds slower and its JVM spends about 10 s writing the archive
-    at exit. An archive the JVM cannot use (a write cut short leaves
-    its header zeroed) is ignored at start and recorded again. JDK 17
-    records no class path with a non-empty directory on it, and
-    spark-class puts the conf dir first, so the JVM gets the empty
-    ``data/jvm/conf`` as ``SPARK_CONF_DIR``. That is the same conf only
-    when the conf dir holds nothing but ``*.template`` files; with any
-    other file in it, or with Hadoop or extra class-path entries, the
-    JVM gets no archive.
+    A driver JVM that this call launches also maps the class-data
+    archive of ``cds_options``. The first such session in a checkout
+    only lists its classes; at its process's exit ``dump_archive``
+    builds the archive, so that exit is 36-45 s later.
     """
     # glibc malloc: without these, every large NumPy temporary is a
     # fresh mmap/munmap — 32 workers hammering page-zeroing serializes
@@ -180,11 +225,11 @@ def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
         "glibc.malloc.mmap_threshold=134217728"
         ":glibc.malloc.trim_threshold=134217728")
     cpus, driver_mem = host_defaults()
-    java_opts, conf_dir = LOCAL_JIT_PROFILE, None
+    java_opts, conf_dir, classlist = LOCAL_JIT_PROFILE, None, None
     # only a JVM this call launches takes driver options
     if SparkContext._gateway is None \
             and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        cds, conf_dir = _launch_cds()
+        cds, conf_dir, classlist = _launch_cds()
         java_opts = " ".join(filter(None, (java_opts, cds)))
     builder = (
         SparkSession.builder
@@ -218,6 +263,11 @@ def get_spark(app: str = "osm_sidewalkreator_spark") -> SparkSession:
                 del os.environ["SPARK_CONF_DIR"]
             else:
                 os.environ["SPARK_CONF_DIR"] = saved
+    if classlist is not None:
+        jvm_props = spark.sparkContext._jvm.System.getProperties()
+        atexit.register(dump_archive, classlist,
+                        Path(jvm_props["java.home"]) / "bin" / "java",
+                        jvm_props["java.class.path"])
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
