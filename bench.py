@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from osm_sidewalkreator_spark import params as P
 from osm_sidewalkreator_spark.artifacts import ensure_features
 from osm_sidewalkreator_spark.operators import joins as J
+from osm_sidewalkreator_spark.operators import raster as RA
 from osm_sidewalkreator_spark.operators import simsearch as SS
 from osm_sidewalkreator_spark.operators import textops as TX
 from osm_sidewalkreator_spark.pages import ensure_pages_geo
@@ -99,28 +100,7 @@ def main():
     # 4. DEM kerb slope (raster<->vector join)
     kerbs = spark.read.parquet(str(synth / "kerbs_xy.parquet"))
     dem = spark.read.parquet(str(synth / "dem.parquet"))
-    def run_slope():
-        # single DEM pass: explode each cell into 4 tagged neighbor
-        # contributions, one join + pivot groupBy (the 4-self-join
-        # round-1 plan shuffled the raster 4x and anti-scaled)
-        cs = P.DEM_CELL_M
-        k = kerbs.withColumn("cx", F.floor(F.col("x") / cs).cast("int")) \
-                 .withColumn("cy", F.floor(F.col("y") / cs).cast("int"))
-        offs = F.array(*[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                     F.lit(t).alias("t"))
-            for dx, dy, t in ((1, 0, "e_e"), (-1, 0, "e_w"),
-                              (0, 1, "e_n"), (0, -1, "e_s"))])
-        c = (dem.select("cell_x", "cell_y", "elev_m",
-                        F.explode(offs).alias("o"))
-             .select((F.col("cell_x") - F.col("o.dx")).alias("cx"),
-                     (F.col("cell_y") - F.col("o.dy")).alias("cy"),
-                     F.col("o.t").alias("t"), "elev_m"))
-        g = (k.join(c, ["cx", "cy"]).groupBy("fid")
-             .agg(F.count(F.lit(1)).alias("_n"))
-             .filter(F.col("_n") == 4))
-        return g.count()
-    timed("dem_kerb_slope", run_slope)
+    timed("dem_kerb_slope", lambda: RA.dem_kerb_slope(kerbs, dem).count())
 
     # 5. text ops over the driver documents table
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -29,6 +29,7 @@ def plans(spark, sf_dir):
     from osm_sidewalkreator_spark.operators import graph as GR
     from osm_sidewalkreator_spark.operators import lm as LM
     from osm_sidewalkreator_spark.operators import packing as PK
+    from osm_sidewalkreator_spark.operators import raster as RA
     from osm_sidewalkreator_spark.operators import sampling as SA
     from osm_sidewalkreator_spark.plans import pipeline as PL
     from osm_sidewalkreator_spark.plans.curate import curate_corpus
@@ -72,39 +73,17 @@ def plans(spark, sf_dir):
             TX.chunk_documents(SA.shard_corpus(docs, 8),
                                extra_cols=("shard",)), 512)
         .select("shard", "seq_id").distinct(),
-        # the two queries below are built inline in frozen bench.py;
-        # their construction is replicated here verbatim so their
-        # plans are on record too
+        # built inline in bench.py; replicated here so its plan is on
+        # record too
         "lineitem_pricing": lambda: (
             spark.read.parquet(f"{sf_dir}/lineitem.parquet")
             .filter(F.col("l_shipdate") <= "1998-09-02")
             .groupBy("l_returnflag", "l_linestatus")
             .agg(F.sum("l_quantity"), F.count("*"))),
-        "dem_kerb_slope": lambda: _dem_kerb_slope(spark, sf_dir, P),
+        "dem_kerb_slope": lambda: RA.dem_kerb_slope(
+            spark.read.parquet(str(synth / "kerbs_xy.parquet")),
+            spark.read.parquet(str(synth / "dem.parquet"))),
     }
-
-
-def _dem_kerb_slope(spark, sf_dir, P):
-    from osm_sidewalkreator_spark.synth import ensure_synth
-    synth = ensure_synth(sf_dir)
-    kerbs = spark.read.parquet(str(synth / "kerbs_xy.parquet"))
-    dem = spark.read.parquet(str(synth / "dem.parquet"))
-    cs = P.DEM_CELL_M
-    k = kerbs.withColumn("cx", F.floor(F.col("x") / cs).cast("int")) \
-             .withColumn("cy", F.floor(F.col("y") / cs).cast("int"))
-    offs = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                 F.lit(t).alias("t"))
-        for dx, dy, t in ((1, 0, "e_e"), (-1, 0, "e_w"),
-                          (0, 1, "e_n"), (0, -1, "e_s"))])
-    c = (dem.select("cell_x", "cell_y", "elev_m",
-                    F.explode(offs).alias("o"))
-         .select((F.col("cell_x") - F.col("o.dx")).alias("cx"),
-                 (F.col("cell_y") - F.col("o.dy")).alias("cy"),
-                 F.col("o.t").alias("t"), "elev_m"))
-    return (k.join(c, ["cx", "cy"]).groupBy("fid")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") == 4))
 
 
 def normalized_plan(df) -> str:

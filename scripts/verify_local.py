@@ -1,7 +1,8 @@
 """Local mimic of the driver's correctness gate: run each queries()
 entry in Spark and its oracle_sql() in DuckDB (views pre-registered on
-/root/testdata/sf0.01), compare row count, schema arity, and an
-order-insensitive value hash. Usage: python scripts/verify_local.py [q...]
+the tables under SF_DIR), compare row count, column names, and an
+order-insensitive value hash. Exits 0 only when every query run is
+exact-ok. Usage: python scripts/verify_local.py [q...]
 """
 
 import hashlib
@@ -71,33 +72,25 @@ def main():
             traceback.print_exc()
             results[name] = "spark_error"
             continue
-        if name in oracles:
-            try:
-                cur = con.execute(oracles[name])
-                ocols = [d[0] for d in cur.description]
-                orows = cur.fetchall()
-            except Exception:
-                print(f"FAIL  {name}: oracle error")
-                traceback.print_exc()
-                results[name] = "oracle_error"
-                continue
-            oh = table_hash(orows, ocols)
-            ok = (spark_n == len(orows) and sorted(cols) == sorted(ocols)
-                  and spark_h == oh)
-            status = "OK   " if ok else "MISMATCH"
-            print(f"{status} {name}: spark={spark_n} oracle={len(orows)} "
-                  f"hash {spark_h} vs {oh} cols {sorted(cols)} vs "
-                  f"{sorted(ocols)} ({time.time()-t0:.1f}s)")
-            results[name] = "ok" if ok else "mismatch"
-        else:
-            status = "ROWS " if spark_n > 0 else "EMPTY"
-            print(f"{status} {name}: rows={spark_n} ({time.time()-t0:.1f}s)")
-            results[name] = "rows_only" if spark_n > 0 else "empty"
-    bad = {k: v for k, v in results.items()
-           if v not in ("ok", "rows_only")}
-    print(f"\n{len(results)} queries: "
-          f"{sum(1 for v in results.values() if v == 'ok')} exact-ok, "
-          f"{sum(1 for v in results.values() if v == 'rows_only')} rows-only, "
+        try:
+            cur = con.execute(oracles[name])
+            ocols = [d[0] for d in cur.description]
+            orows = cur.fetchall()
+        except Exception:
+            print(f"FAIL  {name}: oracle error")
+            traceback.print_exc()
+            results[name] = "oracle_error"
+            continue
+        oh = table_hash(orows, ocols)
+        ok = (spark_n == len(orows) and sorted(cols) == sorted(ocols)
+              and spark_h == oh)
+        status = "OK   " if ok else "MISMATCH"
+        print(f"{status} {name}: spark={spark_n} oracle={len(orows)} "
+              f"hash {spark_h} vs {oh} cols {sorted(cols)} vs "
+              f"{sorted(ocols)} ({time.time()-t0:.1f}s)")
+        results[name] = "ok" if ok else "mismatch"
+    bad = {k: v for k, v in results.items() if v != "ok"}
+    print(f"\n{len(results)} queries: {len(results) - len(bad)} exact-ok, "
           f"{len(bad)} bad: {bad}")
     return 1 if bad else 0
 

@@ -309,7 +309,7 @@ def test_pipeline_crossing_invariants(city_out):
     crossings = city_out["crossings"]
     kerbs = city_out["kerbs"]
     assert len(crossings) > 0
-    # golden-fixture invariants (FIXTURES.md §7)
+    # output-contract invariants (FIXTURES.md §7)
     assert len(kerbs) == 2 * len(crossings)
     assert all(len(c["coords"]) == 5 for c in crossings)
     assert all(c["length"] <= 100.0 for c in crossings)

@@ -1,6 +1,7 @@
-"""No def, constant, import or parameter that no caller uses.
+"""No def, constant, import or parameter that no caller uses, and no
+string naming the reference checkout.
 
-Five checks over the package and ``__spark_entry__.py``, all on the AST
+Six checks over the package and ``__spark_entry__.py``, all on the AST
 (no Spark):
 
 1. Reachability. An AST name closure from the real entrypoints:
@@ -40,6 +41,10 @@ Five checks over the package and ``__spark_entry__.py``, all on the AST
    ``global``, apart from the ``GLOBAL_KEEP`` list: module-level state
    a call leaves behind is read by whoever runs next, and a result a
    caller needs belongs in the return value.
+6. Paths. No string constant outside a docstring names a path under
+   ``REFERENCE`` (the reference checkout, which a host running the
+   engine does not have), here and in the scripts and tests;
+   docstrings may cite the reference's files.
 """
 
 from __future__ import annotations
@@ -55,23 +60,11 @@ ENTRY_SCRIPTS = (
     "bench.py", "job.py", "job_curate.py", "perfbench/*.py",
     "scripts/verify_local.py", "scripts/dump_plans.py")
 
+# Where the reference repository was checked out; no code reads it.
+REFERENCE = "/root/reference"
+
 # Each kept def with the reason it stays although no entrypoint calls it.
 KEEP = {
-    "osm_sidewalkreator_spark.sources.golden.available":
-        "skip guard of the reference-fixture tests",
-    "__spark_entry__.q_golden_protoblock_faces":
-        "reference-fidelity check (29-face recovery) next to "
-        "tests/test_golden_fixtures.py",
-    "__spark_entry__.q_golden_crossing_length":
-        "reference-fidelity check of crossing lengths",
-    "__spark_entry__.q_golden_kerb_anchor":
-        "reference-fidelity check of kerb anchors",
-    "__spark_entry__._golden_center":
-        "centre of the reference fixture, used by the golden checks",
-    "__spark_entry__._golden_kerb_anchor_sql":
-        "DuckDB side of q_golden_kerb_anchor",
-    "__spark_entry__._golden_crossing_length_sql":
-        "DuckDB side of q_golden_crossing_length",
     "osm_sidewalkreator_spark.operators.raster.rasterize_segments":
         "the only vector->raster path of the raster<->vector joins",
 }
@@ -358,6 +351,27 @@ def unset_params() -> list[str]:
         and (i is None or i >= n_pos.get(name, 0)))
 
 
+def reference_paths() -> list[str]:
+    """``file:line`` of each string constant, docstrings apart, that
+    names a path under ``REFERENCE``."""
+    files = set(_sources()) | set(ROOT.glob("tests/*.py"))
+    for pattern in ENTRY_SCRIPTS:
+        files |= set(ROOT.glob(pattern))
+    files.discard(Path(__file__).resolve())
+    out = []
+    for path in sorted(files):
+        tree = _parse(path)
+        docs = {id(n.body[0].value) for n in ast.walk(tree)
+                if isinstance(n, (ast.Module,) + _DEFS) and n.body
+                and isinstance(n.body[0], ast.Expr)
+                and isinstance(n.body[0].value, ast.Constant)}
+        out += [f"{path.relative_to(ROOT)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and id(n) not in docs and REFERENCE in n.value]
+    return out
+
+
 def global_rebinds() -> list[str]:
     """``module.def`` (``module.outer.inner`` when nested) of each
     function that declares a ``global``."""
@@ -377,7 +391,7 @@ def global_rebinds() -> list[str]:
 
 def test_every_top_level_def_is_reached_or_kept():
     unreached = unreached_defs()
-    assert len(KEEP) <= 8
+    assert len(KEEP) <= 1
     dead = sorted(set(unreached) - set(KEEP))
     assert not dead, (
         f"{len(dead)} top-level defs and module constants "
@@ -421,3 +435,10 @@ def test_no_function_rebinds_module_state():
         "`global`:\n" + "\n".join(extra))
     assert set(GLOBAL_KEEP) <= set(found), \
         sorted(set(GLOBAL_KEEP) - set(found))
+
+
+def test_no_string_names_the_reference_checkout():
+    found = reference_paths()
+    assert not found, (
+        f"{len(found)} string constants that name a path under "
+        f"{REFERENCE}:\n" + "\n".join(found))

@@ -1,7 +1,9 @@
-"""Reference-fidelity checks outside the driver registry, plus the
-assertions of retired gate queries, run against the live operators
-they exercised.
+"""The assertions of retired gate queries, run against the live
+operators they exercised, and full-oracle parity checks at sf0.001 with
+the oracle SQL pointed at that scale's files.
 """
+
+from collections import Counter
 
 import pytest
 
@@ -16,13 +18,9 @@ from osm_sidewalkreator_spark.pages import (
     ensure_pages_geo, geocode_pages, load_pages)
 from osm_sidewalkreator_spark.plans import pipeline as PL
 from osm_sidewalkreator_spark.session import get_spark
-from osm_sidewalkreator_spark.sources import golden as G
 from osm_sidewalkreator_spark.synth import SYNTH_ROOT, ensure_synth
 
 SF = "/root/testdata/sf0.001"
-
-needs_golden = pytest.mark.skipif(
-    not G.available(), reason="reference golden fixtures not present")
 
 
 @pytest.fixture(scope="module")
@@ -61,36 +59,11 @@ def test_cosine_lsh_and_ivf_topk_contract(spark):
 def test_pipeline_stage_queries_still_run(spark):
     # every pipeline stage emits features; each kind's geometry is
     # pinned by a registered exact oracle (polygonize_lattice /
-    # ring_bbox / crossing_geometry+enlarge / golden_kerb_anchor)
+    # ring_bbox / crossing_geometry+enlarge / feature_contract)
     kinds = {r.kind: r["count"] for r in
              E._features(spark, SF).groupBy("kind").count().collect()}
     for kind in ("protoblock", "sidewalk", "crossing", "kerb"):
         assert kinds.get(kind, 0) > 0, kind
-
-
-@needs_golden
-def test_golden_protoblock_faces_recovers_29_faces(spark):
-    # retired from the gate (rows-only by design — the polygonizer is a
-    # geometry kernel, not SQL) in favour of the exact q_dedup_clusters;
-    # the reference-parity claim stays pinned here: the engine's
-    # noder+face tracer must recover exactly the 29 real protoblock
-    # faces from the golden linework (area parity is asserted in
-    # tests/test_golden_fixtures.py)
-    rows = E.q_golden_protoblock_faces(spark, SF).collect()
-    assert len(rows) == 29
-    assert all(r.area_m2 > 0 for r in rows)
-
-
-@needs_golden
-def test_golden_crossing_length_attr_parity(spark):
-    # retired round 5 (slot given to q_curate_chain): crossing-length
-    # geometry stays mm-exact-gated by q_crossing_geometry +
-    # q_crossing_enlarge; the golden fixture's length attribute vs
-    # engine TM reprojection claim stays asserted here
-    rows = E.q_golden_crossing_length(spark, SF).collect()
-    assert len(rows) > 0
-    assert all(abs(r.tm_ratio - 1.0) <= 0.01 for r in rows)
-    assert all(r.attr_mm > 0 for r in rows)
 
 
 def _duck_df(sql):
@@ -129,19 +102,28 @@ def test_pages_per_block_full_oracle_parity(spark):
     assert len(got) > 0
 
 
-@needs_golden
-def test_golden_kerb_anchor_full_oracle_parity(spark):
-    # retired round 5 (slot given to q_bm25_rank): G18 stays exact-gated
-    # by q_crossing_geometry + q_crossing_enlarge; the golden kerb
-    # anchoring contract keeps its FULL DuckDB parity here
-    got = (E.q_golden_kerb_anchor(spark, SF).toPandas()
-           .sort_values("kerb_id").reset_index(drop=True))
-    want = (_duck_df(E._golden_kerb_anchor_sql())
-            .sort_values("kerb_id").reset_index(drop=True))
-    assert len(got) == len(want) > 0
-    for col in ("kerb_id", "crossing_id", "n_vertices", "anchored"):
-        assert got[col].tolist() == want[col].tolist(), col
-    assert got["anchored"].all()
+def _contract_rows(rows) -> Counter:
+    return Counter(tuple(r) for r in rows)
+
+
+def test_feature_contract_full_oracle_parity(spark):
+    # the engine's crossings and kerbs equal the contract its oracle
+    # writes from the crossing segments alone; a kerb whose ref_id went
+    # through float64 (the pre-Int64 emit) names no crossing and breaks
+    # the equality
+    got = _contract_rows(E.q_feature_contract(spark, SF).collect())
+    want = _contract_rows(_duck_df(E._feature_contract_sql(_S0001))
+                          .itertuples(index=False))
+    assert len(want) > 0 and got == want
+    feats = E._features(spark, SF)
+    lossy = F.col("ref_id").cast("double").cast("long")
+    victim = (feats.filter((F.col("kind") == "kerb")
+                           & (lossy != F.col("ref_id")))
+              .agg(F.min("fid")).first()[0])
+    assert victim is not None
+    bad = feats.withColumn("ref_id", F.when(F.col("fid") == victim, lossy)
+                           .otherwise(F.col("ref_id")))
+    assert _contract_rows(E._feature_contract(bad).collect()) != want
 
 
 def test_clip_aoi_full_oracle_parity(spark):
