@@ -313,10 +313,10 @@ def q_sessionize(spark, sf_dir):
 
 
 def q_stream_dedup(spark, sf_dir):
-    """Custom stateful streaming dedup (applyInPandasWithState, state
-    TTL past watermark): events replayed 20% duplicated across source
-    files; first occurrence of each event_id survives. Replays are
-    byte-identical rows, so the exact oracle is the distinct source."""
+    """Native streaming dedup (dropDuplicatesWithinWatermark; rows older
+    than the 10-minute watermark drop): events replayed 20% duplicated
+    across source files; first occurrence of each event_id survives.
+    Replays are byte-identical rows: the oracle is the distinct source."""
     from osm_sidewalkreator_spark.streaming.events_stream import (
         run_stream_dedup)
     out = run_stream_dedup(spark, sf_dir)

@@ -3,10 +3,13 @@
 Join-style queries (kNN page->sidewalk, DEM kerb slope) take engine
 outputs as one side; materializing them once per scale lets the DuckDB
 oracle read the *same* parquet and verify the join math independently.
+The artifacts are keyed by the engine code that wrote them, so a
+checkout never serves another version's features.
 """
 
 from __future__ import annotations
 
+import hashlib
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -17,17 +20,34 @@ from .plans import pipeline as PL
 from .synth import ensure_synth
 
 
+def _code_key() -> str:
+    """sha256 of the package's ``.py`` sources (paths and bytes)."""
+    root = Path(__file__).parent
+    h = hashlib.sha256()
+    for path in sorted(root.rglob("*.py")):
+        h.update(str(path.relative_to(root)).encode() + b"\0")
+        h.update(path.read_bytes())
+    return h.hexdigest()[:16]
+
+
 def ensure_features(spark: SparkSession, sf_dir: str) -> Path:
-    """Run the geometry pipeline once per scale; cache:
+    """Run the geometry pipeline once per scale and package source;
+    cache:
 
     - ``features_tm.parquet``: all kinds, local-TM WKB + attrs
     - ``sidewalk_segments.parquet``: exploded sidewalk ring segments
     - ``kerbs_xy.parquet``: kerb points + owning crossing
-    """
+    - ``esw_segments.parquet``, ``crossing_segments.parquet``
+
+    The marker ``_FEATURES_OK_<_code_key()>`` says they were written by
+    this source; a marker with another key is deleted and the
+    artifacts are written again."""
     synth = ensure_synth(sf_dir)
-    marker = synth / "_FEATURES_OK_v4"  # v4: G15 dangle removal wired
+    marker = synth / f"_FEATURES_OK_{_code_key()}"
     if marker.exists():
         return synth
+    for stale in synth.glob("_FEATURES_OK_*"):
+        stale.unlink()
     feats = PL.generate_features(spark, sf_dir)
     feats.cache()
     (feats.repartition(4)

@@ -386,9 +386,6 @@ def polygon_overlay_polygons(a_polys: DataFrame, b_polys: DataFrame,
             .select("_pk", "_aid", "_bid_own",
                     F.col("px_a").alias("ax"), F.col("py_a").alias("ay"),
                     F.col("px_b").alias("bx"), F.col("py_b").alias("by")))
-        # evaluated twice (interval source + subtraction input):
-        # persist so the upstream even-odd kernel chain runs once
-        pb_seg = pb_seg.persist()
         ivo = polygon_clip_intervals(
             pb_seg.select("_pk", "ax", "ay", "bx", "by"),
             bp.withColumnRenamed(b_id, "_bid2"), cell_size,

@@ -37,32 +37,9 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def _shingles(col):
-    """Distinct word-3-gram shingles of ``col``, first-occurrence order.
-
-    Arrow-batched construction (r06): the previous JVM form —
-    zip_with-concat over shifted slices plus array_distinct — was
-    interpreted per TOKEN per row and cost ~0.6 s per corpus pass at
-    sf0.1 (three passes per minhash run). The Python construction below
-    reproduces its semantics exactly: split on a single space with
-    trailing empties kept (Java ``split(re, -1)`` == ``str.split(" ")``),
-    "t1 t2 t3" joining, and ``array_distinct``'s keep-first-occurrence
-    dedup (``dict.fromkeys``). Null text -> null array, < 3 tokens ->
-    empty array, both as before."""
-
-    @pandas_udf("array<string>")
-    def _sh3(texts: pd.Series) -> pd.Series:
-        out = []
-        join = " ".join
-        fromkeys = dict.fromkeys
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            toks = t.split(" ")
-            out.append(list(fromkeys(
-                map(join, zip(toks, toks[1:], toks[2:])))))
-        return pd.Series(out)
-
+    """Distinct word-3-gram shingles of ``col``, first-occurrence order
+    (``array_distinct`` over ``word_ngram_array``'s grams). Null text ->
+    null array, < 3 tokens -> empty array."""
     # asNondeterministic: every consumer filters size(sh) > 0 directly
     # on this column, and the optimizer's filter pushdown then evaluates
     # the UDF twice per subtree — once below the pushed filter, once in
@@ -70,7 +47,7 @@ def _shingles(col):
     # minhash_lsh_pairs paid 4 corpus passes where 2 suffice,
     # accumulator-verified 20000 -> 10000 rows at sf0.1). The function
     # is pure, so blocking reorder/duplication changes no results.
-    return _sh3.asNondeterministic()(col)
+    return F.array_distinct(_word_ngrams(3).asNondeterministic()(col))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
@@ -346,17 +323,20 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 128,
 
 def word_ngram_array(col, n: int):
     """All word ``n``-grams of ``col`` (space-tokenized) as an array
-    Column — the shared builder behind ``dup_ngram_expr``,
-    ``decontaminate``, the bigram LM and repeated-span removal (one
-    implementation so a tokenization fix cannot silently diverge
-    them). Empty array when the doc has fewer than ``n`` tokens,
-    null for null text.
+    Column — the shared builder behind ``_shingles``,
+    ``dup_ngram_expr``, ``decontaminate``, the bigram LM and
+    repeated-span removal (one implementation so a tokenization fix
+    cannot silently diverge them). Empty array when the doc has fewer
+    than ``n`` tokens, null for null text."""
+    return _word_ngrams(n)(col)
 
-    Arrow-batched (r06): the previous chain of n-1 interpreted
-    ``zip_with``/``concat`` passes dominated the repeated-span and LM
-    walls at n=8/n=2; the Python construction reproduces it exactly
-    (``str.split(" ")`` == Java ``split(re, -1)``; same gram strings,
-    order, and duplicates)."""
+
+def _word_ngrams(n: int):
+    """The Arrow-batched UDF behind ``word_ngram_array`` (r06): the
+    previous chain of n-1 interpreted ``zip_with``/``concat`` passes
+    dominated the repeated-span and LM walls at n=8/n=2; the Python
+    construction reproduces it exactly (``str.split(" ")`` == Java
+    ``split(re, -1)``; same gram strings, order, and duplicates)."""
 
     @pandas_udf("array<string>")
     def _ngrams(texts: pd.Series) -> pd.Series:
@@ -371,7 +351,7 @@ def word_ngram_array(col, n: int):
                         zip(*(toks[i:] for i in range(n)))])
         return pd.Series(out)
 
-    return _ngrams(col)
+    return _ngrams
 
 
 def dup_ngram_expr(k: int = 3):

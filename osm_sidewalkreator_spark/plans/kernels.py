@@ -263,7 +263,6 @@ def sidewalk_rings(noded_segs: np.ndarray, widths: np.ndarray
 def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
                         sidewalk_segs: np.ndarray,
                         way_ids: np.ndarray | None = None,
-                        remove_above_tol: bool = False,
                         enlarge: bool = False):
     """Crossing 5-point polylines + kerb points at street endpoints.
 
@@ -287,9 +286,9 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     own_width), 3), ``above_tol`` = len > (d_to_add + own_width) *
     (1 + P.PERC_TOL_CROSSINGS/100), and ``nearest_centerpoint`` = rounded
     distance to the closest other crossing center within ``P.KNN_MAX_DIST``
-    (:1727-1764; None when no neighbor). ``remove_above_tol`` applies
-    the GUI's optional drop (checkbox default is OFF, matching the
-    headless path that produced the golden fixtures).
+    (:1727-1764; None when no neighbor). Crossings above tolerance are
+    kept: the GUI's optional drop is a checkbox that defaults to off,
+    as in the headless path.
 
     ``enlarge=True`` runs the GUI's bounded resolution loop
     (osm_sidewalkreator.py:3035-3170) instead of the single-shot ray:
@@ -402,42 +401,18 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     if m == 0 or len(sidewalk_segs) == 0:
         return crossings, kerbs
 
-    # ---- ray x sidewalk intersections (vectorized over grid pairs) ----
-    # ray pA->pE spans center +- perp
     sw = np.asarray(sidewalk_segs, dtype=np.float64)
-    span_max = float(np.hypot(perp[:, 0], perp[:, 1]).max())
-    ci, si2 = _ray_candidates(center, span_max, sw)
-    pA = center - perp
-    pE = center + perp
-    best_pt = np.full((m, 2, 2), np.nan)          # (ray, side A/E, xy)
-    if len(ci):
-        a1 = pA[ci]
-        d1 = pE[ci] - a1
-        hit, t = core.segments_cross(a1, d1, sw[si2])
-        if hit.any():
-            hci = ci[hit]
-            hsi = si2[hit]
-            pts = a1[hit] + t[hit][:, None] * d1[hit]
-            dA = np.hypot(pts[:, 0] - pA[hci, 0], pts[:, 1] - pA[hci, 1])
-            dE = np.hypot(pts[:, 0] - pE[hci, 0], pts[:, 1] - pE[hci, 1])
-            a_side = dA < dE
-            side = np.where(a_side, 0, 1)
-            dist = np.where(a_side, dA, dE)
-            # nearest hit per (ray, side), ties to the smallest
-            # sidewalk-segment index (matches argmin over seg order)
-            key = hci * 2 + side
-            sel = gridhash.first_min_per_key(key, dist, hsi)
-            best_pt[key[sel] // 2, key[sel] % 2] = pts[sel]
-
-    both = ~np.isnan(best_pt[:, 0, 0]) & ~np.isnan(best_pt[:, 1, 0])
     if enlarge:
-        # GUI bounded resolution loop replaces unresolved/too-long rays
+        # GUI bounded resolution loop instead of the single-shot ray
         best_pt, center, dead = _gui_enlargement_loop(
-            center, perp, sw, best_pt, a2p, b2p, ln, end_i == 0, d_int,
-            di_valid, (P.D_TO_ADD_TO_EACH_SIDE + w_self)
+            center, perp, sw, a2p, b2p, ln, end_i == 0, d_int, di_valid,
+            (P.D_TO_ADD_TO_EACH_SIDE + w_self)
             * (1 + P.PERC_TOL_CROSSINGS / 100.0))
-        both = (~np.isnan(best_pt[:, 0, 0]) & ~np.isnan(best_pt[:, 1, 0])
-                & ~dead)
+    else:
+        best_pt = _single_shot_rays(center, perp, sw)
+        dead = np.zeros(m, dtype=bool)
+    both = (~np.isnan(best_pt[:, 0, 0]) & ~np.isnan(best_pt[:, 1, 0])
+            & ~dead)
     sel_r = np.flatnonzero(both)
     if len(sel_r) == 0:
         return crossings, kerbs
@@ -456,11 +431,6 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
     ortholen = P.D_TO_ADD_TO_EACH_SIDE + w_self[sel_r]
     len_dif = np.round(length - ortholen, 3)
     above = length > ortholen * (1 + P.PERC_TOL_CROSSINGS / 100.0)
-    if remove_above_tol:
-        keep2 = ~above
-        A, E, C, B, D = A[keep2], E[keep2], C[keep2], B[keep2], D[keep2]
-        coords, length = coords[keep2], length[keep2]
-        len_dif, above = len_dif[keep2], above[keep2]
     k_final = len(coords)
     # nearest other crossing center within P.KNN_MAX_DIST (:1727-1764)
     nearest = [None] * k_final
@@ -483,6 +453,38 @@ def crossings_and_kerbs(noded_segs: np.ndarray, widths: np.ndarray,
         kerbs.append({"xy": B[k], "crossing_index": ci_out})
         kerbs.append({"xy": D[k], "crossing_index": ci_out})
     return crossings, kerbs
+
+
+def _single_shot_rays(center: np.ndarray, perp: np.ndarray,
+                      sw: np.ndarray) -> np.ndarray:
+    """The nearest sidewalk hit on each side of the rays center -+ perp:
+    (ray, side A/E, xy), NaN where a side misses."""
+    best_pt = np.full((len(center), 2, 2), np.nan)
+    span_max = float(np.hypot(perp[:, 0], perp[:, 1]).max())
+    ci, si2 = _ray_candidates(center, span_max, sw)
+    if len(ci) == 0:
+        return best_pt
+    pA = center - perp
+    pE = center + perp
+    a1 = pA[ci]
+    d1 = pE[ci] - a1
+    hit, t = core.segments_cross(a1, d1, sw[si2])
+    if not hit.any():
+        return best_pt
+    hci = ci[hit]
+    hsi = si2[hit]
+    pts = a1[hit] + t[hit][:, None] * d1[hit]
+    dA = np.hypot(pts[:, 0] - pA[hci, 0], pts[:, 1] - pA[hci, 1])
+    dE = np.hypot(pts[:, 0] - pE[hci, 0], pts[:, 1] - pE[hci, 1])
+    a_side = dA < dE
+    side = np.where(a_side, 0, 1)
+    dist = np.where(a_side, dA, dE)
+    # nearest hit per (ray, side), ties to the smallest sidewalk-segment
+    # index (matches argmin over seg order)
+    key = hci * 2 + side
+    sel = gridhash.first_min_per_key(key, dist, hsi)
+    best_pt[key[sel] // 2, key[sel] % 2] = pts[sel]
+    return best_pt
 
 
 def _ray_candidates(centers: np.ndarray, reach: float, sw: np.ndarray
@@ -523,8 +525,8 @@ def _side_ray_hits(cen: np.ndarray, dvec: np.ndarray, sw: np.ndarray
     return has, pts_out
 
 
-def _gui_enlargement_loop(center, perp, sw, best_pt, a2p, b2p, ln, is_p0,
-                          d_int, di_valid, max_len):
+def _gui_enlargement_loop(center, perp, sw, a2p, b2p, ln, is_p0, d_int,
+                          di_valid, max_len):
     """GUI crossing resolution (osm_sidewalkreator.py:3035-3170): per
     side, double the ray reach while that side misses the sidewalks; a
     too-long crossing steps its center inward while it stays short of

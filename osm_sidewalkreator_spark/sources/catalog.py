@@ -17,9 +17,8 @@ routes that choice:
   way (verify with ``df.explain``: ``PushedFilters`` / ``ReadSchema``).
 
 The prefix is read per call from the Spark conf
-``spark.sidewalkreator.tablePrefix`` or the env var
-``SPARK_GRAFT_TABLE_PREFIX`` (conf wins). A production submit looks
-like (all public Spark/Iceberg configuration):
+``spark.sidewalkreator.tablePrefix``, the one deployment setting. A
+production submit looks like (all public Spark/Iceberg configuration):
 
     spark-submit --py-files engine.zip \
       --packages org.apache.iceberg:iceberg-spark-runtime-3.5_2.12:1.5.0 \
@@ -43,16 +42,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 PREFIX_CONF = "spark.sidewalkreator.tablePrefix"
-PREFIX_ENV = "SPARK_GRAFT_TABLE_PREFIX"
-_UNSET = "\x00unset"
 
 
 def table_prefix(spark: SparkSession) -> str | None:
     """Configured catalog prefix, or None for parquet-from-sf_dir."""
-    p = spark.conf.get(PREFIX_CONF, _UNSET)
-    if p == _UNSET:
-        p = os.environ.get(PREFIX_ENV, _UNSET)
-    return None if p == _UNSET else p
+    return spark.conf.get(PREFIX_CONF, None)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """Structured Streaming over the events table: three availableNow streams.
 
 The reference has no streaming operators (SURVEY.md §2.9); these are the
-engine's own. Every stream stages the events table plus one later file
+engine's own. Every stream stages the events table plus its later file
 into a fresh directory (``_stage``), reads it one file per trigger under
 a 10-minute watermark, and runs to completion into a memory sink
 (``_run``). A bounded availableNow run returns the rows of the batch
@@ -10,15 +10,18 @@ query, so the gate's SQL oracles are the reference:
 - ``run_events_stream``: 1-minute tumbling-window count and value sum
   per event_type (GROUP BY date_trunc('minute', ts));
 - ``sessionize_events``: per-user session windows with a 12 h gap;
-- ``run_stream_dedup``: first occurrence of every event_id, kept by
-  ``applyInPandasWithState`` keyed state (SURVEY.md §2.10).
+- ``run_stream_dedup``: first occurrence of every event_id, by Spark's
+  ``dropDuplicatesWithinWatermark`` (SURVEY.md §2.10).
 
-The window and session streams run in append mode: the watermark emits
-each window once and evicts it from state, so state stays bounded on a
-continuous stream. Their later file is one sentinel row past every
-window's and session's close; its trigger moves the final watermark past
-all of them, and its own window and session are filtered out. The dedup
-stream's later file replays 20% of the events.
+All three run in append mode under one late-data and eviction rule, the
+10-minute watermark: a row older than the watermark is dropped, and
+state the watermark has passed (a closed window or session, a seen id
+10 minutes older than it) is emitted once and evicted, so state stays
+bounded on a continuous stream. The window and session streams' later
+file is one sentinel row past every window's and session's close; its
+trigger moves the final watermark past all of them, and its own window
+and session are filtered out. The dedup stream's later file replays 20%
+of the events.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from __future__ import annotations
 import datetime
 import os
 import tempfile
+import time
 from contextlib import contextmanager
 
 import pyarrow as pa
@@ -34,30 +38,27 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _SENTINEL_USER = -1
-_OUT_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-               "event_type string, value double")
-_OUT_COLS = ["event_id", "ts", "user_id", "event_type", "value"]
-_TTL_MS = 7 * 24 * 3600 * 1000
 
 
 @contextmanager
 def _stage(spark: SparkSession, sf_dir: str, name: str, extra):
-    """Stream over a fresh directory holding ``events.parquet`` and the
-    later file ``extra(events)``, removed when the block exits.
+    """Stream over a fresh directory holding the events table and the
+    later tables ``extra(events)``, removed when the block exits.
 
-    The real file gets the older mtime, so ``maxFilesPerTrigger=1``
-    reads it in the first trigger and the later file in the second."""
+    The files get mtimes a minute apart in that order, so
+    ``maxFilesPerTrigger=1`` reads the events in the first trigger and
+    each later table in one trigger of its own."""
     with tempfile.TemporaryDirectory(prefix=f"{name}_") as stage:
         events = pq.read_table(f"{sf_dir}/events.parquet")
-        real = os.path.join(stage, "events.parquet")
-        pq.write_table(events, real)
-        later = os.path.join(stage, "later.parquet")
-        pq.write_table(extra(events), later)
-        past = os.stat(later).st_mtime - 60
-        os.utime(real, (past, past))
+        tables = [events, *extra(events)]
+        now = time.time()
+        for i, table in enumerate(tables):
+            path = os.path.join(stage, f"{i}.parquet")
+            pq.write_table(table, path)
+            mtime = now - 60 * (len(tables) - i)
+            os.utime(path, (mtime, mtime))
         schema = from_arrow_schema(events.schema, prefer_timestamp_ntz=True)
         yield (spark.readStream.schema(schema)
                .option("maxFilesPerTrigger", "1").parquet(stage)
@@ -74,20 +75,20 @@ def _run(df: DataFrame, name: str) -> DataFrame:
     return df.sparkSession.table(name)
 
 
-def _sentinel(events: pa.Table) -> pa.Table:
+def _sentinel(events: pa.Table) -> list[pa.Table]:
     """One row past the close of every window and session: the last
     event + 12 h session gap + 10 min watermark + 1 h margin."""
     ts = pc.max(events["ts"]).as_py() + datetime.timedelta(hours=12,
                                                            minutes=70)
     row = {"ts": ts, "user_id": _SENTINEL_USER, "event_type": "_sentinel"}
-    return pa.table([pa.array([row.get(f.name)], f.type)
-                     for f in events.schema], schema=events.schema)
+    return [pa.table([pa.array([row.get(f.name)], f.type)
+                      for f in events.schema], schema=events.schema)]
 
 
-def _replay(events: pa.Table) -> pa.Table:
+def _replay(events: pa.Table) -> list[pa.Table]:
     """The 20% of events with the lowest ids, replayed (duplicate ids)."""
     idx = pc.sort_indices(events, sort_keys=[("event_id", "ascending")])
-    return events.take(idx[:int(events.num_rows * 0.2)])
+    return [events.take(idx[:int(events.num_rows * 0.2)])]
 
 
 def _value_milli():
@@ -125,39 +126,17 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events", "value_milli")
 
 
-def _dedup_fn(key, pdfs, state: GroupState):
-    if state.hasTimedOut:
-        state.remove()
-        return
-    if state.exists:
-        # drain the iterator (required) and emit nothing: a first
-        # occurrence was already emitted in an earlier micro-batch
-        for _ in pdfs:
-            pass
-        return
-    first = None
-    for pdf in pdfs:
-        if first is None and len(pdf):
-            first = pdf.iloc[:1][_OUT_COLS]
-    if first is not None:
-        state.update((1,))
-        # the first trigger's watermark is still 0: count the TTL from
-        # the event's own time, so a key outlives the next trigger
-        ts_ms = first["ts"].iloc[0].value // 1_000_000
-        state.setTimeoutTimestamp(
-            max(state.getCurrentWatermarkMs(), ts_ms) + _TTL_MS)
-        yield first
-
-
 def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First occurrence of every event_id across micro-batches; the
-    replayed duplicates (the at-least-once case) are dropped. State is
-    one flag per seen id, evicted 7 days past its first event (or past
-    the watermark when that is later). Spark's
-    ``dropDuplicatesWithinWatermark`` covers plain dedup; this is the
-    template for stateful logic the built-ins cannot express
-    (conditional emission, custom eviction, counters)."""
+    """First occurrence of every event_id across micro-batches
+    (``dropDuplicatesWithinWatermark``, in the JVM); the replayed
+    duplicates (the at-least-once case) are dropped. State is one row
+    per seen id, evicted once the watermark passes its event time
+    + 10 minutes. A replay is still in state or older than the
+    watermark, so it is never emitted twice; a first occurrence older
+    than the watermark is dropped, as in the window and session
+    streams."""
     with _stage(spark, sf_dir, "events_dedup", _replay) as ev:
-        return _run(ev.groupBy("event_id").applyInPandasWithState(
-            _dedup_fn, _OUT_SCHEMA, "seen int", "append",
-            GroupStateTimeout.EventTimeTimeout), "events_dedup")
+        return _run(ev.select("event_id", "ts", "user_id", "event_type",
+                              "value")
+                    .dropDuplicatesWithinWatermark(["event_id"]),
+                    "events_dedup")

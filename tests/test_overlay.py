@@ -174,3 +174,27 @@ def test_concave_overlay_matches_rect_decomposition(spark):
     assert sorted(got) == sorted(want) and len(want) > 10
     # a segment across the notch leaves the L and re-enters it
     assert any(len([g for g in got if g[0] == i]) > 1 for i in range(80))
+
+
+def test_difference_overlay_leaves_no_cached_frame(spark):
+    """A collected polygon difference leaves nothing in the session's
+    cache: no frame of the overlay stays persisted after the call."""
+    from osm_sidewalkreator_spark.geometry import wkb as W
+
+    def rect(x0, y0, x1, y1):
+        return bytearray(W.polygon_wkb(np.array(
+            [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float)))
+
+    schema = ("{} long, xmin double, ymin double, xmax double,"
+              " ymax double, geometry binary")
+    a = spark.createDataFrame(
+        [(1, 10.0, 20.0, 70.0, 70.0, bytearray(_l_shape_wkb(
+            10.0, 20.0, 60.0, 50.0, 18.0)))], schema.format("a_id"))
+    b = spark.createDataFrame(
+        [(1, 0.0, 0.0, 30.0, 40.0, rect(0.0, 0.0, 30.0, 40.0)),
+         (2, 20.0, 30.0, 50.0, 60.0, rect(20.0, 30.0, 50.0, 60.0))],
+        schema.format("b_id"))
+    spark.catalog.clearCache()
+    rows = OV.polygon_overlay_polygons(a, b, op="difference").collect()
+    assert rows and all(r.b_id == -1 for r in rows)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1,8 +1,8 @@
 """No def, constant, import or parameter that no caller uses, and no
 string naming the reference checkout.
 
-Six checks over the package and ``__spark_entry__.py``, all on the AST
-(no Spark):
+Seven checks over the package and ``__spark_entry__.py``, all on the
+AST (no Spark):
 
 1. Reachability. An AST name closure from the real entrypoints:
 
@@ -45,6 +45,10 @@ Six checks over the package and ``__spark_entry__.py``, all on the AST
    ``REFERENCE`` (the reference checkout, which a host running the
    engine does not have), here and in the scripts and tests;
    docstrings may cite the reference's files.
+7. Env vars. Every ``SPARK_GRAFT_*`` name a string constant (docstrings
+   apart) holds in the package, the entry, ``bench.py``, ``job*.py``
+   and ``scripts/`` is in ``ENV_VARS``: a deployment setting belongs
+   in the Spark conf, and each env var is a second route to one.
 """
 
 from __future__ import annotations
@@ -62,6 +66,11 @@ ENTRY_SCRIPTS = (
 
 # Where the reference repository was checked out; no code reads it.
 REFERENCE = "/root/reference"
+
+# The env vars the engine and its scripts read: host sizing and the
+# locations of the synthetic and driver test data.
+ENV_VARS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM",
+            "SPARK_GRAFT_SYNTH_ROOT", "SPARK_GRAFT_SF_DIR"}
 
 # Each kept def with the reason it stays although no entrypoint calls it.
 KEEP = {
@@ -351,6 +360,18 @@ def unset_params() -> list[str]:
         and (i is None or i >= n_pos.get(name, 0)))
 
 
+def _strings(path: Path):
+    """Every string constant of ``path`` that is not a docstring."""
+    tree = _parse(path)
+    docs = {id(n.body[0].value) for n in ast.walk(tree)
+            if isinstance(n, (ast.Module,) + _DEFS) and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)}
+    return [n for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            and id(n) not in docs]
+
+
 def reference_paths() -> list[str]:
     """``file:line`` of each string constant, docstrings apart, that
     names a path under ``REFERENCE``."""
@@ -358,17 +379,23 @@ def reference_paths() -> list[str]:
     for pattern in ENTRY_SCRIPTS:
         files |= set(ROOT.glob(pattern))
     files.discard(Path(__file__).resolve())
-    out = []
+    return [f"{path.relative_to(ROOT)}:{n.lineno}"
+            for path in sorted(files) for n in _strings(path)
+            if REFERENCE in n.value]
+
+
+def env_vars() -> dict[str, list[str]]:
+    """``SPARK_GRAFT_*`` name -> ``file:line`` of each string constant,
+    docstrings apart, that holds it, in the package, the entry,
+    ``bench.py``, ``job*.py`` and ``scripts/``."""
+    files = set(_sources()) | {ROOT / "bench.py"}
+    files |= set(ROOT.glob("job*.py")) | set(ROOT.glob("scripts/*.py"))
+    out: dict[str, list[str]] = {}
     for path in sorted(files):
-        tree = _parse(path)
-        docs = {id(n.body[0].value) for n in ast.walk(tree)
-                if isinstance(n, (ast.Module,) + _DEFS) and n.body
-                and isinstance(n.body[0], ast.Expr)
-                and isinstance(n.body[0].value, ast.Constant)}
-        out += [f"{path.relative_to(ROOT)}:{n.lineno}"
-                for n in ast.walk(tree)
-                if isinstance(n, ast.Constant) and isinstance(n.value, str)
-                and id(n) not in docs and REFERENCE in n.value]
+        for n in _strings(path):
+            for name in re.findall(r"SPARK_GRAFT_\w+", n.value):
+                out.setdefault(name, []).append(
+                    f"{path.relative_to(ROOT)}:{n.lineno}")
     return out
 
 
@@ -442,3 +469,13 @@ def test_no_string_names_the_reference_checkout():
     assert not found, (
         f"{len(found)} string constants that name a path under "
         f"{REFERENCE}:\n" + "\n".join(found))
+
+
+def test_every_env_var_is_allowed():
+    found = env_vars()
+    extra = sorted(set(found) - ENV_VARS)
+    assert not extra, (
+        f"{len(extra)} SPARK_GRAFT_* env vars outside the allowlist:\n"
+        + "\n".join(f"{v}: {', '.join(found[v])}" for v in extra))
+    # an allowed name nothing reads any more is stale
+    assert ENV_VARS <= set(found), sorted(ENV_VARS - set(found))

@@ -584,13 +584,21 @@ def test_embedding_neardup_lsh_subset(spark):
     assert exact <= lsh
 
 
-def test_stream_dedup_stateful(spark):
-    """applyInPandasWithState dedup: the events arrive in one trigger and
-    the 20% replay in the next, which finds every id in state and adds
-    no row; the output is exactly the distinct source ids, and state
-    keeps each id for 7 days of event time (custom stateful op, SURVEY
-    2.10)."""
+def _dedup_live(sf_dir):
+    """Ids the dedup state keeps once the watermark (last event - 10 min)
+    has passed: those whose event time + 10 min is not below it."""
     import pyarrow.parquet as pq
+    ts = pq.read_table(f"{sf_dir}/events.parquet", columns=["ts"])["ts"]
+    ts = ts.to_pylist()
+    wm = max(ts) - datetime.timedelta(minutes=10)
+    return sum(t + datetime.timedelta(minutes=10) >= wm for t in ts)
+
+
+def test_stream_dedup_stateful(spark):
+    """Native streaming dedup (dropDuplicatesWithinWatermark): the events
+    arrive in one trigger and the 20% replay in the next, which adds no
+    row; the output is exactly the distinct source ids, and state keeps
+    only the ids the 10-minute watermark has not passed (SURVEY 2.10)."""
     from osm_sidewalkreator_spark.streaming import events_stream as ES
     with _stream_triggers(spark, "events_dedup") as progress:
         ids = [r.event_id for r in
@@ -599,15 +607,48 @@ def test_stream_dedup_stateful(spark):
     assert len(ids) == len(set(ids)) == src_n
     triggers = [(p.numInputRows, p.sink.numOutputRows) for p in progress]
     assert triggers == [(src_n, src_n), (src_n // 5, 0)]
-    # the 7-day TTL counts from each event's time: the replay trigger's
-    # watermark (last event - 10 min) evicts exactly the keys whose event
-    # is more than 7 days older than it, not every key of trigger 0
-    ts = pq.read_table(f"{SF}/events.parquet", columns=["ts"])["ts"]
-    ts = ts.to_pylist()
-    wm = max(ts) - datetime.timedelta(minutes=10)
-    ttl = datetime.timedelta(milliseconds=ES._TTL_MS)
-    live = sum(t + ttl >= wm for t in ts)
+    live = _dedup_live(SF)
     assert 0 < live < src_n and _state_rows(progress)[-1] == live
+
+
+def test_stream_dedup_replay_after_eviction(spark, monkeypatch):
+    """A second replay, in a third trigger after its ids have left
+    state, is older than the watermark and adds no row."""
+    from osm_sidewalkreator_spark.streaming import events_stream as ES
+    replay = ES._replay
+    monkeypatch.setattr(ES, "_replay", lambda events: replay(events) * 2)
+    with _stream_triggers(spark, "events_dedup") as progress:
+        ids = [r.event_id for r in
+               ES.run_stream_dedup(spark, SF).select("event_id").collect()]
+    src_n = spark.read.parquet(f"{SF}/events.parquet").count()
+    assert len(ids) == len(set(ids)) == src_n
+    triggers = [(p.numInputRows, p.sink.numOutputRows) for p in progress]
+    assert triggers == [(src_n, src_n), (src_n // 5, 0), (src_n // 5, 0)]
+    # the replayed ids had left state before the third trigger
+    assert _state_rows(progress)[1] == _dedup_live(SF) < src_n // 5
+
+
+def test_features_of_another_source_are_rebuilt(spark, tmp_path,
+                                                monkeypatch):
+    """Feature artifacts whose marker carries another code key are
+    written again: the stale marker goes, this source's marker comes,
+    and ``features_tm`` holds this source's features."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from osm_sidewalkreator_spark import artifacts, synth
+    monkeypatch.setattr(synth, "SYNTH_ROOT", tmp_path)
+    out = synth.ensure_synth(SF)
+    stale = out / "_FEATURES_OK_v4"
+    stale.write_text("ok")
+    (out / "features_tm.parquet").mkdir()
+    pq.write_table(pa.table({"fid": [1]}),
+                   out / "features_tm.parquet" / "part-0.parquet")
+    assert artifacts.ensure_features(spark, SF) == out
+    assert not stale.exists()
+    assert [m.name for m in out.glob("_FEATURES_OK_*")] == [
+        f"_FEATURES_OK_{artifacts._code_key()}"]
+    feats = spark.read.parquet(str(out / "features_tm.parquet"))
+    assert feats.count() == PL.generate_features(spark, SF).count() > 1
 
 
 def test_pair_dot_is_bit_identical_to_jvm_fold(spark):

@@ -325,18 +325,6 @@ def test_crossing_quality_attributes():
         assert c["nearest_centerpoint"] == want
 
 
-def test_remove_above_tol_drops_them():
-    noded, w, way_ids, sw = _city_with_sidewalks()
-    base, _ = kernels.crossings_and_kerbs(noded, w, sw, way_ids=way_ids)
-    kept, kerbs = kernels.crossings_and_kerbs(noded, w, sw,
-                                              way_ids=way_ids,
-                                              remove_above_tol=True)
-    n_above = sum(c["above_tol"] for c in base)
-    assert len(kept) == len(base) - n_above
-    assert not any(c["above_tol"] for c in kept)
-    assert len(kerbs) == 2 * len(kept)
-
-
 def test_gui_enlargement_resolves_more_crossings():
     """Sidewalks form a funnel converging toward the street: at the
     endpoint the corridor is wider than the single-shot half-span
